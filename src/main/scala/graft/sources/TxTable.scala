@@ -506,7 +506,7 @@ object TxTable {
     val newStats: Map[String, Map[String, ColRange]] = footerStats.getOrElse {
       import org.apache.spark.sql.functions.{col, input_file_name, max, min}
       val spark = df.sparkSession
-      val written = spark.read.parquet(s"$dir/$commitRel")
+      val written = spark.read.schema(df.schema).parquet(s"$dir/$commitRel")
       val aggs = typed.flatMap { case (c, _, dt) =>
         val e = statCanonical(col(c), dt)
         Seq(min(e).as(s"__mn_$c"), max(e).as(s"__mx_$c"))
@@ -527,7 +527,7 @@ object TxTable {
         }.toMap
     }
     val newBlooms = buildBlooms(df.sparkSession, dir, commitRel, uuid,
-      newFiles, bloomSpec)
+      newFiles, df.schema, bloomSpec)
     // byte lengths into the manifest: the scan planner lists from the
     // manifest alone (zero FS RPCs at plan time)
     val newSizes = newFiles.map(f => f -> Files.size(Paths.get(dir, f))).toMap
@@ -540,17 +540,20 @@ object TxTable {
     * almost certainly does NOT contain the key itself, which is what
     * skips files on a NON-clustered column where every range overlaps.
     *
-    * Build: per column, one distributed aggregate over the batch grouped
-    * by (file, word index) — map-side `bit_or` combine bounds the
-    * shuffle by files × mBits/32 words, never by row count. The bit
-    * layout is [[graft.ext.BloomFilter]]'s portable universal-hash
-    * scheme over the canonical value STRING (long canonicals in decimal,
-    * strings raw), so the driver can re-probe it without Spark. Words
-    * land in ONE sidecar text file per commit under `_txlog/bloom/`
-    * (manifests stay O(files) small lines; the sidecar is invisible
-    * until the manifest CAS references it, so the commit protocol is
-    * unchanged). Columns outside the integral/string stat domains are
-    * skipped — date/timestamp reprs would be ambiguous at lookup time.
+    * Build: ONE job over the just-written files, read at the batch's
+    * known schema (so no schema-inference job). Each task ORs its rows'
+    * bits into one word array per (file, column) it saw, with no
+    * shuffle, and the driver OR-merges the O(tasks × files) partial
+    * arrays. The bit layout is [[graft.ext.BloomFilter]]'s portable
+    * universal-hash scheme over the canonical value STRING (long
+    * canonicals in decimal, strings raw; [[bloomPos]] over
+    * [[hash32Jvm]]), so the driver re-probes it without Spark, and each
+    * 32-bit word is stored as a non-negative long. Words land in ONE
+    * sidecar text file per commit under `_txlog/bloom/` (manifests stay
+    * O(files) small lines; the sidecar is invisible until the manifest
+    * CAS references it, so the commit protocol is unchanged). Columns
+    * outside the integral/string stat domains are skipped —
+    * date/timestamp reprs would be ambiguous at lookup time.
     *
     * At 100 TB: sidecars are O(files × mBits/8) bytes per commit,
     * read lazily per lookup and parsed driver-side like the manifest
@@ -559,14 +562,12 @@ object TxTable {
     * everything that scan needs).
     */
   private def buildBlooms(spark: SparkSession, dir: String, commitRel: String,
-      uuid: String, newFiles: Seq[String], bloomSpec: Map[String, (Int, Int)])
-      : Map[String, Map[String, BloomRef]] = {
-    import org.apache.spark.sql.functions.{col, expr, explode, array, lit,
-      input_file_name, pmod, struct}
+      uuid: String, newFiles: Seq[String], schema: StructType,
+      bloomSpec: Map[String, (Int, Int)]): Map[String, Map[String, BloomRef]] = {
+    import org.apache.spark.sql.functions.{col, input_file_name}
     if (bloomSpec.isEmpty || newFiles.isEmpty) return Map.empty
-    val written = spark.read.parquet(s"$dir/$commitRel")
     val eligible = bloomSpec.toSeq.sortBy(_._1).flatMap { case (c, (m, k)) =>
-      written.schema.fields.find(_.name == c)
+      schema.fields.find(_.name == c)
         .filter(f => statKind(f.dataType).isDefined &&
           f.dataType != org.apache.spark.sql.types.DateType &&
           !f.dataType.isInstanceOf[org.apache.spark.sql.types.TimestampType])
@@ -574,45 +575,57 @@ object TxTable {
     }
     if (eligible.isEmpty) return Map.empty
     val sidecarRel = s"bloom/$uuid.bloom"
-    // ONE job for every bloom column: stage each column's hash once,
-    // explode (column, pos) pairs, aggregate by (file, column, word) —
-    // the post-write read is paid once, not per column
-    val P = graft.ext.PortableHash.P
-    val staged = written.select(
-      input_file_name().as("__f") +: eligible.map { case (c, dt, _, _) =>
-        pmod(graft.ext.PortableHash.hash32(
-          statCanonical(col(c), dt).cast("string")), lit(P)).as(s"__x_$c")
+    val geometry: Array[(Int, Array[(Long, Long)])] = eligible.map {
+      case (_, _, mBits, k) => (mBits, graft.ext.PortableHash.minhashAB(k).toArray)
+    }.toArray
+    // column i of the staged frame (after the file name) is eligible(i)'s
+    // canonical string; null values contribute no bits
+    val partial: Array[(String, Int, Array[Long])] = spark.read.schema(schema)
+      .parquet(s"$dir/$commitRel")
+      .select(input_file_name() +: eligible.map { case (c, dt, _, _) =>
+        statCanonical(col(c), dt).cast("string")
       }: _*)
-    val posStructs = eligible.flatMap { case (c, _, mBits, k) =>
-      graft.ext.PortableHash.minhashAB(k).map { case (a, b) =>
-        struct(lit(c).as("c"),
-          (pmod(col(s"__x_$c") * lit(a) + lit(b), lit(P)) % mBits).as("pos"))
+      .rdd.mapPartitions { rows =>
+        val md = java.security.MessageDigest.getInstance("MD5")
+        val acc = scala.collection.mutable.Map.empty[(String, Int), Array[Long]]
+        rows.foreach { r =>
+          var i = 0
+          while (i < geometry.length) {
+            if (!r.isNullAt(i + 1)) {
+              val (mBits, ab) = geometry(i)
+              val words = acc.getOrElseUpdate((r.getString(0), i),
+                new Array[Long](mBits / 32))
+              val x = math.floorMod(hash32Of(md,
+                r.getString(i + 1).getBytes(java.nio.charset.StandardCharsets.UTF_8)),
+                graft.ext.PortableHash.P)
+              var j = 0
+              while (j < ab.length) {
+                val pos = bloomPos(x, ab(j), mBits)
+                words(pos / 32) |= 1L << (pos % 32)
+                j += 1
+              }
+            }
+            i += 1
+          }
+        }
+        acc.iterator.map { case ((f, i), words) => (f, i, words) }
       }
-    }
-    val words = staged
-      .select(col("__f"), explode(array(posStructs: _*)).as("__cp"))
-      .filter(col("__cp.pos").isNotNull) // null keys contribute no bits
-      .groupBy(col("__f"), col("__cp.c").as("__c"),
-        expr("__cp.pos div 32").as("__w"))
-      .agg(expr(
-        "bit_or(shiftleft(CAST(1 AS BIGINT), CAST(__cp.pos % 32 AS INT)))")
-        .as("__wv"))
       .collect()
-    val byFileCol = words.groupBy { r =>
-      val fname = r.getString(0)
-      (s"$commitRel/${fname.substring(fname.lastIndexOf('/') + 1)}",
-        r.getString(1))
+    val merged = scala.collection.mutable.Map.empty[(String, Int), Array[Long]]
+    partial.foreach { case (fname, i, words) =>
+      val rel = s"$commitRel/${fname.substring(fname.lastIndexOf('/') + 1)}"
+      merged.get((rel, i)) match {
+        case Some(into) => words.indices.foreach(w => into(w) |= words(w))
+        case None => merged((rel, i)) = words
+      }
     }
     val lines = scala.collection.mutable.ArrayBuffer.empty[String]
     val refs = scala.collection.mutable.Map
       .empty[String, Map[String, BloomRef]]
-    eligible.foreach { case (c, _, mBits, k) =>
+    eligible.zipWithIndex.foreach { case ((c, _, mBits, k), i) =>
       newFiles.foreach { rel =>
-        val arr = new Array[Long](mBits / 32)
-        byFileCol.getOrElse((rel, c), Array.empty).foreach { r =>
-          arr(r.getLong(2).toInt) = r.getLong(3)
-        }
-        lines += s"$rel|$c|${arr.mkString(",")}"
+        val words = merged.getOrElse((rel, i), new Array[Long](mBits / 32))
+        lines += s"$rel|$c|${words.mkString(",")}"
         refs(rel) = refs.getOrElse(rel, Map.empty) +
           (c -> BloomRef(mBits, k, sidecarRel))
       }
@@ -627,12 +640,25 @@ object TxTable {
     * hex digits as a long) — what lets a point lookup probe manifest
     * Bloom filters without running a Spark job.
     */
-  private[graft] def hash32Jvm(s: String): Long = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map(b => f"$b%02x").mkString
-    java.lang.Long.parseLong(hex.substring(0, 8), 16)
+  private[graft] def hash32Jvm(s: String): Long =
+    hash32Of(java.security.MessageDigest.getInstance("MD5"),
+      s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+
+  /** The first 4 md5 digest bytes as an unsigned big-endian value —
+    * exactly the 8 leading hex digits [[graft.ext.PortableHash.hash32]]
+    * parses, without formatting them.
+    */
+  private def hash32Of(md: java.security.MessageDigest, bytes: Array[Byte]): Long = {
+    val d = md.digest(bytes)
+    ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) | ((d(2) & 0xffL) << 8) |
+      (d(3) & 0xffL)
   }
+
+  /** Bit position of `x` (a hash32 reduced mod P) under hash constants
+    * `ab` in an mBits filter — shared by the build and the probe.
+    */
+  private def bloomPos(x: Long, ab: (Long, Long), mBits: Int): Int =
+    (math.floorMod(x * ab._1 + ab._2, graft.ext.PortableHash.P) % mBits).toInt
 
   /** The k bit positions `repr` probes in an (mBits, k) filter —
     * loop-invariant across files, computed once per lookup per distinct
@@ -640,11 +666,8 @@ object TxTable {
     * per file).
     */
   private def bloomPositions(mBits: Int, k: Int, repr: String): Array[Int] = {
-    val P = graft.ext.PortableHash.P
-    val x = math.floorMod(hash32Jvm(repr), P)
-    graft.ext.PortableHash.minhashAB(k).map { case (a, b) =>
-      (math.floorMod(x * a + b, P) % mBits).toInt
-    }.toArray
+    val x = math.floorMod(hash32Jvm(repr), graft.ext.PortableHash.P)
+    graft.ext.PortableHash.minhashAB(k).map(bloomPos(x, _, mBits)).toArray
   }
 
   private def bloomMightContain(words: Array[Long], positions: Array[Int])
@@ -887,9 +910,16 @@ object TxTable {
     * (join coercion could match values the cast drops), keeps all files
     * (sound). Used by [[merge]]'s copy-on-write pre-prune and
     * [[changeFeed]]'s append-path base prune.
+    *
+    * `bounds`, when given, is that aggregate's row — (min, max, count)
+    * of `statCanonical(statKey)` over `keys` at the key frame's own type
+    * — computed by the caller inside a query it runs anyway ([[merge]]
+    * fuses it with the duplicate-key check). The type guards still run;
+    * only the job is saved.
     */
   private def pruneByKeyRange(snap: Snapshot, keys: DataFrame,
-      statKey: String): Seq[String] = {
+      statKey: String, bounds: Option[org.apache.spark.sql.Row] = None)
+      : Seq[String] = {
     import org.apache.spark.sql.functions.{col, count, max, min}
     if (!snap.stats.values.exists(_.contains(statKey))) return snap.files
     val dtOpt = snap.schema.fields.find(_.name == statKey).map(_.dataType)
@@ -906,7 +936,7 @@ object TxTable {
       case None => snap.files // key type has no sound ordering repr
       case Some(kind) =>
         val e = statCanonical(col(statKey), dtOpt.get)
-        val b = keys.agg(min(e), max(e), count(e)).collect()(0)
+        val b = bounds.getOrElse(keys.agg(min(e), max(e), count(e)).collect()(0))
         if (b.getLong(2) == 0L) Seq.empty // no non-null key touches any file
         else if (kind == "long")
           snap.filesOverlapping(statKey, b.getLong(0), b.getLong(1))
@@ -1497,12 +1527,14 @@ object TxTable {
     *
     * ==Copy-on-write file selection (the Delta MERGE shape)==
     * Only files that can contain a touched key are rewritten:
-    *  1. manifest-stats pre-prune — the touched keys' [min, max] (one
-    *     1-row aggregate) intersected with each file's recorded range
+    *  1. manifest-stats pre-prune — the touched keys' [min, max]
+    *     (computed by the same 1-row aggregate as the duplicate-key
+    *     check) intersected with each file's recorded range
     *     (driver-side, O(files)); stat-less files stay candidates,
     *  2. exact hit scan — candidates read with a KEY-ONLY projection +
-    *     `input_file_name`, semi-joined to the touched keys, distinct
-    *     file names collected (O(files) driver rows).
+    *     `input_file_name`, semi-joined to the touched keys; each task
+    *     returns its distinct file names and the driver unions them
+    *     (O(tasks × files) driver rows, no shuffle).
     * Hit files are rewritten minus touched keys, surviving upsert images
     * are appended, and every untouched file carries forward by REFERENCE
     * (its manifest entry and stats, zero data movement) — at 100 TB a
@@ -1538,6 +1570,7 @@ object TxTable {
       arbiter: CommitArbiter = LocalLinkArbiter,
       writeMode: String = "cow", streamId: Option[String] = None): Long = {
     import org.apache.spark.sql.functions.{col, count, input_file_name, lit, max, min}
+    import org.apache.spark.sql.{Encoders, Row}
     require(keyCols.nonEmpty, "merge needs at least one key column")
     require(writeMode == "cow" || writeMode == "mor",
       s"writeMode must be cow or mor, got $writeMode")
@@ -1571,16 +1604,32 @@ object TxTable {
       if (keyCols.contains(c)) col(c).cast(keySchema(c).dataType).as(c)
       else col(c)
     }.toSeq: _*)
-    val touched = ch.select(keyCols.map(col): _*).distinct()
-    // ONE action for the dup check (round 15): count-vs-distinct-count
-    // paid two scheduler round-trips per merge; a streaming target pays
-    // this per micro-batch. groupBy (not count_distinct) keeps NULL key
-    // groups in play — count_distinct would skip them and miss a
-    // duplicate null-keyed pair.
-    require(ch.groupBy(keyCols.map(col): _*)
-        .agg(count(lit(1)).as("__n")).filter(col("__n") > 1).isEmpty,
+    // ONE action for the dup check AND the stats-prune bounds: per-key
+    // row counts, then a 1-row aggregate of the largest count and the
+    // first key's canonical (min, max, non-null count) — the bounds
+    // [[pruneByKeyRange]] would otherwise pay its own job for. A
+    // streaming target pays every action here per micro-batch. groupBy
+    // (not count_distinct) keeps NULL key groups in play — count_distinct
+    // would skip them and miss a duplicate null-keyed pair.
+    val k0Dt = keySchema(keyCols.head).dataType
+    val boundAggs = statKind(k0Dt).toSeq.flatMap { _ =>
+      val e = statCanonical(col(keyCols.head), k0Dt)
+      Seq(min(e), max(e), count(e))
+    }
+    val keyStats = ch.groupBy(keyCols.map(col): _*)
+      .agg(count(lit(1)).as("__n"))
+      .agg(max(col("__n")), boundAggs: _*)
+      .collect()(0)
+    require(keyStats.isNullAt(0) || keyStats.getLong(0) <= 1L,
       s"merge requires one change row per key (${keyCols.mkString(",")}); " +
         "run ChangeApplier.dedupToLatest first")
+    val touchedBounds =
+      if (boundAggs.isEmpty) None
+      else Some(Row(keyStats.get(1), keyStats.get(2), keyStats.get(3)))
+    // no distinct(): the check above proved every key unique, so the hit
+    // scans' semi joins and the rewrite's anti join see each key once
+    // without paying a shuffle to re-prove it
+    val touched = ch.select(keyCols.map(col): _*)
     var attempt = 0
     var committed = -1L
     while (committed < 0) {
@@ -1596,8 +1645,10 @@ object TxTable {
       val upserts = ch.filter(col(opCol).isin("INSERT", "UPDATE"))
         .select(base.schema.fields.map(f => col(f.name).cast(f.dataType)).toSeq: _*)
       // 1. stats pre-prune on the first key's global touched range,
-      // typed at the key column's own type ([[pruneByKeyRange]])
-      val candidates = pruneByKeyRange(base, touched, keyCols.head)
+      // typed at the key column's own type ([[pruneByKeyRange]]; its
+      // type guards re-check `touched` against THIS base's schema)
+      val candidates = pruneByKeyRange(base, touched, keyCols.head,
+        touchedBounds)
       val statsCols = base.stats.values.flatMap(_.keys).toSeq.distinct.sorted
       // rebuild Bloom entries for the rewritten files with the table's
       // existing geometry, so point-lookup skipping survives merge churn
@@ -1660,20 +1711,25 @@ object TxTable {
         } else {
           // ==Copy-on-write== (the read-optimal default)
           // 2. exact per-file hits: key-only projection + semi join (Spark
-          // picks the build side; the touched batch is the small one)
+          // picks the build side; the touched batch is the small one).
+          // Each task returns its own distinct file names — a scan task
+          // reads a handful of files, so this is O(tasks × files) driver
+          // strings with no shuffle — and the driver de-duplicates.
           val hitFiles: Seq[String] =
             if (candidates.isEmpty) Seq.empty
             else spark.read.schema(base.schema)
               .parquet(candidates.map(f => s"$dir/$f"): _*)
               .select(keyCols.map(col) :+ input_file_name().as("__f"): _*)
               .join(touched, keyCols, "left_semi")
-              .select(col("__f")).distinct().collect()
-              .map { r =>
+              .select(col("__f")).as(Encoders.STRING)
+              .mapPartitions((it: Iterator[String]) => it.toSet.iterator)(
+                Encoders.STRING)
+              .collect().distinct
+              .map { raw =>
                 // absolute URI -> table-relative data/<uuid>/<part>; decode
                 // percent-encoding first so the result string-matches the
                 // manifest entries (a mismatched hit would carry the file
                 // forward AND append its rewrite — duplicating every row)
-                val raw = r.getString(0)
                 val f = try new java.net.URI(raw).getPath
                   catch { case _: Exception => raw }
                 f.split('/').takeRight(3).mkString("/")

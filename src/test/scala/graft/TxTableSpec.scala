@@ -3,6 +3,7 @@ package graft
 import graft.sources.TxTable
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** The transactional table layer: atomic multi-file commits, snapshot
   * isolation, time travel, additive schema evolution, optimistic
@@ -1035,5 +1036,217 @@ class TxTableSpec extends SparkSpecBase {
     assert(Files.list(bloomRoot).count() === 1L,
       "v0's sidecar is unreferenced and expired; v1's must survive")
     assert(TxTable.readPointLookupString(s, dir, "v", "b").count() === 1L)
+  }
+
+  test("merge rejects a batch with two NULL-keyed change rows") {
+    val dir = Files.createTempDirectory("txmergenull").toString
+    TxTable.commit(Seq((1L, "a")).toDF("id", "v"), dir)
+    // NULLs group together: two null-keyed rows are one key twice
+    val dup = Seq((None: Option[Long], "x", "UPDATE"), (None, "y", "DELETE"))
+      .toDF("id", "v", "operation")
+    val e = intercept[IllegalArgumentException] {
+      TxTable.merge(s, dir, dup, Seq("id"))
+    }
+    assert(e.getMessage.contains("one change row per key"))
+    // composite keys: (NULL, 1) twice is a duplicate, (NULL, 1) and
+    // (NULL, 2) are distinct keys
+    val cdir = Files.createTempDirectory("txmergenull2").toString
+    TxTable.commit(Seq((Some(1L), 1L, "a")).toDF("a", "b", "v"), cdir)
+    val cdup = Seq((None: Option[Long], 1L, "x", "INSERT"), (None, 1L, "y", "INSERT"))
+      .toDF("a", "b", "v", "operation")
+    intercept[IllegalArgumentException](TxTable.merge(s, cdir, cdup, Seq("a", "b")))
+    assert(TxTable.versions(cdir).size === 1, "a rejected batch must not commit")
+    val ok = Seq((None: Option[Long], 1L, "x", "INSERT"), (None, 2L, "y", "INSERT"))
+      .toDF("a", "b", "v", "operation")
+    TxTable.merge(s, cdir, ok, Seq("a", "b"))
+    assert(TxTable.read(s, cdir).count() === 3L)
+  }
+
+  /** The Bloom build as it was before the one-pass builder: explode one
+    * (column, position) pair per hash, aggregate `bit_or` words by
+    * (file, column, word index), and lay out one sidecar line per
+    * (column, file). Kept here as the oracle the engine's builder must
+    * reproduce byte for byte. Integral and string columns only.
+    */
+  private def bloomSidecarOracle(dir: String, commitRel: String,
+      spec: Seq[(String, Int, Int)]): String = {
+    import graft.ext.PortableHash
+    val written = s.read.parquet(s"$dir/$commitRel")
+    val eligible = spec.sortBy(_._1)
+    val P = PortableHash.P
+    val staged = written.select(
+      input_file_name().as("__f") +: eligible.map { case (c, _, _) =>
+        val canon =
+          if (written.schema(c).dataType == org.apache.spark.sql.types.StringType) col(c)
+          else col(c).cast("long")
+        pmod(PortableHash.hash32(canon.cast("string")), lit(P)).as(s"__x_$c")
+      }: _*)
+    val posStructs = eligible.flatMap { case (c, mBits, k) =>
+      PortableHash.minhashAB(k).map { case (a, b) =>
+        struct(lit(c).as("c"),
+          (pmod(col(s"__x_$c") * lit(a) + lit(b), lit(P)) % mBits).as("pos"))
+      }
+    }
+    val words = staged
+      .select(col("__f"), explode(array(posStructs: _*)).as("__cp"))
+      .filter(col("__cp.pos").isNotNull)
+      .groupBy(col("__f"), col("__cp.c").as("__c"),
+        expr("__cp.pos div 32").as("__w"))
+      .agg(expr(
+        "bit_or(shiftleft(CAST(1 AS BIGINT), CAST(__cp.pos % 32 AS INT)))")
+        .as("__wv"))
+      .collect()
+    val byFileCol = words.groupBy { r =>
+      val fname = r.getString(0)
+      (s"$commitRel/${fname.substring(fname.lastIndexOf('/') + 1)}", r.getString(1))
+    }
+    val newFiles = {
+      val it = Files.list(Paths.get(dir, commitRel))
+      try it.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
+        .map(n => s"$commitRel/$n").toSeq.sorted
+      finally it.close()
+    }
+    eligible.flatMap { case (c, mBits, _) =>
+      newFiles.map { rel =>
+        val arr = new Array[Long](mBits / 32)
+        byFileCol.getOrElse((rel, c), Array.empty).foreach { r =>
+          arr(r.getLong(2).toInt) = r.getLong(3)
+        }
+        s"$rel|$c|${arr.mkString(",")}"
+      }
+    }.mkString("", "\n", "\n")
+  }
+
+  /** Every Bloom sidecar `snap` references equals the oracle's text for
+    * its commit. Returns the number of sidecars checked.
+    */
+  private def assertSidecarsMatchOracle(dir: String, snap: TxTable.Snapshot): Int = {
+    val bySidecar = snap.blooms.toSeq.flatMap { case (f, cols) =>
+      cols.map { case (c, r) => (r.sidecar, f, c, r.mBits, r.k) }
+    }.groupBy(_._1)
+    bySidecar.foreach { case (sidecar, entries) =>
+      val commitRel = entries.head._2.split('/').take(2).mkString("/")
+      assert(sidecar === s"bloom/${commitRel.stripPrefix("data/")}.bloom")
+      val spec = entries.map(e => (e._3, e._4, e._5)).distinct
+      val actual = new String(Files.readAllBytes(Paths.get(dir, "_txlog", sidecar)),
+        java.nio.charset.StandardCharsets.UTF_8)
+      assert(actual === bloomSidecarOracle(dir, commitRel, spec),
+        s"sidecar $sidecar differs from the aggregate formulation")
+    }
+    bySidecar.size
+  }
+
+  test("bloom sidecars: the one-pass builder is byte-identical to the aggregate oracle") {
+    val dir = Files.createTempDirectory("txbloomeq").toString
+    // long and string bloom columns, null values in both, three files
+    val rows = (0L until 600L).map { i =>
+      (if (i % 37L == 5L) None else Some(i * 7919L % 1201L),
+        if (i % 41L == 3L) None else Some(s"name-${i % 173L}"), i)
+    }
+    val df = rows.toDF("k", "name", "seq")
+    TxTable.commit(df.repartitionByRange(3, col("seq")), dir, "overwrite",
+      statsColumns = Seq("seq"), bloomColumns = Seq("k", "name"),
+      bloomBits = 1 << 10, bloomK = 3)
+    val s0 = TxTable.latest(dir).get
+    assert(s0.files.size === 3)
+    assert(assertSidecarsMatchOracle(dir, s0) === 1)
+    // a merge rebuilds the rewritten files' sidecar at the table geometry
+    val ch = Seq((Some(5L), Some("upd"), 4L, "UPDATE"),
+        (Some(-1L), Some("new"), 9000L, "INSERT"),
+        (None: Option[Long], None: Option[String], 9001L, "INSERT"),
+        (None: Option[Long], None: Option[String], 100L, "DELETE"))
+      .toDF("k", "name", "seq", "operation")
+    TxTable.merge(s, dir, ch, Seq("seq"))
+    val s1 = TxTable.latest(dir).get
+    assert(s1.files.toSet != s0.files.toSet, "the merge must rewrite a file")
+    assert(assertSidecarsMatchOracle(dir, s1) === 2)
+    // lookups through the sidecars equal the filtered read
+    val all = TxTable.read(s, dir)
+    Seq(0L, 7919L % 1201L, -1L, 424242L).foreach { v =>
+      assert(TxTable.readPointLookupLong(s, dir, "k", v).select("seq")
+        .collect().map(_.getLong(0)).sorted.toSeq ===
+        all.where(col("k") === v).select("seq").collect().map(_.getLong(0)).sorted.toSeq,
+        s"point lookup k=$v")
+    }
+    Seq("name-0", "name-172", "upd", "new", "absent").foreach { v =>
+      assert(TxTable.readPointLookupString(s, dir, "name", v).select("seq")
+        .collect().map(_.getLong(0)).sorted.toSeq ===
+        all.where(col("name") === v).select("seq").collect().map(_.getLong(0)).sorted.toSeq,
+        s"point lookup name=$v")
+    }
+    // the driver-side probe hash is the hex-digit parse Spark's hash32 does
+    Seq("", "0", "-1", "name-5", "é中").foreach { v =>
+      val hex = java.security.MessageDigest.getInstance("MD5")
+        .digest(v.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        .map(b => f"$b%02x").mkString
+      assert(TxTable.hash32Jvm(v) === java.lang.Long.parseLong(hex.substring(0, 8), 16))
+    }
+  }
+
+  /** Spark jobs started while `body` runs, as (stage name, call-site
+    * details), bracketed by marker jobs so the asynchronous listener bus
+    * has delivered every event in between.
+    */
+  private def jobsDuring(body: => Unit): Seq[(String, String)] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = s.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val group = Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
+        seen.add((e.jobId, group, e.stageInfos.map(_.name).headOption.getOrElse(""),
+          e.stageInfos.map(_.details).mkString("\n")))
+        ()
+      }
+    }
+    def marker(name: String): Unit = {
+      sc.setJobGroup(s"$tag-$name", name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      ()
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("start")
+      body
+      marker("end")
+      val deadline = System.currentTimeMillis() + 30000L
+      while (!seen.asScala.exists(_._2 == s"$tag-end") &&
+          System.currentTimeMillis() < deadline) Thread.sleep(10)
+      val ordered = seen.asScala.toSeq.sortBy(_._1)
+      val from = ordered.indexWhere(_._2 == s"$tag-start")
+      val to = ordered.indexWhere(_._2 == s"$tag-end")
+      assert(from >= 0 && to > from, "listener bus did not deliver the marker jobs")
+      ordered.slice(from + 1, to).map(j => (j._3, j._4))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("job-count guard: a small copy-on-write merge and a bloom commit stay lean") {
+    val dir = Files.createTempDirectory("txjobs").toString
+    val base = (0L until 400L).map(i => (i, s"v$i")).toDF("id", "v")
+      .repartitionByRange(4, col("id"))
+    // schema inference shows up as a job whose call site is the reader
+    def inferJobs(js: Seq[(String, String)]) = js.filter(_._2.contains("DataFrameReader"))
+    val commitJobs = jobsDuring {
+      TxTable.commit(base, dir, "overwrite", statsColumns = Seq("id"),
+        bloomColumns = Seq("id", "v"))
+    }
+    assert(inferJobs(commitJobs).isEmpty,
+      s"bloom commit ran a schema-inference job: ${commitJobs.map(_._1)}")
+    val ch = Seq((3L, "x", "UPDATE"), (250L, "y", "DELETE"), (-5L, "z", "INSERT"))
+      .toDF("id", "v", "operation")
+    val mergeJobs = jobsDuring(TxTable.merge(s, dir, ch, Seq("id")))
+    assert(inferJobs(mergeJobs).isEmpty,
+      s"merge ran a schema-inference job: ${mergeJobs.map(_._1)}")
+    // 9 = the batch checkpoint, the fused dup-check + key-bounds
+    // aggregate, the hit scan and the data write (with their AQE stage
+    // jobs), and the one-job bloom build
+    assert(mergeJobs.size <= 9, s"merge ran ${mergeJobs.size} jobs: ${mergeJobs.map(_._1)}")
+    assert(TxTable.read(s, dir).count() === 400L)
+    // the detector is not vacuous: an inferring read IS seen
+    assert(inferJobs(jobsDuring(s.read.parquet(s"$dir/${TxTable.latest(dir).get.files.head}")))
+      .nonEmpty)
   }
 }
