@@ -9,9 +9,10 @@ import scala.jdk.CollectionConverters._
   * engine's answer to the "Structured Streaming + Delta/Iceberg" stance
   * in BASELINE.md, built from first principles because this sandbox
   * ships no table-format dependency (reference: the epoch-dir overwrite
-  * convention in [[graft.streaming.CdcStream]] is idempotent but gives
-  * readers no atomic multi-file commit, no snapshot isolation, and no
-  * time travel — the three things a production CDC target needs first).
+  * convention of the append-only streams, e.g.
+  * [[graft.streaming.SketchStream]], is idempotent but gives readers no
+  * atomic multi-file commit, no snapshot isolation, and no time travel —
+  * the three things a production CDC target needs first).
   *
   * ==Layout==
   * {{{

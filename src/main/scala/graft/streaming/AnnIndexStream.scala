@@ -18,8 +18,8 @@ import org.apache.spark.sql.types.StructType
   * rewrites the same directories byte-for-byte instead of appending
   * duplicates. The signature index can afford at-least-once (duplicate
   * bucket rows collapse in the probe); a duplicated PQ code row would
-  * occupy two top-k slots, so this tier gets the CDC epoch-dir guarantee
-  * instead.
+  * occupy two top-k slots, so this tier overwrites its epoch directories
+  * whole instead.
   *
   * ==Staleness contract==
   * Appending never moves a centroid: recall degrades as the ingested
@@ -33,7 +33,7 @@ import org.apache.spark.sql.types.StructType
   * zero-shuffle literal-codebook map, the encode is a narrow transform,
   * and the single exchange carries (id, m-byte codes, centroid_id),
   * never float vectors. Each epoch adds at most one file per touched
-  * list; compact epochs offline like the CDC target's vacuum tier.
+  * list; compact old epochs offline.
   */
 object AnnIndexStream {
 
@@ -73,18 +73,11 @@ object AnnIndexStream {
       m: Int,
       trigger: Option[Trigger] = None,
       maxFilesPerTrigger: Int = 100): StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-      .writeStream
-      .queryName("graft-ann-index")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger.getOrElse(Trigger.ProcessingTime("5 seconds")))
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        applyVectorBatch(batch, epoch, idCol, vecCol, cents, m, indexPath)
-      }
-      .start()
+    FileStreamQuery.start(spark, srcDir, schema, checkpointDir,
+      trigger.getOrElse(Trigger.ProcessingTime("5 seconds")),
+      maxFilesPerTrigger, "graft-ann-index") { (batch, epoch) =>
+      applyVectorBatch(batch, epoch, idCol, vecCol, cents, m, indexPath)
+    }
 
   /** Drain all pending vector files once and stop (AvailableNow). */
   def drain(
@@ -97,11 +90,9 @@ object AnnIndexStream {
       vecCol: String,
       cents: Seq[(Long, Seq[Double])],
       m: Int,
-      maxFilesPerTrigger: Int = 100): Unit = {
-    val q = start(spark, srcDir, schema, indexPath, checkpointDir,
+      maxFilesPerTrigger: Int = 100): Unit =
+    start(spark, srcDir, schema, indexPath, checkpointDir,
       idCol, vecCol, cents, m,
       trigger = Some(Trigger.AvailableNow()),
-      maxFilesPerTrigger = maxFilesPerTrigger)
-    q.awaitTermination()
-  }
+      maxFilesPerTrigger = maxFilesPerTrigger).awaitTermination()
 }

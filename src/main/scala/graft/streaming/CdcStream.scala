@@ -1,12 +1,13 @@
 package graft.streaming
 
-import graft.apply.ChangeApplier
+import graft.apply.{ChangeApplier, IncrementalAgg}
+import graft.log.ChangeLog.{CdcId, NewData, Operation, RecordId}
 import graft.model.{CdcConfig, CdcTableSpec, ConflictStrategy}
+import graft.sources.TxTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 import org.apache.spark.sql.types.StructType
-import java.nio.file.{Files, Paths, StandardOpenOption}
 
 /** Structured-Streaming replication — the Spark-native form of the
   * reference's hand-rolled poll loop
@@ -19,707 +20,140 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   *  - T3 synced flags  → the streaming checkpoint (WAL + committed offsets);
   *                       rows are never rewritten to mark them synced
   *  - T4 delivery      → at-least-once from the checkpoint; end-to-end
-  *                       effectively-once because the target write is
-  *                       keyed by epoch (idempotent re-run of a batch)
+  *                       effectively-once because every commit is stamped
+  *                       with its batch's max cdc_id and a replayed batch
+  *                       at or below that mark is skipped
   *  - T5 ordering      → per-key last-write-wins inside each batch via
   *                       [[graft.apply.ChangeApplier.dedupToLatest]]; the
-  *                       epoch number disambiguates across batches
-  *  - T10 final drain  → [[drain]] = one `Trigger.AvailableNow` pass
+  *                       log's cdc-id order across batches
+  *  - T10 final drain  → [[drainTxTable]] = one `Trigger.AvailableNow` pass
   *
-  * ==Target storage==
-  * Plain parquet has no transactional MERGE, so the target snapshot is
-  * kept in EPOCH-VERSIONED directories: `target/v=<epoch>` plus a
-  * `_current` pointer file. Each version is internally BUCKETED by the
-  * primary key — subdirectories `__b=<pmod(hash(pk), numBuckets)>` — and
-  * a micro-batch rewrites ONLY the buckets containing its changed keys:
-  *
-  *  - changed buckets: read from the previous version (file-pruned — the
-  *    untouched buckets' files are never opened), merged with the batch,
-  *    written fresh;
-  *  - untouched buckets: carried into the new version as byte-identical
-  *    file copies (a server-side copy on an object store), never passing
-  *    through Spark.
-  *
-  * Per-trigger work is therefore O(changed buckets + batch), not
-  * O(target) — the difference between a viable and a non-viable
-  * continuous pipeline once the target is orders of magnitude larger
-  * than a batch. Re-running the same epoch after a crash produces the
-  * same directory (the bucket write overwrites `v=<epoch>` first, then
-  * re-copies), so the idempotence contract is unchanged. In production
-  * this whole dance is one Delta/Iceberg MERGE; the version-dir swap is
-  * the dependency-free equivalent with the same contract.
+  * ==Storage==
+  * Every table written here is a [[graft.sources.TxTable]]: the
+  * latest-state target ([[applyTxBatch]]), the SCD2 history
+  * ([[applyHistoryBatch]]), the grouped aggregate views
+  * ([[applyAggBatch]], [[applyMomentsBatch]], [[applyDistinctBatch]])
+  * and the join view ([[applyJoinBatch]]). Each micro-batch lands as one
+  * atomic commit stamped `epochId = max(cdc_id)` of the batch; the
+  * per-table [[TxEpochHighWater]] mark over those stamps is the
+  * exactly-once ledger, and it survives vacuum and checkpoint rebuilds.
+  * Keyed tables are maintained with the copy-on-write
+  * [[graft.sources.TxTable.merge]], which rewrites only the files holding
+  * touched keys and carries every other file forward by reference, so
+  * per-trigger work is O(changed keys + batch), not O(table). The
+  * O(groups) aggregate views are rewritten whole per batch.
   */
 object CdcStream {
 
-  /** Read the current target snapshot (empty-schema DataFrame when no
-    * version has been committed yet).
+  /** Batches dropped by the replay-skip ledger since JVM start — an
+    * observability counter: a drain that expects to apply every batch
+    * (the bench, a fresh replay) can assert this did not move.
     */
-  def readTarget(spark: SparkSession, targetDir: String, rowSchema: StructType): DataFrame =
-    readVersion(spark, targetDir, rowSchema, currentVersion(targetDir))
+  val skippedBatchCount = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  private def readVersion(
-      spark: SparkSession,
-      targetDir: String,
-      rowSchema: StructType,
-      version: Option[Long]): DataFrame = version match {
-    case Some(v) =>
-      // recursiveFileLookup: the version dir nests __b=<bucket> subdirs;
-      // plain partition discovery would surface __b as a column.
-      spark.read.schema(rowSchema).option("recursiveFileLookup", "true")
-        .parquet(s"$targetDir/v=$v")
-    case None => emptyDf(spark, rowSchema)
-  }
-
-  private def emptyDf(spark: SparkSession, rowSchema: StructType): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], rowSchema)
-
-  def currentVersion(targetDir: String): Option[Long] = {
-    val p = Paths.get(targetDir, "_current")
-    if (Files.exists(p)) Some(Files.readString(p).trim.toLong) else None
-  }
-
-  /** Latest committed version STRICTLY BELOW `epoch`, listed from disk.
-    * This — not `_current` — is the correct input when (re)applying
-    * `epoch`: after a crash that flipped `_current` to `epoch` but did
-    * not commit the checkpoint, the retry must neither read its own
-    * output directory (read+overwrite of one path is illegal) nor
-    * double-apply the batch; reading max(version < epoch) reproduces the
-    * exact input of the first attempt.
+  /** Run `body` over `batch` persisted for its lifetime: every applier
+    * runs several actions over the micro-batch (the ledger aggregate, the
+    * merge), and unpersisted each one re-reads the streaming file source
+    * — measured 2.4x numInputRows inflation and the same factor of
+    * redundant I/O per trigger (round-13 find).
     */
-  private[streaming] def versionBefore(targetDir: String, epoch: Long): Option[Long] = {
-    val root = Paths.get(targetDir)
-    if (!Files.isDirectory(root)) None
-    else {
-      val it = Files.list(root)
-      try {
-        import scala.jdk.CollectionConverters._
-        it.iterator().asScala
-          .map(_.getFileName.toString)
-          // toLongOption: a stray non-numeric entry (editor cruft, a
-          // half-written "v=tmp") must not kill the micro-batch.
-          .collect { case s if s.startsWith("v=") => s.stripPrefix("v=") }
-          .flatMap(_.toLongOption)
-          .filter(_ < epoch)
-          .maxOption
-      } finally it.close()
+  private def withCached(batch: DataFrame)(body: DataFrame => Unit): Unit = {
+    batch.persist()
+    try body(batch)
+    finally {
+      batch.unpersist()
+      ()
     }
   }
 
-  private def commitVersion(targetDir: String, epoch: Long): Unit = {
-    Files.createDirectories(Paths.get(targetDir))
-    Files.writeString(Paths.get(targetDir, "_current"), epoch.toString,
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING,
-      StandardOpenOption.WRITE)
-  }
-
-  /** One micro-batch application: rewrite the buckets containing the
-    * batch's changed keys, carry the rest forward byte-identically, flip
-    * the pointer (see class doc). Public so tests and [[drain]]/[[start]]
-    * share the exact same body.
+  /** The ledger gate every applier runs first: ONE action for emptiness
+    * plus the batch's max cdc_id (round 15 — per-trigger Spark actions
+    * over a tiny frame dominate the micro-batch latency budget), then the
+    * table's applied high-water for `streamId`. Returns `(mark, ledgerId)`
+    * when the batch has rows above the mark; `None` for an empty batch or
+    * a replay, which is counted in [[skippedBatchCount]] and logged.
     *
-    * The log schema fixes `record_id` to long, so the bucket function is
-    * `pmod(hash(pk as long), numBuckets)` on both sides.
+    * The ledger is DATA-DERIVED — the batch's max cdc_id — not the
+    * checkpoint's batch number: a lost/rebuilt checkpoint renumbers
+    * batches from 0, and a batch-number ledger would then skip NEW
+    * changes that landed in renumbered early batches. With cdc ids, a
+    * full checkpoint rebuild replays the log from the start and
+    * fully-applied batches skip on the mark. A regrouped batch that
+    * straddles the mark reaches the caller; keyed latest-state tables
+    * converge under the per-key-latest merge, while history and the
+    * aggregate views apply only its rows above `mark`.
     */
-  def applyBatch(
+  private def ledgerGate(
       batch: DataFrame,
-      epoch: Long,
-      targetDir: String,
-      spec: CdcTableSpec,
-      rowSchema: StructType,
-      strategy: ConflictStrategy = ConflictStrategy.LastWriteWins,
-      numBuckets: Int = 16): Unit = {
-    val spark = batch.sparkSession
-    if (batch.isEmpty) return
-    def bucketOf(c: org.apache.spark.sql.Column) =
-      pmod(hash(c.cast("long")), lit(numBuckets))
-
-    val prior = versionBefore(targetDir, epoch)
-    val changedBuckets = batch
-      .select(bucketOf(col(graft.log.ChangeLog.RecordId)).as("__b"))
-      .distinct().collect().map(_.getInt(0)).toSet
-
-    // Changed buckets of the previous version, FILE-PRUNED: only their
-    // directories are listed/opened; untouched buckets cost nothing.
-    val targetChanged = prior match {
-      case None => emptyDf(spark, rowSchema)
-      case Some(pv) =>
-        val dirs = changedBuckets.toSeq.sorted
-          .map(k => s"$targetDir/v=$pv/__b=$k")
-          .filter(d => Files.isDirectory(Paths.get(d)))
-        if (dirs.isEmpty) emptyDf(spark, rowSchema)
-        else spark.read.schema(rowSchema)
-          .option("recursiveFileLookup", "true").parquet(dirs: _*)
-    }
-
-    // Merge + write the changed buckets (see writeEpochVersion).
-    writeEpochVersion(
-      ChangeApplier.applyChanges(targetChanged, batch, spec, strategy)
-        .withColumn("__b", bucketOf(col(spec.pkCol))),
-      epoch, targetDir, prior, changedBuckets)
-  }
-
-  /** Commit one epoch of a bucketed versioned table: write the merged
-    * changed-bucket rows (which must already carry their `__b` column),
-    * carry the untouched buckets of the prior version forward as
-    * byte-identical file copies, then flip `_current`. mode=overwrite
-    * clears any half-written v=<epoch> from a crashed attempt FIRST; the
-    * copies then repopulate the untouched buckets — same directory
-    * contents on every re-run of the same epoch.
-    */
-  private def writeEpochVersion(
-      merged: DataFrame,
-      epoch: Long,
-      rootDir: String,
-      prior: Option[Long],
-      changedBuckets: Set[Int]): Unit = {
-    merged.write.partitionBy("__b").mode("overwrite").parquet(s"$rootDir/v=$epoch")
-
-    // Carry untouched buckets forward as byte-identical copies.
-    prior.foreach { pv =>
-      val priorDir = Paths.get(rootDir, s"v=$pv")
-      val it = Files.list(priorDir)
-      try {
-        import scala.jdk.CollectionConverters._
-        it.iterator().asScala
-          .filter(p => Files.isDirectory(p))
-          .filter { p =>
-            val name = p.getFileName.toString
-            name.startsWith("__b=") &&
-              name.stripPrefix("__b=").toIntOption.exists(!changedBuckets.contains(_))
-          }
-          .foreach { src =>
-            val dst = Paths.get(rootDir, s"v=$epoch", src.getFileName.toString)
-            val files = Files.walk(src)
-            try files.iterator().asScala.foreach { p =>
-              val rel = dst.resolve(src.relativize(p).toString)
-              if (Files.isDirectory(p)) Files.createDirectories(rel)
-              else Files.copy(p, rel,
-                java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-            } finally files.close()
-          }
-      } finally it.close()
-    }
-    commitVersion(rootDir, epoch)
-  }
-
-  // ----------------------------------------------- SCD2 history maintenance
-
-  /** Schema of the maintained SCD2 history table — identical to
-    * [[graft.log.History.scd2]]'s output: `record_id`, the tracked
-    * columns, `[valid_from, valid_to)` in log positions, `is_current`.
-    */
-  def historySchema(spec: CdcTableSpec, rowSchema: StructType): StructType = {
-    import org.apache.spark.sql.types.{IntegerType, LongType, StructField}
-    StructType(
-      StructField(graft.log.ChangeLog.RecordId, LongType) +:
-        spec.columns.map(c => rowSchema(c).copy(nullable = true)) :+
-        StructField("valid_from", LongType) :+
-        StructField("valid_to", LongType) :+
-        StructField("is_current", IntegerType))
-  }
-
-  /** Seed the history table from the base snapshot — every base key an
-    * open version-0 row (`valid_from = 0`, the position
-    * [[graft.log.History.scd2]] reserves for the base), committed as
-    * pseudo-epoch `v=-1` so streaming epoch 0 finds it via
-    * [[versionBefore]].
-    */
-  def bootstrapHistory(
-      base: DataFrame,
-      historyDir: String,
-      spec: CdcTableSpec,
-      numBuckets: Int = 16): Unit = {
-    val rows = base.select(
-      col(spec.pkCol).cast("long").as(graft.log.ChangeLog.RecordId) +:
-        spec.columns.map(col) :+
-        lit(0L).as("valid_from") :+
-        lit(null).cast("long").as("valid_to") :+
-        lit(1).as("is_current"): _*)
-      .withColumn("__b",
-        pmod(hash(col(graft.log.ChangeLog.RecordId).cast("long")), lit(numBuckets)))
-    writeEpochVersion(rows, -1L, historyDir, None, Set.empty)
-  }
-
-  /** Read the current committed history snapshot (empty when nothing —
-    * not even a bootstrap — has committed yet).
-    */
-  def readHistory(
-      spark: SparkSession,
-      historyDir: String,
-      spec: CdcTableSpec,
-      rowSchema: StructType): DataFrame =
-    readVersion(spark, historyDir, historySchema(spec, rowSchema),
-      currentVersion(historyDir))
-
-  /** Incrementally maintain the SCD2 history for one micro-batch — the
-    * streaming form of [[graft.log.History.scd2]], with the same
-    * epoch-versioned bucketed layout (and therefore the same idempotent
-    * crash-replay contract) as [[applyBatch]]:
-    *
-    *  - only the buckets containing the batch's keys are read from the
-    *    previous version (file-pruned) and rewritten; untouched buckets
-    *    are carried forward byte-identically;
-    *  - within a changed bucket, rows of keys NOT in the batch — and the
-    *    already-CLOSED versions of keys that ARE — are carried through
-    *    unmodified; only each batched key's OPEN version re-enters the
-    *    window (as a pseudo-event at its `valid_from`) together with the
-    *    batch's events, exactly the batch formula restricted to the
-    *    affected keys. Per-epoch work is O(changed buckets + batch),
-    *    never O(history).
-    *
-    * Ordering contract (same as the latest-state target's epoch
-    * disambiguation): batches must arrive in log order — every event in
-    * a batch has a `cdc_id` greater than any previously applied event
-    * for its key. The file stream over an append-only log provides this;
-    * an out-of-order backfill must instead rebuild via the batch
-    * operator. Re-running a crashed epoch reads `versionBefore(epoch)`,
-    * reproducing the first attempt's input and output.
-    */
-  def applyHistoryBatch(
-      batch: DataFrame,
-      epoch: Long,
-      historyDir: String,
-      spec: CdcTableSpec,
-      rowSchema: StructType,
-      numBuckets: Int = 16): Unit = {
-    import graft.log.ChangeLog.{CdcId, NewData, Operation, RecordId}
-    import org.apache.spark.sql.expressions.Window
-    val spark = batch.sparkSession
-    if (batch.isEmpty) return
-    def bucketOf(c: org.apache.spark.sql.Column) =
-      pmod(hash(c.cast("long")), lit(numBuckets))
-
-    val prior = versionBefore(historyDir, epoch)
-    val changedBuckets = batch
-      .select(bucketOf(col(RecordId)).as("__b"))
-      .distinct().collect().map(_.getInt(0)).toSet
-    val histSchema = historySchema(spec, rowSchema)
-
-    val priorChanged = prior match {
-      case None => emptyDf(spark, histSchema)
-      case Some(pv) =>
-        val dirs = changedBuckets.toSeq.sorted
-          .map(k => s"$historyDir/v=$pv/__b=$k")
-          .filter(d => Files.isDirectory(Paths.get(d)))
-        if (dirs.isEmpty) emptyDf(spark, histSchema)
-        else spark.read.schema(histSchema)
-          .option("recursiveFileLookup", "true").parquet(dirs: _*)
-    }
-
-    // Split the changed buckets' rows: closed versions and unbatched
-    // keys pass through; each batched key's open version re-enters the
-    // window as a pseudo-event at its valid_from.
-    val batchKeys = batch.select(col(RecordId).as("__bk")).distinct()
-    val keyed = priorChanged
-      .join(batchKeys, col(RecordId) === col("__bk"), "left_outer")
-    val carried = keyed
-      .filter(col("__bk").isNull || col("valid_to").isNotNull).drop("__bk")
-    val openEvents = keyed
-      .filter(col("__bk").isNotNull && col("valid_to").isNull)
-      .select(col("valid_from").as(CdcId), col(RecordId),
-        struct(spec.columns.map(col): _*).as("__img"))
-    val batchEvents = batch.select(
-      col(CdcId), col(RecordId),
-      when(col(Operation) === "DELETE", lit(null)).otherwise(col(NewData)).as("__img"))
-    val w = Window.partitionBy(col(RecordId)).orderBy(col(CdcId))
-    val rederived = openEvents.unionByName(batchEvents)
-      .withColumn("valid_to", lead(col(CdcId), 1).over(w))
-      .filter(col("__img").isNotNull) // tombstones only close predecessors
-      .select(
-        col(RecordId) +:
-          spec.columns.map(c => col(s"__img.$c").as(c)) :+
-          col(CdcId).as("valid_from") :+
-          col("valid_to") :+
-          when(col("valid_to").isNull, lit(1)).otherwise(lit(0)).as("is_current"): _*)
-
-    writeEpochVersion(
-      carried.unionByName(rederived).withColumn("__b", bucketOf(col(RecordId))),
-      epoch, historyDir, prior, changedBuckets)
-  }
-
-  // ------------------------------------------- aggregate-view maintenance
-
-  /** Schema of the maintained aggregate view — identical to
-    * [[graft.apply.IncrementalAgg.snapshotAgg]]'s output.
-    */
-  private def aggSchema(keyType: org.apache.spark.sql.types.DataType): StructType = {
-    import org.apache.spark.sql.types.{DecimalType, LongType, StructField}
-    StructType(Seq(
-      StructField("g_key", keyType),
-      StructField("cnt", LongType),
-      StructField("total", DecimalType(28, 4))))
-  }
-
-  /** Seed the aggregate view from the base snapshot, committed as
-    * pseudo-epoch `v=-1` (mirrors [[bootstrapHistory]]).
-    */
-  def bootstrapAgg(
-      base: DataFrame,
-      aggDir: String,
-      keyCol: String,
-      valueCol: String): Unit = {
-    graft.apply.IncrementalAgg.snapshotAgg(base, keyCol, valueCol)
-      .write.mode("overwrite").parquet(s"$aggDir/v=-1")
-    commitVersion(aggDir, -1L)
-  }
-
-  /** Read the current committed aggregate view. */
-  def readAgg(
-      spark: SparkSession,
-      aggDir: String,
-      keyType: org.apache.spark.sql.types.DataType): DataFrame =
-    currentVersion(aggDir) match {
-      case Some(v) => spark.read.schema(aggSchema(keyType)).parquet(s"$aggDir/v=$v")
-      case None    => emptyDf(spark, aggSchema(keyType))
-    }
-
-  /** Incrementally maintain a grouped count/sum view for one micro-batch
-    * — the streaming form of [[graft.apply.IncrementalAgg.maintain]],
-    * completing the streaming materialized-view family next to the
-    * latest-state target ([[applyBatch]]) and the SCD2 history
-    * ([[applyHistoryBatch]]).
-    *
-    * The view is O(groups) rows — always small relative to the log — so
-    * unlike the bucketed tables each epoch rewrites it WHOLE:
-    * `aggDir/v=<epoch>` is one overwrite (exactly-once per epoch by
-    * directory replacement), and a crashed epoch's re-run reads
-    * `versionBefore(epoch)` — the first attempt's exact input — making
-    * replay idempotent without any bucket bookkeeping. Per-epoch work is
-    * O(batch) deltas + O(groups) merge; the base table is never
-    * rescanned after bootstrap.
-    */
-  def applyAggBatch(
-      batch: DataFrame,
-      epoch: Long,
-      aggDir: String,
-      keyCol: String,
-      valueCol: String,
-      keyType: org.apache.spark.sql.types.DataType): Unit = {
-    val spark = batch.sparkSession
-    if (batch.isEmpty) return
-    val prior = versionBefore(aggDir, epoch)
-    val stored = prior match {
-      case Some(pv) => spark.read.schema(aggSchema(keyType)).parquet(s"$aggDir/v=$pv")
-      case None     => emptyDf(spark, aggSchema(keyType))
-    }
-    graft.apply.IncrementalAgg.maintain(stored, batch, keyCol, valueCol)
-      .write.mode("overwrite").parquet(s"$aggDir/v=$epoch")
-    commitVersion(aggDir, epoch)
-  }
-
-  /** Aggregate-view wiring for [[start]]: maintain
-    * `groupBy(keyCol).agg(count, sum(valueCol))` in `dir` alongside the
-    * target. `keyCol` must be one of the spec's columns; `keyType` its
-    * type in the row schema.
-    */
-  final case class AggView(
       dir: String,
-      keyCol: String,
-      valueCol: String,
-      keyType: org.apache.spark.sql.types.DataType)
-
-  /** Schema of the maintained second-moment view — identical to
-    * [[graft.apply.IncrementalAgg.snapshotMoments]]'s output.
-    */
-  private def momentsSchema(keyType: org.apache.spark.sql.types.DataType): StructType = {
-    import org.apache.spark.sql.types.{DecimalType, LongType, StructField}
-    StructType(Seq(
-      StructField("g_key", keyType),
-      StructField("cnt", LongType),
-      StructField("total", DecimalType(28, 4)),
-      StructField("total_sq", DecimalType(38, 8))))
+      streamId: Option[String]): Option[(Long, Long)] = {
+    val head = batch.agg(count(lit(1)), max(col(CdcId))).first()
+    if (head.getLong(0) == 0L) return None
+    val ledgerId = head.getLong(1)
+    // per-stream mark (round 14): only THIS writer stream's committed
+    // high-water gates the skip — under N concurrent writers a
+    // table-global mark dropped every batch whose max cdc_id trailed
+    // another writer's committed max (mostly-lost merges at 2 writers)
+    val mark = TxEpochHighWater.maxApplied(dir, streamId)
+    if (ledgerId <= mark) {
+      // sound only under the in-order-log contract ([[startTxTable]]):
+      // a replayed batch skips here; a BACKFILLED file (ids below the
+      // mark but never applied) would too — warn loudly so an operator
+      // backfilling an old log file sees the drop
+      skippedBatchCount.incrementAndGet()
+      System.err.println(
+        s"[cdc-tx] skipping batch with max cdc_id $ledgerId <= applied " +
+          s"high-water $mark at $dir (checkpoint replay under the " +
+          "in-order-log contract; a backfill must renumber above the mark)")
+      None
+    } else Some((mark, ledgerId))
   }
 
-  /** Seed the moments view from the base snapshot (pseudo-epoch −1). */
-  def bootstrapMoments(
-      base: DataFrame,
-      momentsDir: String,
-      keyCol: String,
-      valueCol: String): Unit = {
-    graft.apply.IncrementalAgg.snapshotMoments(base, keyCol, valueCol)
-      .write.mode("overwrite").parquet(s"$momentsDir/v=-1")
-    commitVersion(momentsDir, -1L)
-  }
-
-  /** Read the current committed moments view. */
-  def readMoments(
-      spark: SparkSession,
-      momentsDir: String,
-      keyType: org.apache.spark.sql.types.DataType): DataFrame =
-    currentVersion(momentsDir) match {
-      case Some(v) =>
-        spark.read.schema(momentsSchema(keyType)).parquet(s"$momentsDir/v=$v")
-      case None => emptyDf(spark, momentsSchema(keyType))
-    }
-
-  /** Incrementally maintain a grouped count/sum/sum-of-squares view for
-    * one micro-batch — [[applyAggBatch]]'s contract (whole-view
-    * overwrite per epoch, `versionBefore` replay, O(batch) deltas +
-    * O(groups) merge) with the squared term riding along, so a
-    * mean/variance/stddev dashboard stays exactly fresh per epoch
-    * without ever rescanning the base.
-    */
-  def applyMomentsBatch(
-      batch: DataFrame,
-      epoch: Long,
-      momentsDir: String,
-      keyCol: String,
-      valueCol: String,
-      keyType: org.apache.spark.sql.types.DataType): Unit = {
-    val spark = batch.sparkSession
-    if (batch.isEmpty) return
-    val prior = versionBefore(momentsDir, epoch)
-    val stored = prior match {
-      case Some(pv) =>
-        spark.read.schema(momentsSchema(keyType)).parquet(s"$momentsDir/v=$pv")
-      case None => emptyDf(spark, momentsSchema(keyType))
-    }
-    graft.apply.IncrementalAgg.maintainMoments(stored, batch, keyCol, valueCol)
-      .write.mode("overwrite").parquet(s"$momentsDir/v=$epoch")
-    commitVersion(momentsDir, epoch)
-  }
-
-  /** Moments-view wiring for [[start]]: maintain
-    * `groupBy(keyCol).agg(count, sum, sumsq of valueCol)` in `dir`
-    * alongside the target.
-    */
-  final case class MomentsView(
-      dir: String,
-      keyCol: String,
-      valueCol: String,
-      keyType: org.apache.spark.sql.types.DataType)
-
-  // -------------------------------------- distinct-count view maintenance
-
-  private def distinctSchema(
-      keyType: org.apache.spark.sql.types.DataType,
-      valueType: org.apache.spark.sql.types.DataType): StructType = {
-    import org.apache.spark.sql.types.{LongType, StructField}
-    StructType(Seq(
-      StructField("g_key", keyType),
-      StructField("v", valueType),
-      StructField("vcnt", LongType)))
-  }
-
-  /** Seed the COUNT(DISTINCT) support table from the base snapshot
-    * (pseudo-epoch −1).
-    */
-  def bootstrapDistinct(
-      base: DataFrame,
-      distinctDir: String,
-      keyCol: String,
-      valueCol: String): Unit = {
-    graft.apply.IncrementalAgg.snapshotDistinct(base, keyCol, valueCol)
-      .write.mode("overwrite").parquet(s"$distinctDir/v=-1")
-    commitVersion(distinctDir, -1L)
-  }
-
-  /** Read the current committed support table; derive the dashboard with
-    * [[graft.apply.IncrementalAgg.distinctView]].
-    */
-  def readDistinct(
-      spark: SparkSession,
-      distinctDir: String,
-      keyType: org.apache.spark.sql.types.DataType,
-      valueType: org.apache.spark.sql.types.DataType): DataFrame =
-    currentVersion(distinctDir) match {
-      case Some(v) =>
-        spark.read.schema(distinctSchema(keyType, valueType))
-          .parquet(s"$distinctDir/v=$v")
-      case None => emptyDf(spark, distinctSchema(keyType, valueType))
-    }
-
-  /** Incrementally maintain the COUNT(DISTINCT) multiplicity support
-    * table for one micro-batch — [[applyAggBatch]]'s contract
-    * (whole-view overwrite per epoch, `versionBefore` replay) over
-    * [[graft.apply.IncrementalAgg.maintainDistinct]], so a distinct-count
-    * dashboard stays exactly fresh per epoch without rescanning base
-    * data: the non-self-maintainable aggregate made maintainable by the
-    * stored multiplicities.
-    */
-  def applyDistinctBatch(
-      batch: DataFrame,
-      epoch: Long,
-      distinctDir: String,
-      keyCol: String,
-      valueCol: String,
-      keyType: org.apache.spark.sql.types.DataType,
-      valueType: org.apache.spark.sql.types.DataType): Unit = {
-    val spark = batch.sparkSession
-    if (batch.isEmpty) return
-    val prior = versionBefore(distinctDir, epoch)
-    val stored = prior match {
-      case Some(pv) =>
-        spark.read.schema(distinctSchema(keyType, valueType))
-          .parquet(s"$distinctDir/v=$pv")
-      case None => emptyDf(spark, distinctSchema(keyType, valueType))
-    }
-    graft.apply.IncrementalAgg.maintainDistinct(stored, batch, keyCol, valueCol)
-      .write.mode("overwrite").parquet(s"$distinctDir/v=$epoch")
-    commitVersion(distinctDir, epoch)
-  }
-
-  /** Distinct-count-view wiring for [[start]]: maintain the
-    * `groupBy(keyCol) -> COUNT(DISTINCT valueCol)` support table in
-    * `dir` alongside the target.
-    */
-  final case class DistinctView(
-      dir: String,
-      keyCol: String,
-      valueCol: String,
-      keyType: org.apache.spark.sql.types.DataType,
-      valueType: org.apache.spark.sql.types.DataType)
-
-  // ------------------------------------------------ join-view maintenance
-
-  /** Incrementally maintain an enriched JOIN view (`fact ⋈ dim` on
-    * `fkCol = dimKey`, carrying `dimCols`) for one micro-batch — the
-    * streaming form of [[graft.apply.IncrementalJoin.maintain]], reusing
-    * [[applyBatch]]'s bucketed epoch-versioned machinery wholesale: the
-    * batch's images are enriched against the dimension (one
-    * O(batch) ⋈ dim join, AQE-broadcast), then applied as a change batch
-    * on the VIEW's extended row shape, so only the buckets containing
-    * changed keys are rewritten and crash replay is idempotent per
-    * epoch.
+  /** Land a keyed change set (`operation` column plus the table's
+    * columns) as one commit stamped `ledgerId`: the first batch seeds the
+    * table with its non-DELETE rows, every later batch is a
+    * [[graft.sources.TxTable.merge]] on `keys`. Returns true when it
+    * merged.
     *
-    * Inner-join parity: an upsert whose fk has no dim match must REMOVE
-    * the key from the view (a recompute would not emit it) — such
-    * changes are rewritten to DELETE before the apply. The dimension is
-    * taken as-of the epoch (static or slowly snapshotted — see
-    * [[graft.apply.IncrementalJoin]] for why dim-side deltas are the
-    * SCD2/pitLookup path instead).
-    *
-    * `viewSchema` = fact row schema columns followed by `dimCols` (as
-    * produced by [[graft.apply.IncrementalJoin.snapshotView]]).
+    * Seed CAS (round 14): the overwrite is pinned to version 0 — under N
+    * concurrent writers both first batches can see an empty table, and an
+    * unpinned retry loop turned the loser into an overwrite of the
+    * winner's seed. A lost seed race (-1) falls through to the merge
+    * path, which applies the same batch against the winner's table.
     */
-  def applyJoinBatch(
-      batch: DataFrame,
-      epoch: Long,
-      viewDir: String,
-      spec: CdcTableSpec,
-      viewSchema: StructType,
-      dim: DataFrame,
-      fkCol: String,
-      dimKey: String,
-      dimCols: Seq[String],
-      numBuckets: Int = 16): Unit = {
-    import graft.log.ChangeLog.{NewData, Operation}
-    if (batch.isEmpty) return
-    val viewSpec = CdcTableSpec(spec.table + "_join", spec.columns ++ dimCols, spec.pkCol)
-
-    // enrich each non-DELETE image; dangling fk (null dimKey after the
-    // left join) demotes the change to DELETE
-    val d = dim.select((dimKey +: dimCols).distinct.map(col): _*)
-    val enriched = batch
-      .join(d, col(s"$NewData.$fkCol") === col(dimKey), "left_outer")
-      .withColumn(Operation,
-        when(col(Operation) === "DELETE" || col(dimKey).isNull, lit("DELETE"))
-          .otherwise(col(Operation)))
-      .withColumn(NewData,
-        when(col(Operation) === "DELETE",
-          lit(null).cast(org.apache.spark.sql.types.StructType(
-            viewSchema.fields)))
-          .otherwise(struct(
-            spec.columns.map(c => col(s"$NewData.$c").as(c)) ++
-              dimCols.map(col): _*)))
-      .drop((dimKey +: dimCols).distinct: _*)
-
-    applyBatch(enriched, epoch, viewDir, viewSpec, viewSchema,
-      numBuckets = numBuckets)
-  }
-
-  /** Join-view wiring for [[start]]: maintain the `fact ⋈ dim` view in
-    * `dir` alongside the target. `dim` is read per epoch from the
-    * caller's frame; `viewSchema` per [[applyJoinBatch]].
-    */
-  final case class JoinView(
+  private def seedOrMerge(
+      changes: DataFrame,
       dir: String,
-      dim: DataFrame,
-      fkCol: String,
-      dimKey: String,
-      dimCols: Seq[String],
-      viewSchema: StructType)
-
-  /** Start continuous replication: stream the change-log directory and
-    * merge each micro-batch into the versioned target.
-    *
-    * @param logDir       append-only directory of parquet change-log files
-    * @param targetDir    versioned target root (see class doc)
-    * @param checkpointDir streaming checkpoint (replaces `synced` flags)
-    * @param maxFilesPerTrigger batch-size cap (T2); reference default 100
-    *                     changes/batch ≈ one capture file per trigger here
-    * @param historyDir   when set, the SCD2 history table is maintained
-    *                     incrementally alongside the latest-state target
-    *                     ([[applyHistoryBatch]] per micro-batch). Both
-    *                     tables version independently but share the
-    *                     epoch number; each is idempotent per epoch, so
-    *                     a crash between the two commits replays to the
-    *                     identical pair of directories.
-    * @param aggView      when set, the grouped count/sum view is
-    *                     maintained incrementally alongside the target
-    *                     ([[applyAggBatch]] per micro-batch) — same
-    *                     shared-epoch, per-surface-idempotent contract
-    *                     as `historyDir`.
-    * @param joinView     when set, the dim-enriched join view is
-    *                     maintained incrementally alongside the target
-    *                     ([[applyJoinBatch]] per micro-batch) — same
-    *                     contract.
-    */
-  def start(
-      spark: SparkSession,
-      logDir: String,
-      targetDir: String,
-      checkpointDir: String,
-      spec: CdcTableSpec,
-      rowSchema: StructType,
-      config: CdcConfig = CdcConfig(),
-      trigger: Option[Trigger] = None,
-      maxFilesPerTrigger: Int = 100,
-      strategy: ConflictStrategy = ConflictStrategy.LastWriteWins,
-      numBuckets: Int = 16,
-      historyDir: Option[String] = None,
-      aggView: Option[AggView] = None,
-      momentsView: Option[MomentsView] = None,
-      distinctView: Option[DistinctView] = None,
-      joinView: Option[JoinView] = None): StreamingQuery =
-    startLogStream(spark, logDir, rowSchema, checkpointDir,
-      trigger.getOrElse(
-        Trigger.ProcessingTime(s"${config.syncIntervalSeconds} seconds")),
-      maxFilesPerTrigger, s"cdc-replicate-${spec.table}") { (batch, epoch) =>
-      // History FIRST: applyHistoryBatch needs the batch's events only,
-      // but reads nothing the target write touches; ordering just makes
-      // the crash window deterministic (history may be one epoch ahead
-      // of the target, never behind AND ahead at once — both replay).
-      historyDir.foreach(h =>
-        applyHistoryBatch(batch, epoch, h, spec, rowSchema, numBuckets))
-      aggView.foreach(v =>
-        applyAggBatch(batch, epoch, v.dir, v.keyCol, v.valueCol, v.keyType))
-      momentsView.foreach(v =>
-        applyMomentsBatch(batch, epoch, v.dir, v.keyCol, v.valueCol, v.keyType))
-      distinctView.foreach(v =>
-        applyDistinctBatch(batch, epoch, v.dir, v.keyCol, v.valueCol,
-          v.keyType, v.valueType))
-      joinView.foreach(v =>
-        applyJoinBatch(batch, epoch, v.dir, spec, v.viewSchema, v.dim,
-          v.fkCol, v.dimKey, v.dimCols, numBuckets))
-      applyBatch(batch, epoch, targetDir, spec, rowSchema, strategy, numBuckets)
-    }
+      keys: Seq[String],
+      ledgerId: Long,
+      streamId: Option[String],
+      writeMode: String = "cow"): Boolean = {
+    val seeded = TxTable.latest(dir).isEmpty && 0L <= TxTable.commit(
+      changes.filter(col("operation") =!= "DELETE").drop("operation"),
+      dir, "overwrite", statsColumns = keys.take(1),
+      epochId = Some(ledgerId), streamId = streamId,
+      expectVersion = Some(0L))
+    if (!seeded)
+      TxTable.merge(changes.sparkSession, dir, changes, keys,
+        epochId = Some(ledgerId), writeMode = writeMode, streamId = streamId)
+    !seeded
+  }
 
   /** One micro-batch of the change log applied to a [[graft.sources
-    * .TxTable]] TARGET — the reference's replicate loop landing in the
-    * ACID table format instead of the bucketed epoch-dir layout: each
-    * epoch is ONE copy-on-write [[graft.sources.TxTable.merge]] (only
-    * files containing touched keys rewrite; O(changed keys), never
-    * O(table)), atomically visible, time-travelable per epoch, and
-    * exactly-once via a DATA-DERIVED stamp — the batch's max cdc_id —
-    * tracked by the [[TxEpochHighWater]] mark, which survives vacuum of
-    * the target; the target is single-writer by contract, like the
-    * replica. (Checkpoint batch NUMBERS would not survive a checkpoint
-    * rebuild — see the ledger comment in the body.)
+    * .TxTable]] target — the reference's replicate loop landing in the
+    * ACID table format: each epoch is ONE copy-on-write
+    * [[graft.sources.TxTable.merge]] (only files containing touched keys
+    * rewrite; O(changed keys), never O(table)), atomically visible,
+    * time-travelable per epoch, and exactly-once via the data-derived
+    * cdc-id ledger (see the class doc); the target is single-writer per
+    * stream by contract, like the replica.
     *
     * The first batch seeds the table with its surviving inserts (an
     * overwrite commit); every later batch merges the per-key-latest
-    * change set under `strategy`.
+    * change set under `strategy`. A batch that straddles the mark
+    * re-applies its older changes, and because replay proceeds in log
+    * order to the end, the per-key-latest merge converges to the same
+    * final state.
     */
   def applyTxBatch(
       batch: DataFrame,
@@ -730,107 +164,22 @@ object CdcStream {
       writeMode: String = "cow",
       foldEvery: Int = 0,
       foldMinDeletedFraction: Double = 0.0,
-      streamId: Option[String] = None): Unit = {
-    import graft.log.ChangeLog.{CdcId, NewData, Operation, RecordId}
-    import graft.sources.TxTable
-    val spark = batch.sparkSession
-    // The body runs THREE actions over the micro-batch (isEmpty, the
-    // ledger max, the merge); unpersisted, each one re-reads the
-    // streaming file source — measured 2.4x numInputRows inflation and
-    // the same factor of redundant I/O per trigger (round-13 find).
-    // Cache for the trigger's lifetime; released in the finally.
-    batch.persist()
-    try applyTxBatchCached(batch, tableDir, spec, rowSchema, strategy,
-      writeMode, foldEvery, foldMinDeletedFraction, streamId)
-    finally {
-      batch.unpersist()
-      ()
-    }
-  }
-
-  /** Batches dropped by the replay-skip ledger since JVM start — an
-    * observability counter: a drain that expects to apply every batch
-    * (the bench, a fresh replay) can assert this did not move.
-    */
-  val skippedBatchCount = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  private def applyTxBatchCached(
-      batch: DataFrame,
-      tableDir: String,
-      spec: CdcTableSpec,
-      rowSchema: StructType,
-      strategy: ConflictStrategy,
-      writeMode: String,
-      foldEvery: Int,
-      foldMinDeletedFraction: Double,
-      streamId: Option[String]): Unit = {
-    import graft.log.ChangeLog.{CdcId, NewData, Operation, RecordId}
-    import graft.sources.TxTable
-    val spark = batch.sparkSession
-    // ONE action for emptiness + the ledger mark (round 15): the
-    // micro-batch latency budget is dominated by per-trigger Spark
-    // actions over a tiny frame, and isEmpty + a separate max() paid two
-    // scheduler round-trips for one aggregate's worth of work.
-    // The applied ledger is DATA-DERIVED — the batch's max cdc_id — not
-    // the checkpoint's batch number (`epoch` is ignored for the skip
-    // decision): a lost/rebuilt checkpoint renumbers batches from 0, and
-    // a batch-number ledger would then skip NEW changes that landed in
-    // renumbered early batches. With cdc ids, a full checkpoint rebuild
-    // replays the log from the start: fully-applied batches skip on the
-    // mark; a regrouped batch straddling the mark re-applies its older
-    // changes, and because replay proceeds in log order to the end, the
-    // per-key-latest merge converges to the same final state (the same
-    // at-least-once-then-converge argument as the bucketed target's
-    // epoch-dir overwrite).
-    val head = batch.agg(
-      org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)),
-      org.apache.spark.sql.functions.max(col(CdcId))).first()
-    if (head.getLong(0) == 0L) return
-    val ledgerId = head.getLong(1)
-    // per-stream mark (round 14): only THIS writer stream's committed
-    // high-water gates the skip — under N concurrent writers a
-    // table-global mark dropped every batch whose max cdc_id trailed
-    // another writer's committed max (mostly-lost merges at 2 writers)
-    val mark = TxEpochHighWater.maxApplied(tableDir, streamId)
-    if (ledgerId <= mark) {
-      // sound only under the in-order-log contract ([[startTxTable]]):
-      // a replayed batch skips here; a BACKFILLED file (ids below the
-      // mark but never applied) would too — warn loudly so an operator
-      // backfilling an old log file sees the drop
-      skippedBatchCount.incrementAndGet()
-      System.err.println(
-        s"[cdc-tx] skipping batch with max cdc_id $ledgerId <= applied " +
-          s"high-water $mark at $tableDir (checkpoint replay under the " +
-          "in-order-log contract; a backfill must renumber above the mark)")
-      return
-    }
-    val latest = ChangeApplier.dedupToLatest(batch, strategy)
-    val pkField = rowSchema.fields.find(_.name == spec.pkCol).getOrElse(
-      throw new IllegalArgumentException(
-        s"pk ${spec.pkCol} missing from the row schema"))
-    val changes = latest.select(
-      rowSchema.fields.map { f =>
-        if (f.name == spec.pkCol)
-          // DELETE rows have no new image; the log key IS the pk
-          coalesce(col(s"$NewData.${f.name}"),
-            col(RecordId).cast(pkField.dataType)).as(f.name)
-        else col(s"$NewData.${f.name}").as(f.name)
-      } :+ col(Operation).as("operation"): _*)
-    // Seed CAS (round 14): the overwrite is pinned to version 0 — under
-    // N concurrent writers both first batches can see an empty table,
-    // and an unpinned retry loop turned the loser into an overwrite of
-    // the winner's seed. A lost seed race (-1) falls through to the
-    // merge path, which applies the same batch against the winner's
-    // table.
-    val seeded = TxTable.latest(tableDir).isEmpty && 0L <= TxTable.commit(
-      changes.filter(col("operation") =!= "DELETE").drop("operation"),
-      tableDir, "overwrite", statsColumns = Seq(spec.pkCol),
-      epochId = Some(ledgerId), streamId = streamId,
-      expectVersion = Some(0L))
-    if (!seeded) {
-      TxTable.merge(spark, tableDir, changes, Seq(spec.pkCol),
-        epochId = Some(ledgerId), writeMode = writeMode, streamId = streamId)
+      streamId: Option[String] = None): Unit = withCached(batch) { b =>
+    ledgerGate(b, tableDir, streamId).foreach { case (_, ledgerId) =>
+      val latest = ChangeApplier.dedupToLatest(b, strategy)
+      val pkField = rowSchema.fields.find(_.name == spec.pkCol).getOrElse(
+        throw new IllegalArgumentException(
+          s"pk ${spec.pkCol} missing from the row schema"))
+      val changes = latest.select(
+        rowSchema.fields.map { f =>
+          if (f.name == spec.pkCol)
+            // DELETE rows have no new image; the log key IS the pk
+            coalesce(col(s"$NewData.${f.name}"),
+              col(RecordId).cast(pkField.dataType)).as(f.name)
+          else col(s"$NewData.${f.name}").as(f.name)
+        } :+ col(Operation).as("operation"): _*)
+      val merged = seedOrMerge(changes, tableDir, Seq(spec.pkCol), ledgerId,
+        streamId, writeMode)
       // merge-on-read maintenance cadence: after `foldEvery` MoR merges,
       // fold the accumulated deletion vectors (TxTable.foldDvs rewrites
       // ONLY the dv-carrying files — O(dv'd bytes), not the table). The
@@ -839,7 +188,7 @@ object CdcStream {
       // never a correctness dependency (every read applies DVs anyway).
       // The fold's CAS commit carries no epoch stamp, so the
       // exactly-once high-water ledger is untouched.
-      if (writeMode == "mor" && foldEvery > 0) {
+      if (merged && writeMode == "mor" && foldEvery > 0) {
         // increment-and-reset ATOMICALLY (compute holds the bin lock):
         // exactly one caller observes the threshold crossing per cadence
         // window, so two appliers on the same dir can neither double-fold
@@ -857,13 +206,12 @@ object CdcStream {
           // whose deleted fraction crossed it rewrite (foldDvsIf) —
           // cold files keep their O(1) DVs; 0.0 keeps the full fold
           if (foldMinDeletedFraction > 0.0)
-            TxTable.foldDvsIf(spark, tableDir, foldMinDeletedFraction)
-          else TxTable.foldDvs(spark, tableDir)
+            TxTable.foldDvsIf(b.sparkSession, tableDir, foldMinDeletedFraction)
+          else TxTable.foldDvs(b.sparkSession, tableDir)
           ()
         }
       }
     }
-    ()
   }
 
   /** MoR merges since the last DV fold, per target dir (in-JVM — see
@@ -872,12 +220,196 @@ object CdcStream {
   private val morMergesSinceFold =
     new java.util.concurrent.ConcurrentHashMap[String, Integer]()
 
-  /** [[start]] with a [[graft.sources.TxTable]] target: the change log
-    * streams into an ACID table — atomic multi-file epoch commits,
-    * snapshot isolation for readers, per-epoch time travel, CDF over the
-    * applied history, and copy-on-write merges that rewrite O(hit files)
-    * instead of whole buckets. The bucketed [[start]] remains the
-    * format-free path.
+  // ----------------------------------------------- SCD2 history maintenance
+
+  /** Seed the history table from the base snapshot — every base key an
+    * open version-0 row (`valid_from = 0`, the position
+    * [[graft.log.History.scd2]] reserves for the base), as one overwrite
+    * commit with no epoch stamp, so the first streamed batch applies.
+    */
+  def bootstrapHistory(base: DataFrame, historyDir: String, spec: CdcTableSpec): Unit = {
+    TxTable.commit(
+      base.select(
+        col(spec.pkCol).cast("long").as(RecordId) +:
+          spec.columns.map(col) :+
+          lit(0L).as("valid_from") :+
+          lit(null).cast("long").as("valid_to") :+
+          lit(1).as("is_current"): _*),
+      historyDir, "overwrite", statsColumns = Seq(RecordId))
+    ()
+  }
+
+  /** Incrementally maintain the SCD2 history for one micro-batch — the
+    * streaming form of [[graft.log.History.scd2]], with the same output
+    * schema: `record_id`, the tracked columns, `[valid_from, valid_to)`
+    * in log positions, `is_current`.
+    *
+    * Only the batch's rows above the table's cdc-id mark apply (a
+    * re-grouped replay that straddles the mark must not close a version
+    * twice). Each batched key's OPEN version is read back with a
+    * stats-pruned read over the batch's key range, re-enters the window
+    * as a pseudo-event at its `valid_from` together with the batch's
+    * events, and the rederived rows merge on `(record_id, valid_from)`:
+    * the open version is closed in place, new versions are inserted.
+    * Closed versions and unbatched keys are never rewritten — the
+    * copy-on-write merge carries their files forward by reference — so
+    * per-batch work is O(batch + hit files), never O(history).
+    *
+    * Ordering contract: batches arrive in log order — every event in a
+    * batch has a `cdc_id` greater than any previously applied event for
+    * its key. The file stream over an append-only log provides this; an
+    * out-of-order backfill must instead rebuild via the batch operator.
+    */
+  def applyHistoryBatch(
+      batch: DataFrame,
+      historyDir: String,
+      spec: CdcTableSpec,
+      rowSchema: StructType,
+      streamId: Option[String] = None): Unit = withCached(batch) { b =>
+    import org.apache.spark.sql.expressions.Window
+    ledgerGate(b, historyDir, streamId).foreach { case (mark, ledgerId) =>
+      val spark = b.sparkSession
+      val fresh = b.filter(col(CdcId) > mark)
+      val openEvents = TxTable.latest(historyDir).map { _ =>
+        val range = fresh.agg(min(col(RecordId)), max(col(RecordId))).first()
+        TxTable.readPruned(spark, historyDir, RecordId,
+            range.getLong(0), range.getLong(1))
+          .filter(col("valid_to").isNull)
+          .join(fresh.select(col(RecordId)), Seq(RecordId), "left_semi")
+          .select(col("valid_from").as(CdcId), col(RecordId),
+            struct(spec.columns.map(col): _*).as("__img"))
+      }
+      val batchEvents = fresh.select(
+        col(CdcId), col(RecordId),
+        when(col(Operation) === "DELETE", lit(null)).otherwise(col(NewData)).as("__img"))
+      val w = Window.partitionBy(col(RecordId)).orderBy(col(CdcId))
+      val rederived = openEvents.fold(batchEvents)(_.unionByName(batchEvents))
+        .withColumn("valid_to", lead(col(CdcId), 1).over(w))
+        .filter(col("__img").isNotNull) // tombstones only close predecessors
+        .select(
+          col(RecordId) +:
+            spec.columns.map(c => col(s"__img.$c").as(c)) :+
+            col(CdcId).as("valid_from") :+
+            col("valid_to") :+
+            when(col("valid_to").isNull, lit(1)).otherwise(lit(0)).as("is_current") :+
+            lit("UPDATE").as("operation"): _*)
+      seedOrMerge(rederived, historyDir, Seq(RecordId, "valid_from"), ledgerId,
+        streamId)
+      ()
+    }
+  }
+
+  // ------------------------------------------- aggregate-view maintenance
+
+  /** Incrementally maintain a grouped count/sum view
+    * ([[graft.apply.IncrementalAgg.snapshotAgg]]'s shape) for one
+    * micro-batch — the streaming form of
+    * [[graft.apply.IncrementalAgg.maintain]]. Bootstrap with
+    * `TxTable.commit(IncrementalAgg.snapshotAgg(base, …), dir, "overwrite")`;
+    * a view with no table yet starts empty. The view is O(groups) rows,
+    * so each batch rewrites it whole as one overwrite commit stamped with
+    * the batch's max cdc_id — the same refresh body as [[TxViewStream]].
+    * Per-batch work is O(batch) deltas + O(groups) merge; the base table
+    * is never rescanned after bootstrap.
+    */
+  def applyAggBatch(batch: DataFrame, dir: String, keyCol: String, valueCol: String): Unit =
+    applyAggregateBatch(batch, dir, keyCol, valueCol)(
+      IncrementalAgg.snapshotAgg, IncrementalAgg.maintain)
+
+  /** [[applyAggBatch]] for the count/sum/sum-of-squares view
+    * ([[graft.apply.IncrementalAgg.maintainMoments]]), so a
+    * mean/variance/stddev dashboard stays exactly fresh per batch.
+    */
+  def applyMomentsBatch(batch: DataFrame, dir: String, keyCol: String, valueCol: String): Unit =
+    applyAggregateBatch(batch, dir, keyCol, valueCol)(
+      IncrementalAgg.snapshotMoments, IncrementalAgg.maintainMoments)
+
+  /** [[applyAggBatch]] for the COUNT(DISTINCT) multiplicity support table
+    * ([[graft.apply.IncrementalAgg.maintainDistinct]]); derive the
+    * dashboard with [[graft.apply.IncrementalAgg.distinctView]].
+    */
+  def applyDistinctBatch(batch: DataFrame, dir: String, keyCol: String, valueCol: String): Unit =
+    applyAggregateBatch(batch, dir, keyCol, valueCol)(
+      IncrementalAgg.snapshotDistinct, IncrementalAgg.maintainDistinct)
+
+  /** Shared body of the aggregate views: gate, keep the rows above the
+    * mark, and refresh through [[TxViewStream.refresh]]. A missing view
+    * is seeded by `snapshot` over a zero-row frame of the batch's
+    * `new_data` images, which derives its schema from the input.
+    */
+  private def applyAggregateBatch(
+      batch: DataFrame, dir: String, keyCol: String, valueCol: String)(
+      snapshot: (DataFrame, String, String) => DataFrame,
+      maintain: (DataFrame, DataFrame, String, String) => DataFrame): Unit =
+    withCached(batch) { b =>
+      ledgerGate(b, dir, None).foreach { case (mark, ledgerId) =>
+        val fresh = b.filter(col(CdcId) > mark)
+        TxViewStream.refresh(b.sparkSession, dir, ledgerId) { stored =>
+          maintain(stored.getOrElse(snapshot(
+              fresh.select(col(s"$NewData.*")).where(lit(false)), keyCol, valueCol)),
+            fresh, keyCol, valueCol)
+        }
+      }
+    }
+
+  // ------------------------------------------------ join-view maintenance
+
+  /** Incrementally maintain an enriched JOIN view (`fact ⋈ dim` on
+    * `fkCol = dimKey`, carrying `dimCols`) for one micro-batch — the
+    * streaming form of [[graft.apply.IncrementalJoin.maintain]]: the
+    * batch's images are enriched against the dimension (one
+    * O(batch) ⋈ dim join, AQE-broadcast), then applied with
+    * [[applyTxBatch]] as a change batch on the VIEW's extended row shape,
+    * so only files holding changed keys are rewritten and a replayed
+    * batch skips on the view's own cdc-id mark.
+    *
+    * Inner-join parity: an upsert whose fk has no dim match must REMOVE
+    * the key from the view (a recompute would not emit it) — such
+    * changes are rewritten to DELETE before the apply. The dimension is
+    * taken as-of the batch (static or slowly snapshotted — see
+    * [[graft.apply.IncrementalJoin]] for why dim-side deltas are the
+    * SCD2/pitLookup path instead).
+    *
+    * `viewSchema` = fact row schema columns followed by `dimCols` (as
+    * produced by [[graft.apply.IncrementalJoin.snapshotView]]).
+    */
+  def applyJoinBatch(
+      batch: DataFrame,
+      viewDir: String,
+      spec: CdcTableSpec,
+      viewSchema: StructType,
+      dim: DataFrame,
+      fkCol: String,
+      dimKey: String,
+      dimCols: Seq[String]): Unit = {
+    val viewSpec = CdcTableSpec(spec.table + "_join", spec.columns ++ dimCols, spec.pkCol)
+
+    // enrich each non-DELETE image; dangling fk (null dimKey after the
+    // left join) demotes the change to DELETE
+    val d = dim.select((dimKey +: dimCols).distinct.map(col): _*)
+    val enriched = batch
+      .join(d, col(s"$NewData.$fkCol") === col(dimKey), "left_outer")
+      .withColumn(Operation,
+        when(col(Operation) === "DELETE" || col(dimKey).isNull, lit("DELETE"))
+          .otherwise(col(Operation)))
+      .withColumn(NewData,
+        when(col(Operation) === "DELETE",
+          lit(null).cast(StructType(viewSchema.fields)))
+          .otherwise(struct(
+            spec.columns.map(c => col(s"$NewData.$c").as(c)) ++
+              dimCols.map(col): _*)))
+      .drop((dimKey +: dimCols).distinct: _*)
+
+    applyTxBatch(enriched, viewDir, viewSpec, viewSchema)
+  }
+
+  // ------------------------------------------------------- stream wiring
+
+  /** Continuous replication into a [[graft.sources.TxTable]] target: the
+    * change log streams into an ACID table — atomic multi-file epoch
+    * commits, snapshot isolation for readers, per-epoch time travel, CDF
+    * over the applied history, and copy-on-write merges that rewrite
+    * O(hit files).
     *
     * ==Contract: the change log is delivered in cdc-id order==
     * The exactly-once ledger is the applied high-water cdc_id
@@ -899,6 +431,15 @@ object CdcStream {
     * files). The default "cow" keeps the read-optimal copy-on-write
     * merge. Both modes produce IDENTICAL table contents
     * (CdcStreamSpec pins streamed-MoR ≡ streamed-CoW).
+    *
+    * @param historyDir when set, the SCD2 history table is maintained
+    *                   alongside the target ([[applyHistoryBatch]] per
+    *                   micro-batch, before the target, under the same
+    *                   stream id). It reads the log's full event
+    *                   sequence, which the target's change feed would
+    *                   collapse to one change per key. Each table skips
+    *                   on its own cdc-id mark, so a crash between the two
+    *                   commits replays to the same pair of tables.
     */
   def startTxTable(
       spark: SparkSession,
@@ -913,14 +454,16 @@ object CdcStream {
       strategy: ConflictStrategy = ConflictStrategy.LastWriteWins,
       writeMode: String = "cow",
       foldEvery: Int = 0,
-      foldMinDeletedFraction: Double = 0.0): StreamingQuery = {
+      foldMinDeletedFraction: Double = 0.0,
+      historyDir: Option[String] = None): StreamingQuery = {
     // The stream's ledger identity: deterministic from the checkpoint
     // dir (a restart of the same stream keeps its high-water; distinct
     // writers have distinct checkpoints by construction — Spark itself
     // rejects two active queries on one checkpoint).
     val streamId = java.util.UUID.nameUUIDFromBytes(
       checkpointDir.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString
-    startLogStream(spark, logDir, rowSchema, checkpointDir,
+    FileStreamQuery.start(spark, logDir, graft.log.ChangeLog.schema(rowSchema),
+      checkpointDir,
       trigger.getOrElse(
         Trigger.ProcessingTime(s"${config.syncIntervalSeconds} seconds")),
       maxFilesPerTrigger,
@@ -930,39 +473,19 @@ object CdcStream {
       // the second writer's start() throw "query with that name is
       // already active" (round-13 contended-bench find)
       s"cdc-replicate-tx-${spec.table}-" +
-        Integer.toHexString(checkpointDir.hashCode)) {
-      (batch, _) => applyTxBatch(batch, tableDir, spec, rowSchema, strategy,
+        Integer.toHexString(checkpointDir.hashCode)) { (batch, _) =>
+      historyDir.foreach(h =>
+        applyHistoryBatch(batch, h, spec, rowSchema, Some(streamId)))
+      applyTxBatch(batch, tableDir, spec, rowSchema, strategy,
         writeMode, foldEvery, foldMinDeletedFraction, Some(streamId))
     }
   }
 
-  /** Shared change-log readStream/writeStream wiring for [[start]] and
-    * [[startTxTable]] — one place for the source schema, file throttle,
-    * checkpoint and trigger plumbing.
+  /** Drain all pending changes into the TxTable target once and stop —
+    * the reference's final `replicate_changes` after the poll loop ends
+    * (reference: example_usage.py:221-223). `Trigger.AvailableNow`
+    * processes everything committed to the log, then terminates.
     */
-  private def startLogStream(
-      spark: SparkSession,
-      logDir: String,
-      rowSchema: StructType,
-      checkpointDir: String,
-      trigger: Trigger,
-      maxFilesPerTrigger: Int,
-      queryName: String)(
-      body: (DataFrame, Long) => Unit): StreamingQuery = {
-    val logSchema = graft.log.ChangeLog.schema(rowSchema)
-    spark.readStream
-      .schema(logSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(logDir)
-      .writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, epoch: Long) => body(batch, epoch) }
-      .start()
-  }
-
-  /** [[drain]] for the TxTable target: apply everything pending, stop. */
   def drainTxTable(
       spark: SparkSession,
       logDir: String,
@@ -974,86 +497,14 @@ object CdcStream {
       maxFilesPerTrigger: Int = 100,
       writeMode: String = "cow",
       foldEvery: Int = 0,
-      foldMinDeletedFraction: Double = 0.0): Unit = {
-    val q = startTxTable(spark, logDir, tableDir, checkpointDir, spec,
+      foldMinDeletedFraction: Double = 0.0,
+      historyDir: Option[String] = None): Unit =
+    startTxTable(spark, logDir, tableDir, checkpointDir, spec,
       rowSchema, trigger = Some(Trigger.AvailableNow()),
       maxFilesPerTrigger = maxFilesPerTrigger, strategy = strategy,
       writeMode = writeMode, foldEvery = foldEvery,
-      foldMinDeletedFraction = foldMinDeletedFraction)
-    q.awaitTermination()
-  }
-
-  /** Drain all pending changes once and stop — the reference's final
-    * `replicate_changes` after the poll loop ends
-    * (reference: example_usage.py:221-223). `Trigger.AvailableNow`
-    * processes everything committed to the log, then terminates.
-    */
-  def drain(
-      spark: SparkSession,
-      logDir: String,
-      targetDir: String,
-      checkpointDir: String,
-      spec: CdcTableSpec,
-      rowSchema: StructType,
-      strategy: ConflictStrategy = ConflictStrategy.LastWriteWins,
-      maxFilesPerTrigger: Int = 100,
-      historyDir: Option[String] = None,
-      aggView: Option[AggView] = None,
-      momentsView: Option[MomentsView] = None,
-      distinctView: Option[DistinctView] = None,
-      joinView: Option[JoinView] = None): Unit = {
-    val q = start(spark, logDir, targetDir, checkpointDir, spec, rowSchema,
-      trigger = Some(Trigger.AvailableNow()), strategy = strategy,
-      maxFilesPerTrigger = maxFilesPerTrigger, historyDir = historyDir,
-      aggView = aggView, momentsView = momentsView,
-      distinctView = distinctView, joinView = joinView)
-    q.awaitTermination()
-  }
-
-  /** Garbage-collect old target versions, keeping the newest
-    * `keepVersions` committed directories (and ALWAYS the `_current`
-    * one, whatever its age). Returns the deleted version numbers.
-    *
-    * Versions strictly newer than `_current` are never touched either —
-    * they belong to an epoch whose checkpoint hasn't committed yet
-    * (crash window), and deleting one would break that epoch's replay.
-    * Run periodically (e.g. from the health listener cadence) to bound
-    * target storage at `keepVersions` × snapshot size; the bucket-copy
-    * scheme means hard-linked/copied files disappear with their version
-    * directory.
-    */
-  def vacuumTarget(targetDir: String, keepVersions: Int = 2): Seq[Long] = {
-    require(keepVersions >= 1, s"must keep at least one version, got $keepVersions")
-    val root = Paths.get(targetDir)
-    if (!Files.isDirectory(root)) return Nil
-    val current = currentVersion(targetDir)
-    // no pointer yet (crash before the first commit): any v= dir may be
-    // the replay input of an in-flight epoch — delete nothing
-    if (current.isEmpty) return Nil
-    val versions = {
-      val it = Files.list(root)
-      try {
-        import scala.jdk.CollectionConverters._
-        it.iterator().asScala
-          .map(_.getFileName.toString)
-          .collect { case s if s.startsWith("v=") => s.stripPrefix("v=") }
-          .flatMap(_.toLongOption)
-          .toVector.sorted
-      } finally it.close()
-    }
-    val deletable = versions
-      .filter(v => current.forall(_ > v))      // never current or newer
-      .dropRight(math.max(0, keepVersions - 1)) // keep newest k-1 below current
-    deletable.foreach { v =>
-      val dir = root.resolve(s"v=$v")
-      val files = Files.walk(dir)
-      try {
-        import scala.jdk.CollectionConverters._
-        files.iterator().asScala.toVector.reverse.foreach(Files.deleteIfExists)
-      } finally files.close()
-    }
-    deletable
-  }
+      foldMinDeletedFraction = foldMinDeletedFraction,
+      historyDir = historyDir).awaitTermination()
 
   /** Run a streaming query with the reference's retry policy
     * (reference: config.py:35-36: max_retries=3, retry_delay_seconds=10):

@@ -37,8 +37,8 @@ import org.apache.spark.sql.types.StructType
   * At 100 TB: per-trigger work is O(batch² within LSH buckets + probed
   * partitions), independent of the landed corpus size — the property the
   * whole index machinery buys. The corpus directory grows one epoch dir
-  * per trigger; compact/retire epochs offline exactly like the CDC
-  * target's [[CdcStream.vacuumTarget]] tier.
+  * per trigger; compact or retire old epoch dirs offline (they are
+  * append-only and never rewritten after their epoch commits).
   */
 object IngestStream {
 
@@ -108,19 +108,12 @@ object IngestStream {
       threshold: Double = 0.8,
       trigger: Option[Trigger] = None,
       maxFilesPerTrigger: Int = 100): StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-      .writeStream
-      .queryName("graft-ingest")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger.getOrElse(Trigger.ProcessingTime("5 seconds")))
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        applyIngestBatch(batch, epoch, indexPath, corpusDir, reportDir,
-          textCol, idCol, threshold)
-      }
-      .start()
+    FileStreamQuery.start(spark, srcDir, schema, checkpointDir,
+      trigger.getOrElse(Trigger.ProcessingTime("5 seconds")),
+      maxFilesPerTrigger, "graft-ingest") { (batch, epoch) =>
+      applyIngestBatch(batch, epoch, indexPath, corpusDir, reportDir,
+        textCol, idCol, threshold)
+    }
 
   /** Drain all pending document files once and stop (AvailableNow). */
   def drain(
@@ -134,13 +127,11 @@ object IngestStream {
       textCol: String,
       idCol: String,
       threshold: Double = 0.8,
-      maxFilesPerTrigger: Int = 100): Unit = {
-    val q = start(spark, srcDir, schema, indexPath, corpusDir, reportDir,
+      maxFilesPerTrigger: Int = 100): Unit =
+    start(spark, srcDir, schema, indexPath, corpusDir, reportDir,
       checkpointDir, textCol, idCol, threshold,
       trigger = Some(Trigger.AvailableNow()),
-      maxFilesPerTrigger = maxFilesPerTrigger)
-    q.awaitTermination()
-  }
+      maxFilesPerTrigger = maxFilesPerTrigger).awaitTermination()
 
   /** Read the curated corpus (all epochs; the epoch dirs are physical
     * layout, not a data column — recursive lookup + explicit schema).

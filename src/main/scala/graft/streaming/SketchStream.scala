@@ -13,8 +13,9 @@ import org.apache.spark.sql.types.StructType
   *
   * State layout: one parquet dir per epoch holding that batch's SPARSE
   * (cell, count) frame ([[Sketches.countMinCells]]), overwritten whole on
-  * replay — so a crashed epoch lands exactly-once, the same idempotence
-  * rule as the CDC streaming target. Because count-min cells are
+  * replay — so a crashed epoch lands exactly-once: the dirs are
+  * append-only, with no pointer file and nothing carried forward between
+  * epochs. Because count-min cells are
   * ADDITIVE and the hash family is fixed literal constants, summing the
   * per-epoch frames cell-wise reproduces the batch sketch over the total
   * stream bit-for-bit: streamed ≡ batch by construction, and the merge
@@ -73,18 +74,11 @@ object SketchStream {
       w: Int,
       trigger: Option[Trigger] = None,
       maxFilesPerTrigger: Int = 100): StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-      .writeStream
-      .queryName("graft-sketch")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger.getOrElse(Trigger.ProcessingTime("5 seconds")))
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        applySketchBatch(batch, epoch, sketchDir, keyStr, d, w)
-      }
-      .start()
+    FileStreamQuery.start(spark, srcDir, schema, checkpointDir,
+      trigger.getOrElse(Trigger.ProcessingTime("5 seconds")),
+      maxFilesPerTrigger, "graft-sketch") { (batch, epoch) =>
+      applySketchBatch(batch, epoch, sketchDir, keyStr, d, w)
+    }
 
   /** Drain all pending files once and stop (AvailableNow). */
   def drain(
@@ -96,10 +90,8 @@ object SketchStream {
       keyStr: Column,
       d: Int,
       w: Int,
-      maxFilesPerTrigger: Int = 100): Unit = {
-    val q = start(spark, srcDir, schema, sketchDir, checkpointDir, keyStr, d, w,
+      maxFilesPerTrigger: Int = 100): Unit =
+    start(spark, srcDir, schema, sketchDir, checkpointDir, keyStr, d, w,
       trigger = Some(Trigger.AvailableNow()),
-      maxFilesPerTrigger = maxFilesPerTrigger)
-    q.awaitTermination()
-  }
+      maxFilesPerTrigger = maxFilesPerTrigger).awaitTermination()
 }

@@ -10,9 +10,9 @@ import org.apache.spark.sql.types.StructType
   * so a crash-replayed epoch finds its stamp and re-commits nothing
   * ([[TxTable.commitStreaming]]): exactly-once end to end, with readers
   * getting snapshot isolation and time travel ACROSS micro-batches for
-  * free (version history = batch history). The epoch-dir convention
-  * gives idempotence per directory; this gives one queryable, vacuumable
-  * table.
+  * free (version history = batch history). The append-only `epoch=<n>`
+  * directories of the file streams give idempotence per directory; this
+  * gives one queryable, vacuumable table.
   *
   * `statsColumns` flow through to the manifest, so manifest-level file
   * skipping ([[TxTable.readPruned]]) works on streamed tables too.
@@ -29,22 +29,14 @@ object TxSink {
       statsColumns: Seq[String] = Nil,
       trigger: Option[Trigger] = None,
       maxFilesPerTrigger: Int = 100): StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-      .writeStream
-      .queryName("graft-tx-sink")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger.getOrElse(Trigger.ProcessingTime("5 seconds")))
-      .foreachBatch {
-        (batch: org.apache.spark.sql.DataFrame, epoch: Long) =>
-          if (!batch.isEmpty) {
-            TxTable.commitStreaming(batch, tableDir, epoch, mode, statsColumns)
-            ()
-          }
+    FileStreamQuery.start(spark, srcDir, schema, checkpointDir,
+      trigger.getOrElse(Trigger.ProcessingTime("5 seconds")),
+      maxFilesPerTrigger, "graft-tx-sink") { (batch, epoch) =>
+      if (!batch.isEmpty) {
+        TxTable.commitStreaming(batch, tableDir, epoch, mode, statsColumns)
+        ()
       }
-      .start()
+    }
 
   /** Drain all pending files once and stop (AvailableNow). */
   def drain(
@@ -55,10 +47,8 @@ object TxSink {
       checkpointDir: String,
       mode: String = "append",
       statsColumns: Seq[String] = Nil,
-      maxFilesPerTrigger: Int = 100): Unit = {
-    val q = start(spark, srcDir, schema, tableDir, checkpointDir, mode,
+      maxFilesPerTrigger: Int = 100): Unit =
+    start(spark, srcDir, schema, tableDir, checkpointDir, mode,
       statsColumns, trigger = Some(Trigger.AvailableNow()),
-      maxFilesPerTrigger = maxFilesPerTrigger)
-    q.awaitTermination()
-  }
+      maxFilesPerTrigger = maxFilesPerTrigger).awaitTermination()
 }

@@ -282,8 +282,10 @@ class TxTableChangeFeedProvider extends StreamSourceProvider with DataSourceRegi
 /** Incremental applied-epoch high-water mark over a TxTable's version
   * log, keyed by table dir: (highest version already scanned, max
   * applied epoch). For consumers that apply STRICTLY INCREASING epochs
-  * ([[TxViewStream]] refreshes, [[graft.streaming.CdcStream]]'s TxTable
-  * target), "applied" is exactly `epoch <= maxApplied` — one long that
+  * ([[TxViewStream]] refreshes stamped with primary versions;
+  * [[graft.streaming.CdcStream]]'s target, SCD2 history, aggregate and
+  * join views, each stamped with its batch's max cdc_id), "applied" is
+  * exactly `epoch <= maxApplied` — one long that
   * survives vacuum (the latest epoch-stamped manifest is retained and
   * carries it), unlike a full epoch SET rebuilt from every manifest.
   * Each call parses only manifests committed since the last one (the
@@ -545,26 +547,36 @@ object TxViewStream {
       .collect().map(_.getLong(0)).sorted
     val applied = TxEpochHighWater.maxApplied(viewDir)
     vs.filter(_ > applied).foreach { v =>
-      val refreshed =
-        if (TxTable.latest(viewDir).isEmpty)
+      refresh(spark, viewDir, v) {
+        case None =>
           graft.apply.IncrementalAgg.snapshotAgg(
             TxTable.read(spark, primaryDir, Some(v)), groupCol, valueCol)
-        else {
+        case Some(stored) =>
           val images = TxTable.changeFeedImages(
             spark, primaryDir, v - 1, v, keyCols)
-          graft.apply.IncrementalAgg.maintain(
-            TxTable.read(spark, viewDir), images, groupCol, valueCol)
-        }
-      // localCheckpoint: the refresh reads the view's CURRENT version
-      // and overwrites it — materialize before the commit swaps the
-      // files out from under the lazy plan. Plain commit (not
-      // commitStreaming): the high-water filter above already proved v
-      // unapplied, and the view dir is single-writer by contract, so
-      // the O(history) epoch rescan commitStreaming pays per call buys
-      // nothing here.
-      TxTable.commit(refreshed.localCheckpoint(true), viewDir,
-        mode = "overwrite", epochId = Some(v))
-      ()
+          graft.apply.IncrementalAgg.maintain(stored, images, groupCol, valueCol)
+      }
     }
+  }
+
+  /** One view refresh, shared with [[CdcStream]]'s aggregate views:
+    * derive the refreshed view from the stored one (`None` when the view
+    * has no table yet) and commit it as one overwrite stamped `epoch`.
+    *
+    * localCheckpoint: the refresh reads the view's CURRENT version and
+    * overwrites it — materialize before the commit swaps the files out
+    * from under the lazy plan. Plain commit (not commitStreaming): the
+    * caller's high-water check already proved `epoch` unapplied, and the
+    * view dir is single-writer by contract, so the O(history) epoch
+    * rescan commitStreaming pays per call buys nothing here.
+    */
+  private[streaming] def refresh(
+      spark: SparkSession, viewDir: String, epoch: Long)(
+      derive: Option[DataFrame] => DataFrame): Unit = {
+    val stored = TxTable.latest(viewDir)
+      .map(s => TxTable.read(spark, viewDir, Some(s.version)))
+    TxTable.commit(derive(stored).localCheckpoint(true), viewDir,
+      mode = "overwrite", epochId = Some(epoch))
+    ()
   }
 }

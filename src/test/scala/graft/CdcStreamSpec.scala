@@ -1,152 +1,89 @@
 package graft
 
+import graft.apply.IncrementalAgg
 import graft.capture.{CdcTable, DemoWorkload}
 import graft.log.ChangeLog
 import graft.monitor.CdcMonitor
+import graft.sources.TxTable
 import graft.streaming.CdcStream
 import graft.verify.ReplicationVerifier
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 /** End-to-end streaming parity with the reference's continuous-sync demo
   * (reference: example_usage.py:168-233): replay the demo workload
   * (10 inserts, 5 updates, 2 deletes), stream the change log through
-  * foreachBatch replication with an AvailableNow drain, and assert
-  * source ≡ target plus the statistics {INSERT:10, UPDATE:5, DELETE:2}.
+  * foreachBatch replication into a TxTable with an AvailableNow drain,
+  * and assert source ≡ target plus the statistics
+  * {INSERT:10, UPDATE:5, DELETE:2}; then the streamed SCD2 history and
+  * the aggregate and join views, each kept on its own TxTable.
   */
 class CdcStreamSpec extends SparkSpecBase {
 
   private lazy val s = spark
 
-  test("demo workload streams to a fully replicated target") {
-    val tmp = Files.createTempDirectory("cdcstream").toString
-    val logDir = s"$tmp/log"
-    val targetDir = s"$tmp/target"
-    val checkpointDir = s"$tmp/chk"
-
-    // 1. replay the demo workload through write-through capture
-    val table = DemoWorkload.replay(
-      CdcTable(
-        DemoWorkload.users(s, 0),
-        DemoWorkload.UsersSpec),
-      s, inserts = 10, updates = 5, deletes = 2)
-
-    // statistics parity (reference: example_usage.py:141-143 workload)
-    val stats = CdcMonitor.statistics(table.changeLog)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(stats === Map("INSERT" -> 10L, "UPDATE" -> 5L, "DELETE" -> 2L))
-
-    // 2. commit the log to the streaming source directory
-    table.changeLog.write.mode("overwrite").parquet(logDir)
-    val rowSchema = table.snapshot.schema
-
-    // 3. drain (Trigger.AvailableNow — T10 final drain semantics)
-    CdcStream.drain(s, logDir, targetDir, checkpointDir,
-      DemoWorkload.UsersSpec, rowSchema)
-
-    // 4. target ≡ source snapshot
-    val target = CdcStream.readTarget(s, targetDir, rowSchema)
-    assert(target.count() === 8) // 10 inserts - 2 deletes
-    assert(ReplicationVerifier.fullyReplicated(table.snapshot, target))
-
-    // 5. restart the drain on the same checkpoint: no-op, target unchanged
-    val v1 = CdcStream.currentVersion(targetDir)
-    CdcStream.drain(s, logDir, targetDir, checkpointDir,
-      DemoWorkload.UsersSpec, rowSchema)
-    assert(CdcStream.currentVersion(targetDir) === v1)
-    assert(ReplicationVerifier.fullyReplicated(table.snapshot,
-      CdcStream.readTarget(s, targetDir, rowSchema)))
-
-    // 6. late batch: more inserts land in the log; a second drain catches up
-    table.insert(DemoWorkload.users(s, 3, startId = 100L))
-    table.changeLog.filter(col("record_id") >= 100L)
-      .write.mode("append").parquet(logDir)
-    CdcStream.drain(s, logDir, targetDir, checkpointDir,
-      DemoWorkload.UsersSpec, rowSchema)
-    val target2 = CdcStream.readTarget(s, targetDir, rowSchema)
-    assert(target2.count() === 11)
-    assert(ReplicationVerifier.fullyReplicated(table.snapshot, target2))
-  }
-
-  test("re-applying a crashed epoch is idempotent and never reads its own output") {
-    val tmp = Files.createTempDirectory("cdccrash").toString
-    val table = DemoWorkload.replay(
-      CdcTable(DemoWorkload.users(s, 0), DemoWorkload.UsersSpec), s,
-      inserts = 4, updates = 1, deletes = 1)
-    val rowSchema = table.snapshot.schema
-    val log = table.changeLog
-    val batch1 = log.filter(col("cdc_id") <= 4)
-    val batch2 = log.filter(col("cdc_id") > 4)
-
-    CdcStream.applyBatch(batch1, 0L, s"$tmp/target", DemoWorkload.UsersSpec, rowSchema)
-    CdcStream.applyBatch(batch2, 1L, s"$tmp/target", DemoWorkload.UsersSpec, rowSchema)
-    val after = CdcStream.readTarget(s, s"$tmp/target", rowSchema).collect().toSet
-    // crash window: _current already points at epoch 1, checkpoint didn't
-    // commit → the runtime re-runs epoch 1. Must not read+overwrite its
-    // own output, must reproduce the same target.
-    CdcStream.applyBatch(batch2, 1L, s"$tmp/target", DemoWorkload.UsersSpec, rowSchema)
-    val replay = CdcStream.readTarget(s, s"$tmp/target", rowSchema).collect().toSet
-    assert(replay === after)
-    assert(ReplicationVerifier.fullyReplicated(table.snapshot,
-      CdcStream.readTarget(s, s"$tmp/target", rowSchema)))
-  }
-
-  test("untouched buckets are carried forward byte-identically across an epoch") {
-    val tmp = Files.createTempDirectory("cdcbucket").toString
-    val targetDir = s"$tmp/target"
-    val table = DemoWorkload.replay(
-      CdcTable(DemoWorkload.users(s, 0), DemoWorkload.UsersSpec), s,
-      inserts = 12, updates = 0, deletes = 0)
-    val rowSchema = table.snapshot.schema
-    val log = table.changeLog
-
-    // epoch 0: all 12 inserts spread over the buckets
-    CdcStream.applyBatch(log, 0L, targetDir, DemoWorkload.UsersSpec, rowSchema,
-      numBuckets = 4)
-
-    // epoch 1: update exactly one key → exactly one changed bucket
-    val oneKey = log.orderBy("cdc_id").limit(1)
-    CdcStream.applyBatch(oneKey, 1L, targetDir, DemoWorkload.UsersSpec, rowSchema,
-      numBuckets = 4)
-    assert(CdcStream.currentVersion(targetDir) === Some(1L))
-
-    def bucketFiles(epoch: Long): Map[String, Seq[(String, Array[Byte])]] = {
-      val root = java.nio.file.Paths.get(targetDir, s"v=$epoch")
-      val it = Files.list(root)
+  /** Every table CdcStream writes is a TxTable: a `_txlog`, and none of
+    * the epoch-directory layout's `v=<epoch>`, `__b=<bucket>` or
+    * `_current` entries anywhere below the root.
+    */
+  private def assertTxOnly(dir: String): Unit = {
+    assert(Files.isDirectory(Paths.get(dir, "_txlog")), s"$dir has no _txlog")
+    val names = {
+      val it = Files.walk(Paths.get(dir))
       try {
         import scala.jdk.CollectionConverters._
-        it.iterator().asScala
-          .filter(p => Files.isDirectory(p) && p.getFileName.toString.startsWith("__b="))
-          .map { d =>
-            val fs = Files.list(d)
-            try d.getFileName.toString -> fs.iterator().asScala
-              .filter(f => f.getFileName.toString.startsWith("part-"))
-              .map(f => f.getFileName.toString -> Files.readAllBytes(f))
-              .toSeq.sortBy(_._1)
-            finally fs.close()
-          }.toMap
+        it.iterator().asScala.map(_.getFileName.toString).toVector
       } finally it.close()
     }
-    val v0 = bucketFiles(0L)
-    val v1 = bucketFiles(1L)
-    val changedBucket = {
-      // same bucket function as the engine
-      val k = log.orderBy("cdc_id").limit(1)
-        .select(pmod(hash(col("record_id").cast("long")), lit(4)).as("b"))
-        .collect().head.getInt(0)
-      s"__b=$k"
-    }
-    // every untouched bucket: same file names, same bytes
-    (v0.keySet - changedBucket).foreach { b =>
-      assert(v1.contains(b), s"bucket $b missing from v=1")
-      assert(v0(b).map(_._1) === v1(b).map(_._1), s"file names differ in $b")
-      v0(b).zip(v1(b)).foreach { case ((_, bytes0), (_, bytes1)) =>
-        assert(java.util.Arrays.equals(bytes0, bytes1), s"bytes differ in $b")
-      }
-    }
-    // the full snapshot is still correct
-    assert(ReplicationVerifier.fullyReplicated(table.snapshot,
-      CdcStream.readTarget(s, targetDir, rowSchema)))
+    val legacy = names.filter(n =>
+      n.startsWith("v=") || n.startsWith("__b=") || n == "_current")
+    assert(legacy.isEmpty, s"$dir holds epoch-directory entries: $legacy")
+  }
+
+  /** Run `reapply` (a crash-replayed batch): it must skip on the table's
+    * cdc-id mark — no new version, and exactly one more skipped batch.
+    */
+  private def assertReplaySkips(dir: String)(reapply: => Unit): Unit = {
+    val versions = TxTable.versions(dir)
+    val skipped = CdcStream.skippedBatchCount.get()
+    reapply
+    assert(TxTable.versions(dir) === versions, "a replayed batch must not commit")
+    assert(CdcStream.skippedBatchCount.get() === skipped + 1,
+      "a replayed batch must be counted as skipped")
+  }
+
+  /** Append `log` rows with cdc_id in [lo, hi] as one single-file chunk
+    * whose mtime is `1000 * (i + 1)` ms: the file stream batches by
+    * modification time, and the history contract requires batches in
+    * log order.
+    */
+  private def writeChunk(log: DataFrame, logDir: String, lo: Long, hi: Long, i: Int): Unit = {
+    log.filter(col("cdc_id").between(lo, hi)).coalesce(1)
+      .write.mode("append").parquet(logDir)
+    // stamp THIS chunk's (freshly written ⇒ mtime ≈ now, far above any
+    // stamp) part files
+    val it = Files.list(Paths.get(logDir))
+    try {
+      import scala.jdk.CollectionConverters._
+      it.iterator().asScala
+        .filter(_.getFileName.toString.startsWith("part-"))
+        .filter(p => Files.getLastModifiedTime(p).toMillis > 1000000L)
+        .foreach(p => Files.setLastModifiedTime(p,
+          java.nio.file.attribute.FileTime.fromMillis(1000L * (i + 1))))
+    } finally it.close()
+  }
+
+  /** The latest-state target a stream reaches from an empty table: the
+    * batch apply of `log` over an empty base.
+    */
+  private def batchApplied(log: DataFrame, rowSchema: org.apache.spark.sql.types.StructType) = {
+    val emptyBase = s.createDataFrame(
+      s.sparkContext.emptyRDD[org.apache.spark.sql.Row], rowSchema)
+    graft.apply.ChangeApplier
+      .applyChanges(emptyBase, log, DemoWorkload.UsersSpec,
+        graft.model.ConflictStrategy.LastWriteWins)
+      .collect().toSet
   }
 
   test("ProcessingTime stream replicates batches that arrive while running (T1)") {
@@ -156,7 +93,7 @@ class CdcStreamSpec extends SparkSpecBase {
     table.changeLog.write.mode("overwrite").parquet(s"$tmp/log")
     val rowSchema = table.snapshot.schema
 
-    val q = CdcStream.start(s, s"$tmp/log", s"$tmp/target", s"$tmp/chk",
+    val q = CdcStream.startTxTable(s, s"$tmp/log", s"$tmp/target", s"$tmp/chk",
       DemoWorkload.UsersSpec, rowSchema,
       trigger = Some(org.apache.spark.sql.streaming.Trigger.ProcessingTime("500 milliseconds")))
     try {
@@ -166,43 +103,14 @@ class CdcStreamSpec extends SparkSpecBase {
         .write.mode("append").parquet(s"$tmp/log")
       val deadline = System.nanoTime() + 60_000_000_000L
       def replicated(): Boolean =
-        CdcStream.currentVersion(s"$tmp/target").exists { _ =>
-          CdcStream.readTarget(s, s"$tmp/target", rowSchema).count() == 10
+        TxTable.latest(s"$tmp/target").exists { _ =>
+          TxTable.read(s, s"$tmp/target").count() == 10
         }
       while (!replicated() && System.nanoTime() < deadline) Thread.sleep(500)
       assert(replicated(), "live stream did not catch up within 60s")
       assert(ReplicationVerifier.fullyReplicated(table.snapshot,
-        CdcStream.readTarget(s, s"$tmp/target", rowSchema)))
+        TxTable.read(s, s"$tmp/target")))
     } finally q.stop()
-  }
-
-  test("vacuumTarget keeps current + k-1 older versions, never newer or uncommitted") {
-    val tmp = Files.createTempDirectory("cdcvac").toString
-    val targetDir = s"$tmp/target"
-    val table = DemoWorkload.replay(
-      CdcTable(DemoWorkload.users(s, 0), DemoWorkload.UsersSpec), s,
-      inserts = 6, updates = 0, deletes = 0)
-    val rowSchema = table.snapshot.schema
-    val log = table.changeLog
-    (0L to 3L).foreach { epoch =>
-      CdcStream.applyBatch(log.filter(col("cdc_id") % 4 === epoch), epoch,
-        targetDir, DemoWorkload.UsersSpec, rowSchema, numBuckets = 4)
-    }
-    // a crashed in-flight epoch beyond _current must survive vacuum
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(targetDir, "v=99"))
-    assert(CdcStream.currentVersion(targetDir) === Some(3L))
-
-    val deleted = CdcStream.vacuumTarget(targetDir, keepVersions = 2)
-    assert(deleted === Seq(0L, 1L))
-    val left = java.nio.file.Files.list(java.nio.file.Paths.get(targetDir))
-    val names = try {
-      import scala.jdk.CollectionConverters._
-      left.iterator().asScala.map(_.getFileName.toString).toSet
-    } finally left.close()
-    assert(names === Set("v=2", "v=3", "v=99", "_current"))
-    // snapshot still fully readable after vacuum
-    assert(ReplicationVerifier.fullyReplicated(table.snapshot,
-      CdcStream.readTarget(s, targetDir, rowSchema)))
   }
 
   test("runWithRetries: per-incident budget, rethrow after exhaustion (T8)") {
@@ -267,34 +175,18 @@ class CdcStreamSpec extends SparkSpecBase {
     val log = table.changeLog.localCheckpoint(true)
     val maxId = log.agg(max(col("cdc_id"))).head().getLong(0)
 
-    // commit the log as ORDERED single-file chunks with explicit mtimes:
-    // the file stream batches by modification time, and the history
-    // contract requires batches in log order
+    // commit the log as ORDERED single-file chunks
     val cuts = Seq((1L, 6L), (7L, 12L), (13L, maxId))
-    cuts.zipWithIndex.foreach { case ((lo, hi), i) =>
-      log.filter(col("cdc_id").between(lo, hi)).coalesce(1)
-        .write.mode("append").parquet(logDir)
-      // stamp THIS chunk's (freshly written ⇒ mtime ≈ now, far above any
-      // stamp) part files with an increasing coarse mtime
-      val it = Files.list(java.nio.file.Paths.get(logDir))
-      try {
-        import scala.jdk.CollectionConverters._
-        it.iterator().asScala
-          .filter(_.getFileName.toString.startsWith("part-"))
-          .filter(p => Files.getLastModifiedTime(p).toMillis > 1000L * cuts.length)
-          .foreach(p => Files.setLastModifiedTime(p,
-            java.nio.file.attribute.FileTime.fromMillis(1000L * (i + 1))))
-      } finally it.close()
-    }
+    cuts.zipWithIndex.foreach { case ((lo, hi), i) => writeChunk(log, logDir, lo, hi, i) }
 
-    CdcStream.bootstrapHistory(base, histDir, spec, numBuckets = 4)
-    CdcStream.drain(s, logDir, s"$tmp/target", s"$tmp/chk", spec, rowSchema,
+    CdcStream.bootstrapHistory(base, histDir, spec)
+    CdcStream.drainTxTable(s, logDir, s"$tmp/target", s"$tmp/chk", spec, rowSchema,
       maxFilesPerTrigger = 1, historyDir = Some(histDir))
-    // one epoch per chunk: the maintenance really ran incrementally
-    assert(CdcStream.currentVersion(histDir).exists(_ >= cuts.length - 1))
+    // bootstrap + one commit per chunk: the maintenance really ran
+    // incrementally
+    assert(TxTable.versions(histDir).size === cuts.length + 1)
 
-    val streamed = CdcStream.readHistory(s, histDir, spec, rowSchema)
-      .collect().toSet
+    val streamed = TxTable.read(s, histDir).collect().toSet
     val expected = graft.log.History.scd2(
         base.select(spec.columns.map(col): _*), log, spec)
       .collect().toSet
@@ -303,14 +195,10 @@ class CdcStreamSpec extends SparkSpecBase {
     // base-snapshot bootstrap (it starts empty and the log carries only
     // changes), so the expectation is the batch apply over an empty base
     // — base keys never touched by the log (202) are legitimately absent.
-    val emptyBase = s.createDataFrame(
-      s.sparkContext.emptyRDD[org.apache.spark.sql.Row], rowSchema)
-    val expectedTarget = graft.apply.ChangeApplier
-      .applyChanges(emptyBase, log, spec,
-        graft.model.ConflictStrategy.LastWriteWins)
-      .collect().toSet
-    assert(CdcStream.readTarget(s, s"$tmp/target", rowSchema)
-      .collect().toSet === expectedTarget)
+    assert(TxTable.read(s, s"$tmp/target").collect().toSet ===
+      batchApplied(log, rowSchema))
+    assertTxOnly(histDir)
+    assertTxOnly(s"$tmp/target")
   }
 
   test("re-applying a crashed epoch against the history table is idempotent") {
@@ -326,18 +214,91 @@ class CdcStreamSpec extends SparkSpecBase {
     val batch1 = log.filter(col("cdc_id") <= 4)
     val batch2 = log.filter(col("cdc_id") > 4)
 
-    CdcStream.bootstrapHistory(base, histDir, spec, numBuckets = 4)
-    CdcStream.applyHistoryBatch(batch1, 0L, histDir, spec, rowSchema, numBuckets = 4)
-    CdcStream.applyHistoryBatch(batch2, 1L, histDir, spec, rowSchema, numBuckets = 4)
-    val after = CdcStream.readHistory(s, histDir, spec, rowSchema).collect().toSet
-    // crash window: re-run epoch 1 — must reproduce, not double-close
-    CdcStream.applyHistoryBatch(batch2, 1L, histDir, spec, rowSchema, numBuckets = 4)
-    val replay = CdcStream.readHistory(s, histDir, spec, rowSchema).collect().toSet
-    assert(replay === after)
+    CdcStream.bootstrapHistory(base, histDir, spec)
+    CdcStream.applyHistoryBatch(batch1, histDir, spec, rowSchema)
+    CdcStream.applyHistoryBatch(batch2, histDir, spec, rowSchema)
+    val after = TxTable.read(s, histDir).collect().toSet
+    // crash window: re-run the last batch — skips on the mark instead of
+    // closing versions twice
+    assertReplaySkips(histDir) {
+      CdcStream.applyHistoryBatch(batch2, histDir, spec, rowSchema)
+    }
+    assert(TxTable.read(s, histDir).collect().toSet === after)
     val expected = graft.log.History.scd2(
         base.select(spec.columns.map(col): _*), log, spec)
       .collect().toSet
     assert(after === expected)
+    assertTxOnly(histDir)
+  }
+
+  test("history one batch ahead of the target converges") {
+    // the crash window between the two commits of one trigger: history
+    // (applied first) committed the batch, the target did not
+    val tmp = Files.createTempDirectory("cdchistahead").toString
+    val logDir = s"$tmp/log"
+    val histDir = s"$tmp/hist"
+    val spec = DemoWorkload.UsersSpec
+    val base = DemoWorkload.users(s, 3, startId = 700L).localCheckpoint(true)
+    val table = DemoWorkload.replay(CdcTable(base, spec), s,
+      inserts = 10, updates = 5, deletes = 2)
+    table.update(col("id") === 700L, Map("status" -> lit("updated")))
+    val rowSchema = table.snapshot.schema
+    val log = table.changeLog.localCheckpoint(true)
+    val maxId = log.agg(max(col("cdc_id"))).head().getLong(0)
+    val cuts = Seq((1L, 6L), (7L, 12L), (13L, maxId))
+
+    CdcStream.bootstrapHistory(base, histDir, spec)
+    cuts.take(2).zipWithIndex.foreach { case ((lo, hi), i) => writeChunk(log, logDir, lo, hi, i) }
+    CdcStream.drainTxTable(s, logDir, s"$tmp/target", s"$tmp/chk", spec, rowSchema,
+      maxFilesPerTrigger = 1, historyDir = Some(histDir))
+    // chunk 3 reaches the history only
+    CdcStream.applyHistoryBatch(log.filter(col("cdc_id") >= cuts(2)._1),
+      histDir, spec, rowSchema)
+    writeChunk(log, logDir, cuts(2)._1, cuts(2)._2, 2)
+    val skipped = CdcStream.skippedBatchCount.get()
+    CdcStream.drainTxTable(s, logDir, s"$tmp/target", s"$tmp/chk", spec, rowSchema,
+      maxFilesPerTrigger = 1, historyDir = Some(histDir))
+    assert(CdcStream.skippedBatchCount.get() === skipped + 1,
+      "the history must skip the batch it already holds")
+
+    val history = TxTable.read(s, histDir)
+    assert(history.collect().toSet === graft.log.History.scd2(
+        base.select(spec.columns.map(col): _*), log, spec).collect().toSet)
+    assert(history.groupBy("record_id", "valid_from").count()
+      .filter(col("count") > 1).count() === 0L,
+      "no (record_id, valid_from) version may repeat")
+    assert(TxTable.read(s, s"$tmp/target").collect().toSet ===
+      batchApplied(log, rowSchema))
+  }
+
+  test("a batch that straddles the cdc-id mark is applied exactly once") {
+    // a re-grouped replay (say, after a checkpoint rebuild) can carry
+    // rows on both sides of the mark; the views and the history must
+    // apply only the rows above it
+    val tmp = Files.createTempDirectory("cdcstraddle").toString
+    val aggDir = s"$tmp/agg"
+    val histDir = s"$tmp/hist"
+    val spec = DemoWorkload.UsersSpec
+    val base = DemoWorkload.users(s, 3, startId = 800L).localCheckpoint(true)
+    val table = DemoWorkload.replay(CdcTable(base, spec), s,
+      inserts = 6, updates = 3, deletes = 2)
+    table.update(col("id") === 800L, Map("status" -> lit("inactive")))
+    val rowSchema = table.snapshot.schema
+    val log = table.changeLog.localCheckpoint(true)
+    val first = log.filter(col("cdc_id") <= 5)
+    val straddling = log.filter(col("cdc_id") >= 3)
+
+    TxTable.commit(IncrementalAgg.snapshotAgg(base, "status", "id"), aggDir, "overwrite")
+    CdcStream.bootstrapHistory(base, histDir, spec)
+    CdcStream.applyAggBatch(first, aggDir, "status", "id")
+    CdcStream.applyHistoryBatch(first, histDir, spec, rowSchema)
+    CdcStream.applyAggBatch(straddling, aggDir, "status", "id")
+    CdcStream.applyHistoryBatch(straddling, histDir, spec, rowSchema)
+
+    assert(TxTable.read(s, aggDir).collect().toSet ===
+      IncrementalAgg.snapshotAgg(table.snapshot, "status", "id").collect().toSet)
+    assert(TxTable.read(s, histDir).collect().toSet === graft.log.History.scd2(
+        base.select(spec.columns.map(col): _*), log, spec).collect().toSet)
   }
 
   test("streamed aggregate view across micro-batches equals recompute; crashed epoch idempotent") {
@@ -352,56 +313,49 @@ class CdcStreamSpec extends SparkSpecBase {
     val batch1 = log.filter(col("cdc_id") <= 5)
     val batch2 = log.filter(col("cdc_id") > 5)
 
-    CdcStream.bootstrapAgg(base, aggDir, "status", "id")
-    CdcStream.applyAggBatch(batch1, 0L, aggDir, "status", "id",
-      org.apache.spark.sql.types.StringType)
-    CdcStream.applyAggBatch(batch2, 1L, aggDir, "status", "id",
-      org.apache.spark.sql.types.StringType)
-    val after = CdcStream.readAgg(s, aggDir, org.apache.spark.sql.types.StringType)
-      .collect().toSet
+    TxTable.commit(IncrementalAgg.snapshotAgg(base, "status", "id"), aggDir, "overwrite")
+    CdcStream.applyAggBatch(batch1, aggDir, "status", "id")
+    CdcStream.applyAggBatch(batch2, aggDir, "status", "id")
+    val after = TxTable.read(s, aggDir).collect().toSet
     // the maintained view equals a per-status recompute over the final snapshot
-    val expected = graft.apply.IncrementalAgg
+    val expected = IncrementalAgg
       .snapshotAgg(table.snapshot, "status", "id").collect().toSet
     assert(after === expected)
-    // crash window: re-run epoch 1 — reads versionBefore(1), reproduces
-    CdcStream.applyAggBatch(batch2, 1L, aggDir, "status", "id",
-      org.apache.spark.sql.types.StringType)
-    assert(CdcStream.readAgg(s, aggDir, org.apache.spark.sql.types.StringType)
-      .collect().toSet === after)
+    // crash window: re-run the last batch — skips on the mark
+    assertReplaySkips(aggDir) {
+      CdcStream.applyAggBatch(batch2, aggDir, "status", "id")
+    }
+    assert(TxTable.read(s, aggDir).collect().toSet === after)
+    assertTxOnly(aggDir)
   }
 
   test("streamed moments view across micro-batches equals recompute; crashed epoch idempotent") {
     val tmp = Files.createTempDirectory("cdcmoments").toString
     val mDir = s"$tmp/moments"
     val spec = DemoWorkload.UsersSpec
-    val base = DemoWorkload.users(s, 3, startId = 500L).localCheckpoint(true)
-    val table = DemoWorkload.replay(CdcTable(base, spec), s,
+    // empty base and no bootstrap commit: the first batch seeds the view
+    // from an empty snapshot over the batch's own images
+    val table = DemoWorkload.replay(CdcTable(DemoWorkload.users(s, 0), spec), s,
       inserts = 6, updates = 3, deletes = 2)
-    table.update(col("id") === 500L, Map("status" -> lit("inactive")))
     val log = table.changeLog.localCheckpoint(true)
     val batch1 = log.filter(col("cdc_id") <= 5)
     val batch2 = log.filter(col("cdc_id") > 5)
 
-    CdcStream.bootstrapMoments(base, mDir, "status", "id")
-    CdcStream.applyMomentsBatch(batch1, 0L, mDir, "status", "id",
-      org.apache.spark.sql.types.StringType)
-    CdcStream.applyMomentsBatch(batch2, 1L, mDir, "status", "id",
-      org.apache.spark.sql.types.StringType)
-    val after = CdcStream.readMoments(s, mDir, org.apache.spark.sql.types.StringType)
-      .collect().toSet
+    CdcStream.applyMomentsBatch(batch1, mDir, "status", "id")
+    CdcStream.applyMomentsBatch(batch2, mDir, "status", "id")
+    val after = TxTable.read(s, mDir).collect().toSet
     // maintained second moments equal a recompute over the final snapshot
-    val expected = graft.apply.IncrementalAgg
-      .snapshotMoments(table.snapshot, "status", "id").collect().toSet
-    assert(after === expected)
-    // crash window: re-run epoch 1 — reads versionBefore(1), reproduces
-    CdcStream.applyMomentsBatch(batch2, 1L, mDir, "status", "id",
-      org.apache.spark.sql.types.StringType)
-    assert(CdcStream.readMoments(s, mDir, org.apache.spark.sql.types.StringType)
-      .collect().toSet === after)
+    assert(after === IncrementalAgg
+      .snapshotMoments(table.snapshot, "status", "id").collect().toSet)
+    // crash window: re-run the last batch — skips on the mark
+    assertReplaySkips(mDir) {
+      CdcStream.applyMomentsBatch(batch2, mDir, "status", "id")
+    }
+    assert(TxTable.read(s, mDir).collect().toSet === after)
+    assertTxOnly(mDir)
   }
 
   test("streamed distinct-count view across micro-batches equals recompute; crashed epoch idempotent") {
-    import org.apache.spark.sql.types.{LongType, StringType}
     val tmp = Files.createTempDirectory("cdcdistinct").toString
     val dDir = s"$tmp/distinct"
     val spec = DemoWorkload.UsersSpec
@@ -413,30 +367,25 @@ class CdcStreamSpec extends SparkSpecBase {
     val batch1 = log.filter(col("cdc_id") <= 5)
     val batch2 = log.filter(col("cdc_id") > 5)
 
-    CdcStream.bootstrapDistinct(base, dDir, "status", "id")
-    CdcStream.applyDistinctBatch(batch1, 0L, dDir, "status", "id",
-      StringType, LongType)
-    CdcStream.applyDistinctBatch(batch2, 1L, dDir, "status", "id",
-      StringType, LongType)
-    val after = CdcStream.readDistinct(s, dDir, StringType, LongType)
-      .collect().toSet
+    TxTable.commit(IncrementalAgg.snapshotDistinct(base, "status", "id"), dDir, "overwrite")
+    CdcStream.applyDistinctBatch(batch1, dDir, "status", "id")
+    CdcStream.applyDistinctBatch(batch2, dDir, "status", "id")
+    val after = TxTable.read(s, dDir).collect().toSet
     // the maintained support table equals a recompute over the final
     // snapshot — and so does the derived COUNT(DISTINCT) dashboard
-    val expected = graft.apply.IncrementalAgg
+    val expected = IncrementalAgg
       .snapshotDistinct(table.snapshot, "status", "id").collect().toSet
     assert(after === expected)
-    assert(graft.apply.IncrementalAgg
-      .distinctView(CdcStream.readDistinct(s, dDir, StringType, LongType))
-      .collect().toSet ===
-      graft.apply.IncrementalAgg
-        .distinctView(graft.apply.IncrementalAgg
-          .snapshotDistinct(table.snapshot, "status", "id"))
+    assert(IncrementalAgg.distinctView(TxTable.read(s, dDir)).collect().toSet ===
+      IncrementalAgg.distinctView(
+        IncrementalAgg.snapshotDistinct(table.snapshot, "status", "id"))
         .collect().toSet)
-    // crash window: re-run epoch 1 — reads versionBefore(1), reproduces
-    CdcStream.applyDistinctBatch(batch2, 1L, dDir, "status", "id",
-      StringType, LongType)
-    assert(CdcStream.readDistinct(s, dDir, StringType, LongType)
-      .collect().toSet === after)
+    // crash window: re-run the last batch — skips on the mark
+    assertReplaySkips(dDir) {
+      CdcStream.applyDistinctBatch(batch2, dDir, "status", "id")
+    }
+    assert(TxTable.read(s, dDir).collect().toSet === after)
+    assertTxOnly(dDir)
   }
 
   test("streamed join view equals recompute; dangling fk drops; crashed epoch idempotent") {
@@ -458,11 +407,11 @@ class CdcStreamSpec extends SparkSpecBase {
       .toDF("st", "tier").localCheckpoint(true)
     val viewSchema = StructType(rowSchema.fields :+ StructField("tier", StringType))
 
-    CdcStream.applyJoinBatch(batch1, 0L, viewDir, spec, viewSchema, dim,
-      "status", "st", Seq("tier"), numBuckets = 4)
-    CdcStream.applyJoinBatch(batch2, 1L, viewDir, spec, viewSchema, dim,
-      "status", "st", Seq("tier"), numBuckets = 4)
-    val got = CdcStream.readTarget(s, viewDir, viewSchema).collect().toSet
+    CdcStream.applyJoinBatch(batch1, viewDir, spec, viewSchema, dim,
+      "status", "st", Seq("tier"))
+    CdcStream.applyJoinBatch(batch2, viewDir, spec, viewSchema, dim,
+      "status", "st", Seq("tier"))
+    val got = TxTable.read(s, viewDir).collect().toSet
 
     // recompute: final applied state (stream target starts empty) ⋈ dim
     val emptyBase = s.createDataFrame(
@@ -476,10 +425,13 @@ class CdcStreamSpec extends SparkSpecBase {
       "dangling fk must drop")
     assert(got.nonEmpty)
 
-    // crash window: re-run epoch 1 — reads versionBefore(1), reproduces
-    CdcStream.applyJoinBatch(batch2, 1L, viewDir, spec, viewSchema, dim,
-      "status", "st", Seq("tier"), numBuckets = 4)
-    assert(CdcStream.readTarget(s, viewDir, viewSchema).collect().toSet === got)
+    // crash window: re-run the last batch — skips on the mark
+    assertReplaySkips(viewDir) {
+      CdcStream.applyJoinBatch(batch2, viewDir, spec, viewSchema, dim,
+        "status", "st", Seq("tier"))
+    }
+    assert(TxTable.read(s, viewDir).collect().toSet === got)
+    assertTxOnly(viewDir)
   }
 
   test("health listener emits a report per progress event") {
@@ -495,7 +447,7 @@ class CdcStreamSpec extends SparkSpecBase {
       emit = r => { reports.add(r); () })
     s.streams.addListener(listener)
     try {
-      CdcStream.drain(s, s"$tmp/log", s"$tmp/target", s"$tmp/chk",
+      CdcStream.drainTxTable(s, s"$tmp/log", s"$tmp/target", s"$tmp/chk",
         DemoWorkload.UsersSpec, rowSchema)
       // listener events are delivered asynchronously — poll briefly
       val deadline = System.nanoTime() + 15_000_000_000L
@@ -511,7 +463,6 @@ class CdcStreamSpec extends SparkSpecBase {
   }
 
   test("change log streamed into a TxTable target: ACID epochs, time travel, replay no-op") {
-    import graft.sources.TxTable
     val tmp = Files.createTempDirectory("cdctx").toString
     val logDir = s"$tmp/log"
     val tableDir = s"$tmp/txtarget"
@@ -520,6 +471,10 @@ class CdcStreamSpec extends SparkSpecBase {
     val table = DemoWorkload.replay(
       CdcTable(DemoWorkload.users(s, 0), DemoWorkload.UsersSpec),
       s, inserts = 10, updates = 5, deletes = 2)
+    // statistics parity (reference: example_usage.py:141-143 workload)
+    val stats = CdcMonitor.statistics(table.changeLog)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(stats === Map("INSERT" -> 10L, "UPDATE" -> 5L, "DELETE" -> 2L))
     table.changeLog.write.mode("overwrite").parquet(logDir)
     val rowSchema = table.snapshot.schema
 
@@ -562,7 +517,6 @@ class CdcStreamSpec extends SparkSpecBase {
   }
 
   test("streamed MoR target ≡ streamed CoW target; folds on cadence, zero rewrites between folds") {
-    import graft.sources.TxTable
     val tmp = Files.createTempDirectory("cdctxmor").toString
     val table = DemoWorkload.replay(
       CdcTable(DemoWorkload.users(s, 0), DemoWorkload.UsersSpec),
@@ -627,7 +581,6 @@ class CdcStreamSpec extends SparkSpecBase {
   }
 
   test("applyTxBatch merge path: updates apply and deletes key off record_id") {
-    import graft.sources.TxTable
     val dir = Files.createTempDirectory("cdctxm").toString
     val table = DemoWorkload.replay(
       CdcTable(DemoWorkload.users(s, 0), DemoWorkload.UsersSpec),
@@ -666,7 +619,6 @@ class CdcStreamSpec extends SparkSpecBase {
     // committed max and were silently skipped (24/32 batches dropped in
     // the round-13 contended bench). The ledger is now scoped per writer
     // stream (checkpoint-derived streamId stamped into each commit).
-    import graft.sources.TxTable
     val tmp = Files.createTempDirectory("cdctxcont").toString
     val table = DemoWorkload.replay(
       CdcTable(DemoWorkload.users(s, 0), DemoWorkload.UsersSpec),
