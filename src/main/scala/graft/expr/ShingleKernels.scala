@@ -1,9 +1,10 @@
 package graft.expr
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native text → shingle kernels.
@@ -15,7 +16,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * higher-order lambdas and allocates a token-array slice plus a shingle
   * string per window. These kernels run the identical tokenize → window →
   * hash chain as one pass of plain Java with a reused StringBuilder, and
-  * only the HASHES ever materialize as Catalyst values.
+  * only the HASHES ever materialize as Catalyst values:
+  *  - [[HashedShingles]]: sorted distinct xxhash64 shingle hashes (the
+  *    Jaccard verify side of every near-dup pipeline);
+  *  - [[PortableMinhashText]] / [[EngineMinhashText]]: text → minhash
+  *    signature in the Portable (md5 + universal hash) and Engine
+  *    (seeded xxhash64) families; [[EngineMinhash]] is the Engine
+  *    kernel's `array<string>` twin (the Portable one lives in
+  *    `PortableHashExprs`);
+  *  - [[EngineBandBuckets]]: Engine-mode LSH band buckets of a signature;
+  *  - [[TfGrams]] / [[PosGrams]]: per-document n-gram term frequencies and
+  *    positional n-grams.
   *
   * Semantics replicate the Column chain exactly (verified by bit-equality
   * tests against the columnar twins):
@@ -179,6 +190,188 @@ case class PortableMinhashText(child: Expression, n: Int, ab: Seq[(Long, Long)])
   }
 
   override protected def withNewChildInternal(newChild: Expression): PortableMinhashText =
+    copy(child = newChild)
+}
+
+/** Seeds and fold shared by the Engine (xxhash64) minhash kernels.
+  * Spark's `xxhash64(i, s)` folds its arguments left to right from seed
+  * 42, skipping nulls: it hashes the int `i` first and carries the result
+  * into `s` as its seed. So slot `i`'s hash of a shingle is
+  * `XXH64.hashUnsafeBytes(s, seed_i)` with `seed_i = XXH64.hashInt(i, 42)`,
+  * and a null shingle hashes to `seed_i` alone.
+  */
+private[expr] object EngineMinhashFold {
+
+  def seeds(k: Int): Array[Long] = Array.tabulate(k)(i => XXH64.hashInt(i, 42L))
+
+  /** Elementwise-min the slot hashes of one shingle's UTF-8 bytes into `acc`. */
+  def minInto(acc: Array[Long], seeds: Array[Long],
+      base: AnyRef, offset: Long, numBytes: Int): Unit = {
+    var i = 0
+    while (i < acc.length) {
+      val h = XXH64.hashUnsafeBytes(base, offset, numBytes, seeds(i))
+      if (h < acc(i)) acc(i) = h
+      i += 1
+    }
+  }
+}
+
+/** `string` text → Engine-mode minhash signature, fused: tokenize + window
+  * + seeded xxhash64 + min-fold in one pass, no shingle array ever
+  * materialized. Bit-exact with
+  * `Dedup.minhashSignatureEngineColumnar(Dedup.shingles(text, n), k)`
+  * (slot i is `min` over distinct shingles of `xxhash64(i, shingle)`,
+  * starting from `Long.MaxValue`).
+  */
+case class EngineMinhashText(child: Expression, n: Int, numHashes: Int)
+    extends UnaryExpression {
+  require(n >= 1, s"shingle size must be >= 1, got $n")
+  require(numHashes >= 1, s"numHashes must be >= 1, got $numHashes")
+
+  private lazy val seeds: Array[Long] = EngineMinhashFold.seeds(numHashes)
+
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    child.dataType match {
+      case StringType =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      case t =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+          s"$prettyName requires string, got ${t.simpleString}")
+    }
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "graft_engine_minhash_text"
+
+  def kernel(text: UTF8String): GenericArrayData = {
+    val acc = Array.fill(numHashes)(Long.MaxValue)
+    val it = Shingler.shingles(text, n).iterator()
+    while (it.hasNext) {
+      val bytes = UTF8String.fromString(it.next()).getBytes
+      EngineMinhashFold.minInto(acc, seeds, bytes, Platform.BYTE_ARRAY_OFFSET, bytes.length)
+    }
+    new GenericArrayData(acc)
+  }
+
+  override def nullSafeEval(a: Any): Any = kernel(a.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("emt", this, classOf[EngineMinhashText].getName)
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.kernel($c);")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): EngineMinhashText =
+    copy(child = newChild)
+}
+
+/** `array<string>` shingles → Engine-mode minhash signature: the
+  * array-input twin of [[EngineMinhashText]], bit-exact with
+  * `Dedup.minhashSignatureEngineColumnar(shingles, k)`. A null element
+  * hashes to the slot seed alone, as `xxhash64` skips null arguments.
+  */
+case class EngineMinhash(child: Expression, numHashes: Int) extends UnaryExpression {
+  require(numHashes >= 1, s"numHashes must be >= 1, got $numHashes")
+
+  private lazy val seeds: Array[Long] = EngineMinhashFold.seeds(numHashes)
+
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    child.dataType match {
+      case ArrayType(StringType, _) =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      case t =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+          s"$prettyName requires array<string>, got ${t.simpleString}")
+    }
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "graft_engine_minhash"
+
+  def kernel(arr: ArrayData): GenericArrayData = {
+    val acc = Array.fill(numHashes)(Long.MaxValue)
+    var s = 0
+    while (s < arr.numElements()) {
+      if (arr.isNullAt(s)) {
+        var i = 0
+        while (i < numHashes) {
+          if (seeds(i) < acc(i)) acc(i) = seeds(i)
+          i += 1
+        }
+      } else {
+        val u = arr.getUTF8String(s)
+        EngineMinhashFold.minInto(acc, seeds, u.getBaseObject, u.getBaseOffset, u.numBytes)
+      }
+      s += 1
+    }
+    new GenericArrayData(acc)
+  }
+
+  override def nullSafeEval(a: Any): Any = kernel(a.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("emh", this, classOf[EngineMinhash].getName)
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.kernel($c);")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): EngineMinhash =
+    copy(child = newChild)
+}
+
+/** `array<long>` signature → Engine-mode LSH band buckets `array<long>`
+  * of length `bands`: band b is `xxhash64(b, slice(sig, b*r + 1, r))`,
+  * i.e. `h = XXH64.hashInt(b, 42)` then `h = XXH64.hashLong(slot, h)`
+  * over the band's non-null slots, stopping at the array end as `slice`
+  * does (a short last band hashes what is left; a band past the end is
+  * its seed alone). Bit-exact with `Dedup.lshBandBucketsColumnar` on a
+  * non-null signature. A null signature gives NULL buckets, not the band
+  * seeds the columnar form returns: null-text documents then never enter
+  * the band join (as in Portable mode), instead of all colliding in
+  * every band.
+  */
+case class EngineBandBuckets(child: Expression, bands: Int, rowsPerBand: Int)
+    extends UnaryExpression {
+  require(bands >= 1 && rowsPerBand >= 1,
+    s"bands and rowsPerBand must be >= 1, got $bands x $rowsPerBand")
+
+  private lazy val bandSeeds: Array[Long] =
+    Array.tabulate(bands)(b => XXH64.hashInt(b, 42L))
+
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    child.dataType match {
+      case ArrayType(LongType, _) =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      case t =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+          s"$prettyName requires array<bigint>, got ${t.simpleString}")
+    }
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "graft_engine_band_buckets"
+
+  def kernel(sig: ArrayData): GenericArrayData = {
+    val len = sig.numElements()
+    val out = new Array[Long](bands)
+    var b = 0
+    while (b < bands) {
+      var h = bandSeeds(b)
+      var j = b * rowsPerBand
+      val end = math.min(j + rowsPerBand, len)
+      while (j < end) {
+        if (!sig.isNullAt(j)) h = XXH64.hashLong(sig.getLong(j), h)
+        j += 1
+      }
+      out(b) = h
+      b += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  override def nullSafeEval(a: Any): Any = kernel(a.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("ebb", this, classOf[EngineBandBuckets].getName)
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.kernel($c);")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): EngineBandBuckets =
     copy(child = newChild)
 }
 

@@ -5,12 +5,15 @@ import org.apache.spark.sql.functions._
 
 /** Which hash family a hash-valued operator uses.
   *
-  *  - [[HashMode.Engine]] — `xxhash64`: fastest (codegen'd, no md5), but
-  *    engine-internal; outputs depending on it can only be rows-checked.
+  *  - [[HashMode.Engine]] — seeded `xxhash64`, engine-internal: outputs
+  *    depending on it can only be rows-checked. MinHash signatures and
+  *    band buckets run as native kernels ([[graft.expr.EngineMinhashText]],
+  *    [[graft.expr.EngineBandBuckets]]).
   *  - [[HashMode.Portable]] — [[PortableHash]]: md5-derived 32-bit base
   *    hash + literal-constant integer arithmetic, bit-identical in any
-  *    engine; outputs are fully oracle-checkable (and for minhash, also
-  *    cheaper — see [[PortableHash]] doc).
+  *    engine; outputs are fully oracle-checkable. MinHash runs as a
+  *    native kernel too ([[graft.expr.PortableMinhashText]]; per-shingle
+  *    cost in the [[PortableHash]] doc).
   */
 sealed trait HashMode
 object HashMode {
@@ -28,8 +31,12 @@ object HashMode {
   * blocking join) + VERIFICATION (exact measure on candidates only). The
   * all-pairs O(n²) comparison never materializes; candidate count is
   * bounded by band/bucket collision rates, which is what makes these
-  * runnable at 100 TB. All hashing is `xxhash64` (codegen'd, seedable via
-  * extra argument columns, stable across runs and cluster sizes).
+  * runnable at 100 TB. Hashing is seeded `xxhash64` (Engine mode) or the
+  * md5-derived [[PortableHash]] family (Portable mode); both are stable
+  * across runs and cluster sizes. In both modes the shingle → signature →
+  * band-bucket chain runs as native kernels (`graft.expr`), never as
+  * interpreted higher-order lambdas; the lambda formulations stay as the
+  * `*Columnar` reference twins the tests check the kernels against.
   */
 object Dedup {
 
@@ -539,29 +546,22 @@ object Dedup {
   }
 
   /** MinHash signature: `numHashes` independent permutations simulated by
-    * seeded xxhash64; element i is min over shingles of hash_i(shingle).
-    * Pure column algebra — computed inside the scan stage, no shuffle.
+    * seeded hashes; element i is min over shingles of hash_i(shingle).
+    * Computed inside the scan stage, no shuffle.
     *
-    * Formulated as ONE aggregate fold over the shingle array (per shingle:
-    * hash under every seed, elementwise-min into the accumulator) rather
-    * than a per-seed transform that re-scans the shingles: higher-order
-    * functions re-evaluate their argument expression on every lambda
-    * invocation, so the per-seed formulation costs numHashes × the shingle
-    * expression — a silent 100×+ CPU blowup when `shingleArr` is an
-    * inlined expression rather than a materialized column.
+    * Engine mode runs the native [[graft.expr.EngineMinhash]] kernel: per
+    * shingle, `xxhash64(i, s)` for every slot i, elementwise-min into the
+    * accumulator in a primitive loop — bit-exact with
+    * [[minhashSignatureEngineColumnar]], cross-checked in tests.
     */
   def minhashSignature(
       shingleArr: Column,
       numHashes: Int,
       mode: HashMode = HashMode.Engine): Column = mode match {
     case HashMode.Engine =>
-      aggregate(
-        shingleArr,
-        array_repeat(lit(Long.MaxValue), numHashes),
-        (acc, s) => zip_with(
-          acc,
-          transform(sequence(lit(0), lit(numHashes - 1)), seed => xxhash64(seed, s)),
-          (a, h) => least(a, h)))
+      org.apache.spark.sql.GraftSqlBridge.column(
+        graft.expr.EngineMinhash(
+          org.apache.spark.sql.GraftSqlBridge.expression(shingleArr), numHashes))
     case HashMode.Portable =>
       // Classic universal-hash minhash: x = 32-bit shingle hash, slot i is
       // min over shingles of (a_i*x + b_i) mod P, with (a_i, b_i) literal
@@ -574,6 +574,26 @@ object Dedup {
           org.apache.spark.sql.GraftSqlBridge.expression(shingleArr),
           PortableHash.minhashAB(numHashes)))
   }
+
+  /** Pure-built-ins twin of the Engine [[minhashSignature]] — the
+    * reference the native kernels are cross-checked against; production
+    * paths never run its interpreted lambdas.
+    *
+    * Formulated as ONE aggregate fold over the shingle array (per shingle:
+    * hash under every seed, elementwise-min into the accumulator) rather
+    * than a per-seed transform that re-scans the shingles: higher-order
+    * functions re-evaluate their argument expression on every lambda
+    * invocation, so the per-seed formulation costs numHashes × the shingle
+    * expression.
+    */
+  def minhashSignatureEngineColumnar(shingleArr: Column, numHashes: Int): Column =
+    aggregate(
+      shingleArr,
+      array_repeat(lit(Long.MaxValue), numHashes),
+      (acc, s) => zip_with(
+        acc,
+        transform(sequence(lit(0), lit(numHashes - 1)), seed => xxhash64(seed, s)),
+        (a, h) => least(a, h)))
 
   /** Pure-built-ins twin of the portable [[minhashSignature]] — the
     * definition the oracle SQL is generated from; kept as the reference
@@ -593,7 +613,11 @@ object Dedup {
   /** LSH band buckets for a MinHash signature: `bands` buckets, each the
     * hash of `rowsPerBand` consecutive signature slots. Two docs share a
     * bucket in some band iff that band's slots all match — the classic
-    * (1-(1-s^r)^b) S-curve.
+    * (1-(1-s^r)^b) S-curve. A null signature (null text) has null
+    * buckets in both modes, so it never enters a band join.
+    *
+    * Engine mode runs the native [[graft.expr.EngineBandBuckets]] kernel,
+    * bit-exact with [[lshBandBucketsColumnar]] on non-null signatures.
     */
   def lshBandBuckets(
       sig: Column,
@@ -601,8 +625,9 @@ object Dedup {
       rowsPerBand: Int,
       mode: HashMode = HashMode.Engine): Column = mode match {
     case HashMode.Engine =>
-      transform(sequence(lit(0), lit(bands - 1)),
-        bnd => xxhash64(bnd, slice(sig, bnd * rowsPerBand + 1, lit(rowsPerBand))))
+      org.apache.spark.sql.GraftSqlBridge.column(
+        graft.expr.EngineBandBuckets(
+          org.apache.spark.sql.GraftSqlBridge.expression(sig), bands, rowsPerBand))
     case HashMode.Portable =>
       // Fold the band's slots with the portable chain, seeded by the band
       // index (cross-band collisions are harmless — the band index is part
@@ -612,6 +637,15 @@ object Dedup {
           slice(sig, bnd * rowsPerBand + 1, lit(rowsPerBand)),
           (bnd + 1).cast("long")))
   }
+
+  /** Pure-built-ins twin of the Engine [[lshBandBuckets]]:
+    * `xxhash64(b, slice(sig, b*r + 1, r))` per band — the reference the
+    * native kernel is cross-checked against. Unlike the kernel it maps a
+    * null signature to the band seeds (`xxhash64` skips the null slice).
+    */
+  def lshBandBucketsColumnar(sig: Column, bands: Int, rowsPerBand: Int): Column =
+    transform(sequence(lit(0), lit(bands - 1)),
+      bnd => xxhash64(bnd, slice(sig, bnd * rowsPerBand + 1, lit(rowsPerBand))))
 
   /** Public face of [[signatureScan]] — one (id, sig) row per document,
     * for consumers that need raw signatures next to the pair set (e.g.
@@ -627,8 +661,9 @@ object Dedup {
     signatureScan(df, textCol, idCol, n, numHashes, mode)
 
   /** One (id, sig) row per document — signature length `numHashes`. In
-    * Portable mode the fused native kernel never materializes a shingle
-    * string (see [[minhashLshDedup]] docs).
+    * either mode a fused native kernel runs tokenize + window + hash +
+    * min-fold in one pass and never materializes a shingle array (see
+    * [[minhashLshDedup]] docs).
     */
   private def signatureScan(
       df: DataFrame,
@@ -645,7 +680,10 @@ object Dedup {
             n, PortableHash.minhashAB(numHashes))).as("sig"))
     case HashMode.Engine =>
       df.select(col(idCol).as("id"),
-        minhashSignature(shingles(col(textCol), n), numHashes, mode).as("sig"))
+        org.apache.spark.sql.GraftSqlBridge.column(
+          graft.expr.EngineMinhashText(
+            org.apache.spark.sql.GraftSqlBridge.expression(col(textCol)),
+            n, numHashes)).as("sig"))
   }
 
   /** MinHash+LSH near-duplicate pairs, verified by exact Jaccard.
@@ -682,13 +720,13 @@ object Dedup {
       .repartition(parallelism)
       .localCheckpoint(true)
 
-    // Signature scan: in Portable mode the fused text→signature kernel
-    // never materializes a shingle (tokenize + window + md5 + fold in one
-    // pass — the shingle-string construction this replaces was ~8 s of
-    // the query at sf0.1). The repartition is a materialization barrier:
-    // without it projection collapse inlines the signature expression
-    // into the per-band bucket transform and the full 128-hash signature
-    // is recomputed once per band. Shuffle weight is one (id, sig) row
+    // Signature scan: in either mode the fused text→signature kernel
+    // never materializes a shingle array (tokenize + window + hash + fold
+    // in one pass — the interpreted shingle/fold lambdas this replaces
+    // were ~8 s of the query at sf0.1). The repartition is a
+    // materialization barrier: without it projection collapse inlines the
+    // signature expression into the per-band bucket expression and the
+    // full 128-hash signature is recomputed once per band. Shuffle weight is one (id, sig) row
     // per doc.
     val sigd = signatureScan(df, textCol, idCol, n, bands * rowsPerBand, mode)
       .repartition(parallelism)

@@ -495,6 +495,155 @@ class ExtOperatorsSpec extends SparkSpecBase {
     assert(sh === 0)
   }
 
+  /** Engine-mode LSH candidate pairs (id_a < id_b sharing a band bucket)
+    * of a signature frame (id, sig), with `buckets` mapping sig → bands.
+    */
+  private def bandCandidates(sigs: org.apache.spark.sql.DataFrame,
+      buckets: org.apache.spark.sql.Column => org.apache.spark.sql.Column)
+      : org.apache.spark.sql.DataFrame = {
+    val b = sigs.repartition(4) // keep the signature from being recomputed per band
+      .select(col("id"), posexplode(buckets(col("sig"))).as(Seq("band", "bucket")))
+    b.select(col("id").as("id_a"), col("band"), col("bucket"))
+      .join(b.select(col("id").as("id_b"), col("band"), col("bucket")), Seq("band", "bucket"))
+      .filter(col("id_a") < col("id_b"))
+      .select(col("id_a"), col("id_b")).distinct()
+  }
+
+  /** Names of the interpreted array-lambda expressions in `df`'s
+    * optimized plan (subqueries included).
+    */
+  private def lambdas(df: org.apache.spark.sql.DataFrame): Set[String] = {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate, ArrayTransform, ZipWith}
+    val exprs = df.queryExecution.optimizedPlan
+      .collectWithSubqueries { case p => p }
+      .flatMap(_.expressions.flatMap(_.collect { case e => e }))
+    exprs.filter(e => e.isInstanceOf[ArrayAggregate] || e.isInstanceOf[ZipWith] ||
+      e.isInstanceOf[ArrayTransform]).map(_.getClass.getSimpleName).toSet
+  }
+
+  /** Seeded corpus of `nDocs` docs over a 400-word vocabulary, every
+    * fifth doc a 1-3 word edit of an earlier one (planted near-dups).
+    */
+  private def plantedCorpus(nDocs: Int, seed: Int): Seq[(Long, String)] = {
+    val rnd = new scala.util.Random(seed)
+    val vocab = Vector.tabulate(400)(i => s"w$i")
+    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
+    for (i <- 0 until nDocs) {
+      val text = if (i % 5 == 4) {
+        val ws = out(rnd.nextInt(out.size))._2.split(" ")
+        for (_ <- 0 until 1 + rnd.nextInt(3)) ws(rnd.nextInt(ws.length)) = vocab(rnd.nextInt(400))
+        ws.mkString(" ")
+      } else Seq.fill(20 + rnd.nextInt(40))(vocab(rnd.nextInt(400))).mkString(" ")
+      out += ((i.toLong, text))
+    }
+    out.toSeq
+  }
+
+  test("native engine minhash/band kernels are bit-exact with the lambda twins") {
+    import graft.ext.HashMode
+    val rnd = new scala.util.Random(23)
+    val words = Vector("alpha", "beta", "Gamma", "e", "ff", "第", "naïve", "café", "x1")
+    val edge = Seq("", " ", "  one  ", "a\tb\nc", "one", "one two", "a b a b a b a b",
+      "naïve café — 日本語 текст", "Ünïcödé  ÜNÏCÖDÉ ünïcödé", null)
+    val texts = edge ++ Seq.tabulate(150) { _ =>
+      Seq.fill(1 + rnd.nextInt(30))(words(rnd.nextInt(words.size))).mkString(" ")
+    }
+    // repartitioned so the kernels run in generated code, not folded into
+    // a LocalRelation by the optimizer
+    val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
+      .repartition(2)
+    // (numHashes, bands, rowsPerBand): the default layout; a short last
+    // band (slots 16..19); a band past the signature's end (slots 24..)
+    val layouts = Seq((128, 16, 8), (20, 3, 8), (20, 4, 8))
+    for (n <- Seq(1, 3, 5); (k, bands, r) <- layouts) {
+      val ref = df.select(col("id"),
+        Dedup.minhashSignatureEngineColumnar(Dedup.shingles(col("text"), n), k).as("ref"),
+        Dedup.minhashSignature(Dedup.shingles(col("text"), n), k, HashMode.Engine).as("arr"))
+      val both = Dedup.minhashSignatures(df, "text", "id", n, k, HashMode.Engine)
+        .join(ref, "id")
+        .withColumn("fastB", Dedup.lshBandBuckets(col("ref"), bands, r, HashMode.Engine))
+        .withColumn("refB", Dedup.lshBandBucketsColumnar(col("ref"), bands, r))
+        .cache()
+      assert(both.count() === texts.size)
+      assert(both.filter(!(col("sig") <=> col("ref"))).count() === 0,
+        s"EngineMinhashText mismatch at n=$n k=$k")
+      assert(both.filter(!(col("arr") <=> col("ref"))).count() === 0,
+        s"EngineMinhash mismatch at n=$n k=$k")
+      assert(both.filter(col("ref").isNotNull && !(col("fastB") <=> col("refB"))).count() === 0,
+        s"EngineBandBuckets mismatch at n=$n $bands x $r")
+      // the one deliberate difference: a null signature (null text) has
+      // null buckets, where xxhash64 over the null slice gives the seeds
+      assert(both.filter(col("ref").isNull).count() === 1)
+      assert(both.filter(col("ref").isNull && col("fastB").isNull && col("refB").isNotNull)
+        .count() === 1)
+      both.unpersist()
+    }
+    // array input: a null element hashes to the slot seed alone; a null
+    // array stays null; an empty array keeps the Long.MaxValue sentinel
+    val arrs = Seq(Some(Seq("a b", null, "c d")), Some(Seq.empty[String]),
+      Some(Seq(null: String)), Some(Seq("x", "x", "ü ß")), None).toDF("arr").repartition(2)
+    val badArr = arrs
+      .select(Dedup.minhashSignature(col("arr"), 32, HashMode.Engine).as("fast"),
+        Dedup.minhashSignatureEngineColumnar(col("arr"), 32).as("ref"))
+      .filter(!(col("fast") <=> col("ref"))).count()
+    assert(badArr === 0, "EngineMinhash mismatch on array input")
+  }
+
+  test("engine minhashLshDedup returns the lambda-twin pipeline's pairs on a planted corpus") {
+    val corpus = plantedCorpus(1200, seed = 5)
+    val df = corpus.toDF("doc_id", "text").repartition(4)
+    val threshold = 0.7
+    val got = Dedup.minhashLshDedup(df, "text", "doc_id", threshold = threshold)
+    // the same pipeline spelled with the lambda twins
+    val sigs = df.select(col("doc_id").as("id"),
+      Dedup.minhashSignatureEngineColumnar(Dedup.shingles(col("text"), 3), 128).as("sig"))
+    val sh = df.select(col("doc_id").as("id"), Dedup.hashedShingles(col("text"), 3).as("sh"))
+    val want = bandCandidates(sigs, Dedup.lshBandBucketsColumnar(_, 16, 8))
+      .join(sh.select(col("id").as("id_a"), col("sh").as("sa")), "id_a")
+      .join(sh.select(col("id").as("id_b"), col("sh").as("sb")), "id_b")
+      .withColumn("jac", round(Dedup.jaccardSorted(col("sa"), col("sb")), 6))
+      .filter(col("jac") >= threshold)
+      .select(col("id_a"), col("id_b"), col("jac"))
+    assertSameRows(got, want, "engine kernels vs lambda twins")
+    assert(got.count() >= 150, "degenerate fixture: too few planted pairs found")
+  }
+
+  test("engine mode: null texts get null band buckets and add no candidates") {
+    import graft.ext.HashMode
+    val docs200 = plantedCorpus(200, seed = 9).toDF("doc_id", "text")
+    val nulls = (1000L until 1300L).map(i => (i, null: String)).toDF("doc_id", "text")
+    val withNulls = docs200.unionByName(nulls).repartition(4)
+    val sigs = Dedup.minhashSignatures(withNulls, "text", "doc_id", 3, 128, HashMode.Engine)
+    val nullSig = sigs.filter(col("id") >= 1000L)
+      .select(Dedup.lshBandBuckets(col("sig"), 16, 8, HashMode.Engine).as("b"))
+      .filter(col("b").isNotNull).count()
+    assert(nullSig === 0, "null text must give null buckets")
+    // candidates: the kernel's null buckets keep every null-text doc out
+    // of the band join; the lambda twin's band seeds pair all of them
+    val fast = bandCandidates(sigs, Dedup.lshBandBuckets(_, 16, 8, HashMode.Engine))
+    val twin = bandCandidates(sigs, Dedup.lshBandBucketsColumnar(_, 16, 8))
+    assert(fast.filter(col("id_b") >= 1000L).count() === 0)
+    assert(twin.filter(col("id_a") >= 1000L).count() === 300L * 299 / 2)
+    assert(fast.count() === twin.filter(col("id_b") < 1000L).count())
+    // the verified pair output is unchanged by the null rows
+    assertSameRows(Dedup.minhashLshDedup(withNulls, "text", "doc_id", threshold = 0.5),
+      Dedup.minhashLshDedup(docs200, "text", "doc_id", threshold = 0.5), "null rows")
+  }
+
+  test("default (Engine) minhash plans contain no interpreted array lambdas") {
+    import graft.ext.HashMode
+    // a shuffle above the local rows keeps the optimizer from folding the
+    // projections into a precomputed LocalRelation
+    val d = docs.repartition(2)
+    assert(lambdas(Dedup.minhashSignatures(d, "text", "doc_id", 3, 128,
+      HashMode.Engine)).isEmpty)
+    assert(lambdas(Dedup.minhashLshDedup(d, "text", "doc_id")).isEmpty)
+    // the guard sees the lambda twins, so the checks above are not vacuous
+    val twins = d.select(Dedup.lshBandBucketsColumnar(
+      Dedup.minhashSignatureEngineColumnar(Dedup.shingles(col("text"), 3), 128), 16, 8))
+    assert(lambdas(twins) === Set("ArrayAggregate", "ZipWith", "ArrayTransform"))
+  }
+
   test("portable rollingHash is order-sensitive and bounded by P") {
     import graft.ext.HashMode
     val df = Seq((1L, "a b c"), (2L, "c b a"), (3L, "")).toDF("id", "t")

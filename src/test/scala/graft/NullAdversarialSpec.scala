@@ -84,17 +84,21 @@ class NullAdversarialSpec extends SparkSpecBase {
         threshold = 0.5, mode = HashMode.Portable))
       val mh2 = pairs(Dedup.minhashLshDedup(df, "text", "doc_id",
         threshold = 0.5, mode = HashMode.Portable))
+      // the default mode (Engine: seeded xxhash64 kernels)
+      val mhE = pairs(Dedup.minhashLshDedup(df, "text", "doc_id", threshold = 0.5))
+      val mhE2 = pairs(Dedup.minhashLshDedup(df, "text", "doc_id", threshold = 0.5))
       val sh = pairs(Dedup.simhashDedup(df, "text", "doc_id",
         maxHamming = 3, mode = HashMode.Portable))
       val ng = pairs(Dedup.ngramJaccardDedup(df, "text", "doc_id", col("lang"),
         n = 3, threshold = 0.2, saltFanout = 4, maxBlockRows = Some(1000L)))
       val ct = pairs(Dedup.containmentPairs(df, "text", "doc_id",
         n = 3, threshold = 0.5, maxDf = 10))
-      val all = mh ++ sh ++ ng ++ ct
+      val all = mh ++ mhE ++ sh ++ ng ++ ct
 
       (ex.map(_.getLong(2)).sum == rows.size) :|
         s"exactDedup covers every row once (got ${ex.map(_.getLong(2)).sum} of ${rows.size})" &&
       (mh == mh2) :| "minhash deterministic across runs" &&
+      (mhE == mhE2) :| "engine-mode minhash deterministic across runs" &&
       all.forall { case (a, b) => a < b } :| "pair emission ordered id_a < id_b" &&
       all.forall { case (a, b) => !nullText(a) && !nullText(b) } :|
         s"null-text docs must never pair ($all vs null set $nullText)" &&
