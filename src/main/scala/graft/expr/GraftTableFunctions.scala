@@ -249,10 +249,8 @@ object GraftTableFunctions {
     "graft_tx_fold" -> wtvf("(tableDir[, minDeletedFraction])", 1, 2)(
       (s: SparkSession, a: Seq[Any]) => {
         import s.implicits._
-        val v =
-          if (a.length > 1)
-            graft.sources.TxTable.foldDvsIf(s, str(a(0)), dbl(a(1)))
-          else graft.sources.TxTable.foldDvs(s, str(a(0)))
+        val v = graft.sources.TxTable.foldDvs(s, str(a(0)),
+          if (a.length > 1) dbl(a(1)) else 0.0)
         Seq((v, "fold")).toDF("version", "op")
       }),
     "graft_tx_vacuum" -> wtvf("(tableDir, keepVersions)", 2, 2,

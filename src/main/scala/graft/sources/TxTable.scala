@@ -41,7 +41,20 @@ import scala.jdk.CollectionConverters._
   *     concurrency, appends commute, overwrite is last-writer-wins.
   * Readers see either the old or the new manifest, never a partial
   * state: data files are complete before the publish, and the publish
-  * is the single visibility point (Delta's LogStore seam).
+  * is the single visibility point (Delta's LogStore seam). Every
+  * publish is one [[Snapshot]] composed as base − removed files + the
+  * written batch, through one of two loops: [[commit]]'s
+  * (compose against ANY latest) or the read-modify-write loop shared by
+  * [[merge]], [[foldDvs]], [[compactSmallFiles]] and [[compact]] (CAS at
+  * exactly base + 1, re-derive on a lost race).
+  *
+  * ==Exactly-once ledger==
+  * A streamed writer stamps each commit with its epoch (and writer
+  * stream), and every manifest carries the table's ledger — each
+  * stream's highest applied epoch, as `txn=` lines — forward from its
+  * base. The latest manifest alone answers "was this epoch applied?"
+  * ([[appliedEpoch]]), the way Structured Streaming's sinks key
+  * idempotence on a stored version; vacuum and compaction keep it.
   *
   * ==Schema evolution==
   * Appends may ADD nullable columns (old files read as null via the
@@ -130,7 +143,34 @@ object TxTable {
         * whose ids trailed another writer's committed max. Absent on
         * pre-round-14 manifests and on non-streaming commits.
         */
-      streamId: Option[String] = None) {
+      streamId: Option[String] = None,
+      /** The exactly-once LEDGER: writer stream ("" = unscoped) → the
+        * highest epoch it has applied. Every commit carries its base's
+        * ledger forward (append, overwrite, merge, fold, compact, seed)
+        * and folds in its own stamp, so the latest manifest alone holds
+        * the full applied state — vacuum and compaction cannot bury it.
+        * Parsing folds the manifest's own `epoch=`/`stream=` stamp in,
+        * so a manifest written before `txn=` lines existed reads as the
+        * ledger of its own stamp.
+        */
+      txns: Map[String, Long] = Map.empty) {
+    /** The applied high-water `streamId`'s replays skip at or below: a
+      * scoped stream honours its own mark and the unscoped one (a
+      * resumed single-writer table stamped before stream scoping); an
+      * unscoped caller honours every stream's. -1 when nothing applied.
+      */
+    def appliedEpoch(streamId: Option[String]): Long =
+      streamId.fold(txns.values)(s => txns.get(s) ++ txns.get(""))
+        .maxOption.getOrElse(-1L)
+
+    /** This snapshot stamped as `epochId` of `stream`, ledger included. */
+    private[sources] def stamped(epochId: Option[Long],
+        stream: Option[String]): Snapshot =
+      copy(epoch = epochId, streamId = stream, txns = epochId.fold(txns) { e =>
+        val k = stream.getOrElse("")
+        txns.updated(k, math.max(e, txns.getOrElse(k, e)))
+      })
+
     /** Files whose [min, max] for `col` overlaps the LONG range [lo, hi]
       * — files with no recorded stats (or stats of another kind) are
       * KEPT (skipping must never drop data).
@@ -144,6 +184,14 @@ object TxTable {
       files.filter(f => stats.get(f).flatMap(_.get(col))
         .forall(_.overlapsString(lo, hi)))
   }
+
+  /** The applied high-water of `streamId` at `dir` ([[Snapshot.appliedEpoch]]
+    * of the latest manifest — one listing and one parse), -1 for an
+    * empty or absent table. The exactly-once ledger every streamed
+    * writer gates its replays on.
+    */
+  def appliedEpoch(dir: String, streamId: Option[String]): Long =
+    latest(dir).fold(-1L)(_.appliedEpoch(streamId))
 
   private def b64enc(s: String): String =
     java.util.Base64.getEncoder.encodeToString(
@@ -230,24 +278,39 @@ object TxTable {
         val p = s.split("\\|", -1)
         p(0) -> p(1).toLong
       }.toMap
+    // <stream>|<epoch>: the epoch is the LAST field, so the split is on
+    // the last '|' (the unscoped stream is the empty string)
+    val txns = lines
+      .collect { case l if l.startsWith("txn=") => l.stripPrefix("txn=") }
+      .map { s =>
+        val i = s.lastIndexOf('|')
+        s.substring(0, i) -> s.substring(i + 1).toLong
+      }.toMap
     Snapshot(version, field("op"),
       DataType.fromJson(field("schema")).asInstanceOf[StructType],
       lines.collect { case l if l.startsWith("file=") => l.stripPrefix("file=") }
         .toSeq,
-      lines.collectFirst { case l if l.startsWith("epoch=") =>
-        l.stripPrefix("epoch=").toLong },
-      stats, blooms, dvs, sizes, rowCounts,
+      None, stats, blooms, dvs, sizes, rowCounts,
       // commit wall-clock (epoch millis, round 11): 0 on older manifests
       // — readers must treat 0 as "unknown", not 1970
       lines.collectFirst { case l if l.startsWith("ts=") =>
         l.stripPrefix("ts=").toLong }.getOrElse(0L),
-      lines.collectFirst { case l if l.startsWith("stream=") =>
-        l.stripPrefix("stream=") })
+      txns = txns)
+      .stamped(
+        lines.collectFirst { case l if l.startsWith("epoch=") =>
+          l.stripPrefix("epoch=").toLong },
+        lines.collectFirst { case l if l.startsWith("stream=") =>
+          l.stripPrefix("stream=") })
   }
 
   /** Latest snapshot, or None for an empty/absent table. */
   def latest(dir: String): Option[Snapshot] =
     versions(dir).lastOption.map(snapshot(dir, _))
+
+  /** The snapshot at `version`, or the latest; an empty table is an error. */
+  private def pinned(dir: String, version: Option[Long]): Snapshot =
+    version.map(snapshot(dir, _)).orElse(latest(dir))
+      .getOrElse(throw new IllegalArgumentException(s"no committed version at $dir"))
 
   /** Read the table at `version` (time travel) or at the latest version.
     * The read is pinned to one manifest: a concurrent commit cannot
@@ -255,28 +318,21 @@ object TxTable {
     * own schema.
     */
   def read(spark: SparkSession, dir: String, version: Option[Long] = None): DataFrame = {
-    val snap = version.map(snapshot(dir, _)).orElse(latest(dir))
-      .getOrElse(throw new IllegalArgumentException(s"no committed version at $dir"))
-    if (snap.files.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], snap.schema)
-    else
-      dvApply(spark, dir, snap,
-        spark.read.schema(snap.schema)
-          .parquet(snap.files.map(f => s"$dir/$f"): _*))
+    val snap = pinned(dir, version)
+    readSubset(spark, dir, snap, snap.files)
   }
 
-  /** Read a SUBSET of a snapshot's files (file-relative manifest paths)
-    * with the snapshot's deletion vectors applied — the pruned read path
-    * [[TxDvRelation]] composes with [[TxPrune]] file skipping, so a
-    * DV-carrying table keeps manifest-stat/Bloom skipping instead of
-    * degrading to an O(table) scan between a MoR merge and the next
-    * fold. Value-identical to [[read]] when `kept` covers every file
-    * (DVs for pruned-away files simply find nothing to anti-join).
+  /** Read a SUBSET of a snapshot's files (file-relative manifest paths,
+    * scanned in the given order) with the snapshot's deletion vectors
+    * applied — every pruned read (stats, Bloom, key-range) and every
+    * rewrite's input, so a DV-carrying table keeps file skipping instead
+    * of degrading to an O(table) scan between a MoR merge and the next
+    * fold, and no rewrite resurrects a deleted row. Value-identical to
+    * [[read]] when `files` covers every file (DVs for pruned-away files
+    * simply find nothing to anti-join).
     */
-  private[graft] def readSubset(spark: SparkSession, dir: String,
-      snap: Snapshot, kept: Set[String]): DataFrame = {
-    val files = snap.files.filter(kept)
+  private def readSubset(spark: SparkSession, dir: String,
+      snap: Snapshot, files: Seq[String]): DataFrame = {
     if (files.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], snap.schema)
@@ -374,24 +430,44 @@ object TxTable {
       bloomColumns: Seq[String] = Nil, bloomBits: Int = 1 << 13,
       bloomK: Int = 5, streamId: Option[String] = None,
       expectVersion: Option[Long] = None): Long = {
-    require(mode == "append" || mode == "overwrite",
-      s"mode must be append or overwrite, got $mode")
     // knob validation BEFORE the batch write — a bad knob must not cost
     // a full data write that then rots as an orphan until vacuum
     require(bloomBits > 0 && bloomBits % 32 == 0,
       s"bloomBits must be a positive multiple of 32, got $bloomBits")
     require(bloomK > 0 && bloomK <= 16, s"bloomK must be in [1, 16], got $bloomK")
-    val (commitRel, newFiles, newStats, newBlooms, newSizes, newRows) =
-      writeData(df, dir, statsColumns,
-        bloomColumns.map(c => c -> (bloomBits, bloomK)).toMap)
-    val newSchema = df.schema
+    commitLaid(df, dir, mode,
+      (statsColumns, bloomColumns.map(c => c -> (bloomBits, bloomK)).toMap),
+      epochId, streamId, arbiter, expectVersion)
+  }
+
+  /** [[commit]] under a per-column layout ([[layoutOf]]'s shape), and
+    * the ONE compose-against-any-base publish loop. `schema` overrides
+    * the manifest schema (a replica seed keeps its primary's declared
+    * nullability; a file read reports every column nullable).
+    */
+  private[sources] def commitLaid(df: DataFrame, dir: String, mode: String,
+      layout: (Seq[String], Map[String, (Int, Int)]),
+      epochId: Option[Long] = None, streamId: Option[String] = None,
+      arbiter: CommitArbiter = LocalLinkArbiter,
+      expectVersion: Option[Long] = None,
+      schema: Option[StructType] = None): Long = {
+    require(mode == "append" || mode == "overwrite",
+      s"mode must be append or overwrite, got $mode")
+    val written = writeData(df, dir, layout)
+    val newSchema = schema.getOrElse(df.schema)
     // 2 + 3. compose against the CURRENT latest and publish; on a lost
     // race, re-read and retry (appends commute; overwrite last-wins)
-    var committed = -1L
-    var gaveUp = false
-    while (committed < 0 && !gaveUp) {
+    @scala.annotation.tailrec
+    def attempt(): Long = {
       val base = latest(dir)
-      val v = base.map(_.version + 1).getOrElse(0L)
+      val next = (mode, base) match {
+        case ("append", Some(b)) =>
+          // deletion vectors carry forward — dropping them would
+          // resurrect every row a prior merge-on-read deleted
+          compose(b, Set.empty, written, mode)
+            .copy(schema = mergedAppendSchema(b.schema, newSchema, dir))
+        case _ => compose(cleared(base, newSchema), Set.empty, written, mode)
+      }
       // CAS form (round 14): `expectVersion` pins the publish to ONE
       // version — a concurrent writer taking it means the caller's
       // premise (e.g. "the table is still empty") no longer holds, so
@@ -400,31 +476,47 @@ object TxTable {
       // table; the retry loop turned the loser into an overwrite of the
       // winner's data). The loser's data dir is an invisible orphan,
       // retired by vacuum like any lost merge race.
-      if (expectVersion.exists(_ != v)) gaveUp = true
-      else {
-        val (files, schema, stats, blooms, dvs, sizes, rows) =
-          (mode, base) match {
-            case ("overwrite", _) | (_, None) =>
-              (newFiles, newSchema, newStats, newBlooms,
-                Map.empty[String, String], newSizes, newRows)
-            case ("append", Some(b)) =>
-              // deletion vectors carry forward — dropping them would
-              // resurrect every row a prior merge-on-read deleted
-              (b.files ++ newFiles, mergedAppendSchema(b.schema, newSchema, dir),
-                b.stats ++ newStats, b.blooms ++ newBlooms, b.dvs,
-                b.sizes ++ newSizes, b.rows ++ newRows)
-            case other => throw new MatchError(other) // unreachable
-          }
-        if (publishAt(dir, v, mode, schema, files, stats, epochId,
-            tmpTag = commitRel.stripPrefix("data/"), arbiter = arbiter,
-            blooms = blooms, dvs = dvs, sizes = sizes, rows = rows,
-            streamId = streamId))
-          committed = v
-        else if (expectVersion.isDefined) gaveUp = true
-      }
+      if (expectVersion.exists(_ != next.version)) -1L
+      else if (publishAt(dir, next.stamped(epochId, streamId), arbiter))
+        next.version
+      else if (expectVersion.isDefined) -1L
+      else attempt()
     }
-    committed
+    attempt()
   }
+
+  /** One landed batch: its commit dir, sorted relative files, and each
+    * file's manifest entries — what [[compose]] adds to a base.
+    */
+  private final case class Written(rel: String, files: Seq[String],
+      stats: Map[String, Map[String, ColRange]],
+      blooms: Map[String, Map[String, BloomRef]],
+      sizes: Map[String, Long], rows: Map[String, Long])
+
+  /** The ONE manifest composition every publish builds on: `base` minus
+    * the `removed` files plus `w`, at `base.version + 1` under `op`.
+    * Files and every per-file map (stats, blooms, dvs, sizes, rows) move
+    * together, and the txn ledger carries forward untouched; the
+    * epoch stamp is cleared for the caller's [[Snapshot.stamped]].
+    */
+  private def compose(base: Snapshot, removed: Set[String], w: Written,
+      op: String): Snapshot =
+    base.copy(version = base.version + 1, op = op,
+      files = base.files.filterNot(removed) ++ w.files,
+      stats = (base.stats -- removed) ++ w.stats,
+      blooms = (base.blooms -- removed) ++ w.blooms,
+      dvs = base.dvs -- removed,
+      sizes = (base.sizes -- removed) ++ w.sizes,
+      rows = (base.rows -- removed) ++ w.rows,
+      epoch = None, streamId = None)
+
+  /** An empty table at `base`'s version (-1 when absent) carrying only
+    * its ledger — what an overwrite composes against: the data is
+    * replaced, the record of what was applied is not.
+    */
+  private def cleared(base: Option[Snapshot], schema: StructType): Snapshot =
+    Snapshot(base.fold(-1L)(_.version), "", schema, Nil,
+      txns = base.fold(Map.empty[String, Long])(_.txns))
 
   /** Commits whose per-file stats came straight from parquet footers
     * (no Spark re-read job) since JVM start — observability for the
@@ -434,16 +526,14 @@ object TxTable {
   private[graft] val footerStatsCommits =
     new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Land `df`'s parquet files under a fresh invisible commit dir.
-    * Returns (commit-relative dir, sorted relative file list, per-file
-    * min/max stats for `statsColumns`). Step 1 of the commit protocol,
-    * factored out so [[merge]] can compose file lists before publishing.
+  /** Land `df`'s parquet files under a fresh invisible commit dir, with
+    * each file's manifest entries under `layout` (stats columns, Bloom
+    * geometry per column). Step 1 of the commit protocol, factored out
+    * so every publish [[compose]]s the same [[Written]] record.
     */
-  private def writeData(df: DataFrame, dir: String, statsColumns: Seq[String],
-      bloomSpec: Map[String, (Int, Int)] = Map.empty)
-      : (String, Seq[String], Map[String, Map[String, ColRange]],
-         Map[String, Map[String, BloomRef]], Map[String, Long],
-         Map[String, Long]) = {
+  private def writeData(df: DataFrame, dir: String,
+      layout: (Seq[String], Map[String, (Int, Int)])): Written = {
+    val (statsColumns, bloomSpec) = layout
     Files.createDirectories(logDir(dir))
     val uuid = java.util.UUID.randomUUID().toString
     val commitRel = s"data/$uuid"
@@ -532,7 +622,7 @@ object TxTable {
     // byte lengths into the manifest: the scan planner lists from the
     // manifest alone (zero FS RPCs at plan time)
     val newSizes = newFiles.map(f => f -> Files.size(Paths.get(dir, f))).toMap
-    (commitRel, newFiles, newStats, newBlooms, newSizes, newRows)
+    Written(commitRel, newFiles, newStats, newBlooms, newSizes, newRows)
   }
 
   /** Per-(file, column) Bloom filters for the just-written batch — the
@@ -756,20 +846,13 @@ object TxTable {
       version: Option[Long], column: String, repr: String,
       value: org.apache.spark.sql.Column, probeKind: String): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val snap = version.map(snapshot(dir, _)).orElse(latest(dir))
-      .getOrElse(throw new IllegalArgumentException(s"no committed version at $dir"))
+    val snap = pinned(dir, version)
     val colKind = snap.schema.fields.find(_.name == column)
       .flatMap(f => bloomKind(f.dataType))
     val kept =
       if (colKind.contains(probeKind)) filesForPoint(dir, snap, column, repr)
       else snap.files // kind mismatch: coercion could match what reprs miss
-    val base =
-      if (kept.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], snap.schema)
-      else dvApply(spark, dir, snap, spark.read.schema(snap.schema)
-        .parquet(kept.map(f => s"$dir/$f"): _*))
-    base.where(col(column) === value)
+    readSubset(spark, dir, snap, kept).where(col(column) === value)
   }
 
   /** The stats ordering domain for a column type: integral, date
@@ -946,97 +1029,91 @@ object TxTable {
     }
   }
 
-  /** Publish a manifest at EXACTLY version `v` via the hard-link
-    * put-if-absent. Returns false if `v` was taken by a concurrent
-    * writer — the compare-and-swap primitive [[merge]]'s serializable
-    * read-modify-write loop needs (plain [[commit]] retries internally
-    * because append/overwrite compose against ANY base; a merge's
-    * output is only valid against the base version it read).
+  /** Publish `snap` as the manifest of EXACTLY `snap.version` via the
+    * arbiter's put-if-absent — exactly the lines [[snapshot]] parses
+    * back (`commitTs` aside: the publish stamps its own wall-clock).
+    * Returns false if the version was taken by a concurrent writer: the
+    * compare-and-swap both publish loops ([[commitLaid]]'s and
+    * [[rewriteLoop]]'s) are built on.
     */
-  private def publishAt(dir: String, v: Long, op: String, schema: StructType,
-      files: Seq[String], stats: Map[String, Map[String, ColRange]],
-      epochId: Option[Long], tmpTag: String,
-      arbiter: CommitArbiter = LocalLinkArbiter,
-      blooms: Map[String, Map[String, BloomRef]] = Map.empty,
-      dvs: Map[String, String] = Map.empty,
-      sizes: Map[String, Long] = Map.empty,
-      rows: Map[String, Long] = Map.empty,
-      streamId: Option[String] = None): Boolean = {
-    val statsLines = stats.toSeq.sortBy(_._1).flatMap { case (f, cols) =>
-      cols.toSeq.sortBy(_._1).map { case (c, r) =>
-        s"stats=$f|$c|${r.kind}|${b64enc(r.min)}|${b64enc(r.max)}"
+  private[graft] def publishAt(dir: String, snap: Snapshot,
+      arbiter: CommitArbiter = LocalLinkArbiter): Boolean = {
+    // one line per file (per file and column), sorted: `<kind>=<file>|…`
+    def perFile[V](kind: String, m: Map[String, V])(repr: V => String) =
+      m.toSeq.sortBy(_._1).map { case (f, x) => s"$kind=$f|${repr(x)}" }
+    def perCol[V](kind: String, m: Map[String, Map[String, V]])(
+        repr: V => String) =
+      m.toSeq.sortBy(_._1).flatMap { case (f, cols) =>
+        cols.toSeq.sortBy(_._1).map { case (c, x) => s"$kind=$f|$c|${repr(x)}" }
       }
-    }
-    val bloomLines = blooms.toSeq.sortBy(_._1).flatMap { case (f, cols) =>
-      cols.toSeq.sortBy(_._1).map { case (c, r) =>
-        s"bloom=$f|$c|${r.mBits}|${r.k}|${r.sidecar}"
-      }
-    }
-    // NOTE: dv= lines are NOT backward-ignorable — a reader that skipped
-    // them would resurrect deleted rows. This engine's readers all parse
-    // them; the manifest format carries no version negotiation because
-    // there is exactly one reader implementation (unknown-line tolerance
-    // remains for genuinely ADDITIVE fields like stats/bloom).
-    val dvLines = dvs.toSeq.sortBy(_._1).map { case (f, side) =>
-      s"dv=$f|$side"
-    }
-    val sizeLines = sizes.toSeq.sortBy(_._1).map { case (f, n) =>
-      s"fsize=$f|$n"
-    }
-    val rowLines = rows.toSeq.sortBy(_._1).map { case (f, n) =>
-      s"nrows=$f|$n"
-    }
     val content = (Seq(
-      s"version=$v",
-      s"op=$op",
-      s"schema=${schema.json}",
+      s"version=${snap.version}",
+      s"op=${snap.op}",
+      s"schema=${snap.schema.json}",
       // commit wall-clock: gives the scan planner a real mtime for
       // manifest-synthesized file statuses (ADDITIVE — old readers would
       // ignore an unknown line, old manifests parse to commitTs=0)
       s"ts=${System.currentTimeMillis()}") ++
-      epochId.map(e => s"epoch=$e").toSeq ++
+      snap.epoch.map(e => s"epoch=$e").toSeq ++
       // additive: old readers ignore unknown lines; scopes the epoch
-      // stamp to its writer stream for the per-stream high-water ledger
-      streamId.map(s => s"stream=$s").toSeq ++
-      files.map(f => s"file=$f") ++ statsLines ++ bloomLines ++ dvLines ++
-      sizeLines ++ rowLines)
+      // stamp to its writer stream
+      snap.streamId.map(s => s"stream=$s").toSeq ++
+      snap.files.map(f => s"file=$f") ++
+      perCol("stats", snap.stats)(r =>
+        s"${r.kind}|${b64enc(r.min)}|${b64enc(r.max)}") ++
+      perCol("bloom", snap.blooms)(r => s"${r.mBits}|${r.k}|${r.sidecar}") ++
+      // NOTE: dv= lines are NOT backward-ignorable — a reader that
+      // skipped them would resurrect deleted rows. This engine's readers
+      // all parse them; the manifest format carries no version
+      // negotiation because there is exactly one reader implementation
+      // (unknown-line tolerance remains for ADDITIVE fields like stats)
+      perFile("dv", snap.dvs)(identity) ++
+      perFile("fsize", snap.sizes)(_.toString) ++
+      perFile("nrows", snap.rows)(_.toString) ++
+      // additive: the carried exactly-once ledger ([[Snapshot.txns]])
+      perFile("txn", snap.txns)(_.toString))
       .mkString("", "\n", "\n")
-    arbiter.putIfAbsent(manifestPath(dir, v), content, s"$tmpTag-$v")
+    arbiter.putIfAbsent(manifestPath(dir, snap.version), content,
+      s"${java.util.UUID.randomUUID()}-${snap.version}")
   }
 
   /** Exactly-once streaming commit: the foreachBatch body for a TxTable
-    * sink. The manifest is stamped with the checkpoint's `epochId`; a
-    * crash-replayed epoch finds its stamp in the log and returns the
-    * already-committed version WITHOUT writing — the table-format
-    * equivalent of the epoch-dir overwrite convention, but atomic and
-    * multi-file. (A crash between the data write and the manifest link
-    * leaves only invisible orphan files, retired by [[vacuum]].)
-    * Returns the epoch's version, new or found.
+    * sink. The manifest is stamped with the checkpoint's `epochId`, and
+    * the table's carried ledger ([[appliedEpoch]], unscoped) is the
+    * applied-offset record: a crash-replayed epoch at or below it
+    * commits NOTHING — the table-format equivalent of the epoch-dir
+    * overwrite convention, but atomic and multi-file, and it survives
+    * vacuum and compaction. (A crash between the data write and the
+    * manifest link leaves only invisible orphan files, retired by
+    * [[vacuum]].) Returns the epoch's version: the new one, or on a
+    * replay the retained version stamped with it (the latest, which
+    * subsumes it, once vacuum has retired that one).
     */
   def commitStreaming(df: DataFrame, dir: String, epochId: Long,
       mode: String = "append", statsColumns: Seq[String] = Nil,
       arbiter: CommitArbiter = LocalLinkArbiter,
-      bloomColumns: Seq[String] = Nil): Long = {
-    def existing: Option[Long] =
-      versions(dir).map(snapshot(dir, _))
-        .collectFirst { case s if s.epoch.contains(epochId) => s.version }
-    existing.getOrElse(
-      commit(df, dir, mode, statsColumns, epochId = Some(epochId), arbiter,
-        bloomColumns = bloomColumns))
-  }
+      bloomColumns: Seq[String] = Nil): Long =
+    latest(dir).filter(_.appliedEpoch(None) >= epochId) match {
+      case Some(head) =>
+        versions(dir).reverseIterator.map(snapshot(dir, _))
+          .find(_.epoch.contains(epochId)).fold(head.version)(_.version)
+      case None =>
+        commit(df, dir, mode, statsColumns, epochId = Some(epochId), arbiter,
+          bloomColumns = bloomColumns)
+    }
 
-  /** A table's current Bloom geometry per column, used to re-establish
-    * entries for files rewritten by [[merge]] and [[compact]]. Geometry
+  /** A table's physical layout as its rewrites re-establish it: the
+    * recorded stats columns, and each Bloom column's geometry. Geometry
     * is a per-commit knob but in practice table-constant; when history
     * mixes knobs the WIDEST filter wins deterministically (max mBits,
     * then max k) — an unordered-map head would let successive rebuilds
     * flip-flop geometry and silently degrade the false-positive rate.
     */
-  private def bloomSpecOf(snap: Snapshot): Map[String, (Int, Int)] =
-    snap.blooms.values.flatten.groupBy(_._1)
-      .map { case (c, es) =>
-        c -> es.map(e => (e._2.mBits, e._2.k)).max
-      }
+  private[sources] def layoutOf(snap: Snapshot)
+      : (Seq[String], Map[String, (Int, Int)]) =
+    (snap.stats.values.flatMap(_.keys).toSeq.distinct.sorted,
+      snap.blooms.values.flatten.groupBy(_._1)
+        .map { case (c, es) => c -> es.map(e => (e._2.mBits, e._2.k)).max })
 
   /** Read with manifest-level file skipping: only files whose recorded
     * [min, max] for `column` overlaps [lo, hi] are handed to Spark (files
@@ -1067,16 +1144,9 @@ object TxTable {
       keepOf: Snapshot => Seq[String],
       lo: org.apache.spark.sql.Column, hi: org.apache.spark.sql.Column): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val snap = version.map(snapshot(dir, _)).orElse(latest(dir))
-      .getOrElse(throw new IllegalArgumentException(s"no committed version at $dir"))
-    val keep = keepOf(snap)
-    val base =
-      if (keep.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], snap.schema)
-      else dvApply(spark, dir, snap,
-        spark.read.schema(snap.schema).parquet(keep.map(f => s"$dir/$f"): _*))
-    base.where(col(column) >= lo && col(column) <= hi)
+    val snap = pinned(dir, version)
+    readSubset(spark, dir, snap, keepOf(snap))
+      .where(col(column) >= lo && col(column) <= hi)
   }
 
   /** COUNT(*) from the MANIFEST alone when possible: Σ per-file `nrows`
@@ -1087,8 +1157,7 @@ object TxTable {
     * caller falls back to a real scan ([[countRows]]).
     */
   def manifestRowCount(dir: String, version: Option[Long] = None): Option[Long] = {
-    val snap = version.map(snapshot(dir, _)).orElse(latest(dir))
-      .getOrElse(throw new IllegalArgumentException(s"no committed version at $dir"))
+    val snap = pinned(dir, version)
     if (!snap.files.forall(snap.rows.contains)) None
     else {
       val live = snap.files.map(snap.rows).sum
@@ -1105,103 +1174,85 @@ object TxTable {
     manifestRowCount(dir, version)
       .getOrElse(read(spark, dir, version).count())
 
+  /** The ONE read-modify-write publish loop ([[merge]], [[foldDvs]],
+    * [[compactSmallFiles]], [[compact]]). A rewrite is only equivalent
+    * to the snapshot it READ, so `derive` builds the next snapshot from
+    * the latest one and the publish is a compare-and-swap at exactly
+    * base + 1; a lost race re-derives from the new latest (re-publishing
+    * against it, as [[commit]]'s loop does, would silently discard the
+    * winner's rows). `derive` returns None when there is nothing to do
+    * and the loop returns the current version. Losers leave only
+    * invisible orphan dirs, retired by [[vacuum]].
+    */
+  private def rewriteLoop(dir: String, what: String, maxRetries: Int,
+      arbiter: CommitArbiter)(derive: Snapshot => Option[Snapshot]): Long = {
+    @scala.annotation.tailrec
+    def attempt(n: Int): Long = {
+      require(n <= maxRetries,
+        s"$what at $dir lost $maxRetries publish races; giving up")
+      val base = latest(dir).getOrElse(
+        throw new IllegalArgumentException(s"no committed version at $dir"))
+      derive(base) match {
+        case None => base.version
+        case Some(next) if publishAt(dir, next, arbiter) => next.version
+        case Some(_) => attempt(n + 1)
+      }
+    }
+    attempt(1)
+  }
+
+  /** Rewrite `files` of `base` — read DV-applied, shaped by `arrange`,
+    * written under the base's [[layoutOf]] — as the next snapshot
+    * under `op`; every other file carries forward by reference. The
+    * shared body of the value-neutral maintenance ops.
+    */
+  private def rewriteFiles(spark: SparkSession, dir: String, base: Snapshot,
+      files: Seq[String], op: String)(
+      arrange: DataFrame => DataFrame = identity): Snapshot = {
+    compose(base, files.toSet, writeData(
+      arrange(readSubset(spark, dir, base, files)), dir, layoutOf(base)), op)
+  }
+
   /** Fold deletion vectors WITHOUT a full compaction: rewrite ONLY the
     * dv-carrying files minus their deleted rows; every clean file (and
     * its stats/Bloom entries) carries forward by reference. Cost is
     * O(dv'd-file bytes) — the bounded maintenance step a streaming
     * merge-on-read target runs on a cadence ([[graft.streaming.CdcStream
     * .startTxTable]] `foldEvery`), where a FULL [[compact]] would
-    * rewrite the whole table each time. Value-neutral (reads before ≡
-    * after), CAS-published at base+1 like compact. Returns the folded
-    * version, or the current version when there is nothing to fold.
+    * rewrite the whole table each time.
+    *
+    * `minDeletedFraction` is the auto-compaction POLICY: above 0, only
+    * files whose deleted fraction (DV positions / manifest row count)
+    * exceeds it fold; lightly-deleted files keep their DVs. A long-running
+    * merge-on-read table accretes DV sidecars unevenly — hot files (a
+    * reloaded partition, a churned key range) cross the threshold and
+    * fold, cold files (one late delete in a 10 GB file) don't pay an
+    * O(file) rewrite for an O(1) DV. A file without a recorded row count
+    * cannot be evaluated and folds conservatively (policy must converge,
+    * and folding is always value-neutral). At 0 every dv-carrying file
+    * folds. Value-neutral (reads before ≡ after), CAS-published at
+    * base+1 with op "fold". Returns the folded version, or the current
+    * version when no file qualifies.
     */
-  def foldDvs(spark: SparkSession, dir: String, maxRetries: Int = 10,
+  def foldDvs(spark: SparkSession, dir: String,
+      minDeletedFraction: Double = 0.0, maxRetries: Int = 10,
       arbiter: CommitArbiter = LocalLinkArbiter): Long = {
-    var attempt = 0
-    var committed = -1L
-    while (committed < 0) {
-      attempt += 1
-      require(attempt <= maxRetries,
-        s"foldDvs at $dir lost $maxRetries publish races; giving up")
-      val base = latest(dir).getOrElse(
-        throw new IllegalArgumentException(s"no committed version at $dir"))
-      if (base.dvs.isEmpty) return base.version
-      val dvFiles = base.files.filter(base.dvs.contains)
-      val survivors = dvApply(spark, dir, base,
-        spark.read.schema(base.schema)
-          .parquet(dvFiles.map(f => s"$dir/$f"): _*))
-      val statsCols = base.stats.values.flatMap(_.keys).toSeq.distinct.sorted
-      val (commitRel, newFiles, newStats, newBlooms, newSizes, newRows) =
-        writeData(survivors, dir, statsCols, bloomSpecOf(base))
-      val dvSet = dvFiles.toSet
-      if (publishAt(dir, base.version + 1, "fold", base.schema,
-          base.files.filterNot(dvSet) ++ newFiles,
-          (base.stats -- dvSet) ++ newStats, epochId = None,
-          tmpTag = commitRel.stripPrefix("data/"), arbiter = arbiter,
-          blooms = (base.blooms -- dvSet) ++ newBlooms,
-          sizes = (base.sizes -- dvSet) ++ newSizes,
-          rows = (base.rows -- dvSet) ++ newRows))
-        committed = base.version + 1
-    }
-    committed
-  }
-
-  /** THRESHOLD-triggered DV fold (round-11): rewrite only the files
-    * whose deleted fraction (DV positions / manifest row count) exceeds
-    * `minDeletedFraction`; lightly-deleted files keep their DVs and
-    * carry forward by reference. This is the auto-compaction POLICY arm
-    * of [[foldDvs]]: a long-running merge-on-read table accretes DV
-    * sidecars unevenly — hot files (a reloaded partition, a churned key
-    * range) cross the threshold and fold, cold files (one late delete
-    * in a 10 GB file) don't pay an O(file) rewrite for an O(1) DV. A
-    * file without a recorded row count cannot be evaluated and folds
-    * conservatively (policy must converge, and folding is always
-    * value-neutral). Cost is O(crossing-file bytes); CAS-published at
-    * base+1 with op "fold". Returns the committed version, or the
-    * current one when no file crosses.
-    */
-  def foldDvsIf(spark: SparkSession, dir: String, minDeletedFraction: Double,
-      maxRetries: Int = 10, arbiter: CommitArbiter = LocalLinkArbiter): Long = {
     require(minDeletedFraction >= 0.0 && minDeletedFraction < 1.0,
       s"minDeletedFraction must be in [0, 1), got $minDeletedFraction")
-    var attempt = 0
-    var committed = -1L
-    while (committed < 0) {
-      attempt += 1
-      require(attempt <= maxRetries,
-        s"foldDvsIf at $dir lost $maxRetries publish races; giving up")
-      val base = latest(dir).getOrElse(
-        throw new IllegalArgumentException(s"no committed version at $dir"))
-      if (base.dvs.isEmpty) return base.version
-      val dvPos = dvPositions(dir, base)
-      val hot = base.files.filter { f =>
-        base.dvs.contains(f) && {
-          val del = dvPos.get(f).map(_.length.toLong).getOrElse(0L)
-          base.rows.get(f) match {
-            case Some(n) if n > 0 => del.toDouble / n > minDeletedFraction
-            case _ => true // unknown denominator: fold conservatively
-          }
+    rewriteLoop(dir, "foldDvs", maxRetries, arbiter) { base =>
+      lazy val dvPos = dvPositions(dir, base)
+      def crosses(f: String): Boolean = minDeletedFraction == 0.0 || {
+        val del = dvPos.get(f).map(_.length.toLong).getOrElse(0L)
+        base.rows.get(f) match {
+          case Some(n) if n > 0 => del.toDouble / n > minDeletedFraction
+          case _ => true // unknown denominator: fold conservatively
         }
       }
-      if (hot.isEmpty) return base.version
-      val survivors = dvApply(spark, dir, base,
-        spark.read.schema(base.schema)
-          .parquet(hot.map(f => s"$dir/$f"): _*))
-      val statsCols = base.stats.values.flatMap(_.keys).toSeq.distinct.sorted
-      val (commitRel, newFiles, newStats, newBlooms, newSizes, newRows) =
-        writeData(survivors, dir, statsCols, bloomSpecOf(base))
-      val hotSet = hot.toSet
-      if (publishAt(dir, base.version + 1, "fold", base.schema,
-          base.files.filterNot(hotSet) ++ newFiles,
-          (base.stats -- hotSet) ++ newStats, epochId = None,
-          tmpTag = commitRel.stripPrefix("data/"), arbiter = arbiter,
-          blooms = (base.blooms -- hotSet) ++ newBlooms,
-          dvs = base.dvs -- hotSet, // cold files KEEP their DVs
-          sizes = (base.sizes -- hotSet) ++ newSizes,
-          rows = (base.rows -- hotSet) ++ newRows))
-        committed = base.version + 1
+      val hot = base.files.filter(f => base.dvs.contains(f) && crosses(f))
+      // cold files KEEP their DVs ([[compose]] drops only the hot ones')
+      if (hot.isEmpty) None
+      else Some(rewriteFiles(spark, dir, base, hot, "fold")())
     }
-    committed
   }
 
   /** INCREMENTAL small-file compaction: bin-pack only the files below
@@ -1223,43 +1274,18 @@ object TxTable {
       arbiter: CommitArbiter = LocalLinkArbiter): Long = {
     require(minBytes > 0 && targetFiles > 0,
       s"minBytes and targetFiles must be positive, got $minBytes/$targetFiles")
-    var attempt = 0
-    var committed = -1L
-    while (committed < 0) {
-      attempt += 1
-      require(attempt <= maxRetries,
-        s"compactSmallFiles at $dir lost $maxRetries publish races; giving up")
-      val base = latest(dir).getOrElse(
-        throw new IllegalArgumentException(s"no committed version at $dir"))
-      def sizeOf(f: String): Long =
-        base.sizes.getOrElse(f, Files.size(Paths.get(dir, f)))
-      val small = base.files.filter(sizeOf(_) < minBytes)
+    rewriteLoop(dir, "compactSmallFiles", maxRetries, arbiter) { base =>
+      val small = base.files.filter(f =>
+        base.sizes.getOrElse(f, Files.size(Paths.get(dir, f))) < minBytes)
       // <= targetFiles (not just < 2): packing k files into k buckets is
       // version churn, not progress — and since the packed OUTPUT may
       // itself still be under minBytes, a k→k "pack" would make repeated
       // maintenance calls commit forever (round-11 storm-spec finding:
       // that churn starved every concurrent writer's CAS window)
-      if (small.size <= math.max(targetFiles, 1) || small.size < 2)
-        return base.version
-      val packed = dvApply(spark, dir, base,
-        spark.read.schema(base.schema)
-          .parquet(small.map(f => s"$dir/$f"): _*))
-        .repartition(targetFiles)
-      val statsCols = base.stats.values.flatMap(_.keys).toSeq.distinct.sorted
-      val (commitRel, newFiles, newStats, newBlooms, newSizes, newRows) =
-        writeData(packed, dir, statsCols, bloomSpecOf(base))
-      val smallSet = small.toSet
-      if (publishAt(dir, base.version + 1, "compact-small", base.schema,
-          base.files.filterNot(smallSet) ++ newFiles,
-          (base.stats -- smallSet) ++ newStats, epochId = None,
-          tmpTag = commitRel.stripPrefix("data/"), arbiter = arbiter,
-          blooms = (base.blooms -- smallSet) ++ newBlooms,
-          dvs = base.dvs -- smallSet,
-          sizes = (base.sizes -- smallSet) ++ newSizes,
-          rows = (base.rows -- smallSet) ++ newRows))
-        committed = base.version + 1
+      if (small.size <= math.max(targetFiles, 1) || small.size < 2) None
+      else Some(rewriteFiles(spark, dir, base, small, "compact-small")(
+        _.repartition(targetFiles)))
     }
-    committed
   }
 
   /** Rewrite the latest snapshot into `targetFiles` files — the
@@ -1284,33 +1310,14 @@ object TxTable {
     require(clusterBy.size <= 4,
       s"clusterBy supports at most 4 columns (16 bits per dim in a 64-bit " +
         s"Z-key; see graft.ext.Layout.zOrderKey), got ${clusterBy.size}")
-    // read-modify-write: the rewrite is only equivalent to the snapshot
-    // it READ, so the publish is a compare-and-swap at exactly
-    // base.version + 1 (the merge() discipline) — a plain overwrite
-    // commit's retry loop would re-publish against ANY newer base,
-    // silently discarding a concurrent append's rows
-    var attempt = 0
-    var committed = -1L
-    while (committed < 0) {
-      attempt += 1
-      require(attempt <= maxRetries,
-        s"compact at $dir lost $maxRetries publish races; giving up")
-      val snap = latest(dir).getOrElse(
-        throw new IllegalArgumentException(s"no committed version at $dir"))
-      val arranged = compactArrange(spark, dir, snap, targetFiles, clusterBy)
-      val statsCols =
-        (snap.stats.values.flatMap(_.keys).toSeq ++ clusterBy).distinct.sorted
-      val (commitRel, newFiles, newStats, newBlooms, newSizes, newRows) =
-        writeData(arranged, dir, statsCols, bloomSpecOf(snap))
-      if (publishAt(dir, snap.version + 1, "overwrite", arranged.schema,
-          newFiles, newStats, epochId = None,
-          tmpTag = commitRel.stripPrefix("data/"), arbiter = arbiter,
-          blooms = newBlooms, sizes = newSizes, rows = newRows))
-        committed = snap.version + 1
-      // lost race: the rewrite is stale (new rows landed); its dir is an
-      // invisible orphan (vacuum retires it) — re-derive from new latest
+    rewriteLoop(dir, "compact", maxRetries, arbiter) { base =>
+      val arranged = compactArrange(spark, dir, base, targetFiles, clusterBy)
+      val (statsCols, bloomSpec) = layoutOf(base)
+      val written = writeData(arranged, dir,
+        ((statsCols ++ clusterBy).distinct.sorted, bloomSpec))
+      Some(compose(cleared(Some(base), arranged.schema), Set.empty, written,
+        "overwrite"))
     }
-    committed
   }
 
   /** The compaction layout for one pinned snapshot: plain repartition,
@@ -1485,15 +1492,10 @@ object TxTable {
     // prune base FILES to those overlapping the delta's key range —
     // the same skipping tier [[merge]] uses for its hit scan
     val oldBase =
-      if (appendOnly && fromSnap.stats.values.exists(_.contains(keyCols.head))) {
-        val keep = pruneByKeyRange(fromSnap, newSide, keyCols.head)
-        if (keep.isEmpty)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            fromSnap.schema)
-        else dvApply(spark, dir, fromSnap, spark.read.schema(fromSnap.schema)
-          .parquet(keep.map(f => s"$dir/$f"): _*))
-      } else read(spark, dir, Some(fromVersion))
+      if (appendOnly && fromSnap.stats.values.exists(_.contains(keyCols.head)))
+        readSubset(spark, dir, fromSnap,
+          pruneByKeyRange(fromSnap, newSide, keyCols.head))
+      else read(spark, dir, Some(fromVersion))
     val oldSide = widen(oldBase, fromSnap.schema)
     val o = oldSide.select(
       keyCols.map(col) ++ dataCols.map(c => col(c).as(s"__o_$c")) :+
@@ -1559,9 +1561,10 @@ object TxTable {
     * ==Serializability==
     * The read-modify-write is valid only against the base version it
     * read, so the publish is a compare-and-swap at `base + 1`
-    * ([[publishAt]]); a lost race re-reads the new latest and re-derives
-    * the whole merge (bounded by `maxRetries`). Losers leave only
-    * invisible orphan dirs, retired by [[vacuum]].
+    * ([[rewriteLoop]]); a lost race re-reads the new latest and
+    * re-derives the whole merge (bounded by `maxRetries`). Losers leave
+    * only invisible orphan dirs, retired by [[vacuum]]. A stamped merge
+    * (`epochId`, `streamId`) records its epoch in the carried ledger.
     *
     * Returns the committed version.
     */
@@ -1631,14 +1634,7 @@ object TxTable {
     // scans' semi joins and the rewrite's anti join see each key once
     // without paying a shuffle to re-prove it
     val touched = ch.select(keyCols.map(col): _*)
-    var attempt = 0
-    var committed = -1L
-    while (committed < 0) {
-      attempt += 1
-      require(attempt <= maxRetries,
-        s"merge at $dir lost $maxRetries publish races; giving up")
-      val base = latest(dir).getOrElse(throw new IllegalArgumentException(
-        s"no committed version at $dir to merge into"))
+    rewriteLoop(dir, "merge", maxRetries, arbiter) { base =>
       // cast to the base schema: the manifest's schema is the table
       // contract, and a batch with (say) STRING ids must not smuggle
       // string-typed files into a LONG-keyed table — the next read
@@ -1650,11 +1646,10 @@ object TxTable {
       // type guards re-check `touched` against THIS base's schema)
       val candidates = pruneByKeyRange(base, touched, keyCols.head,
         touchedBounds)
-      val statsCols = base.stats.values.flatMap(_.keys).toSeq.distinct.sorted
-      // rebuild Bloom entries for the rewritten files with the table's
-      // existing geometry, so point-lookup skipping survives merge churn
-      val bloomSpec = bloomSpecOf(base)
-      val published =
+      // rebuild stats and Bloom entries for the rewritten files with the
+      // table's existing layout, so skipping survives merge churn
+      val layout = layoutOf(base)
+      val next =
         if (writeMode == "mor") {
           // ==Merge-on-read== write O(changes), defer the rewrite:
           // touched rows become per-file DELETION-VECTOR positions
@@ -1674,14 +1669,8 @@ object TxTable {
                 col("_metadata.row_index").as("__pos"): _*)
               .join(touched, keyCols, "left_semi")
               .select(col("__fp"), col("__pos")).collect()
-              .map { r =>
-                val raw = r.getString(0)
-                val f = try new java.net.URI(raw).getPath
-                  catch { case _: Exception => raw }
-                (f.split('/').takeRight(3).mkString("/"), r.getLong(1))
-              }
-          val (commitRel, newFiles, newStats, newBlooms, newSizes, newRows) =
-            writeData(upserts, dir, statsCols, bloomSpec)
+              .map(r => (tableRel(r.getString(0)), r.getLong(1)))
+          val written = writeData(upserts, dir, layout)
           // compose the FULL dv map (existing positions ∪ new hits) into
           // ONE fresh immutable sidecar — O(deletes-since-compact) text,
           // invisible until the manifest CAS references it
@@ -1695,7 +1684,7 @@ object TxTable {
           val dvs: Map[String, String] =
             if (mergedDv.isEmpty) Map.empty
             else {
-              val sidecarRel = s"dv/${commitRel.stripPrefix("data/")}.dv"
+              val sidecarRel = s"dv/${written.rel.stripPrefix("data/")}.dv"
               val p = logDir(dir).resolve(sidecarRel)
               Files.createDirectories(p.getParent)
               Files.writeString(p, mergedDv.toSeq.sortBy(_._1)
@@ -1703,12 +1692,7 @@ object TxTable {
                 .mkString("", "\n", "\n"))
               mergedDv.keys.map(_ -> sidecarRel).toMap
             }
-          publishAt(dir, base.version + 1, "merge", base.schema,
-            base.files ++ newFiles, base.stats ++ newStats,
-            epochId, tmpTag = commitRel.stripPrefix("data/"),
-            arbiter = arbiter, blooms = base.blooms ++ newBlooms, dvs = dvs,
-            sizes = base.sizes ++ newSizes, rows = base.rows ++ newRows,
-            streamId = streamId)
+          compose(base, Set.empty, written, "merge").copy(dvs = dvs)
         } else {
           // ==Copy-on-write== (the read-optimal default)
           // 2. exact per-file hits: key-only projection + semi join (Spark
@@ -1726,42 +1710,31 @@ object TxTable {
               .mapPartitions((it: Iterator[String]) => it.toSet.iterator)(
                 Encoders.STRING)
               .collect().distinct
-              .map { raw =>
-                // absolute URI -> table-relative data/<uuid>/<part>; decode
-                // percent-encoding first so the result string-matches the
-                // manifest entries (a mismatched hit would carry the file
-                // forward AND append its rewrite — duplicating every row)
-                val f = try new java.net.URI(raw).getPath
-                  catch { case _: Exception => raw }
-                f.split('/').takeRight(3).mkString("/")
-              }.toSeq.sorted
+              .map(tableRel).toSeq.sorted
           // 3. rewrite only the hit files; untouched files carry forward.
           // The rewrite read is DV-APPLIED: carrying a dv-deleted row
           // into the rewritten file would RESURRECT it (the rewritten
           // file has no dv entry).
           val rewritten =
             if (hitFiles.isEmpty) upserts
-            else dvApply(spark, dir, base, spark.read.schema(base.schema)
-              .parquet(hitFiles.map(f => s"$dir/$f"): _*))
+            else readSubset(spark, dir, base, hitFiles)
               .join(touched, keyCols, "left_anti")
               .unionByName(upserts)
-          val (commitRel, newFiles, newStats, newBlooms, newSizes, newRows) =
-            writeData(rewritten, dir, statsCols, bloomSpec)
-          val hitSet = hitFiles.toSet
-          val files = base.files.filterNot(hitSet) ++ newFiles
-          val stats = (base.stats -- hitSet) ++ newStats
-          val blooms = (base.blooms -- hitSet) ++ newBlooms
-          publishAt(dir, base.version + 1, "merge", base.schema, files, stats,
-            epochId, tmpTag = commitRel.stripPrefix("data/"), arbiter = arbiter,
-            blooms = blooms, dvs = base.dvs -- hitSet,
-            sizes = (base.sizes -- hitSet) ++ newSizes,
-            rows = (base.rows -- hitSet) ++ newRows, streamId = streamId)
+          compose(base, hitFiles.toSet, writeData(rewritten, dir, layout),
+            "merge")
         }
-      if (published) committed = base.version + 1
-      // lost race: the just-written commitRel dir is orphaned (invisible);
-      // vacuum retires it
+      Some(next.stamped(epochId, streamId))
     }
-    committed
+  }
+
+  /** A scanned file's absolute URI as its table-relative manifest entry
+    * `data/<uuid>/<part>`, percent-decoded first so it string-matches the
+    * manifest (a mismatched merge hit would carry the file forward AND
+    * append its rewrite — duplicating every row).
+    */
+  private def tableRel(raw: String): String = {
+    val f = try new java.net.URI(raw).getPath catch { case _: Exception => raw }
+    f.split('/').takeRight(3).mkString("/")
   }
 
   /** Catch a replica table up to the primary's latest version by
@@ -1771,11 +1744,12 @@ object TxTable {
     * foreachBatch/timer loop IS the streaming form).
     *
     * Exactly-once without a checkpoint store: each applied primary
-    * version commits on the replica with `epochId = primaryVersion`, so
-    * a crash-replayed sync finds the stamp in the replica's own log and
-    * skips the version ([[commitStreaming]]'s idempotence argument,
-    * applied to replication). The replica must not be written by anyone
-    * else — its version log IS the applied-offset ledger.
+    * version commits on the replica with `epochId = primaryVersion`, and
+    * versions apply in order, so the replica's carried ledger
+    * ([[appliedEpoch]]) is the applied offset — a crash-replayed sync
+    * skips every version at or below it, and replica vacuum or compaction
+    * cannot lose it ([[commitStreaming]]'s idempotence argument, applied
+    * to replication). The replica must not be written by anyone else.
     *
     * Scale: each step ships O(changed keys) through the feed (delta
     * files only for appends) and rewrites O(hit files) via the
@@ -1787,8 +1761,7 @@ object TxTable {
       keyCols: Seq[String]): Int = {
     val primaryVs = versions(primaryDir)
     require(primaryVs.nonEmpty, s"primary at $primaryDir has no committed version")
-    val applied: Set[Long] =
-      versions(replicaDir).map(snapshot(replicaDir, _)).flatMap(_.epoch).toSet
+    val applied = appliedEpoch(replicaDir, None)
     // a vacuum may run on the primary WHILE this sync iterates: any
     // version (or its diff base) listed above can vanish mid-loop. A
     // missing-file failure is then expected, not exceptional — if the
@@ -1805,13 +1778,10 @@ object TxTable {
     def applyVersion(v: Long): Unit = {
       if (latest(replicaDir).isEmpty) {
         // bootstrap: the first unseen version seeds the replica wholesale
-        val seed = read(spark, primaryDir, Some(v))
-        Files.createDirectories(logDir(replicaDir))
-        val (commitRel, files, stats, _, seedSizes, seedRows) =
-          writeData(seed, replicaDir, keyCols)
-        require(publishAt(replicaDir, 0L, "overwrite", snapshot(primaryDir, v).schema,
-          files, stats, epochId = Some(v), tmpTag = commitRel.stripPrefix("data/"),
-          sizes = seedSizes, rows = seedRows),
+        require(commitLaid(read(spark, primaryDir, Some(v)), replicaDir,
+          "overwrite", (keyCols, Map.empty), epochId = Some(v),
+          expectVersion = Some(0L),
+          schema = Some(snapshot(primaryDir, v).schema)) == 0L,
           s"replica at $replicaDir was concurrently initialized")
       } else if (!primaryVs.contains(v - 1) || {
           def shape(t: StructType) = t.fields.map(f => (f.name, f.dataType)).toSeq
@@ -1836,7 +1806,7 @@ object TxTable {
       }
       n += 1
     }
-    primaryVs.filterNot(applied).foreach { v =>
+    primaryVs.filter(_ > applied).foreach { v =>
       try applyVersion(v)
       catch {
         case e: Throwable if isFileMissing(e) =>

@@ -59,8 +59,9 @@ case class TxTableInsertRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
 /** The [[InsertableRelation]] arm of the txtable source: append or
   * overwrite as one transactional commit, preserving the latest
-  * version's stats columns and Bloom geometry so file skipping survives
-  * SQL writes (the same carry-forward [[TxTable.merge]] performs).
+  * version's stats columns and per-column Bloom geometry
+  * ([[TxTable.layoutOf]]) so file skipping survives SQL writes (the
+  * same carry-forward [[TxTable.merge]] performs).
   */
 class TxTableInsertableRelation(spark: SparkSession, dir: String,
     override val schema: StructType,
@@ -70,18 +71,9 @@ class TxTableInsertableRelation(spark: SparkSession, dir: String,
   override def sqlContext: org.apache.spark.sql.SQLContext = spark.sqlContext
 
   override def insert(data: DataFrame, overwrite: Boolean): Unit = {
-    val base = TxTable.latest(dir)
-    val statsCols = base.map(_.stats.values.flatMap(_.keys).toSeq.distinct.sorted)
-      .getOrElse(Nil)
-    val bloomSpecs = base.map(_.blooms.values.flatMap(_.toSeq).toMap)
-      .getOrElse(Map.empty)
-    val bloomCols = bloomSpecs.keys.toSeq.sorted
-    val (bits, k) = bloomSpecs.headOption
-      .map { case (_, ref) => (ref.mBits, ref.k) }
-      .getOrElse((1 << 13, 5))
-    TxTable.commit(data, dir, if (overwrite) "overwrite" else "append",
-      statsColumns = statsCols, bloomColumns = bloomCols,
-      bloomBits = bits, bloomK = k)
+    TxTable.commitLaid(data, dir, if (overwrite) "overwrite" else "append",
+      TxTable.latest(dir).fold((Seq.empty[String], Map.empty[String, (Int, Int)]))(
+        TxTable.layoutOf))
     // the catalog caches the resolved relation pinned at its creation
     // snapshot; without this, the table NAME keeps serving pre-insert
     // rows (path-loaded DataFrames stay pinned by design)

@@ -34,9 +34,12 @@ import org.apache.spark.sql.types.StructType
   * ([[applyHistoryBatch]]), the grouped aggregate views
   * ([[applyAggBatch]], [[applyMomentsBatch]], [[applyDistinctBatch]])
   * and the join view ([[applyJoinBatch]]). Each micro-batch lands as one
-  * atomic commit stamped `epochId = max(cdc_id)` of the batch; the
-  * per-table [[TxEpochHighWater]] mark over those stamps is the
-  * exactly-once ledger, and it survives vacuum and checkpoint rebuilds.
+  * atomic commit stamped `epochId = max(cdc_id)` of the batch, and the
+  * table's latest manifest carries the per-stream high-water of those
+  * stamps ([[graft.sources.TxTable.appliedEpoch]]): that is the
+  * exactly-once ledger. Every commit carries it forward — merges, folds,
+  * compactions, overwrites — so it survives vacuum, compaction and
+  * checkpoint rebuilds.
   * Keyed tables are maintained with the copy-on-write
   * [[graft.sources.TxTable.merge]], which rewrites only the files holding
   * touched keys and carries every other file forward by reference, so
@@ -94,7 +97,7 @@ object CdcStream {
     // high-water gates the skip — under N concurrent writers a
     // table-global mark dropped every batch whose max cdc_id trailed
     // another writer's committed max (mostly-lost merges at 2 writers)
-    val mark = TxEpochHighWater.maxApplied(dir, streamId)
+    val mark = TxTable.appliedEpoch(dir, streamId)
     if (ledgerId <= mark) {
       // sound only under the in-order-log contract ([[startTxTable]]):
       // a replayed batch skips here; a BACKFILLED file (ids below the
@@ -186,8 +189,8 @@ object CdcStream {
       // counter is in-JVM: a restart resets it, which only DELAYS the
       // next fold by <= foldEvery batches — folds are an optimization,
       // never a correctness dependency (every read applies DVs anyway).
-      // The fold's CAS commit carries no epoch stamp, so the
-      // exactly-once high-water ledger is untouched.
+      // The fold's CAS commit carries no epoch stamp of its own and
+      // carries the table's ledger forward unchanged.
       if (merged && writeMode == "mor" && foldEvery > 0) {
         // increment-and-reset ATOMICALLY (compute holds the bin lock):
         // exactly one caller observes the threshold crossing per cadence
@@ -203,11 +206,9 @@ object CdcStream {
         })
         if (crossed) {
           // the POLICY arm when a threshold is configured: only files
-          // whose deleted fraction crossed it rewrite (foldDvsIf) —
-          // cold files keep their O(1) DVs; 0.0 keeps the full fold
-          if (foldMinDeletedFraction > 0.0)
-            TxTable.foldDvsIf(b.sparkSession, tableDir, foldMinDeletedFraction)
-          else TxTable.foldDvs(b.sparkSession, tableDir)
+          // whose deleted fraction crossed it rewrite — cold files keep
+          // their O(1) DVs; 0.0 keeps the full fold
+          TxTable.foldDvs(b.sparkSession, tableDir, foldMinDeletedFraction)
           ()
         }
       }

@@ -279,66 +279,6 @@ class TxTableChangeFeedProvider extends StreamSourceProvider with DataSourceRegi
   }
 }
 
-/** Incremental applied-epoch high-water mark over a TxTable's version
-  * log, keyed by table dir: (highest version already scanned, max
-  * applied epoch). For consumers that apply STRICTLY INCREASING epochs
-  * ([[TxViewStream]] refreshes stamped with primary versions;
-  * [[graft.streaming.CdcStream]]'s target, SCD2 history, aggregate and
-  * join views, each stamped with its batch's max cdc_id), "applied" is
-  * exactly `epoch <= maxApplied` — one long that
-  * survives vacuum (the latest epoch-stamped manifest is retained and
-  * carries it), unlike a full epoch SET rebuilt from every manifest.
-  * Each call parses only manifests committed since the last one (the
-  * [[TxReplicaStream.appliedEpochs]] incremental-scan discipline); a
-  * dir that was wiped and rebuilt (versions regressed) resets.
-  */
-private[streaming] object TxEpochHighWater {
-  /** (dir, streamId) -> (scanned version, epoch fingerprint AT that
-    * version (-1 = none/absent), max applied epoch).
-    */
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long, Long)]()
-
-  /** Max applied epoch at `dir`, SCOPED to `streamId` when given
-    * (round 14): each concurrent writer stream carries its own cdc-id
-    * sequence, so only ITS stamped commits — plus legacy commits with
-    * no stream stamp, which a resumed single-writer table must still
-    * honour — gate its replay-skip decision. A table-global max let any
-    * writer's committed high-water silently drop another writer's
-    * trailing batches (the round-13 contended-bench data loss).
-    */
-  def maxApplied(dir: String, streamId: Option[String] = None): Long =
-    cache.compute(dir + " " + streamId.getOrElse(""), (_, prev) => {
-      def epochOf(s: TxTable.Snapshot): Option[Long] =
-        if (streamId.isEmpty || s.streamId.isEmpty || s.streamId == streamId)
-          s.epoch
-        else None
-      val (scanned, fp, maxE) = Option(prev).getOrElse((-1L, -1L, -1L))
-      val vsNow = TxTable.versions(dir)
-      // Wipe detection: the version count regressing is the cheap
-      // signal, but a dir wiped and rebuilt to >= the scanned version
-      // before this consult would slip past it — so the SCANNED version
-      // also carries an epoch fingerprint: if that manifest still exists
-      // but stamps a different epoch, this is a new lineage and the
-      // cached mark is poison. (A vacuumed-away scanned version is
-      // indistinguishable from legit retention and keeps the cache —
-      // the documented single-writer contract covers it.)
-      def fpNow: Long =
-        if (scanned < 0 || !vsNow.contains(scanned)) -2L // absent
-        else TxTable.snapshot(dir, scanned).epoch.getOrElse(-1L)
-      val wiped = vsNow.lastOption.getOrElse(-1L) < scanned ||
-        (scanned >= 0 && vsNow.contains(scanned) && fpNow != fp)
-      val (base, baseMax) = if (wiped) (-1L, -1L) else (scanned, maxE)
-      val fresh = vsNow.filter(_ > base)
-      val newScanned = math.max(base, fresh.lastOption.getOrElse(base))
-      val newFp =
-        if (newScanned < 0 || !vsNow.contains(newScanned)) -1L
-        else TxTable.snapshot(dir, newScanned).epoch.getOrElse(-1L)
-      (newScanned, newFp,
-        (baseMax +: fresh.flatMap(v => epochOf(TxTable.snapshot(dir, v)))).max)
-    })._3
-}
-
 /** Shared writeStream wiring for the feed consumers ([[TxReplicaStream]],
   * [[TxViewStream]]): reader options, throttle plumbing, checkpoint,
   * trigger — one place to fix, two query shapes.
@@ -374,10 +314,12 @@ private[streaming] object TxFeedQuery {
 /** Managed streaming replication: the [[TxTable.syncReplica]] loop as a
   * real StreamingQuery over [[TxTableChangeFeedProvider]]. Each
   * micro-batch applies its versions IN ORDER via [[TxTable.merge]], each
-  * stamped `epochId = primaryVersion` on the replica — the replica's own
-  * version log is the applied-offset ledger, so a crash-replayed batch
-  * (or a whole re-run against the same checkpoint) re-applies nothing:
-  * exactly-once end to end, same argument as [[TxTable.commitStreaming]].
+  * stamped `epochId = primaryVersion` on the replica. The replica's
+  * latest manifest carries the applied high-water
+  * ([[TxTable.appliedEpoch]]), so a crash-replayed batch (or a whole
+  * re-run against the same checkpoint) re-applies nothing, even after
+  * the replica was vacuumed or compacted: exactly-once end to end, same
+  * argument as [[TxTable.commitStreaming]].
   */
 object TxReplicaStream {
 
@@ -405,29 +347,6 @@ object TxReplicaStream {
     q.awaitTermination()
   }
 
-  /** Incremental applied-epoch ledger, keyed by replica dir: (highest
-    * replica version already scanned, epochs seen so far). Each trigger
-    * parses only the manifests COMMITTED SINCE the last trigger —
-    * O(applied this batch), not O(replica history): a 5-second stream
-    * that has applied 100k versions must not re-read 100k manifests per
-    * trigger just to learn nothing changed. A replica dir that was wiped
-    * and rebuilt (versions regressed) resets its entry and rescans.
-    */
-  private val epochLedger =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Set[Long])]()
-
-  private def appliedEpochs(replicaDir: String): Set[Long] =
-    epochLedger.compute(replicaDir, (_, prev) => {
-      val (scanned, eps) = Option(prev).getOrElse((-1L, Set.empty[Long]))
-      val vsNow = TxTable.versions(replicaDir)
-      val (base, baseEps) =
-        if (vsNow.lastOption.getOrElse(-1L) < scanned) (-1L, Set.empty[Long])
-        else (scanned, eps)
-      val fresh = vsNow.filter(_ > base)
-      (math.max(base, fresh.lastOption.getOrElse(base)),
-        baseEps ++ fresh.flatMap(v => TxTable.snapshot(replicaDir, v).epoch))
-    })._2
-
   /** Apply one micro-batch of feed rows: strict version order, one
     * idempotent epoch-stamped replica commit per primary version. The
     * batch is persisted because it is re-filtered once per version (a
@@ -440,8 +359,10 @@ object TxReplicaStream {
     try {
       val vs = cached.select(col("_commit_version")).distinct()
         .collect().map(_.getLong(0)).sorted // O(versions per trigger)
-      val applied: Set[Long] = appliedEpochs(replicaDir)
-      vs.filterNot(applied).foreach { v =>
+      // versions apply in order, so the replica's carried ledger is the
+      // applied offset: one manifest parse per trigger, vacuum-proof
+      val applied = TxTable.appliedEpoch(replicaDir, None)
+      vs.filter(_ > applied).foreach { v =>
         val rows = cached.filter(col("_commit_version") === v)
           .drop("_commit_version")
         if (TxTable.latest(replicaDir).isEmpty) {
@@ -482,9 +403,10 @@ object TxReplicaStream {
   * [[TxTable.changeFeedImages]]`(v-1, v)` retraction/assertion pairs —
   * O(changes + groups) per refresh, the base is NEVER rescanned. The
   * view itself is a TxTable: each refresh is one atomic overwrite
-  * commit stamped `epochId = primaryVersion`, so the view's own version
-  * log is the applied-offset ledger and crash-replayed batches (or
-  * whole checkpoint re-runs) re-apply nothing — the
+  * commit stamped `epochId = primaryVersion`, so the view's carried
+  * ledger ([[TxTable.appliedEpoch]]) is the applied offset and
+  * crash-replayed batches (or whole checkpoint re-runs) re-apply
+  * nothing — the
   * [[TxReplicaStream]] exactly-once argument, applied to views. Readers
   * of the view get snapshot isolation and time travel over REFRESHES
   * for free.
@@ -498,14 +420,10 @@ object TxReplicaStream {
   * At 100 TB: each refresh moves the version's churn plus the
   * O(groups) view; a quiet primary costs nothing. Vacuum retention on
   * the primary must cover the stream's lag (the source's contract).
-  * The VIEW table may be vacuumed freely (`keepVersions >= 1`): the
-  * applied ledger is the MAX epoch across retained refresh manifests,
-  * and refreshes apply in strict version order, so the latest refresh
-  * alone carries the full applied state. Two caveats, both documented
-  * contracts: the view dir has ONE writer (this query — same contract
-  * as the replica), and compacting the view then vacuuming everything
-  * below the compaction would bury the epoch stamp — re-seed from a
-  * fresh view dir and checkpoint if you do that.
+  * The VIEW table may be vacuumed and compacted freely: every commit
+  * carries the ledger forward, so the latest manifest alone holds the
+  * applied state. The view dir has ONE writer (this query — same
+  * contract as the replica).
   */
 object TxViewStream {
 
@@ -545,7 +463,7 @@ object TxViewStream {
     // ticks only: the batch IS the version list — O(versions) rows
     val vs = batch.select(col("_commit_version")).distinct()
       .collect().map(_.getLong(0)).sorted
-    val applied = TxEpochHighWater.maxApplied(viewDir)
+    val applied = TxTable.appliedEpoch(viewDir, None)
     vs.filter(_ > applied).foreach { v =>
       refresh(spark, viewDir, v) {
         case None =>
@@ -566,9 +484,7 @@ object TxViewStream {
     * localCheckpoint: the refresh reads the view's CURRENT version and
     * overwrites it — materialize before the commit swaps the files out
     * from under the lazy plan. Plain commit (not commitStreaming): the
-    * caller's high-water check already proved `epoch` unapplied, and the
-    * view dir is single-writer by contract, so the O(history) epoch
-    * rescan commitStreaming pays per call buys nothing here.
+    * caller's high-water check already proved `epoch` unapplied.
     */
   private[streaming] def refresh(
       spark: SparkSession, viewDir: String, epoch: Long)(

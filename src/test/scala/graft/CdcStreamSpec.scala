@@ -329,6 +329,33 @@ class CdcStreamSpec extends SparkSpecBase {
     assertTxOnly(aggDir)
   }
 
+  test("aggregate view compacted and vacuumed: a replayed batch still skips after restart") {
+    val tmp = Files.createTempDirectory("cdcaggvac").toString
+    val aggDir = s"$tmp/agg"
+    val spec = DemoWorkload.UsersSpec
+    val base = DemoWorkload.users(s, 3, startId = 400L).localCheckpoint(true)
+    val table = DemoWorkload.replay(CdcTable(base, spec), s,
+      inserts = 6, updates = 3, deletes = 2)
+    val log = table.changeLog.localCheckpoint(true)
+    val batch1 = log.filter(col("cdc_id") <= 5)
+    val batch2 = log.filter(col("cdc_id") > 5)
+    TxTable.commit(IncrementalAgg.snapshotAgg(base, "status", "id"), aggDir, "overwrite")
+    CdcStream.applyAggBatch(batch1, aggDir, "status", "id")
+    CdcStream.applyAggBatch(batch2, aggDir, "status", "id")
+    val after = TxTable.read(s, aggDir).collect().toSet
+    // maintenance leaves only an unstamped compaction manifest behind
+    TxTable.compact(s, aggDir, 1)
+    TxTable.vacuum(aggDir, keepVersions = 1, orphanGraceMs = 0L)
+    assert(TxTable.latest(aggDir).get.epoch.isEmpty)
+    // the restarted driver finds the view at a new path
+    val restarted = copyTableDir(aggDir)
+    assertReplaySkips(restarted) {
+      CdcStream.applyAggBatch(batch2, restarted, "status", "id")
+    }
+    assert(TxTable.read(s, restarted).collect().toSet === after,
+      "the replay must not count the deltas twice")
+  }
+
   test("streamed moments view across micro-batches equals recompute; crashed epoch idempotent") {
     val tmp = Files.createTempDirectory("cdcmoments").toString
     val mDir = s"$tmp/moments"

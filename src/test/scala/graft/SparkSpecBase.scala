@@ -27,6 +27,23 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
         s"expected:\n${expected.orderBy(expected.columns.map(org.apache.spark.sql.functions.col): _*).showString()}")
   }
 
+  /** A copy of table dir `src` at a fresh path — what a restarted driver
+    * sees of a table: its files and nothing of this JVM's in-process
+    * state about `src`. Returns the new path.
+    */
+  def copyTableDir(src: String): String = {
+    import java.nio.file.{Files, Paths}
+    val dst = Files.createTempDirectory("txcopy")
+    val walk = Files.walk(Paths.get(src))
+    try walk.forEach { p =>
+      val q = dst.resolve(Paths.get(src).relativize(p))
+      if (Files.isDirectory(p)) Files.createDirectories(q)
+      else Files.copy(p, q)
+      ()
+    } finally walk.close()
+    dst.toString
+  }
+
   /** All FileSourceScanExec nodes of a plan, descending through the
     * AQE/stage wrappers that hide children from a plain `collect`.
     */

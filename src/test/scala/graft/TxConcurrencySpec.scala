@@ -170,4 +170,34 @@ class TxConcurrencySpec extends SparkSpecBase {
     TxTable.foldDvs(s, dir)
     assert(state(TxTable.versions(dir).last) === want)
   }
+
+  test("two stamped writers racing the CAS: the latest ledger holds both streams' last epochs") {
+    val dir = Files.createTempDirectory("txledgerrace").toString
+    TxTable.commit(s.range(0, 40).select(col("id"), concat(lit("v"), col("id")).as("v")),
+      dir, "overwrite", statsColumns = Seq("id"))
+    val epochs = 1L to 4L
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val writers = Seq("a", "b").zipWithIndex.map { case (stream, w) =>
+      new Thread(() => {
+        try epochs.foreach { e =>
+          // each writer touches its own key, so every batch is a real change
+          TxTable.merge(s, dir,
+            Seq((w.toLong, s"$stream$e", "UPDATE")).toDF("id", "v", "operation"),
+            Seq("id"), maxRetries = 500, epochId = Some(e * 10 + w),
+            streamId = Some(stream))
+          ()
+        } catch { case t: Throwable => failures.add(t); () }
+      })
+    }
+    writers.foreach(_.start())
+    writers.foreach(_.join())
+    assert(failures.isEmpty, s"no writer may die: ${failures.toArray.mkString("; ")}")
+    assert(TxTable.versions(dir).size === 1 + 2 * epochs.size,
+      "every stamped merge is its own version")
+    val last = TxTable.latest(dir).get
+    assert(last.txns === Map("a" -> 40L, "b" -> 41L),
+      "a lost CAS re-derives from the winner's manifest and keeps its stamp")
+    assert(TxTable.appliedEpoch(dir, Some("a")) === 40L)
+    assert(TxTable.appliedEpoch(dir, Some("b")) === 41L)
+  }
 }

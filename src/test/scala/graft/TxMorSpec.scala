@@ -405,17 +405,17 @@ class TxMorSpec extends SparkSpecBase {
     TxTable.merge(s, dir, dels, Seq("id"), writeMode = "mor")
     val before = TxTable.latest(dir).get
     assert(before.dvs.size === 2, "both touched files carry DVs")
-    val v = TxTable.foldDvsIf(s, dir, 0.2)
+    val v = TxTable.foldDvs(s, dir, 0.2)
     val after = TxTable.latest(dir).get
     assert(after.version === v && after.op === "fold")
     assert(after.dvs.size === 1, "only the heavily-deleted file folds")
     assertSameRows(TxTable.read(s, dir),
       TxTable.read(s, dir, Some(before.version)), "partial fold is value-neutral")
     // nothing else crosses: the policy is a no-op at the same threshold
-    assert(TxTable.foldDvsIf(s, dir, 0.2) === after.version)
+    assert(TxTable.foldDvs(s, dir, 0.2) === after.version)
     // fraction 0 folds the remainder; the provider returns to the
     // maximal DV-free HadoopFsRelation plan (what MoR maintenance is FOR)
-    TxTable.foldDvsIf(s, dir, 0.0)
+    TxTable.foldDvs(s, dir, 0.0)
     assert(TxTable.latest(dir).get.dvs.isEmpty)
     val df = s.read.format("txtable").load(dir)
     assert(df.queryExecution.optimizedPlan.collect {

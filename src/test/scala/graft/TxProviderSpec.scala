@@ -254,6 +254,32 @@ class TxProviderSpec extends SparkSpecBase {
     }
   }
 
+  test("INSERT keeps each Bloom column's own (widest) geometry") {
+    val dir = Files.createTempDirectory("txprovbloom").toString
+    TxTable.commit(s.range(0, 10).select(col("id").as("k"), col("id").as("v")),
+      dir, "overwrite", bloomColumns = Seq("k"), bloomBits = 1 << 10, bloomK = 3)
+    TxTable.commit(s.range(10, 20).select(col("id").as("k"), col("id").as("v")),
+      dir, "append", bloomColumns = Seq("v"), bloomBits = 1 << 12, bloomK = 4)
+    s.sql("DROP TABLE IF EXISTS tx_ins_bloom")
+    s.sql(s"CREATE TABLE tx_ins_bloom USING txtable LOCATION '$dir'")
+    try {
+      val before = TxTable.latest(dir).get.files.toSet
+      s.sql("INSERT INTO tx_ins_bloom VALUES (100, 200)")
+      val snap = TxTable.latest(dir).get
+      val added = snap.files.filterNot(before)
+      assert(added.nonEmpty)
+      added.foreach { f =>
+        val geom = snap.blooms(f).map { case (c, r) => c -> (r.mBits, r.k) }
+        assert(geom === Map("k" -> ((1 << 10, 3)), "v" -> ((1 << 12, 4))),
+          s"inserted file $f must keep each column's geometry")
+      }
+      assert(TxTable.readPointLookupLong(s, dir, "v", 200L).count() === 1L)
+    } finally {
+      s.sql("DROP TABLE IF EXISTS tx_ins_bloom")
+      ()
+    }
+  }
+
   test("catalog survives additive evolution: stale stored schema reads the full manifest") {
     val dir = Files.createTempDirectory("txprovevo").toString
     TxTable.commit(Seq((1L, "a")).toDF("id", "v"), dir)

@@ -142,6 +142,38 @@ class TxStreamSourceSpec extends SparkSpecBase {
     assert(contents(replica) === contents(primary))
   }
 
+  test("replica vacuum + driver restart: a replayed batch re-applies nothing") {
+    val primary = newDir("txsrc-vacprim")
+    TxTable.commit((1L to 5L).map(i => (i, s"v$i")).toDF("id", "v"), primary,
+      "overwrite", statsColumns = Seq("id"))                            // v0
+    Seq("a", "b").foreach { x =>                                        // v1, v2
+      TxTable.merge(s, primary, Seq((3L, x, "UPDATE"))
+        .toDF("id", "v", "operation"), Seq("id"))
+      ()
+    }
+    TxTable.merge(s, primary, Seq((3L, "c", "UPDATE"), (9L, "n", "INSERT"))
+      .toDF("id", "v", "operation"), Seq("id"))                         // v3
+    val batchAll = (0L to 3L).map { v =>
+      if (v == 0L)
+        TxTable.read(s, primary, Some(0L))
+          .withColumn("change_type", lit("insert"))
+          .withColumn("_commit_version", lit(0L))
+      else
+        TxTable.changeFeed(s, primary, v - 1, v, Seq("id"))
+          .withColumn("_commit_version", lit(v))
+    }.reduce(_.unionByName(_))
+    val replica = newDir("txsrc-vacrepl")
+    TxReplicaStream.applyFeedBatch(batchAll, replica, Seq("id"))
+    assert(contents(replica) === contents(primary))
+    TxTable.vacuum(replica, keepVersions = 1, orphanGraceMs = 0L)
+    // the restarted driver finds the vacuumed replica at a new path
+    val restarted = copyTableDir(replica)
+    val before = TxTable.versions(restarted)
+    TxReplicaStream.applyFeedBatch(batchAll, restarted, Seq("id")) // replay
+    assert(TxTable.versions(restarted) === before, "replay must be a no-op")
+    assert(contents(restarted) === contents(primary))
+  }
+
   test("schema evolution mid-stream fails the batch with a restart instruction") {
     import org.apache.spark.sql.execution.streaming.runtime.LongOffset
     val dir = newDir("txsrc-evolve")

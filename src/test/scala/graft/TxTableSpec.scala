@@ -564,6 +564,87 @@ class TxTableSpec extends SparkSpecBase {
       TxTable.read(s, primary, Some(4L)).count())
   }
 
+  test("syncReplica after a replica vacuum applies only the new primary version") {
+    val primary = Files.createTempDirectory("txprimvac").toString
+    val replica = Files.createTempDirectory("txreplvac").toString
+    def state(dir: String) = TxTable.read(s, dir).collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSet
+    TxTable.commit((1L to 5L).map(i => (i, s"v$i")).toDF("id", "v"), primary,
+      "overwrite", statsColumns = Seq("id"))                       // v0
+    TxTable.merge(s, primary, Seq((3L, "a", "UPDATE"))
+      .toDF("id", "v", "operation"), Seq("id"))                    // v1
+    TxTable.merge(s, primary, Seq((3L, "b", "UPDATE"))
+      .toDF("id", "v", "operation"), Seq("id"))                    // v2
+    assert(TxTable.syncReplica(s, primary, replica, Seq("id")) === 3)
+    // the replica keeps only its latest manifest (primary v2's stamp)
+    TxTable.vacuum(replica, keepVersions = 1, orphanGraceMs = 0L)
+    TxTable.commit(Seq((9L, "n")).toDF("id", "v"), primary, "append",
+      statsColumns = Seq("id"))                                    // v3
+    assert(TxTable.syncReplica(s, primary, replica, Seq("id")) === 1,
+      "only v3 is pending: the carried ledger remembers v0..v2")
+    assert(state(replica) === state(primary))
+    assert(TxTable.appliedEpoch(replica, None) === 3L)
+  }
+
+  test("manifest round trip: snapshot(publish(x)) == x for every line kind") {
+    import TxTable.{BloomRef, ColRange, Snapshot}
+    val dir = Files.createTempDirectory("txroundtrip").toString
+    Files.createDirectories(Paths.get(dir, "_txlog"))
+    val f1 = "data/u1/part-00000-a.parquet"
+    val f2 = "data/u2/part-00000-b.parquet"
+    val x = Snapshot(0L, "merge",
+      new org.apache.spark.sql.types.StructType()
+        .add("id", org.apache.spark.sql.types.LongType, nullable = false)
+        .add("v", org.apache.spark.sql.types.StringType),
+      Seq(f2, f1), epoch = Some(7L),
+      stats = Map(
+        f1 -> Map("id" -> ColRange("long", "-5", "9"),
+          "v" -> ColRange("string", "", "a|b")),
+        f2 -> Map("v" -> ColRange("string", "", ""))),
+      blooms = Map(f1 -> Map("id" -> BloomRef(1024, 3, "bloom/u1.bloom"))),
+      dvs = Map(f1 -> "dv/u3.dv"),
+      sizes = Map(f1 -> 1234L, f2 -> 0L),
+      rows = Map(f1 -> 10L, f2 -> 0L),
+      streamId = Some("w1"),
+      txns = Map("w1" -> 7L, "" -> 3L, "w2" -> 11L))
+    assert(TxTable.publishAt(dir, x))
+    val back = TxTable.snapshot(dir, 0L)
+    assert(back.commitTs > 0L, "the publish stamps its own wall-clock")
+    assert(back === x.copy(commitTs = back.commitTs))
+    assert(!TxTable.publishAt(dir, x), "the version is taken: CAS fails")
+    // scoping: a stream honours its own mark and the unscoped one; an
+    // unscoped reader honours every stream's
+    assert(back.appliedEpoch(Some("w1")) === 7L)
+    assert(back.appliedEpoch(Some("w3")) === 3L)
+    assert(back.appliedEpoch(None) === 11L)
+  }
+
+  test("every commit kind carries the ledger forward") {
+    val dir = Files.createTempDirectory("txledger").toString
+    TxTable.commit((0L until 40L).map(i => (i, s"v$i")).toDF("id", "v")
+      .repartition(4), dir,
+      "overwrite", statsColumns = Seq("id"), epochId = Some(5L),
+      streamId = Some("a"))
+    TxTable.merge(s, dir, Seq((1L, "x", "UPDATE")).toDF("id", "v", "operation"),
+      Seq("id"), epochId = Some(2L), writeMode = "mor", streamId = Some("b"))
+    val ledger = Map("a" -> 5L, "b" -> 2L)
+    TxTable.commit(Seq((50L, "n")).toDF("id", "v"), dir, "append",
+      statsColumns = Seq("id"))
+    TxTable.foldDvs(s, dir)
+    TxTable.compactSmallFiles(s, dir, minBytes = 1L << 20)
+    TxTable.compact(s, dir, 2, clusterBy = Seq("id"))
+    TxTable.commit(Seq((60L, "o")).toDF("id", "v"), dir, "overwrite")
+    val ops = TxTable.versions(dir).map(TxTable.snapshot(dir, _).op)
+    assert(ops === Seq("overwrite", "merge", "append", "fold", "compact-small",
+      "overwrite", "overwrite"))
+    TxTable.versions(dir).drop(1).foreach { v =>
+      assert(TxTable.snapshot(dir, v).txns === ledger, s"v$v lost the ledger")
+    }
+    TxTable.vacuum(dir, keepVersions = 1, orphanGraceMs = 0L)
+    assert(TxTable.appliedEpoch(dir, Some("a")) === 5L)
+    assert(TxTable.appliedEpoch(dir, None) === 5L)
+  }
+
   test("history: one row per version with op, files, schema-change flag, epoch") {
     val dir = Files.createTempDirectory("txhist").toString
     TxTable.commit(Seq((1L, "a")).toDF("id", "v"), dir)                  // v0
