@@ -27,7 +27,11 @@ import scala.jdk.CollectionConverters._
   *
   * ==Commit protocol (ACID on a POSIX filesystem)==
   *  1. Write data files under a fresh `data/<uuid>/` dir (invisible to
-  *     readers — only manifest-listed files are ever read).
+  *     readers — only manifest-listed files are ever read). ONE Spark
+  *     write job through [[StatsParquetFileFormat]]: its writer records
+  *     each file's row count, per-column min/max and Bloom words as the
+  *     rows pass, so no job or footer read follows the write, and a
+  *     zero-row file is never listed.
   *  2. Read the current latest version V, compose the new full file
   *     list (append: V's files + new; overwrite: new only).
   *  3. Publish as `v<V+1>.manifest` via [[CommitArbiter.putIfAbsent]] —
@@ -54,7 +58,10 @@ import scala.jdk.CollectionConverters._
   * stream's highest applied epoch, as `txn=` lines — forward from its
   * base. The latest manifest alone answers "was this epoch applied?"
   * ([[appliedEpoch]]), the way Structured Streaming's sinks key
-  * idempotence on a stored version; vacuum and compaction keep it.
+  * idempotence on a stored version; vacuum and compaction keep it. A
+  * streamed merge ([[mergeStamped]]) checks its epoch against the ledger
+  * of the very base its CAS publishes on, so a replay that loses a race
+  * to its own first application skips instead of committing twice.
   *
   * ==Schema evolution==
   * Appends may ADD nullable columns (old files read as null via the
@@ -412,10 +419,10 @@ object TxTable {
   /** Commit `df` as a new version. `mode` is "append" or "overwrite".
     * Returns the committed version number.
     *
-    * `statsColumns` opts the listed integral columns into MANIFEST-LEVEL
-    * file skipping: one extra aggregate over the just-written batch
-    * (grouped by `input_file_name`, O(new files) output) records each
-    * new file's min/max per column in the manifest; [[readPruned]] then
+    * `statsColumns` opts the listed columns (integral, date, timestamp,
+    * string) into MANIFEST-LEVEL file skipping: the writer records each
+    * new file's min/max per column in the manifest as its rows pass
+    * ([[writeData]] — no extra job); [[readPruned]] then
     * prunes whole files before Spark ever opens a footer — the
     * Iceberg/Delta data-skipping tier above parquet's own row-group
     * statistics. Append commits carry the base's stats forward, so
@@ -518,213 +525,86 @@ object TxTable {
     Snapshot(base.fold(-1L)(_.version), "", schema, Nil,
       txns = base.fold(Map.empty[String, Long])(_.txns))
 
-  /** Commits whose per-file stats came straight from parquet footers
-    * (no Spark re-read job) since JVM start — observability for the
-    * round-15 streaming-latency work; tests assert the fast path
-    * actually engaged rather than silently falling back.
-    */
-  private[graft] val footerStatsCommits =
-    new java.util.concurrent.atomic.AtomicLong(0L)
-
   /** Land `df`'s parquet files under a fresh invisible commit dir, with
     * each file's manifest entries under `layout` (stats columns, Bloom
     * geometry per column). Step 1 of the commit protocol, factored out
     * so every publish [[compose]]s the same [[Written]] record.
+    *
+    * ONE write job, and nothing reads the files back: the write goes
+    * through [[StatsParquetFileFormat]], whose writer records each
+    * file's row count (so [[countRows]] answers COUNT(*) from the
+    * manifest alone), its exact min/max per stats column at the column's
+    * canonical type ([[statKind]] — a type without a sound ordering repr
+    * records no stats, so the file is always read), and its Bloom words
+    * per Bloom column, as the rows pass. Spark lands a file for partition
+    * 0 even when it is empty; a zero-row file is deleted before the
+    * publish and never listed. Byte lengths come from the listing, so the
+    * scan planner lists from the manifest alone (zero FS RPCs at plan
+    * time).
+    *
+    * Blooms are the point-lookup sibling of the min/max stats: a range
+    * tells you a file COULD contain a key's neighborhood, a Bloom filter
+    * that it almost certainly does NOT contain the key itself, which is
+    * what skips files on a NON-clustered column where every range
+    * overlaps. The bit layout is [[graft.ext.BloomFilter]]'s portable
+    * universal-hash scheme over the canonical value STRING (integrals in
+    * decimal, strings raw; [[bloomPos]] over [[hash32Of]]), so the driver
+    * re-probes it without Spark, and each 32-bit word is stored as a
+    * non-negative long. Only integral and string columns ([[bloomKind]])
+    * get filters — date/timestamp reprs would be ambiguous at lookup
+    * time. Words land in ONE sidecar text file per commit under
+    * `_txlog/bloom/` (manifests stay O(files) small lines; the sidecar is
+    * invisible until the manifest CAS references it). At 100 TB sidecars
+    * are O(files × mBits/8) bytes per commit, read lazily per lookup.
     */
   private def writeData(df: DataFrame, dir: String,
       layout: (Seq[String], Map[String, (Int, Int)])): Written = {
     val (statsColumns, bloomSpec) = layout
+    def typeOf(c: String) = df.schema.fields.find(_.name == c).map(_.dataType)
+    val statsCols = statsColumns.filter(c => typeOf(c).flatMap(statKind).isDefined)
+    val bloomCols = bloomSpec.toSeq.sortBy(_._1)
+      .filter { case (c, _) => typeOf(c).flatMap(bloomKind).isDefined }
     Files.createDirectories(logDir(dir))
     val uuid = java.util.UUID.randomUUID().toString
     val commitRel = s"data/$uuid"
-    df.write.parquet(s"$dir/$commitRel")
-    val newFiles = {
+    val recorded = StatsParquetFileFormat.recording(df.sparkSession,
+        statsCols, bloomCols) { options =>
+      df.write.format(classOf[StatsParquetFileFormat].getName)
+        .options(options).save(s"$dir/$commitRel")
+    }
+    val listed = {
       val it = Files.list(Paths.get(dir, commitRel))
       try it.iterator().asScala.map(_.getFileName.toString)
         .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
-        .map(n => s"$commitRel/$n").toSeq.sorted
+        .toSeq.sorted
       finally it.close()
     }
-    // min/max at each column's own type (canonicalized): a column
-    // whose type has no sound ordering repr records NO stats (the
-    // file is then always read — skipping never drops data)
-    val typed: Seq[(String, String, DataType)] =
-      if (newFiles.isEmpty) Nil
-      else statsColumns.flatMap { c =>
-        df.schema.fields.find(_.name == c)
-          .flatMap(f => statKind(f.dataType).map(k => (c, k, f.dataType)))
-      }
-    // ONE footer pass per new file: row counts (always — metadata pages
-    // only, no data read; O(new files) driver I/O like the size stat,
-    // lets [[countRows]] answer COUNT(*) from the manifest alone), and,
-    // when EVERY requested stats column is footer-exact (integral /
-    // date / timestamp-micros physical encodings, [[footerLongStat]]),
-    // the per-file min/max too — dropping the stats job that re-read the
-    // just-written files through Spark (round 15: that job was one of
-    // the per-micro-batch scheduler round-trips dominating streaming
-    // commit latency). String stats (UTF-8 order; parquet binary footer
-    // stats may be truncated or absent) and any footer-ineligible
-    // encoding keep the Spark-job path, so recorded ranges are always
-    // EXACT — a widened range only skips less, but these are also read
-    // back as exact bounds by [[pruneByKeyRange]]'s callers.
-    val hconf = df.sparkSession.sessionState.newHadoopConf()
-    val footers = newFiles.map { f =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(s"$dir/$f"), hconf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try (f, r.getRecordCount, r.getFooter) finally r.close()
+    val (empty, kept) = listed.partition(n => recorded.get(n).exists(_.rows == 0L))
+    empty.foreach { n =>
+      Files.deleteIfExists(Paths.get(dir, commitRel, n))
+      Files.deleteIfExists(Paths.get(dir, commitRel, s".$n.crc"))
     }
-    val newRows = footers.map { case (f, n, _) => f -> n }.toMap
-    val footerStats: Option[Map[String, Map[String, ColRange]]] =
-      if (typed.isEmpty) Some(Map.empty)
-      else if (typed.forall(_._2 == "long")) {
-        // per-(file, column) ranges; an ineligible/unknown cell (outer
-        // None from [[footerLongStat]]) fails the WHOLE commit over to
-        // the Spark-job path — never mix sources within one commit
-        val perFile = footers.map { case (f, _, meta) =>
-          val cols = typed.map { case (c, _, dt) =>
-            c -> footerLongStat(meta, c, dt)
-          }
-          if (cols.exists(_._2.isEmpty)) None
-          else Some(f -> cols.collect { case (c, Some(Some((mn, mx)))) =>
-            c -> ColRange("long", mn.toString, mx.toString)
-          }.toMap)
-        }
-        if (perFile.exists(_.isEmpty)) None else Some(perFile.flatten.toMap)
-      } else None
-    if (typed.nonEmpty && footerStats.isDefined)
-      footerStatsCommits.incrementAndGet()
-    val newStats: Map[String, Map[String, ColRange]] = footerStats.getOrElse {
-      import org.apache.spark.sql.functions.{col, input_file_name, max, min}
-      val spark = df.sparkSession
-      val written = spark.read.schema(df.schema).parquet(s"$dir/$commitRel")
-      val aggs = typed.flatMap { case (c, _, dt) =>
-        val e = statCanonical(col(c), dt)
-        Seq(min(e).as(s"__mn_$c"), max(e).as(s"__mx_$c"))
+    val newFiles = kept.map(n => s"$commitRel/$n")
+    // a listed file without a record gets no entries: it is always read
+    // and counted by a scan — skipping never drops data
+    val entries = kept.flatMap(n => recorded.get(n).map(s"$commitRel/$n" -> _))
+    val newBlooms =
+      if (bloomCols.isEmpty || entries.isEmpty) Map.empty[String, Map[String, BloomRef]]
+      else {
+        val sidecarRel = s"bloom/$uuid.bloom"
+        val sidecarPath = logDir(dir).resolve(sidecarRel)
+        Files.createDirectories(sidecarPath.getParent)
+        Files.writeString(sidecarPath, bloomCols.flatMap { case (c, _) =>
+          entries.map { case (f, w) => s"$f|$c|${w.blooms(c).mkString(",")}" }
+        }.mkString("", "\n", "\n"))
+        val refs = bloomCols.map { case (c, (mBits, k)) => c -> BloomRef(mBits, k, sidecarRel) }
+        entries.map { case (f, _) => f -> refs.toMap }.toMap
       }
-      written
-        .groupBy(input_file_name().as("__f"))
-        .agg(aggs.head, aggs.tail: _*)
-        .collect()
-        .map { r =>
-          val fname = r.getString(0)
-          val rel = s"$commitRel/${fname.substring(fname.lastIndexOf('/') + 1)}"
-          rel -> typed.zipWithIndex.flatMap { case ((c, k, _), i) =>
-            // all-null columns in a file have no usable range
-            if (r.isNullAt(1 + 2 * i)) None
-            else Some(c -> ColRange(k,
-              reprOf(r, 1 + 2 * i, k), reprOf(r, 2 + 2 * i, k)))
-          }.toMap
-        }.toMap
-    }
-    val newBlooms = buildBlooms(df.sparkSession, dir, commitRel, uuid,
-      newFiles, df.schema, bloomSpec)
-    // byte lengths into the manifest: the scan planner lists from the
-    // manifest alone (zero FS RPCs at plan time)
-    val newSizes = newFiles.map(f => f -> Files.size(Paths.get(dir, f))).toMap
-    Written(commitRel, newFiles, newStats, newBlooms, newSizes, newRows)
-  }
-
-  /** Per-(file, column) Bloom filters for the just-written batch — the
-    * point-lookup sibling of the min/max stats: a range tells you a file
-    * COULD contain a key's neighborhood, a Bloom filter tells you it
-    * almost certainly does NOT contain the key itself, which is what
-    * skips files on a NON-clustered column where every range overlaps.
-    *
-    * Build: ONE job over the just-written files, read at the batch's
-    * known schema (so no schema-inference job). Each task ORs its rows'
-    * bits into one word array per (file, column) it saw, with no
-    * shuffle, and the driver OR-merges the O(tasks × files) partial
-    * arrays. The bit layout is [[graft.ext.BloomFilter]]'s portable
-    * universal-hash scheme over the canonical value STRING (long
-    * canonicals in decimal, strings raw; [[bloomPos]] over
-    * [[hash32Jvm]]), so the driver re-probes it without Spark, and each
-    * 32-bit word is stored as a non-negative long. Words land in ONE
-    * sidecar text file per commit under `_txlog/bloom/` (manifests stay
-    * O(files) small lines; the sidecar is invisible until the manifest
-    * CAS references it, so the commit protocol is unchanged). Columns
-    * outside the integral/string stat domains are skipped —
-    * date/timestamp reprs would be ambiguous at lookup time.
-    *
-    * At 100 TB: sidecars are O(files × mBits/8) bytes per commit,
-    * read lazily per lookup and parsed driver-side like the manifest
-    * itself; a table with millions of files shards the probe across the
-    * cluster (the documented growth path — the format already stores
-    * everything that scan needs).
-    */
-  private def buildBlooms(spark: SparkSession, dir: String, commitRel: String,
-      uuid: String, newFiles: Seq[String], schema: StructType,
-      bloomSpec: Map[String, (Int, Int)]): Map[String, Map[String, BloomRef]] = {
-    import org.apache.spark.sql.functions.{col, input_file_name}
-    if (bloomSpec.isEmpty || newFiles.isEmpty) return Map.empty
-    val eligible = bloomSpec.toSeq.sortBy(_._1).flatMap { case (c, (m, k)) =>
-      schema.fields.find(_.name == c)
-        .filter(f => statKind(f.dataType).isDefined &&
-          f.dataType != org.apache.spark.sql.types.DateType &&
-          !f.dataType.isInstanceOf[org.apache.spark.sql.types.TimestampType])
-        .map(f => (c, f.dataType, m, k))
-    }
-    if (eligible.isEmpty) return Map.empty
-    val sidecarRel = s"bloom/$uuid.bloom"
-    val geometry: Array[(Int, Array[(Long, Long)])] = eligible.map {
-      case (_, _, mBits, k) => (mBits, graft.ext.PortableHash.minhashAB(k).toArray)
-    }.toArray
-    // column i of the staged frame (after the file name) is eligible(i)'s
-    // canonical string; null values contribute no bits
-    val partial: Array[(String, Int, Array[Long])] = spark.read.schema(schema)
-      .parquet(s"$dir/$commitRel")
-      .select(input_file_name() +: eligible.map { case (c, dt, _, _) =>
-        statCanonical(col(c), dt).cast("string")
-      }: _*)
-      .rdd.mapPartitions { rows =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        val acc = scala.collection.mutable.Map.empty[(String, Int), Array[Long]]
-        rows.foreach { r =>
-          var i = 0
-          while (i < geometry.length) {
-            if (!r.isNullAt(i + 1)) {
-              val (mBits, ab) = geometry(i)
-              val words = acc.getOrElseUpdate((r.getString(0), i),
-                new Array[Long](mBits / 32))
-              val x = math.floorMod(hash32Of(md,
-                r.getString(i + 1).getBytes(java.nio.charset.StandardCharsets.UTF_8)),
-                graft.ext.PortableHash.P)
-              var j = 0
-              while (j < ab.length) {
-                val pos = bloomPos(x, ab(j), mBits)
-                words(pos / 32) |= 1L << (pos % 32)
-                j += 1
-              }
-            }
-            i += 1
-          }
-        }
-        acc.iterator.map { case ((f, i), words) => (f, i, words) }
-      }
-      .collect()
-    val merged = scala.collection.mutable.Map.empty[(String, Int), Array[Long]]
-    partial.foreach { case (fname, i, words) =>
-      val rel = s"$commitRel/${fname.substring(fname.lastIndexOf('/') + 1)}"
-      merged.get((rel, i)) match {
-        case Some(into) => words.indices.foreach(w => into(w) |= words(w))
-        case None => merged((rel, i)) = words
-      }
-    }
-    val lines = scala.collection.mutable.ArrayBuffer.empty[String]
-    val refs = scala.collection.mutable.Map
-      .empty[String, Map[String, BloomRef]]
-    eligible.zipWithIndex.foreach { case ((c, _, mBits, k), i) =>
-      newFiles.foreach { rel =>
-        val words = merged.getOrElse((rel, i), new Array[Long](mBits / 32))
-        lines += s"$rel|$c|${words.mkString(",")}"
-        refs(rel) = refs.getOrElse(rel, Map.empty) +
-          (c -> BloomRef(mBits, k, sidecarRel))
-      }
-    }
-    val sidecarPath = logDir(dir).resolve(sidecarRel)
-    Files.createDirectories(sidecarPath.getParent)
-    Files.writeString(sidecarPath, lines.mkString("", "\n", "\n"))
-    refs.toMap
+    Written(commitRel, newFiles,
+      entries.collect { case (f, w) if w.ranges.nonEmpty => f -> w.ranges }.toMap,
+      newBlooms,
+      newFiles.map(f => f -> Files.size(Paths.get(dir, f))).toMap,
+      entries.map { case (f, w) => f -> w.rows }.toMap)
   }
 
   /** Driver-side twin of [[graft.ext.PortableHash.hash32]] (first 8 md5
@@ -739,7 +619,7 @@ object TxTable {
     * exactly the 8 leading hex digits [[graft.ext.PortableHash.hash32]]
     * parses, without formatting them.
     */
-  private def hash32Of(md: java.security.MessageDigest, bytes: Array[Byte]): Long = {
+  private[graft] def hash32Of(md: java.security.MessageDigest, bytes: Array[Byte]): Long = {
     val d = md.digest(bytes)
     ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) | ((d(2) & 0xffL) << 8) |
       (d(3) & 0xffL)
@@ -748,7 +628,7 @@ object TxTable {
   /** Bit position of `x` (a hash32 reduced mod P) under hash constants
     * `ab` in an mBits filter — shared by the build and the probe.
     */
-  private def bloomPos(x: Long, ab: (Long, Long), mBits: Int): Int =
+  private[graft] def bloomPos(x: Long, ab: (Long, Long), mBits: Int): Int =
     (math.floorMod(x * ab._1 + ab._2, graft.ext.PortableHash.P) % mBits).toInt
 
   /** The k bit positions `repr` probes in an (mBits, k) filter —
@@ -826,7 +706,7 @@ object TxTable {
       probeKind = "string")
 
   /** The bloom-probe domain of a column type: integral columns and
-    * strings only (what [[buildBlooms]] records entries for). A probe
+    * strings only (what [[writeData]] records Blooms for). A probe
     * whose kind differs from the column's must NOT prune — the equality
     * predicate COERCES (e.g. `stringCol = 37` matches a stored "037",
     * whose canonical repr "037" shares no bloom bits with "37"), so a
@@ -860,7 +740,7 @@ object TxTable {
     * strings order by their own UTF-8 bytes. Anything else (double's
     * NaN order, decimal scales, binary, nested) records no stats.
     */
-  private def statKind(dt: DataType): Option[String] = dt match {
+  private[graft] def statKind(dt: DataType): Option[String] = dt match {
     case org.apache.spark.sql.types.ByteType |
          org.apache.spark.sql.types.ShortType |
          org.apache.spark.sql.types.IntegerType |
@@ -876,7 +756,7 @@ object TxTable {
     * which nulled out non-numeric values and forced an all-files
     * fallback for string keys).
     */
-  private def statCanonical(c: org.apache.spark.sql.Column, dt: DataType)
+  private[graft] def statCanonical(c: org.apache.spark.sql.Column, dt: DataType)
       : org.apache.spark.sql.Column = {
     import org.apache.spark.sql.functions.{unix_date, unix_micros}
     dt match {
@@ -885,101 +765,6 @@ object TxTable {
       case _: org.apache.spark.sql.types.TimestampType => unix_micros(c)
       case _ => c.cast("long")
     }
-  }
-
-  private def reprOf(r: org.apache.spark.sql.Row, i: Int, kind: String): String =
-    kind match {
-      case "long" => r.getLong(i).toString
-      case "string" => r.getString(i)
-    }
-
-  /** One file's min/max for a "long"-kind stats column straight from its
-    * parquet FOOTER — the metadata the writer already recorded, exactly
-    * the canonical value [[statCanonical]] computes (integral: the value;
-    * date: epoch days = parquet DATE's raw INT32; timestamp: epoch micros
-    * = INT64 TIMESTAMP(MICROS)'s raw value). Strictly ELIGIBILITY-GATED:
-    * any physical encoding whose raw order could diverge from the
-    * canonical long order (unsigned ints, INT96/millis/nanos timestamps,
-    * missing or empty block statistics) returns outer None and the
-    * caller falls back to the exact Spark aggregation — footer stats may
-    * only ever REPLACE the job with bit-identical ranges, never
-    * approximate them.
-    *
-    * Returns: None = ineligible/unknown (fall back); Some(None) = all
-    * rows null (record no range — matches the job path's isNullAt skip);
-    * Some(Some((min, max))) = the exact range.
-    */
-  private def footerLongStat(
-      meta: org.apache.parquet.hadoop.metadata.ParquetMetadata,
-      colName: String, dt: DataType): Option[Option[(Long, Long)]] = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{INT32, INT64}
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    import org.apache.spark.sql.types._
-    val mt = meta.getFileMetaData.getSchema
-    if (!mt.containsField(colName)) return None
-    val t = mt.getType(mt.getFieldIndex(colName))
-    if (!t.isPrimitive) return None
-    val p = t.asPrimitiveType()
-    val ann = p.getLogicalTypeAnnotation
-    val eligible = dt match {
-      case ByteType | ShortType | IntegerType =>
-        p.getPrimitiveTypeName == INT32 && (ann == null || (ann match {
-          case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation => i.isSigned
-          case _ => false
-        }))
-      case LongType =>
-        p.getPrimitiveTypeName == INT64 && (ann == null || (ann match {
-          case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation => i.isSigned
-          case _ => false
-        }))
-      case DateType =>
-        p.getPrimitiveTypeName == INT32 &&
-          ann.isInstanceOf[LogicalTypeAnnotation.DateLogicalTypeAnnotation]
-      case _: TimestampType =>
-        p.getPrimitiveTypeName == INT64 && (ann match {
-          case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-            ts.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS
-          case _ => false
-        })
-      case _ => false
-    }
-    if (!eligible) return None
-    var mn = Long.MaxValue
-    var mx = Long.MinValue
-    var seen = false
-    val blocks = meta.getBlocks
-    var bi = 0
-    while (bi < blocks.size()) {
-      val b = blocks.get(bi)
-      if (b.getRowCount > 0) {
-        val cc = {
-          import scala.jdk.CollectionConverters._
-          b.getColumns.asScala.find(_.getPath.toDotString == colName)
-        }
-        cc match {
-          case None => return None // column chunk missing: unknown
-          case Some(c) =>
-            val st = c.getStatistics
-            // isEmpty = nothing recorded (unknown, NOT all-null) → bail;
-            // recorded-but-no-non-null = a genuinely all-null block → skip
-            if (st == null || st.isEmpty) return None
-            if (st.hasNonNullValue) {
-              val (lo, hi) = (st.genericGetMin, st.genericGetMax) match {
-                case (a: java.lang.Integer, b2: java.lang.Integer) =>
-                  (a.longValue, b2.longValue)
-                case (a: java.lang.Long, b2: java.lang.Long) =>
-                  (a.longValue, b2.longValue)
-                case _ => return None // unexpected stats repr: unknown
-              }
-              if (lo < mn) mn = lo
-              if (hi > mx) mx = hi
-              seen = true
-            }
-        }
-      }
-      bi += 1
-    }
-    Some(if (seen) Some((mn, mx)) else None)
   }
 
   /** Files of `snap` that can contain any of `keys`' values of
@@ -1572,7 +1357,25 @@ object TxTable {
       keyCols: Seq[String], opCol: String = "operation",
       maxRetries: Int = 10, epochId: Option[Long] = None,
       arbiter: CommitArbiter = LocalLinkArbiter,
-      writeMode: String = "cow", streamId: Option[String] = None): Long = {
+      writeMode: String = "cow", streamId: Option[String] = None): Long =
+    mergeStamped(spark, dir, changes, keyCols, opCol, maxRetries,
+      Left(epochId), arbiter, writeMode, streamId, (_, _) => ())
+
+  /** [[merge]] whose stamp is `Left(epochId)` or, for a streamed apply,
+    * `Right(epochCol)`: the epoch is then the max of that column over the
+    * change set, computed in the merge's one key aggregate (no extra
+    * job), and the exactly-once check `epoch <= appliedEpoch(streamId)`
+    * runs inside the CAS loop, against the very base the publish lands
+    * on — so two appliers replaying one batch commit it once, and the
+    * loser of the race re-derives into a skip. A column-stamped merge of
+    * an empty change set, or of a replay, commits nothing and returns
+    * -1; a replay also calls `onReplay(epoch, mark)`.
+    */
+  private[graft] def mergeStamped(spark: SparkSession, dir: String,
+      changes: DataFrame, keyCols: Seq[String], opCol: String, maxRetries: Int,
+      stamp: Either[Option[Long], String], arbiter: CommitArbiter,
+      writeMode: String, streamId: Option[String],
+      onReplay: (Long, Long) => Unit): Long = {
     import org.apache.spark.sql.functions.{col, count, input_file_name, lit, max, min}
     import org.apache.spark.sql.{Encoders, Row}
     require(keyCols.nonEmpty, "merge needs at least one key column")
@@ -1608,12 +1411,13 @@ object TxTable {
       if (keyCols.contains(c)) col(c).cast(keySchema(c).dataType).as(c)
       else col(c)
     }.toSeq: _*)
-    // ONE action for the dup check AND the stats-prune bounds: per-key
-    // row counts, then a 1-row aggregate of the largest count and the
-    // first key's canonical (min, max, non-null count) — the bounds
-    // [[pruneByKeyRange]] would otherwise pay its own job for. A
-    // streaming target pays every action here per micro-batch. groupBy
-    // (not count_distinct) keeps NULL key groups in play — count_distinct
+    // ONE action for the dup check, the stats-prune bounds and a column
+    // stamp's epoch: per-key row counts (and max epoch), then a 1-row
+    // aggregate of the largest count, the first key's canonical (min,
+    // max, non-null count) — the bounds [[pruneByKeyRange]] would
+    // otherwise pay its own job for — and the max epoch. A streaming
+    // target pays every action here per micro-batch. groupBy (not
+    // count_distinct) keeps NULL key groups in play — count_distinct
     // would skip them and miss a duplicate null-keyed pair.
     val k0Dt = keySchema(keyCols.head).dataType
     val boundAggs = statKind(k0Dt).toSeq.flatMap { _ =>
@@ -1621,20 +1425,28 @@ object TxTable {
       Seq(min(e), max(e), count(e))
     }
     val keyStats = ch.groupBy(keyCols.map(col): _*)
-      .agg(count(lit(1)).as("__n"))
-      .agg(max(col("__n")), boundAggs: _*)
+      .agg(count(lit(1)).as("__n"), stamp.toSeq.map(c => max(col(c)).as("__e")): _*)
+      .agg(max(col("__n")), boundAggs ++ stamp.toSeq.map(_ => max(col("__e"))): _*)
       .collect()(0)
+    // max(__n) is null exactly when the change set is empty
+    if (stamp.isRight && keyStats.isNullAt(0)) return -1L
     require(keyStats.isNullAt(0) || keyStats.getLong(0) <= 1L,
       s"merge requires one change row per key (${keyCols.mkString(",")}); " +
         "run ChangeApplier.dedupToLatest first")
     val touchedBounds =
       if (boundAggs.isEmpty) None
       else Some(Row(keyStats.get(1), keyStats.get(2), keyStats.get(3)))
+    val epochId = stamp.fold(identity, c => {
+      require(!keyStats.isNullAt(keyStats.length - 1),
+        s"merge stamp column '$c' is null on every change row")
+      Some(keyStats.getLong(keyStats.length - 1))
+    })
     // no distinct(): the check above proved every key unique, so the hit
     // scans' semi joins and the rewrite's anti join see each key once
     // without paying a shuffle to re-prove it
     val touched = ch.select(keyCols.map(col): _*)
-    rewriteLoop(dir, "merge", maxRetries, arbiter) { base =>
+    // the merge against one base, re-derived on every lost race
+    def derive(base: Snapshot): Snapshot = {
       // cast to the base schema: the manifest's schema is the table
       // contract, and a batch with (say) STRING ids must not smuggle
       // string-typed files into a LONG-keyed table — the next read
@@ -1723,8 +1535,17 @@ object TxTable {
           compose(base, hitFiles.toSet, writeData(rewritten, dir, layout),
             "merge")
         }
-      Some(next.stamped(epochId, streamId))
+      next.stamped(epochId, streamId)
     }
+    // a column stamp at or below the ledger of the base the CAS would
+    // land on is a replay: derive nothing, publish nothing
+    var replayedAt: Option[Long] = None
+    val version = rewriteLoop(dir, "merge", maxRetries, arbiter) { base =>
+      replayedAt = Some(base.appliedEpoch(streamId))
+        .filter(mark => stamp.isRight && epochId.exists(_ <= mark))
+      if (replayedAt.isDefined) None else Some(derive(base))
+    }
+    replayedAt.fold(version) { mark => onReplay(epochId.get, mark); -1L }
   }
 
   /** A scanned file's absolute URI as its table-relative manifest entry

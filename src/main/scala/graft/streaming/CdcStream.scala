@@ -3,7 +3,7 @@ package graft.streaming
 import graft.apply.{ChangeApplier, IncrementalAgg}
 import graft.log.ChangeLog.{CdcId, NewData, Operation, RecordId}
 import graft.model.{CdcConfig, CdcTableSpec, ConflictStrategy}
-import graft.sources.TxTable
+import graft.sources.{CommitArbiter, LocalLinkArbiter, TxTable}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
@@ -39,7 +39,13 @@ import org.apache.spark.sql.types.StructType
   * stamps ([[graft.sources.TxTable.appliedEpoch]]): that is the
   * exactly-once ledger. Every commit carries it forward — merges, folds,
   * compactions, overwrites — so it survives vacuum, compaction and
-  * checkpoint rebuilds.
+  * checkpoint rebuilds. The latest-state target checks the ledger in
+  * the merge's CAS ([[graft.sources.TxTable.mergeStamped]]): the merge's
+  * key aggregate computes the stamp over the change set and the publish
+  * skips a replay against the base it would land on, so the target runs
+  * no gate job and needs no cached batch. The history and the aggregate
+  * views, whose batch has several consumers, gate first
+  * ([[ledgerGate]]) over a persisted batch ([[withCached]]).
   * Keyed tables are maintained with the copy-on-write
   * [[graft.sources.TxTable.merge]], which rewrites only the files holding
   * touched keys and carries every other file forward by reference, so
@@ -54,11 +60,13 @@ object CdcStream {
     */
   val skippedBatchCount = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Run `body` over `batch` persisted for its lifetime: every applier
-    * runs several actions over the micro-batch (the ledger aggregate, the
-    * merge), and unpersisted each one re-reads the streaming file source
-    * — measured 2.4x numInputRows inflation and the same factor of
-    * redundant I/O per trigger (round-13 find).
+  /** Run `body` over `batch` persisted for its lifetime: an applier
+    * with several actions over the micro-batch (the history and the
+    * aggregate views: the ledger aggregate, then their own reads) would
+    * otherwise re-read the streaming file source per action — measured
+    * 2.4x numInputRows inflation and the same factor of redundant I/O
+    * per trigger (round-13 find). [[applyTxBatch]] needs none: the
+    * merge's checkpoint is the batch's one consumer.
     */
   private def withCached(batch: DataFrame)(body: DataFrame => Unit): Unit = {
     batch.persist()
@@ -69,12 +77,24 @@ object CdcStream {
     }
   }
 
-  /** The ledger gate every applier runs first: ONE action for emptiness
-    * plus the batch's max cdc_id (round 15 — per-trigger Spark actions
-    * over a tiny frame dominate the micro-batch latency budget), then the
-    * table's applied high-water for `streamId`. Returns `(mark, ledgerId)`
-    * when the batch has rows above the mark; `None` for an empty batch or
-    * a replay, which is counted in [[skippedBatchCount]] and logged.
+  /** Count and report a batch the exactly-once ledger skipped. */
+  private def skipped(dir: String, ledgerId: Long, mark: Long): Unit = {
+    // sound only under the in-order-log contract ([[startTxTable]]): a
+    // replayed batch skips here; a BACKFILLED file (ids below the mark
+    // but never applied) would too — warn loudly so an operator
+    // backfilling an old log file sees the drop
+    skippedBatchCount.incrementAndGet()
+    System.err.println(
+      s"[cdc-tx] skipping batch with max cdc_id $ledgerId <= applied " +
+        s"high-water $mark at $dir (checkpoint replay under the " +
+        "in-order-log contract; a backfill must renumber above the mark)")
+  }
+
+  /** The ledger gate the history and aggregate-view appliers run first:
+    * ONE action for emptiness plus the batch's max cdc_id, then the
+    * table's applied high-water for `streamId`. Returns
+    * `(mark, ledgerId)` when the batch has rows above the mark; `None`
+    * for an empty batch or a replay, which is [[skipped]].
     *
     * The ledger is DATA-DERIVED — the batch's max cdc_id — not the
     * checkpoint's batch number: a lost/rebuilt checkpoint renumbers
@@ -82,9 +102,8 @@ object CdcStream {
     * changes that landed in renumbered early batches. With cdc ids, a
     * full checkpoint rebuild replays the log from the start and
     * fully-applied batches skip on the mark. A regrouped batch that
-    * straddles the mark reaches the caller; keyed latest-state tables
-    * converge under the per-key-latest merge, while history and the
-    * aggregate views apply only its rows above `mark`.
+    * straddles the mark reaches the caller; history and the aggregate
+    * views apply only its rows above `mark`.
     */
   private def ledgerGate(
       batch: DataFrame,
@@ -98,25 +117,14 @@ object CdcStream {
     // table-global mark dropped every batch whose max cdc_id trailed
     // another writer's committed max (mostly-lost merges at 2 writers)
     val mark = TxTable.appliedEpoch(dir, streamId)
-    if (ledgerId <= mark) {
-      // sound only under the in-order-log contract ([[startTxTable]]):
-      // a replayed batch skips here; a BACKFILLED file (ids below the
-      // mark but never applied) would too — warn loudly so an operator
-      // backfilling an old log file sees the drop
-      skippedBatchCount.incrementAndGet()
-      System.err.println(
-        s"[cdc-tx] skipping batch with max cdc_id $ledgerId <= applied " +
-          s"high-water $mark at $dir (checkpoint replay under the " +
-          "in-order-log contract; a backfill must renumber above the mark)")
-      None
-    } else Some((mark, ledgerId))
+    if (ledgerId <= mark) { skipped(dir, ledgerId, mark); None }
+    else Some((mark, ledgerId))
   }
 
-  /** Land a keyed change set (`operation` column plus the table's
-    * columns) as one commit stamped `ledgerId`: the first batch seeds the
-    * table with its non-DELETE rows, every later batch is a
-    * [[graft.sources.TxTable.merge]] on `keys`. Returns true when it
-    * merged.
+  /** Land a keyed history change set (`operation` column plus the
+    * table's columns) as one commit stamped `ledgerId`: the first batch
+    * seeds the table with its non-DELETE rows, every later batch is a
+    * [[graft.sources.TxTable.merge]] on `keys`.
     *
     * Seed CAS (round 14): the overwrite is pinned to version 0 — under N
     * concurrent writers both first batches can see an empty table, and an
@@ -129,8 +137,7 @@ object CdcStream {
       dir: String,
       keys: Seq[String],
       ledgerId: Long,
-      streamId: Option[String],
-      writeMode: String = "cow"): Boolean = {
+      streamId: Option[String]): Unit = {
     val seeded = TxTable.latest(dir).isEmpty && 0L <= TxTable.commit(
       changes.filter(col("operation") =!= "DELETE").drop("operation"),
       dir, "overwrite", statsColumns = keys.take(1),
@@ -138,8 +145,8 @@ object CdcStream {
       expectVersion = Some(0L))
     if (!seeded)
       TxTable.merge(changes.sparkSession, dir, changes, keys,
-        epochId = Some(ledgerId), writeMode = writeMode, streamId = streamId)
-    !seeded
+        epochId = Some(ledgerId), streamId = streamId)
+    ()
   }
 
   /** One micro-batch of the change log applied to a [[graft.sources
@@ -153,10 +160,15 @@ object CdcStream {
     *
     * The first batch seeds the table with its surviving inserts (an
     * overwrite commit); every later batch merges the per-key-latest
-    * change set under `strategy`. A batch that straddles the mark
-    * re-applies its older changes, and because replay proceeds in log
-    * order to the end, the per-key-latest merge converges to the same
-    * final state.
+    * change set under `strategy`, stamped with the max cdc_id of the
+    * rows it applies. The merge computes that stamp in its key aggregate
+    * and checks it against the ledger inside its CAS, so the batch has
+    * one consumer (the merge's checkpoint) and no gate job of its own. A
+    * later batch's rows all sit above every applied id, so it never
+    * skips; a replay re-derives the same stamp and skips. A batch that
+    * straddles the mark re-applies its older changes, and because replay
+    * proceeds in log order to the end, the per-key-latest merge
+    * converges to the same final state.
     */
   def applyTxBatch(
       batch: DataFrame,
@@ -167,50 +179,79 @@ object CdcStream {
       writeMode: String = "cow",
       foldEvery: Int = 0,
       foldMinDeletedFraction: Double = 0.0,
-      streamId: Option[String] = None): Unit = withCached(batch) { b =>
-    ledgerGate(b, tableDir, streamId).foreach { case (_, ledgerId) =>
-      val latest = ChangeApplier.dedupToLatest(b, strategy)
-      val pkField = rowSchema.fields.find(_.name == spec.pkCol).getOrElse(
-        throw new IllegalArgumentException(
-          s"pk ${spec.pkCol} missing from the row schema"))
-      val changes = latest.select(
-        rowSchema.fields.map { f =>
-          if (f.name == spec.pkCol)
-            // DELETE rows have no new image; the log key IS the pk
-            coalesce(col(s"$NewData.${f.name}"),
-              col(RecordId).cast(pkField.dataType)).as(f.name)
-          else col(s"$NewData.${f.name}").as(f.name)
-        } :+ col(Operation).as("operation"): _*)
-      val merged = seedOrMerge(changes, tableDir, Seq(spec.pkCol), ledgerId,
-        streamId, writeMode)
-      // merge-on-read maintenance cadence: after `foldEvery` MoR merges,
-      // fold the accumulated deletion vectors (TxTable.foldDvs rewrites
-      // ONLY the dv-carrying files — O(dv'd bytes), not the table). The
-      // counter is in-JVM: a restart resets it, which only DELAYS the
-      // next fold by <= foldEvery batches — folds are an optimization,
-      // never a correctness dependency (every read applies DVs anyway).
-      // The fold's CAS commit carries no epoch stamp of its own and
-      // carries the table's ledger forward unchanged.
-      if (merged && writeMode == "mor" && foldEvery > 0) {
-        // increment-and-reset ATOMICALLY (compute holds the bin lock):
-        // exactly one caller observes the threshold crossing per cadence
-        // window, so two appliers on the same dir can neither double-fold
-        // nor lose counts to an interleaved put; returning null on the
-        // crossing also evicts the entry, bounding the map to dirs
-        // currently mid-window
-        var crossed = false
-        morMergesSinceFold.compute(tableDir, (_, v: Integer) => {
-          val n = (if (v == null) 0 else v.intValue) + 1
-          if (n >= foldEvery) { crossed = true; null }
-          else Integer.valueOf(n)
-        })
-        if (crossed) {
-          // the POLICY arm when a threshold is configured: only files
-          // whose deleted fraction crossed it rewrite — cold files keep
-          // their O(1) DVs; 0.0 keeps the full fold
-          TxTable.foldDvs(b.sparkSession, tableDir, foldMinDeletedFraction)
-          ()
-        }
+      streamId: Option[String] = None): Unit =
+    applyTxBatchVia(LocalLinkArbiter)(batch, tableDir, spec, rowSchema,
+      strategy, writeMode, foldEvery, foldMinDeletedFraction, streamId)
+
+  /** [[applyTxBatch]] publishing through `arbiter`. */
+  private[graft] def applyTxBatchVia(arbiter: CommitArbiter)(
+      batch: DataFrame,
+      tableDir: String,
+      spec: CdcTableSpec,
+      rowSchema: StructType,
+      strategy: ConflictStrategy,
+      writeMode: String,
+      foldEvery: Int,
+      foldMinDeletedFraction: Double,
+      streamId: Option[String]): Unit = {
+    val epochCol = "__epoch"
+    val pkField = rowSchema.fields.find(_.name == spec.pkCol).getOrElse(
+      throw new IllegalArgumentException(
+        s"pk ${spec.pkCol} missing from the row schema"))
+    val changes = ChangeApplier.dedupToLatest(batch, strategy).select(
+      rowSchema.fields.map { f =>
+        if (f.name == spec.pkCol)
+          // DELETE rows have no new image; the log key IS the pk
+          coalesce(col(s"$NewData.${f.name}"),
+            col(RecordId).cast(pkField.dataType)).as(f.name)
+        else col(s"$NewData.${f.name}").as(f.name)
+      } :+ col(Operation).as("operation") :+ col(CdcId).as(epochCol): _*)
+    // seed CAS (round 14): the overwrite is pinned to version 0 — under N
+    // concurrent writers both first batches can see an empty table, and
+    // an unpinned retry loop turned the loser into an overwrite of the
+    // winner's seed. A lost seed race (-1) falls through to the merge,
+    // whose CAS check skips the batch if the winner was this stream.
+    // The seed's own stamp aggregate runs once per table.
+    val seeded = TxTable.latest(tableDir).isEmpty && {
+      val head = changes.agg(count(lit(1)), max(col(epochCol))).first()
+      head.getLong(0) == 0L || 0L <= TxTable.commit(
+        changes.filter(col("operation") =!= "DELETE").drop("operation", epochCol),
+        tableDir, "overwrite", statsColumns = Seq(spec.pkCol),
+        epochId = Some(head.getLong(1)), arbiter = arbiter,
+        streamId = streamId, expectVersion = Some(0L))
+    }
+    val merged = !seeded && 0L <= TxTable.mergeStamped(batch.sparkSession,
+      tableDir, changes, Seq(spec.pkCol), opCol = "operation", maxRetries = 10,
+      stamp = Right(epochCol), arbiter, writeMode, streamId,
+      onReplay = skipped(tableDir, _, _))
+    // merge-on-read maintenance cadence: after `foldEvery` MoR merges,
+    // fold the accumulated deletion vectors (TxTable.foldDvs rewrites
+    // ONLY the dv-carrying files — O(dv'd bytes), not the table). The
+    // counter is in-JVM: a restart resets it, which only DELAYS the
+    // next fold by <= foldEvery batches — folds are an optimization,
+    // never a correctness dependency (every read applies DVs anyway).
+    // The fold's CAS commit carries no epoch stamp of its own and
+    // carries the table's ledger forward unchanged.
+    if (merged && writeMode == "mor" && foldEvery > 0) {
+      // increment-and-reset ATOMICALLY (compute holds the bin lock):
+      // exactly one caller observes the threshold crossing per cadence
+      // window, so two appliers on the same dir can neither double-fold
+      // nor lose counts to an interleaved put; returning null on the
+      // crossing also evicts the entry, bounding the map to dirs
+      // currently mid-window
+      var crossed = false
+      morMergesSinceFold.compute(tableDir, (_, v: Integer) => {
+        val n = (if (v == null) 0 else v.intValue) + 1
+        if (n >= foldEvery) { crossed = true; null }
+        else Integer.valueOf(n)
+      })
+      if (crossed) {
+        // the POLICY arm when a threshold is configured: only files
+        // whose deleted fraction crossed it rewrite — cold files keep
+        // their O(1) DVs; 0.0 keeps the full fold
+        TxTable.foldDvs(batch.sparkSession, tableDir, foldMinDeletedFraction,
+          arbiter = arbiter)
+        ()
       }
     }
   }

@@ -638,6 +638,90 @@ class CdcStreamSpec extends SparkSpecBase {
       "a replayed batch must skip on the cdc-id high-water mark")
   }
 
+  /** A target seeded with the log's inserts — laid out with key and
+    * string stats and a key Bloom, the layout every merge rebuilds — and
+    * the log's later changes as one file-source batch, the shape a
+    * trigger hands [[CdcStream.applyTxBatch]].
+    */
+  private def seededWithBatch(name: String) = {
+    val tmp = Files.createTempDirectory(name).toString
+    val table = DemoWorkload.replay(
+      CdcTable(DemoWorkload.users(s, 0), DemoWorkload.UsersSpec),
+      s, inserts = 8, updates = 4, deletes = 2)
+    val rowSchema = table.snapshot.schema
+    table.changeLog.write.parquet(s"$tmp/log")
+    val log = s.read.parquet(s"$tmp/log")
+    TxTable.commit(log.filter(col("operation") === "INSERT").select(col("new_data.*")),
+      s"$tmp/target", "overwrite", statsColumns = Seq("id", "username"),
+      bloomColumns = Seq("id"))
+    (table, rowSchema, s"$tmp/target", log.filter(col("operation") =!= "INSERT"))
+  }
+
+  test("two appliers replaying one batch commit it once: the CAS loser skips") {
+    val (table, rowSchema, dir, batch) = seededWithBatch("cdctxrace")
+    // the first two publishes wait for each other, so both appliers
+    // derive their merge against the same base before either commits
+    val barrier = new java.util.concurrent.CyclicBarrier(2)
+    val arrivals = new java.util.concurrent.atomic.AtomicInteger(0)
+    val arbiter = new graft.sources.CommitArbiter {
+      override def putIfAbsent(target: java.nio.file.Path, content: String,
+          tmpTag: String): Boolean = {
+        if (arrivals.getAndIncrement() < 2)
+          barrier.await(120, java.util.concurrent.TimeUnit.SECONDS)
+        graft.sources.LocalLinkArbiter.putIfAbsent(target, content, tmpTag)
+      }
+    }
+    val versions = TxTable.versions(dir)
+    val skipped = CdcStream.skippedBatchCount.get()
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val appliers = (0 until 2).map(_ => Future(
+      CdcStream.applyTxBatchVia(arbiter)(batch, dir, DemoWorkload.UsersSpec, rowSchema,
+        graft.model.ConflictStrategy.LastWriteWins, "cow", 0, 0.0, Some("s"))))
+    appliers.foreach(Await.result(_, 5.minutes))
+    assert(TxTable.versions(dir) === versions :+ (versions.last + 1),
+      "the replayed batch must commit exactly one version")
+    assert(CdcStream.skippedBatchCount.get() === skipped + 1,
+      "the CAS loser must skip on the winner's ledger")
+    assert(ReplicationVerifier.fullyReplicated(table.snapshot, TxTable.read(s, dir)))
+  }
+
+  test("an empty change batch commits nothing and is not a skip") {
+    val (_, rowSchema, dir, batch) = seededWithBatch("cdctxempty")
+    val versions = TxTable.versions(dir)
+    val skipped = CdcStream.skippedBatchCount.get()
+    CdcStream.applyTxBatch(batch.where(lit(false)), dir, DemoWorkload.UsersSpec,
+      rowSchema, streamId = Some("s"))
+    assert(TxTable.versions(dir) === versions)
+    // nor does it seed an absent table
+    val fresh = s"$dir-fresh"
+    CdcStream.applyTxBatch(batch.where(lit(false)), fresh, DemoWorkload.UsersSpec,
+      rowSchema, streamId = Some("s"))
+    assert(TxTable.versions(fresh).isEmpty)
+    assert(CdcStream.skippedBatchCount.get() === skipped)
+  }
+
+  test("job-count guard: an applyTxBatch merge stays lean and never reads back its own write") {
+    val (table, rowSchema, dir, batch) = seededWithBatch("cdctxjobs")
+    val before = TxTable.latest(dir).get.files.toSet
+    val (jobs, scans) = jobsAndScansDuring(
+      CdcStream.applyTxBatch(batch, dir, DemoWorkload.UsersSpec, rowSchema,
+        streamId = Some("s")))
+    assert(ReplicationVerifier.fullyReplicated(table.snapshot, TxTable.read(s, dir)))
+    // 9 = the change-set checkpoint (where the dedup runs), the fused
+    // key aggregate that also carries the stamp, the hit scan and the
+    // data write, with their AQE stage jobs: no gate, stats or Bloom job
+    assert(jobs.size <= 9, s"applyTxBatch ran ${jobs.size} jobs: ${jobs.map(_._1)}")
+    val written = (TxTable.latest(dir).get.files.toSet -- before)
+      .map(_.split('/').take(2).mkString("/"))
+    assert(written.nonEmpty)
+    def readsBack(locations: Seq[String]) = locations.filter(l => written.exists(l.contains))
+    assert(readsBack(scans).isEmpty, s"a job re-read the new commit: ${readsBack(scans)}")
+    // the detector is not vacuous: a read of the new files IS seen
+    assert(readsBack(jobsAndScansDuring(TxTable.read(s, dir).count())._2).nonEmpty)
+  }
+
   test("concurrent writers into one TxTable: per-stream ledger applies every slice") {
     // Round-14 regression pin: N writers replicate DISJOINT key slices of
     // one change log into the SAME table; each slice carries interleaved

@@ -61,6 +61,66 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
     }) ++ kids.flatMap(fileScans)
   }
 
+  /** Spark jobs started while `body` runs, as (stage name, call-site
+    * details), plus the file-scan locations of the SQL executions it
+    * started — bracketed by marker jobs so the asynchronous listener bus
+    * has delivered every event in between.
+    */
+  def jobsAndScansDuring(body: => Unit): (Seq[(String, String)], Seq[String]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.SparkPlanInfo
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    // (job group, stage name, details) for a job, or a SQL execution's scan locations
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Either[(String, String, String), Seq[String]]]()
+    def locations(p: SparkPlanInfo): Seq[String] =
+      p.metadata.get("Location").toSeq ++ p.children.flatMap(locations)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val group = Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
+        seen.add(Left((group, e.stageInfos.map(_.name).headOption.getOrElse(""),
+          e.stageInfos.map(_.details).mkString("\n"))))
+        ()
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => seen.add(Right(locations(x.sparkPlanInfo))); ()
+        case _ => ()
+      }
+    }
+    def marker(name: String): Unit = {
+      sc.setJobGroup(s"$tag-$name", name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      ()
+    }
+    def isMarker(e: Either[(String, String, String), Seq[String]], name: String) =
+      e match {
+        case Left((group, _, _)) => group == s"$tag-$name"
+        case _ => false
+      }
+    sc.addSparkListener(listener)
+    try {
+      marker("start")
+      body
+      marker("end")
+      val deadline = System.currentTimeMillis() + 30000L
+      while (!seen.asScala.exists(isMarker(_, "end")) &&
+          System.currentTimeMillis() < deadline) Thread.sleep(10)
+      val ordered = seen.asScala.toSeq
+      val from = ordered.indexWhere(isMarker(_, "start"))
+      val to = ordered.indexWhere(isMarker(_, "end"))
+      assert(from >= 0 && to > from, "listener bus did not deliver the marker jobs")
+      val window = ordered.slice(from + 1, to)
+      (window.collect { case Left((_, name, details)) => (name, details) },
+        window.collect { case Right(locs) => locs }.flatten)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** The Spark jobs of [[jobsAndScansDuring]]. */
+  def jobsDuring(body: => Unit): Seq[(String, String)] = jobsAndScansDuring(body)._1
+
   implicit class ShowString(df: DataFrame) {
     def showString(): String = {
       val rows = df.limit(20).collect()

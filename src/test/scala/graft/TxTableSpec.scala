@@ -146,59 +146,153 @@ class TxTableSpec extends SparkSpecBase {
     assert(TxTable.readPruned(s, dir, "id", 90L, 110L).inputFiles.length === 2)
   }
 
-  test("footer-derived stats equal the Spark-aggregated stats per file and column") {
-    // Same data committed twice: long-kind-only stats columns take the
-    // round-15 parquet-FOOTER path; adding a string stats column forces
-    // the original Spark-aggregation path for the whole commit. The
-    // recorded ranges for the shared columns must be IDENTICAL — footer
-    // stats may only replace the job with bit-equal ranges. Shapes in
-    // play: negatives, Long extremes, nulls mixed into a column, an
-    // ALL-NULL column (must record no range), int/date/timestamp kinds.
+  /** The manifest stats as a Spark job over the written files computed
+    * them before the parquet writer recorded them: per file, the min/max
+    * of each stats column's canonical expression. Kept as the oracle the
+    * writer's ranges must equal.
+    */
+  private def statsJobOracle(dir: String, snap: TxTable.Snapshot,
+      cols: Seq[String]): Map[String, Map[String, TxTable.ColRange]] = {
+    val typed = cols.flatMap { c =>
+      val dt = snap.schema(c).dataType
+      TxTable.statKind(dt).map(k => (c, k, dt))
+    }
+    val aggs = typed.flatMap { case (c, _, dt) =>
+      val e = TxTable.statCanonical(col(c), dt)
+      Seq(min(e), max(e))
+    }
+    def repr(r: org.apache.spark.sql.Row, i: Int, kind: String) =
+      if (kind == "long") r.getLong(i).toString else r.getString(i)
+    s.read.schema(snap.schema).parquet(snap.files.map(f => s"$dir/$f"): _*)
+      .groupBy(input_file_name().as("__f"))
+      .agg(aggs.head, aggs.tail: _*)
+      .collect()
+      .map { r =>
+        r.getString(0).split('/').takeRight(3).mkString("/") ->
+          typed.zipWithIndex.flatMap { case ((c, k, _), i) =>
+            if (r.isNullAt(1 + 2 * i)) None
+            else Some(c -> TxTable.ColRange(k, repr(r, 1 + 2 * i, k), repr(r, 2 + 2 * i, k)))
+          }.toMap
+      }
+      .filter(_._2.nonEmpty).toMap
+  }
+
+  test("writer-recorded stats, row counts and Blooms equal the Spark-job oracles") {
+    // The parquet writer records every manifest entry as rows pass; the
+    // stats job it replaced and the Bloom aggregate are the oracles.
+    // Shapes in play: negatives, Long/Int extremes, nulls mixed into a
+    // column, ALL-NULL columns (no range, all-zero Bloom words), dates,
+    // timestamps in both parquet encodings (INT96 and INT64 micros), and
+    // strings holding "", "|" and non-ASCII — over several files.
     import java.sql.{Date, Timestamp}
     val rows = Seq(
       (1L, Some(-5000000000L), Some(7), Some(Date.valueOf("2020-02-29")),
-        Some(Timestamp.valueOf("2021-06-01 12:34:56.789")), Option.empty[Long], "a"),
+        Some(Timestamp.valueOf("2021-06-01 12:34:56.789")), Option.empty[Long],
+        Some(""), Option.empty[String]),
       (2L, Some(Long.MaxValue), None, None,
-        Some(Timestamp.valueOf("1969-12-31 23:59:59.0")), Option.empty[Long], "b"),
+        Some(Timestamp.valueOf("1969-12-31 23:59:59.0")), Option.empty[Long],
+        Some("|"), Option.empty[String]),
       (3L, None, Some(-42), Some(Date.valueOf("1969-01-01")),
-        None, Option.empty[Long], "c"),
+        None, Option.empty[Long], Some("a|b"), Option.empty[String]),
       (4L, Some(0L), Some(Int.MaxValue), Some(Date.valueOf("2031-12-31")),
         Some(Timestamp.valueOf("2031-01-01 00:00:00.000001")),
-        Option.empty[Long], "d"))
-    val df = rows.toDF("id", "big", "small", "d", "ts", "allnull", "s")
+        Option.empty[Long], None, Option.empty[String]),
+      (5L, Some(Long.MinValue), Some(Int.MinValue), Some(Date.valueOf("1900-01-01")),
+        Some(Timestamp.valueOf("1900-01-01 00:00:00")), Option.empty[Long],
+        Some("\u00e9\u4e2d"), Option.empty[String]),
+      (6L, Some(17L), Some(0), None, None, Option.empty[Long], Some("zz"),
+        Option.empty[String]))
+    val df = rows.toDF("id", "big", "small", "d", "ts", "allnull", "s", "nulls")
       .repartition(3) // several files, some columns all-null per file
-    // ts stays OUT of the footer commit's stats list: Spark's default
-    // parquet encoding for TimestampType is INT96 (no trustworthy footer
-    // stats), which [[footerLongStat]] rejects — including it would fall
-    // the whole commit back to the job path and this test would compare
-    // job vs job. The third commit asserts that fallback stays correct.
-    val longCols = Seq("id", "big", "small", "d", "allnull")
-    val dirA = Files.createTempDirectory("txfooterstats").toString
-    val dirB = Files.createTempDirectory("txjobstats").toString
-    val dirC = Files.createTempDirectory("txint96stats").toString
-    val fast0 = TxTable.footerStatsCommits.get()
-    TxTable.commit(df, dirA, statsColumns = longCols)
-    assert(TxTable.footerStatsCommits.get() === fast0 + 1,
-      "the long-kind-only commit must take the footer path, not fall back")
-    TxTable.commit(df, dirB, statsColumns = longCols :+ "s")
-    TxTable.commit(df, dirC, statsColumns = longCols :+ "ts")
-    assert(TxTable.footerStatsCommits.get() === fast0 + 1,
-      "string and INT96-timestamp stats columns must fall back to the job")
-    def byFile(d: String) = TxTable.latest(d).get.stats.toSeq
-      .sortBy(_._1).map { case (_, cols) => cols.filter(c => longCols.contains(c._1)) }
-    val (a, b) = (byFile(dirA), byFile(dirB))
-    assert(byFile(dirC) === a,
-      "INT96-forced fallback must agree with the footer path on shared columns")
-    assert(a.nonEmpty && a.flatMap(_.values).nonEmpty, "stats were recorded")
-    assert(a === b,
-      "footer-path ranges must be bit-identical to the Spark-job ranges")
-    // the all-null column recorded no range on either path
-    assert(a.forall(!_.contains("allnull")))
-    // and pruning over the footer-path stats stays exact
-    val pruned = TxTable.readPruned(s, dirA, "id", 2L, 3L)
-    assertSameRows(pruned,
-      TxTable.read(s, dirA).where(col("id") >= 2L && col("id") <= 3L),
-      "pruned read vs filtered full read over footer stats")
+    val statsCols = Seq("id", "big", "small", "d", "ts", "allnull", "s", "nulls")
+    val bloomCols = Seq("id", "small", "s", "nulls")
+    def tsType(dir: String, f: String) = {
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(s"$dir/$f"), s.sparkContext.hadoopConfiguration)
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      val m = try r.getFooter.getFileMetaData.getSchema finally r.close()
+      m.getType(m.getFieldIndex("ts")).asPrimitiveType.getPrimitiveTypeName.name
+    }
+    def committed(encoding: String) = {
+      val dir = Files.createTempDirectory(s"txwriterstats$encoding").toString
+      s.conf.set("spark.sql.parquet.outputTimestampType", encoding)
+      try TxTable.commit(df, dir, statsColumns = statsCols, bloomColumns = bloomCols,
+        bloomBits = 1 << 10, bloomK = 3)
+      finally s.conf.unset("spark.sql.parquet.outputTimestampType")
+      (dir, TxTable.latest(dir).get)
+    }
+    val (dirA, a) = committed("INT96")
+    val (dirB, b) = committed("TIMESTAMP_MICROS")
+    assert(tsType(dirA, a.files.head) === "INT96")
+    assert(tsType(dirB, b.files.head) === "INT64")
+    Seq((dirA, a), (dirB, b)).foreach { case (dir, snap) =>
+      assert(snap.files.size === 3)
+      assert(snap.stats === statsJobOracle(dir, snap, statsCols),
+        "writer ranges must equal the stats-job ranges")
+      assert(snap.rows === s.read.parquet(snap.files.map(f => s"$dir/$f"): _*)
+        .groupBy(input_file_name()).count().collect()
+        .map(r => r.getString(0).split('/').takeRight(3).mkString("/") -> r.getLong(1)).toMap)
+      assert(assertSidecarsMatchOracle(dir, snap) === 1)
+      assert(snap.stats.values.forall(c => !c.contains("allnull") && !c.contains("nulls")))
+      assert(snap.stats.values.exists(_.get("s").exists(_.min == "")))
+      // and pruning over the recorded stats stays exact
+      assertSameRows(TxTable.readPruned(s, dir, "id", 2L, 3L),
+        TxTable.read(s, dir).where(col("id") >= 2L && col("id") <= 3L),
+        "pruned read vs filtered full read")
+    }
+    // both timestamp encodings record the same canonical ranges
+    def ranges(x: TxTable.Snapshot) = x.files.map(x.stats).sortBy(_("id").min)
+    assert(ranges(a) === ranges(b))
+  }
+
+  test("no commit lists a zero-row file: MoR pure delete, CoW whole-file delete, empty overwrite") {
+    // Spark's writer lands a file for partition 0 even when it is empty;
+    // the writer's row counts keep such files out of every manifest
+    def assertNoEmptyFile(dir: String): Unit = {
+      val snap = TxTable.latest(dir).get
+      assert(snap.files.forall(f => snap.rows.get(f).exists(_ > 0L)),
+        s"v${snap.version} (${snap.op}) lists ${snap.files.map(f => f -> snap.rows.get(f))}")
+      assert(TxTable.manifestRowCount(dir) === Some(TxTable.read(s, dir).count()))
+    }
+    val dir = Files.createTempDirectory("txnoempty").toString
+    TxTable.commit(Seq((1L, "lone")).toDF("id", "v").coalesce(1), dir,
+      statsColumns = Seq("id"), bloomColumns = Seq("id"))
+    TxTable.commit((2L until 40L).map(i => (i, s"v$i")).toDF("id", "v").coalesce(1), dir,
+      statsColumns = Seq("id"), bloomColumns = Seq("id"))
+    def deletes(ids: Long*) =
+      ids.map(i => (i, null.asInstanceOf[String], "DELETE")).toDF("id", "v", "operation")
+    // MoR pure delete: no upsert rows, so the write lands only an empty file
+    TxTable.merge(s, dir, deletes(5L), Seq("id"), writeMode = "mor")
+    assertNoEmptyFile(dir)
+    // CoW delete of a whole file's only row: the rewrite is empty
+    val before = TxTable.latest(dir).get
+    TxTable.merge(s, dir, deletes(1L), Seq("id"))
+    val after = TxTable.latest(dir).get
+    assertNoEmptyFile(dir)
+    assert(after.files.size === before.files.size - 1, "the emptied file leaves the table")
+    // a CoW merge with upserts and deletes across both kinds of files
+    TxTable.merge(s, dir, Seq((7L, "x", "UPDATE"), (-3L, "y", "INSERT"),
+      (9L, null, "DELETE")).toDF("id", "v", "operation"), Seq("id"))
+    assertNoEmptyFile(dir)
+    assert(TxTable.read(s, dir).count() === 37L)
+    // no unlisted part file is left beside the listed ones
+    val listed = TxTable.latest(dir).get.files.toSet
+    val onDisk = TxTable.latest(dir).get.files.map(_.split('/').take(2).mkString("/"))
+      .distinct.flatMap { d =>
+        val it = Files.list(Paths.get(dir, d))
+        try it.iterator().asScala.map(p => s"$d/${p.getFileName}")
+          .filter(_.endsWith(".parquet")).toList
+        finally it.close()
+      }
+    assert(onDisk.toSet === listed)
+    // an empty overwrite lists no file and reads 0 rows at the declared schema
+    val schema = org.apache.spark.sql.types.StructType.fromDDL("id BIGINT, v STRING")
+    TxTable.commit(s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema),
+      dir, "overwrite")
+    val empty = TxTable.latest(dir).get
+    assert(empty.files.isEmpty && empty.op === "overwrite")
+    assert(TxTable.read(s, dir).schema === schema)
+    assert(TxTable.read(s, dir).count() === 0L && TxTable.countRows(s, dir) === 0L)
   }
 
   test("compaction rewrites to fewer files with identical rows and surviving stats") {
@@ -1265,45 +1359,6 @@ class TxTableSpec extends SparkSpecBase {
     }
   }
 
-  /** Spark jobs started while `body` runs, as (stage name, call-site
-    * details), bracketed by marker jobs so the asynchronous listener bus
-    * has delivered every event in between.
-    */
-  private def jobsDuring(body: => Unit): Seq[(String, String)] = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = s.sparkContext
-    val tag = java.util.UUID.randomUUID().toString
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, String, String)]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val group = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
-        seen.add((e.jobId, group, e.stageInfos.map(_.name).headOption.getOrElse(""),
-          e.stageInfos.map(_.details).mkString("\n")))
-        ()
-      }
-    }
-    def marker(name: String): Unit = {
-      sc.setJobGroup(s"$tag-$name", name)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      ()
-    }
-    sc.addSparkListener(listener)
-    try {
-      marker("start")
-      body
-      marker("end")
-      val deadline = System.currentTimeMillis() + 30000L
-      while (!seen.asScala.exists(_._2 == s"$tag-end") &&
-          System.currentTimeMillis() < deadline) Thread.sleep(10)
-      val ordered = seen.asScala.toSeq.sortBy(_._1)
-      val from = ordered.indexWhere(_._2 == s"$tag-start")
-      val to = ordered.indexWhere(_._2 == s"$tag-end")
-      assert(from >= 0 && to > from, "listener bus did not deliver the marker jobs")
-      ordered.slice(from + 1, to).map(j => (j._3, j._4))
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("job-count guard: a small copy-on-write merge and a bloom commit stay lean") {
     val dir = Files.createTempDirectory("txjobs").toString
     val base = (0L until 400L).map(i => (i, s"v$i")).toDF("id", "v")
@@ -1321,10 +1376,10 @@ class TxTableSpec extends SparkSpecBase {
     val mergeJobs = jobsDuring(TxTable.merge(s, dir, ch, Seq("id")))
     assert(inferJobs(mergeJobs).isEmpty,
       s"merge ran a schema-inference job: ${mergeJobs.map(_._1)}")
-    // 9 = the batch checkpoint, the fused dup-check + key-bounds
-    // aggregate, the hit scan and the data write (with their AQE stage
-    // jobs), and the one-job bloom build
-    assert(mergeJobs.size <= 9, s"merge ran ${mergeJobs.size} jobs: ${mergeJobs.map(_._1)}")
+    // 8 = the batch checkpoint, the fused dup-check + key-bounds
+    // aggregate, the hit scan and the data write, with their AQE stage
+    // jobs; the writer records stats and Blooms, so no job follows it
+    assert(mergeJobs.size <= 8, s"merge ran ${mergeJobs.size} jobs: ${mergeJobs.map(_._1)}")
     assert(TxTable.read(s, dir).count() === 400L)
     // the detector is not vacuous: an inferring read IS seen
     assert(inferJobs(jobsDuring(s.read.parquet(s"$dir/${TxTable.latest(dir).get.files.head}")))
