@@ -402,23 +402,62 @@ object SparkEntry {
       .orderBy("doc_id")
 
   /** Incremental dedup: docs `%5=0` play "today's crawl", the rest the
-    * landed corpus — the corpus is persisted as a partition-pruned
+    * landed corpus — the corpus is persisted as a manifest-pruned
     * signature index and the batch probes it, never self-joining the
     * corpus. Same portable minhash family as [[qDedupMinhash]], so the
     * oracle twin shares its signature CTEs with a split candidate join.
     */
-  private def qDedupIncremental(s: SparkSession, dir: String): DataFrame = {
-    val docs = documents(s, dir)
-    val idxPath = Fixtures.scratchDir("sigidx", dir)
+  private def qDedupIncremental(s: SparkSession, dir: String): DataFrame =
     // one-time artifact (memoized): the query times the daily-batch PROBE
-    Fixtures.buildOnce("sigidx", s, dir) {
-      Dedup.writeSignatureIndex(docs.filter(col("doc_id") % 5 =!= 0),
-        "text", "doc_id", idxPath)
-    }
-    Dedup.dedupAgainstIndex(docs.filter(col("doc_id") % 5 === 0),
-        "text", "doc_id", idxPath, threshold = 0.5)
+    Dedup.dedupAgainstIndex(documents(s, dir).filter(col("doc_id") % 5 === 0),
+        "text", "doc_id", sigIdx(s, dir), threshold = 0.5)
       .orderBy("new_id", "dup_of")
+
+  /** A serving index built once per session into its fixed scratch dir,
+    * cleared first: a TxTable overwrite keeps the replaced version until
+    * vacuum, so rebuilding over the last process's index would keep two
+    * copies (and a pre-TxTable layout would linger beside the new one).
+    * Returns the index path.
+    */
+  private def servingIndex(name: String, s: SparkSession, dir: String)(
+      build: String => Unit): String = {
+    val path = Fixtures.scratchDir(name, dir)
+    Fixtures.buildOnce(name, s, dir) {
+      wipeRecursive(java.nio.file.Paths.get(path))
+      build(path)
+    }
+    path
   }
+
+  private def sigIdx(s: SparkSession, dir: String): String =
+    servingIndex("sigidx", s, dir)(Dedup.writeSignatureIndex(
+      documents(s, dir).filter(col("doc_id") % 5 =!= 0), "text", "doc_id", _))
+
+  private def sigIdxAppended(s: SparkSession, dir: String): String =
+    servingIndex("sigidx_app", s, dir) { p =>
+      val docs = documents(s, dir)
+      Dedup.writeSignatureIndex(
+        docs.filter(col("doc_id") % 5 =!= 0 && col("doc_id") % 5 =!= 1),
+        "text", "doc_id", p)
+      Dedup.appendToSignatureIndex(docs.filter(col("doc_id") % 5 === 1),
+        "text", "doc_id", p)
+    }
+
+  private def ivfPqIdx(s: SparkSession, dir: String,
+      cents: Seq[(Long, Seq[Double])]): String =
+    servingIndex("ivfpq", s, dir)(Similarity.writeIvfPqIndex(
+      embeddings(s, dir), "vec_id", "embedding", cents, m = 4, _))
+
+  private def ivfPqIdxAppended(s: SparkSession, dir: String,
+      cents: Seq[(Long, Seq[Double])]): String =
+    servingIndex("ivfpq_app", s, dir) { p =>
+      Similarity.writeIvfPqIndex(
+        embeddings(s, dir).filter(col("vec_id") % 3 =!= 0),
+        "vec_id", "embedding", cents, m = 4, p)
+      Similarity.appendToIvfPqIndex(
+        embeddings(s, dir).filter(col("vec_id") % 3 === 0),
+        "vec_id", "embedding", cents, m = 4, p)
+    }
 
   private def qDedupSimhash(s: SparkSession, dir: String): DataFrame =
     Dedup.simhashDedup(documents(s, dir), "text", "doc_id", maxHamming = 3,
@@ -1413,17 +1452,12 @@ object SparkEntry {
   }
 
   /** End-to-end IVF+PQ serving: build the code-only on-disk index
-    * (partitioned by coarse list), then ADC-search it probing 3 lists.
+    * (clustered by coarse list), then ADC-search it probing 3 lists.
     */
   private def qAnnIvfPqTopK(s: SparkSession, dir: String): DataFrame = {
     val cents = Similarity.collectCentroids(embCodebook(s, dir), "vec_id", "embedding")
-    val idxPath = Fixtures.scratchDir("ivfpq", dir)
     // one-time artifact (memoized): the query times the ADC serving path
-    Fixtures.buildOnce("ivfpq", s, dir) {
-      Similarity.writeIvfPqIndex(embeddings(s, dir), "vec_id", "embedding",
-        cents, m = 4, idxPath)
-    }
-    Similarity.ivfPqTopK(Similarity.readIvfIndex(s, idxPath), embQueries(s, dir),
+    Similarity.ivfPqTopK(Similarity.readIvfIndex(s, ivfPqIdx(s, dir, cents)), embQueries(s, dir),
         "vec_id", "embedding", cents, m = 4, k = 10, nprobe = 3)
       .orderBy("query_id", "rnk")
   }
@@ -1438,12 +1472,7 @@ object SparkEntry {
   private def qAnnIvfPqTopKDs(s: SparkSession, dir: String): DataFrame = {
     val cb = embCodebook(s, dir)
     val cents = Similarity.collectCentroids(cb, "vec_id", "embedding")
-    val idxPath = Fixtures.scratchDir("ivfpq", dir)
-    Fixtures.buildOnce("ivfpq", s, dir) {
-      Similarity.writeIvfPqIndex(embeddings(s, dir), "vec_id", "embedding",
-        cents, m = 4, idxPath)
-    }
-    Similarity.ivfPqTopKDataSpace(Similarity.readIvfIndex(s, idxPath),
+    Similarity.ivfPqTopKDataSpace(Similarity.readIvfIndex(s, ivfPqIdx(s, dir, cents)),
         embQueries(s, dir), "vec_id", "embedding",
         cb, "vec_id", "embedding", m = 4, k = 10, nprobe = 3)
       .orderBy("query_id", "rnk")
@@ -1451,47 +1480,29 @@ object SparkEntry {
 
   /** Day-over-day signature-index growth, then the probe: day 1's corpus
     * (`doc_id % 5 ∈ {2,3,4}`) is indexed, day 2's batch (`% 5 = 1`) is
-    * APPENDED — writing only its folded-bucket partitions — and day 3's
-    * batch (`% 5 = 0`) probes the combined index. The oracle twin is the
-    * one-shot index over `% 5 ≠ 0`, so a green row IS the proof that
-    * append ≡ rebuild: the probe cannot tell which days its duplicates
-    * landed on.
+    * APPENDED — one commit of files holding only its folded buckets —
+    * and day 3's batch (`% 5 = 0`) probes the combined index. The oracle
+    * twin is the one-shot index over `% 5 ≠ 0`, so a green row IS the
+    * proof that append ≡ rebuild: the probe cannot tell which days its
+    * duplicates landed on.
     */
-  private def qDedupIncrementalAppend(s: SparkSession, dir: String): DataFrame = {
-    val docs = documents(s, dir)
-    val idxPath = Fixtures.scratchDir("sigidx_app", dir)
-    Fixtures.buildOnce("sigidx_app", s, dir) {
-      Dedup.writeSignatureIndex(
-        docs.filter(col("doc_id") % 5 =!= 0 && col("doc_id") % 5 =!= 1),
-        "text", "doc_id", idxPath)
-      Dedup.appendToSignatureIndex(docs.filter(col("doc_id") % 5 === 1),
-        "text", "doc_id", idxPath)
-    }
-    Dedup.dedupAgainstIndex(docs.filter(col("doc_id") % 5 === 0),
-        "text", "doc_id", idxPath, threshold = 0.5)
+  private def qDedupIncrementalAppend(s: SparkSession, dir: String): DataFrame =
+    Dedup.dedupAgainstIndex(documents(s, dir).filter(col("doc_id") % 5 === 0),
+        "text", "doc_id", sigIdxAppended(s, dir), threshold = 0.5)
       .orderBy("new_id", "dup_of")
-  }
 
   /** Day-over-day IVF+PQ index growth, then the serving probe: day 1's
     * vectors (`vec_id % 3 ≠ 0`) are indexed, day 2's (`% 3 = 0`) are
-    * APPENDED — encoded against the persisted codebook, landing only in
-    * their coarse-list partitions — and the standard query set searches
+    * APPENDED — encoded against the persisted codebook, in one commit of
+    * files holding only their coarse lists — and the standard query set searches
     * the combined index. Oracle twin = the full-corpus IVF+PQ serving
     * SQL, so a green row proves append ≡ rebuild for an unchanged
     * codebook.
     */
   private def qAnnIvfPqAppend(s: SparkSession, dir: String): DataFrame = {
     val cents = Similarity.collectCentroids(embCodebook(s, dir), "vec_id", "embedding")
-    val idxPath = Fixtures.scratchDir("ivfpq_app", dir)
-    Fixtures.buildOnce("ivfpq_app", s, dir) {
-      Similarity.writeIvfPqIndex(
-        embeddings(s, dir).filter(col("vec_id") % 3 =!= 0),
-        "vec_id", "embedding", cents, m = 4, idxPath)
-      Similarity.appendToIvfPqIndex(
-        embeddings(s, dir).filter(col("vec_id") % 3 === 0),
-        "vec_id", "embedding", cents, m = 4, idxPath)
-    }
-    Similarity.ivfPqTopK(Similarity.readIvfIndex(s, idxPath), embQueries(s, dir),
+    Similarity.ivfPqTopK(Similarity.readIvfIndex(s, ivfPqIdxAppended(s, dir, cents)),
+        embQueries(s, dir),
         "vec_id", "embedding", cents, m = 4, k = 10, nprobe = 3)
       .orderBy("query_id", "rnk")
   }
@@ -1538,31 +1549,10 @@ object SparkEntry {
     // builds write DISJOINT scratch dirs and overlap on the build pool
     val cents = Similarity.collectCentroids(embCodebook(s, dir), "vec_id", "embedding")
     buildConcurrently(Seq(
-      () => Fixtures.buildOnce("sigidx", s, dir) {
-        Dedup.writeSignatureIndex(docs.filter(col("doc_id") % 5 =!= 0),
-          "text", "doc_id", Fixtures.scratchDir("sigidx", dir))
-      },
-      () => Fixtures.buildOnce("sigidx_app", s, dir) {
-        val p = Fixtures.scratchDir("sigidx_app", dir)
-        Dedup.writeSignatureIndex(
-          docs.filter(col("doc_id") % 5 =!= 0 && col("doc_id") % 5 =!= 1),
-          "text", "doc_id", p)
-        Dedup.appendToSignatureIndex(docs.filter(col("doc_id") % 5 === 1),
-          "text", "doc_id", p)
-      },
-      () => Fixtures.buildOnce("ivfpq", s, dir) {
-        Similarity.writeIvfPqIndex(embeddings(s, dir), "vec_id", "embedding",
-          cents, m = 4, Fixtures.scratchDir("ivfpq", dir))
-      },
-      () => Fixtures.buildOnce("ivfpq_app", s, dir) {
-        val p = Fixtures.scratchDir("ivfpq_app", dir)
-        Similarity.writeIvfPqIndex(
-          embeddings(s, dir).filter(col("vec_id") % 3 =!= 0),
-          "vec_id", "embedding", cents, m = 4, p)
-        Similarity.appendToIvfPqIndex(
-          embeddings(s, dir).filter(col("vec_id") % 3 === 0),
-          "vec_id", "embedding", cents, m = 4, p)
-      },
+      () => { sigIdx(s, dir); () },
+      () => { sigIdxAppended(s, dir); () },
+      () => { ivfPqIdx(s, dir, cents); () },
+      () => { ivfPqIdxAppended(s, dir, cents); () },
       () => Fixtures.buildOnce("srccap_idx", s, dir) {
         val p = Fixtures.scratchDir("srccap_idx", dir)
         Corpus.writeSourceCapIndex(docs.filter(col("doc_id") % 10 =!= 0),
@@ -2519,12 +2509,7 @@ object SparkEntry {
   private def qTextHybridIvfPq(s: SparkSession, dir: String): DataFrame =
     Fixtures.cached("hybridFusedIvfPq", s, dir) {
       val cents = Similarity.collectCentroids(embCodebook(s, dir), "vec_id", "embedding")
-      val idxPath = Fixtures.scratchDir("ivfpq", dir)
-      Fixtures.buildOnce("ivfpq", s, dir) {
-        Similarity.writeIvfPqIndex(embeddings(s, dir), "vec_id", "embedding",
-          cents, m = 4, idxPath)
-      }
-      val vec = Similarity.ivfPqTopK(Similarity.readIvfIndex(s, idxPath),
+      val vec = Similarity.ivfPqTopK(Similarity.readIvfIndex(s, ivfPqIdx(s, dir, cents)),
           embeddings(s, dir).filter(col("vec_id") === 100),
           "vec_id", "embedding", cents, m = 4, k = 20, nprobe = 3)
         .select(col("neighbor_id").as("doc_id"), col("rnk").cast("long").as("rank"))

@@ -952,21 +952,23 @@ object Dedup {
     * re-apply keyed on PK — reference: cdc_system.py:327 — the degenerate
     * exact-key form of probing an index of what already landed.)
     *
-    * Layout under `path`:
-    *  - `buckets/` — one (band, bucket, id) row per doc×band, parquet
-    *    partitioned by `pb = pmod(bucket, bucketParts)`. `bucket` is a
-    *    64-bit hash, so partitioning by the bucket itself would create
-    *    unbounded directories; folding it into `bucketParts` partitions
-    *    bounds the directory count while keeping probes partition-
-    *    prunable (a probe reads only the `pb` directories its batch's
-    *    buckets fold into — for a small daily batch, a fraction of the
-    *    corpus listing).
+    * Layout under `path`, two [[graft.sources.TxTable]]s and a sidecar:
+    *  - `buckets/` — one (id, band, bucket, pb) row per doc×band, with
+    *    `pb = pmod(bucket, bucketParts)`. `bucket` is a 64-bit hash;
+    *    folding it into `bucketParts` values gives a bounded probe list.
+    *    Rows are hash-clustered on `pb` (a few `pb` values per file) and
+    *    every file's manifest entry records `pb` stats and a Bloom, so a
+    *    probe's `pb IN (…)` opens only the files holding its batch's
+    *    folded buckets — for a small daily batch, a fraction of the index.
     *  - `shingles/` — (id, sh) sorted distinct hashed shingles, the
     *    verify-side representation fetched per surviving candidate.
+    *  - `params` — the hash/layout parameters, checked by every append
+    *    and probe.
     *
-    * Index build is one corpus scan + two partitioned writes; growing it
+    * Index build is one corpus scan + two commits; growing it
     * day-over-day is an append of the just-deduped batch
-    * ([[appendToSignatureIndex]]).
+    * ([[appendToSignatureIndex]]). A cold start is an index over an
+    * empty corpus: the manifest carries the schema.
     */
   def writeSignatureIndex(
       df: DataFrame,
@@ -977,12 +979,33 @@ object Dedup {
       bands: Int = 16,
       rowsPerBand: Int = 8,
       bucketParts: Int = 64,
-      saveMode: String = "overwrite"): Unit = {
+      saveMode: String = "overwrite"): Unit =
+    commitSignatureRows(df, textCol, idCol, path, n, bands, rowsPerBand,
+      bucketParts, saveMode, epoch = None)
+
+  /** [[writeSignatureIndex]]'s body, shared with
+    * [[graft.streaming.IngestStream]], which commits the same rows
+    * exactly-once under its `epoch`. Appending to an absent index
+    * creates it.
+    */
+  private[graft] def commitSignatureRows(
+      df: DataFrame,
+      textCol: String,
+      idCol: String,
+      path: String,
+      n: Int,
+      bands: Int,
+      rowsPerBand: Int,
+      bucketParts: Int,
+      saveMode: String,
+      epoch: Option[Long]): Unit = {
     val spark = df.sparkSession
-    if (saveMode == "overwrite") {
+    val fresh = saveMode == "overwrite" ||
+      !java.nio.file.Files.exists(java.nio.file.Paths.get(path, "buckets"))
+    if (fresh) {
       // persist the hash/layout parameters with the index: a probe or
       // append with different parameters computes incomparable signatures
-      // or prunes the wrong partitions — silently missing duplicates.
+      // or prunes the wrong files — silently missing duplicates.
       import spark.implicits._
       Seq((n, bands, rowsPerBand, bucketParts))
         .toDF("n", "bands", "rows_per_band", "bucket_parts")
@@ -993,26 +1016,26 @@ object Dedup {
     // NOTE: two corpus scans by design (bucket triples and verify-side
     // shingles are different derivations of the text); at index scale,
     // re-scanning columnar input beats pinning the corpus in memory.
-    signatureScan(df, textCol, idCol, n, bands * rowsPerBand, HashMode.Portable)
+    val buckets = signatureScan(df, textCol, idCol, n, bands * rowsPerBand, HashMode.Portable)
       .select(col("id"),
         posexplode(lshBandBuckets(col("sig"), bands, rowsPerBand, HashMode.Portable))
           .as(Seq("band", "bucket")))
       .withColumn("pb", pmod(col("bucket"), lit(bucketParts.toLong)))
-      // CLUSTER BY the partition column before partitionBy: a round-robin
-      // layout makes every task write a file per pb value (tasks × parts
-      // tiny files — measured 2k files / 9 s at sf0.1); hash-clustering on
-      // pb gives one file per occupied partition, and the exchange carries
-      // only (id, band, bucket, pb) rows — bands rows per doc, never text
+      // hash-cluster on pb: each file holds a few pb values, so its pb
+      // Bloom admits only those; the exchange carries only (id, band,
+      // bucket, pb) rows — bands rows per doc, never text
       .repartition(bucketParts, col("pb"))
-      .write.partitionBy("pb").mode(saveMode).parquet(s"$path/buckets")
-    df.select(col(idCol).as("id"), hashedShingles(col(textCol), n).as("sh"))
-      .write.mode(saveMode).parquet(s"$path/shingles")
+    graft.sources.TxTable.commitIndex(buckets, s"$path/buckets", saveMode, Seq("pb"), epoch)
+    graft.sources.TxTable.commitIndex(
+      df.select(col(idCol).as("id"), hashedShingles(col(textCol), n).as("sh")),
+      s"$path/shingles", saveMode, Nil, epoch)
+    ()
   }
 
-  /** Fail fast when an append/probe's parameters disagree with the ones
-    * the index was built with (a mismatch is silent wrong results, not
-    * an error, without this check). Indexes written before params were
-    * recorded are accepted as-is.
+  /** Fail fast when an index predates the TxTable layout, or when an
+    * append/probe's parameters disagree with the ones the index was
+    * built with (a mismatch is silent wrong results, not an error,
+    * without this check).
     */
   private def requireIndexParams(
       spark: org.apache.spark.sql.SparkSession,
@@ -1020,16 +1043,17 @@ object Dedup {
       n: Int,
       bands: Int,
       rowsPerBand: Int,
-      bucketParts: Int): Unit =
-    try {
-      val r = spark.read.parquet(s"$path/params").collect()(0)
-      val stored = (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3))
-      require(stored == ((n, bands, rowsPerBand, bucketParts)),
-        s"signature index at $path was built with (n, bands, rowsPerBand, " +
-          s"bucketParts) = $stored; caller passed (${(n, bands, rowsPerBand, bucketParts)})")
-    } catch {
-      case _: org.apache.spark.sql.AnalysisException => () // pre-params index
-    }
+      bucketParts: Int): Unit = {
+    require(graft.sources.TxTable.latest(s"$path/buckets").isDefined,
+      s"no TxTable signature index at $path (an index written before the " +
+        "TxTable layout has plain parquet pb= directories); rebuild it with " +
+        "Dedup.writeSignatureIndex")
+    val r = spark.read.parquet(s"$path/params").collect()(0)
+    val stored = (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3))
+    require(stored == ((n, bands, rowsPerBand, bucketParts)),
+      s"signature index at $path was built with (n, bands, rowsPerBand, " +
+        s"bucketParts) = $stored; caller passed (${(n, bands, rowsPerBand, bucketParts)})")
+  }
 
   /** Append a new batch to an existing signature index (same parameters
     * as the original [[writeSignatureIndex]] call — the hash constants
@@ -1049,56 +1073,23 @@ object Dedup {
       bucketParts, saveMode = "append")
 
   /** Compact an appended signature index: every [[appendToSignatureIndex]]
-    * lands one file set per append job, so a daily-append index
-    * accumulates small files until listing/open overhead dominates probe
-    * cost (the classic LSM problem, hit by any file-based index). This
-    * rewrites `buckets/` to one file per occupied `pb` partition and
-    * `shingles/` to `shingleFiles` files, preserving contents exactly —
-    * probes before and after are row-identical (spec-pinned).
-    *
-    * Written to a sibling temp dir then atomically swapped (local
-    * rename; on an object store, swap via the table-format commit this
-    * convention stands in for — same stance as the epoch-dir overwrite,
-    * SURVEY §1.3). Readers racing the swap see the old OR new complete
-    * index, never a mix.
+    * adds its own files, so a daily-append index accumulates small files
+    * until listing/open overhead dominates probe cost (the classic LSM
+    * problem, hit by any file-based index). This rewrites `buckets/` into
+    * `bucketParts` files range-clustered on `pb` and `shingles/` into
+    * `shingleFiles` files, each one [[graft.sources.TxTable.compact]]
+    * commit: contents are preserved exactly (probes before and after are
+    * row-identical, spec-pinned), readers see the old or the new version,
+    * and [[graft.sources.TxTable.vacuum]] retires the old files.
     */
   def compactSignatureIndex(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       bucketParts: Int = 64,
       shingleFiles: Int = 8): Unit = {
-    def swap(sub: String)(rewrite: (String, String) => Unit): Unit = {
-      val live = s"$path/$sub"
-      val tmp = s"$path/.${sub}_compact_tmp"
-      val old = s"$path/.${sub}_compact_old"
-      rewrite(live, tmp)
-      def fs(p: String): java.nio.file.Path = java.nio.file.Paths.get(p)
-      def rm(p: String): Unit = {
-        val root = fs(p)
-        if (java.nio.file.Files.exists(root)) {
-          val walk = java.nio.file.Files.walk(root)
-          try {
-            import scala.jdk.CollectionConverters._
-            walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-              .iterator().asScala.foreach(java.nio.file.Files.delete)
-          } finally walk.close()
-        }
-      }
-      rm(old)
-      java.nio.file.Files.move(fs(live), fs(old))
-      java.nio.file.Files.move(fs(tmp), fs(live))
-      rm(old)
-    }
-    swap("buckets") { (live, tmp) =>
-      spark.read.parquet(live)
-        .repartition(bucketParts, col("pb"))
-        .write.partitionBy("pb").mode("overwrite").parquet(tmp)
-    }
-    swap("shingles") { (live, tmp) =>
-      spark.read.parquet(live)
-        .repartition(shingleFiles)
-        .write.mode("overwrite").parquet(tmp)
-    }
+    graft.sources.TxTable.compact(spark, s"$path/buckets", bucketParts, clusterBy = Seq("pb"))
+    graft.sources.TxTable.compact(spark, s"$path/shingles", shingleFiles)
+    ()
   }
 
   /** Near-duplicates of `newBatch` against a persisted signature index:
@@ -1109,9 +1100,10 @@ object Dedup {
     *  1. The batch is signed and bucketed (one scan, fused kernel).
     *  2. The batch's distinct `pb` values — AT MOST `bucketParts` of
     *    them, a bounded driver-side list by construction — become an
-    *    `IN` partition filter on the bucket index: the probe scan LISTS
-    *    AND READS ONLY those directories (PartitionFilters, asserted in
-    *    the spec). A small batch touches few partitions; corpus I/O is
+    *    `IN` filter on the bucket index, read through the `txtable`
+    *    provider: the probe scan LISTS AND OPENS ONLY the files whose
+    *    manifest stats and Bloom admit one of them (asserted in the
+    *    spec). A small batch touches few files; corpus I/O is
     *    proportional to the batch's bucket spread, never corpus size.
     *  3. Candidate join carries (id, band, bucket) triples only — no
     *    text, no signatures; AQE picks broadcast when the batch is small
@@ -1146,8 +1138,8 @@ object Dedup {
     // O(bucketParts) values by construction — a bounded driver action
     // regardless of batch size (documented collect, like IVF codebooks)
     val pbs = bb.select(col("pb")).distinct().collect().map(_.getLong(0))
-    val idx = spark.read.parquet(s"$path/buckets")
-      .filter(col("pb").isin(pbs: _*)) // partition-pruned probe scan
+    val idx = spark.read.format("txtable").load(s"$path/buckets")
+      .filter(col("pb").isin(pbs: _*)) // manifest-pruned probe scan
     val cand = idx.join(bb.select(col("new_id"), col("band"), col("bucket")),
         Seq("band", "bucket"))
       .filter(col("id") =!= col("new_id"))
@@ -1156,16 +1148,17 @@ object Dedup {
     val bsh = newBatch.select(col(idCol).as("new_id"),
       hashedShingles(col(textCol), n).as("sh_n"))
     cand
-      .join(spark.read.parquet(s"$path/shingles")
+      .join(spark.read.format("txtable").load(s"$path/shingles")
         .select(col("id").as("dup_of"), col("sh").as("sh_c")), Seq("dup_of"))
       .join(bsh, Seq("new_id"))
       .withColumn("jac",
         round(jaccardSortedAtLeast(col("sh_n"), col("sh_c"), threshold), 6))
       .filter(col("jac") >= threshold)
-      // an at-least-once append retry can land the same (id, sh) row in
-      // shingles/ twice, fanning a surviving pair into identical output
-      // rows through the verify join — collapse them (jac is a pure
-      // function of the pair, so min ≡ the single value)
+      // appending the same docs twice (appendToSignatureIndex is not
+      // idempotent) lands the same (id, sh) row in shingles/ twice,
+      // fanning a surviving pair into identical output rows through the
+      // verify join — collapse them (jac is a pure function of the pair,
+      // so min ≡ the single value)
       .groupBy(col("new_id"), col("dup_of"))
       .agg(min(col("jac")).as("jac"))
   }

@@ -212,8 +212,8 @@ object Similarity {
     * impose; IVF coarse codebooks are 2^8..2^16 entries). The assignment
     * itself is a narrow map over the corpus: zero shuffle, in contrast to
     * the naive crossJoin+window formulation which shuffles N×C rows.
-    * At scale the output is persisted partitioned by `centroid_id`, making
-    * [[ivfTopK]]'s probe a partition-pruned scan.
+    * At scale the output is persisted with [[writeIvfIndex]], making
+    * [[ivfTopK]]'s probe a manifest-pruned scan.
     */
   def ivfAssign(
       corpus: DataFrame,
@@ -318,28 +318,38 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"), col("score"), col("rnk"))
   }
 
-  /** Persist an [[ivfAssign]]-ed corpus as an on-disk IVF index:
-    * parquet partitioned by `centroid_id`, so a probe reads ONLY its
-    * `nprobe` inverted-list directories (partition pruning — the scan
-    * never lists, opens, or skips the other lists' files). This is the
+  /** Persist an [[ivfAssign]]-ed corpus as an on-disk IVF index: a
+    * [[graft.sources.TxTable]] hash-clustered on `centroid_id` (a few
+    * lists per file) whose manifest records `centroid_id` stats and a
+    * Bloom per file, so a probe's `centroid_id IN (…)` opens ONLY the
+    * files holding its `nprobe` inverted lists. This is the
     * materialization [[ivfTopK]]'s docs promise at scale: index build is
-    * one partitioned write; each query's candidate scan is
-    * O(corpus / lists × nprobe) I/O.
+    * one commit; each query's candidate scan is O(corpus / lists ×
+    * nprobe) I/O.
     */
-  def writeIvfIndex(assigned: DataFrame, path: String, mode: String = "overwrite"): Unit =
-    // cluster by the partition column first: a partitionBy over tasks that
-    // each hold every list writes tasks × lists tiny files; one exchange on
-    // centroid_id gives one file per inverted list — the layout the probe's
-    // pruning argument assumes
-    assigned.repartition(col("centroid_id"))
-      .write.partitionBy("centroid_id").mode(mode).parquet(path)
+  def writeIvfIndex(assigned: DataFrame, path: String, mode: String = "overwrite"): Unit = {
+    // cluster by the probe column first: files that each hold every list
+    // would all be admitted by every probe
+    val parts = assigned.sparkSession.sessionState.conf.numShufflePartitions
+    graft.sources.TxTable.commitIndex(assigned.repartition(parts, col("centroid_id")),
+      path, mode, Seq("centroid_id"), epoch = None)
+    ()
+  }
 
-  /** Read an IVF index written by [[writeIvfIndex]]. Filters on
-    * `centroid_id` prune partitions at planning time (assert-able via
-    * `PartitionFilters` in the scan node).
+  /** Read an IVF index written by [[writeIvfIndex]] or
+    * [[writeIvfPqIndex]] through the `txtable` provider: filters on
+    * `centroid_id` skip files by their manifest stats and Blooms.
     */
-  def readIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+  def readIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
+    requireTxIndex(path)
+    spark.read.format("txtable").load(path)
+  }
+
+  private def requireTxIndex(path: String): Unit =
+    require(graft.sources.TxTable.latest(path).isDefined,
+      s"no TxTable IVF index at $path (an index written before the TxTable " +
+        "layout has plain parquet centroid_id= directories); rebuild it with " +
+        "Similarity.writeIvfIndex or Similarity.writeIvfPqIndex")
 
   /** One Lloyd (k-means) refinement iteration for the IVF coarse
     * codebook: assign every corpus vector to its nearest centroid (the
@@ -597,11 +607,13 @@ object Similarity {
         abs(col("score")).as("adc_dist2"), col("rnk"))
   }
 
-  /** Persist the production IVF+PQ serving index: one (id, codes) row per
-    * corpus vector, parquet-partitioned by its coarse `centroid_id`. The
-    * index stores ONLY the m-long PQ code arrays — no float vectors
-    * anywhere in the layout — so serving I/O per probe is
-    * O(list_size × m longs), the whole point of PQ at 100 TB.
+  /** Persist the production IVF+PQ serving index: one (id, codes,
+    * centroid_id) row per corpus vector in a [[graft.sources.TxTable]]
+    * laid out like [[writeIvfIndex]]'s. The index stores ONLY the m-long
+    * PQ code arrays — no float vectors anywhere in the layout — so
+    * serving I/O per probe is O(list_size × m longs), the whole point of
+    * PQ at 100 TB. The codebook rides along in the `_params`/`_codebook`
+    * sidecars, which the table's vacuum never touches.
     */
   def writeIvfPqIndex(
       corpus: DataFrame,
@@ -610,28 +622,39 @@ object Similarity {
       cents: Seq[(Long, Seq[Double])],
       m: Int,
       path: String,
-      mode: String = "overwrite"): Unit = {
+      mode: String = "overwrite"): Unit =
+    commitPqCodes(corpus, idCol, vecCol, cents, m, path, mode, epoch = None)
+
+  /** [[writeIvfPqIndex]]'s body, shared with
+    * [[graft.streaming.AnnIndexStream]], which commits the same code
+    * rows exactly-once under its `epoch`.
+    */
+  private[graft] def commitPqCodes(
+      corpus: DataFrame,
+      idCol: String,
+      vecCol: String,
+      cents: Seq[(Long, Seq[Double])],
+      m: Int,
+      path: String,
+      mode: String,
+      epoch: Option[Long]): Unit = {
     val spark = corpus.sparkSession
     if (mode != "overwrite") requireIvfPqParams(spark, path, cents, m)
-    ivfAssign(corpus, cents, vecCol)
+    val codes = ivfAssign(corpus, cents, vecCol)
       .select(col(idCol).as("id"),
         transform(pqEncoded(col(vecCol).cast("array<double>"), pqSorted(cents), m),
           e => e.getField("code")).as("codes"),
         col("centroid_id"))
-      // same clustering rule as writeIvfIndex: one file per inverted list,
-      // and the exchange carries only (id, codes, centroid_id) — m bytes of
-      // codes per vector, never the float vectors
-      .repartition(col("centroid_id"))
-      .write.partitionBy("centroid_id").mode(mode).parquet(path)
-    if (mode == "overwrite") {
-      // Persist the codebook fingerprint + m with the index — an append
-      // encoded against a different codebook would produce codes the
-      // serving ADC tables silently mis-score. Written AFTER the data
-      // (a static partitioned overwrite clears the whole root first);
-      // the `_` prefix keeps the dir invisible to partition discovery,
-      // so readIvfIndex sees only the centroid_id= list dirs.
-      writeIvfPqParams(spark, path, cents, m)
-    }
+      // hash-cluster on the list id, one slot per list: a few lists per
+      // file, and the exchange carries only (id, codes, centroid_id) — m
+      // bytes of codes per vector, never the float vectors
+      .repartition(math.max(1, cents.size), col("centroid_id"))
+    graft.sources.TxTable.commitIndex(codes, path, mode, Seq("centroid_id"), epoch)
+    // Persist the codebook fingerprint + m with the index — an append
+    // encoded against a different codebook would produce codes the
+    // serving ADC tables silently mis-score. Written AFTER the data, so
+    // a failed build leaves no sidecar vouching for it.
+    if (mode == "overwrite") writeIvfPqParams(spark, path, cents, m)
   }
 
   private def writeIvfPqParams(
@@ -646,9 +669,8 @@ object Similarity {
       .coalesce(1).write.mode("overwrite").parquet(s"$path/_params")
     // the codebook VECTORS ride with the index (FAISS-style
     // self-containment): a consumer serves the index without re-deriving
-    // the training-time centroid set — see [[readIvfPqCodebook]]. The
-    // `_` prefix hides the dir from partition discovery like `_params`;
-    // appends never rewrite it (they are fingerprint-checked against it).
+    // the training-time centroid set — see [[readIvfPqCodebook]]. Appends
+    // never rewrite it (they are fingerprint-checked against it).
     cents.toDF("cid", "cv")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/_codebook")
   }
@@ -701,10 +723,10 @@ object Similarity {
 
   /** Grow an existing [[writeIvfPqIndex]] index with a new vector batch —
     * the daily-ingest operation: encode against the index's ORIGINAL
-    * codebook and append to the batch's coarse-list partitions only
-    * (parquet `append` + `partitionBy` touches no other list's
-    * directory; probes see old and new vectors uniformly). Fails fast on
-    * a codebook/m mismatch via the persisted `_params`.
+    * codebook and append one commit whose files hold only the batch's
+    * coarse lists (every earlier file stays listed; probes see old and
+    * new vectors uniformly). Fails fast on a codebook/m mismatch via the
+    * persisted `_params`.
     *
     * Appending shifts no centroid, so recall degrades as the corpus
     * drifts from the codebook; surface staleness with the centroid-stats
@@ -721,57 +743,6 @@ object Similarity {
       path: String): Unit =
     writeIvfPqIndex(newVecs, idCol, vecCol, cents, m, path, mode = "append")
 
-  /** Epoch-scoped, EXACTLY-ONCE growth of an IVF+PQ index — the
-    * streaming-maintenance primitive behind
-    * [[graft.streaming.AnnIndexStream]]. Codes land under
-    * `centroid_id=<list>/epoch=<n>/`, written as a DYNAMIC-partition
-    * overwrite: a replayed epoch REWRITES its own (list, epoch)
-    * directories instead of duplicating rows. That stronger contract
-    * matters here where plain parquet append (at-least-once) is fine
-    * for the signature index: a duplicate (band, bucket, id) row
-    * collapses in the probe's candidate dedup, but a duplicate CODE row
-    * would occupy two top-k slots and corrupt every rank below it.
-    *
-    * Serving is unchanged: `centroid_id` stays the TOP directory level,
-    * so [[ivfPqTopK]]'s partition pruning works identically, and the
-    * probe projects only (id, codes, centroid_id) — the epoch column is
-    * physical layout it never reads. The streamed index root must be
-    * SEEDED by this writer (epoch = -1 over the initial corpus; stream
-    * epochs are checkpoint-assigned from 0, and a seed inside that
-    * space would be overwritten by the first replayed batch) — parquet
-    * partition discovery rejects a root mixing epoch-less and
-    * epoch-scoped leaves, so the batch [[writeIvfPqIndex]] layout and
-    * this one cannot share a directory.
-    *
-    * Codebook safety: fails fast on a `_params` mismatch exactly like
-    * the batch append; a cold root gets `_params` written after its
-    * first epoch lands.
-    */
-  def appendEpochToIvfPqIndex(
-      newVecs: DataFrame,
-      idCol: String,
-      vecCol: String,
-      cents: Seq[(Long, Seq[Double])],
-      m: Int,
-      path: String,
-      epoch: Long): Unit = {
-    val spark = newVecs.sparkSession
-    val hasParams =
-      scala.util.Try(spark.read.parquet(s"$path/_params").head()).isSuccess
-    if (hasParams) requireIvfPqParams(spark, path, cents, m)
-    ivfAssign(newVecs, cents, vecCol)
-      .select(col(idCol).as("id"),
-        transform(pqEncoded(col(vecCol).cast("array<double>"), pqSorted(cents), m),
-          e => e.getField("code")).as("codes"),
-        col("centroid_id"))
-      .withColumn("epoch", lit(epoch))
-      .repartition(col("centroid_id"))
-      .write.partitionBy("centroid_id", "epoch")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").parquet(path)
-    if (!hasParams) writeIvfPqParams(spark, path, cents, m)
-  }
-
   /** Order-independent fingerprint of a coarse codebook: murmur3 of the
     * id-sorted (id, components) sequence — stable across JVM runs for
     * the exact-decimal centroids the trainer emits.
@@ -786,19 +757,17 @@ object Similarity {
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       cents: Seq[(Long, Seq[Double])],
-      m: Int): Unit =
-    try {
-      val r = spark.read.parquet(s"$path/_params").collect()(0)
-      val stored = (r.getInt(0), r.getInt(1), r.getInt(2), r.getLong(3))
-      val passed = (m, cents.size, cents.headOption.map(_._2.size).getOrElse(0),
-        codebookFingerprint(cents))
-      require(stored == passed,
-        s"IVF+PQ index at $path was built with (m, k, dim, codebook_fp) = " +
-          s"$stored; caller passed $passed — appending would mix " +
-          "incomparable codes")
-    } catch {
-      case _: org.apache.spark.sql.AnalysisException => () // pre-params index
-    }
+      m: Int): Unit = {
+    requireTxIndex(path)
+    val r = spark.read.parquet(s"$path/_params").collect()(0)
+    val stored = (r.getInt(0), r.getInt(1), r.getInt(2), r.getLong(3))
+    val passed = (m, cents.size, cents.headOption.map(_._2.size).getOrElse(0),
+      codebookFingerprint(cents))
+    require(stored == passed,
+      s"IVF+PQ index at $path was built with (m, k, dim, codebook_fp) = " +
+        s"$stored; caller passed $passed — appending would mix " +
+        "incomparable codes")
+  }
 
   /** Composed IVF+PQ serving — the end-to-end production ANN query shape:
     * ADC scoring restricted to the `nprobe` probed inverted lists of an
@@ -809,10 +778,10 @@ object Similarity {
     *     codebook, bounded top-k aggregation).
     *  2. The union of probed centroid ids — a bounded driver-side list
     *     (≤ queries × nprobe, capped by the codebook size, same O(small)
-    *     class as the codebook collect) — becomes a partition `IN`
-    *     filter on the index: the candidate scan LISTS AND READS ONLY
-    *     the probed lists' directories (`PartitionFilters` on
-    *     centroid_id, asserted in the spec), and projects only
+    *     class as the codebook collect) — becomes an `IN` filter on
+    *     the index ([[readIvfIndex]]): the candidate scan LISTS AND
+    *     OPENS ONLY the files whose manifest stats and Bloom admit a
+    *     probed list (asserted in the spec), and projects only
     *     (id, codes) — never a float vector.
     *  3. Each candidate row joins its probing queries on centroid_id
     *     (broadcast — queries are small; a corpus vector meets each
@@ -859,7 +828,7 @@ object Similarity {
       // consumed twice (probed-id collect + broadcast join): materialize
       // the queries×centroids probe selection and ADC tables once
       .localCheckpoint(true)
-    // 2. bounded probed-list union → partition-pruning IN filter
+    // 2. bounded probed-list union → manifest-pruning IN filter
     val probedIds = probeTabs.select(col("centroid_id")).distinct()
       .collect().map(_.getLong(0)).sorted
     val adc = org.apache.spark.sql.GraftSqlBridge.column(
@@ -901,10 +870,10 @@ object Similarity {
     *
     * Output is row-for-row identical to [[ivfPqTopK]] over the same
     * index (spec-asserted, and the board query shares the literal path's
-    * oracle). Partition pruning degrades gracefully: ≤ 1024 distinct
-    * probed lists use the static `IN` prune (file-level pruning on the
-    * `centroid_id=` layout); beyond that a semi-join prunes after
-    * listing — the price of a codebook too large to inline anywhere.
+    * oracle). File pruning degrades gracefully: ≤ 1024 distinct probed
+    * lists use the static `IN` prune (manifest stats and Blooms through
+    * [[readIvfIndex]]); beyond that a semi-join prunes after listing —
+    * the price of a codebook too large to inline anywhere.
     */
   def ivfPqTopKDataSpace(
       index: DataFrame,

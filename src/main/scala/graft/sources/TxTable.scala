@@ -8,11 +8,11 @@ import scala.jdk.CollectionConverters._
 /** A minimal transactional table format over plain parquet — the
   * engine's answer to the "Structured Streaming + Delta/Iceberg" stance
   * in BASELINE.md, built from first principles because this sandbox
-  * ships no table-format dependency (reference: the epoch-dir overwrite
-  * convention of the append-only streams, e.g.
-  * [[graft.streaming.SketchStream]], is idempotent but gives readers no
-  * atomic multi-file commit, no snapshot isolation, and no time travel —
-  * the three things a production CDC target needs first).
+  * ships no table-format dependency. Every streamed table and serving
+  * index in the engine is one: a per-directory overwrite convention is
+  * idempotent but gives readers no atomic multi-file commit, no snapshot
+  * isolation, and no time travel — the three things a production CDC
+  * target needs first.
   *
   * ==Layout==
   * {{{
@@ -442,22 +442,30 @@ object TxTable {
     require(bloomBits > 0 && bloomBits % 32 == 0,
       s"bloomBits must be a positive multiple of 32, got $bloomBits")
     require(bloomK > 0 && bloomK <= 16, s"bloomK must be in [1, 16], got $bloomK")
-    commitLaid(df, dir, mode,
-      (statsColumns, bloomColumns.map(c => c -> (bloomBits, bloomK)).toMap),
+    commitLaid(df, dir, mode, layoutFor(statsColumns, bloomColumns, bloomBits, bloomK),
       epochId, streamId, arbiter, expectVersion)
   }
+
+  private def layoutFor(statsColumns: Seq[String], bloomColumns: Seq[String],
+      bloomBits: Int = 1 << 13, bloomK: Int = 5): (Seq[String], Map[String, (Int, Int)]) =
+    (statsColumns, bloomColumns.map(c => c -> (bloomBits, bloomK)).toMap)
 
   /** [[commit]] under a per-column layout ([[layoutOf]]'s shape), and
     * the ONE compose-against-any-base publish loop. `schema` overrides
     * the manifest schema (a replica seed keeps its primary's declared
-    * nullability; a file read reports every column nullable).
+    * nullability; a file read reports every column nullable). With
+    * `exactlyOnce`, every attempt first tests `epochId` against the
+    * ledger of the base it would publish on: an applier that lost the
+    * CAS to another applier of the same epoch skips instead of
+    * re-composing its rows onto the winner's ([[commitStreaming]]).
     */
   private[sources] def commitLaid(df: DataFrame, dir: String, mode: String,
       layout: (Seq[String], Map[String, (Int, Int)]),
       epochId: Option[Long] = None, streamId: Option[String] = None,
       arbiter: CommitArbiter = LocalLinkArbiter,
       expectVersion: Option[Long] = None,
-      schema: Option[StructType] = None): Long = {
+      schema: Option[StructType] = None,
+      exactlyOnce: Boolean = false): Long = {
     require(mode == "append" || mode == "overwrite",
       s"mode must be append or overwrite, got $mode")
     val written = writeData(df, dir, layout)
@@ -467,6 +475,9 @@ object TxTable {
     @scala.annotation.tailrec
     def attempt(): Long = {
       val base = latest(dir)
+      // the winner of a lost race may have applied this very epoch
+      val replay = base.filter(b => exactlyOnce &&
+        epochId.exists(b.appliedEpoch(streamId) >= _))
       val next = (mode, base) match {
         case ("append", Some(b)) =>
           // deletion vectors carry forward — dropping them would
@@ -483,7 +494,8 @@ object TxTable {
       // table; the retry loop turned the loser into an overwrite of the
       // winner's data). The loser's data dir is an invisible orphan,
       // retired by vacuum like any lost merge race.
-      if (expectVersion.exists(_ != next.version)) -1L
+      if (replay.isDefined) replayed(dir, replay.get, epochId.get)
+      else if (expectVersion.exists(_ != next.version)) -1L
       else if (publishAt(dir, next.stamped(epochId, streamId), arbiter))
         next.version
       else if (expectVersion.isDefined) -1L
@@ -839,7 +851,7 @@ object TxTable {
       // manifest-synthesized file statuses (ADDITIVE — old readers would
       // ignore an unknown line, old manifests parse to commitTs=0)
       s"ts=${System.currentTimeMillis()}") ++
-      snap.epoch.map(e => s"epoch=$e").toSeq ++
+      snap.epoch.map("epoch=" + _).toSeq ++
       // additive: old readers ignore unknown lines; scopes the epoch
       // stamp to its writer stream
       snap.streamId.map(s => s"stream=$s").toSeq ++
@@ -866,26 +878,49 @@ object TxTable {
     * sink. The manifest is stamped with the checkpoint's `epochId`, and
     * the table's carried ledger ([[appliedEpoch]], unscoped) is the
     * applied-offset record: a crash-replayed epoch at or below it
-    * commits NOTHING — the table-format equivalent of the epoch-dir
-    * overwrite convention, but atomic and multi-file, and it survives
-    * vacuum and compaction. (A crash between the data write and the
-    * manifest link leaves only invisible orphan files, retired by
-    * [[vacuum]].) Returns the epoch's version: the new one, or on a
-    * replay the retained version stamped with it (the latest, which
-    * subsumes it, once vacuum has retired that one).
+    * commits NOTHING, atomically across files, and the record survives
+    * vacuum and compaction. The ledger is re-tested inside the publish
+    * loop, so of two appliers racing one epoch the CAS loser skips; its
+    * data dir, like a crash between the data write and the manifest
+    * link, is an invisible orphan retired by [[vacuum]]. Returns the
+    * epoch's version: the new one, or on a replay the retained version
+    * stamped with it (the latest, which subsumes it, once vacuum has
+    * retired that one).
     */
   def commitStreaming(df: DataFrame, dir: String, epochId: Long,
       mode: String = "append", statsColumns: Seq[String] = Nil,
       arbiter: CommitArbiter = LocalLinkArbiter,
       bloomColumns: Seq[String] = Nil): Long =
+    // tested once before the data write (a replay writes nothing), and
+    // again inside the publish loop against each base it composes on
     latest(dir).filter(_.appliedEpoch(None) >= epochId) match {
-      case Some(head) =>
-        versions(dir).reverseIterator.map(snapshot(dir, _))
-          .find(_.epoch.contains(epochId)).fold(head.version)(_.version)
+      case Some(head) => replayed(dir, head, epochId)
       case None =>
-        commit(df, dir, mode, statsColumns, epochId = Some(epochId), arbiter,
-          bloomColumns = bloomColumns)
+        commitLaid(df, dir, mode, layoutFor(statsColumns, bloomColumns),
+          Some(epochId), None, arbiter, exactlyOnce = true)
     }
+
+  /** Replayed epochs [[commitStreaming]] skipped in this JVM. */
+  private[graft] val skippedCommitCount = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** A skipped replay of `epochId`: the retained version stamped with it,
+    * or `head` (which subsumes it) once vacuum has retired that one.
+    */
+  private def replayed(dir: String, head: Snapshot, epochId: Long): Long = {
+    skippedCommitCount.incrementAndGet()
+    versions(dir).reverseIterator.map(snapshot(dir, _))
+      .find(_.epoch.contains(epochId)).fold(head.version)(_.version)
+  }
+
+  /** A serving-index commit: stats and a Bloom on each probe column, so
+    * an `IN` probe through the `txtable` provider opens only the files
+    * that may hold a probed value ([[TxPrune]]); exactly-once under
+    * `epoch` ([[commitStreaming]]) when a stream writes it.
+    */
+  private[graft] def commitIndex(df: DataFrame, dir: String, mode: String,
+      probeColumns: Seq[String], epoch: Option[Long]): Long =
+    epoch.fold(commit(df, dir, mode, probeColumns, bloomColumns = probeColumns))(e =>
+      commitStreaming(df, dir, e, mode, probeColumns, bloomColumns = probeColumns))
 
   /** A table's physical layout as its rewrites re-establish it: the
     * recorded stats columns, and each Bloom column's geometry. Geometry

@@ -8,18 +8,16 @@ import org.apache.spark.sql.types.StructType
 /** Continuous IVF+PQ serving-index maintenance — the ANN analog of
   * [[IngestStream]]'s signature-index loop: each micro-batch of new
   * vectors is encoded against the index's FROZEN coarse codebook and
-  * landed into its coarse-list partitions, so queries see old and new
-  * vectors uniformly on the very next probe.
+  * appended to the index, so queries see old and new vectors uniformly
+  * on the very next probe.
   *
   * ==Delivery contract==
-  * Exactly-once, the strong form: every epoch writes
-  * `centroid_id=<list>/epoch=<n>/` directories via dynamic-partition
-  * overwrite ([[Similarity.appendEpochToIvfPqIndex]]), so a crash-replay
-  * rewrites the same directories byte-for-byte instead of appending
-  * duplicates. The signature index can afford at-least-once (duplicate
-  * bucket rows collapse in the probe); a duplicated PQ code row would
-  * occupy two top-k slots, so this tier overwrites its epoch directories
-  * whole instead.
+  * Exactly-once: the index is a [[graft.sources.TxTable]] and each
+  * micro-batch is one [[graft.sources.TxTable.commitStreaming]] version
+  * stamped with its epoch, so a crash-replayed epoch is a ledger skip —
+  * never a duplicated code row, which would occupy two top-k slots. The
+  * seed written by [[Similarity.writeIvfPqIndex]] carries no stamp
+  * (ledger mark -1), and stream epochs start at 0.
   *
   * ==Staleness contract==
   * Appending never moves a centroid: recall degrades as the ingested
@@ -33,12 +31,14 @@ import org.apache.spark.sql.types.StructType
   * zero-shuffle literal-codebook map, the encode is a narrow transform,
   * and the single exchange carries (id, m-byte codes, centroid_id),
   * never float vectors. Each epoch adds at most one file per touched
-  * list; compact old epochs offline.
+  * list; [[graft.sources.TxTable.compact]] and
+  * [[graft.sources.TxTable.vacuum]] are the maintenance.
   */
 object AnnIndexStream {
 
   /** One micro-batch of the maintenance loop; public so tests and
-    * [[start]] share the body. No-ops on an empty batch.
+    * [[start]] share the body. Fails fast on a codebook/m mismatch with
+    * the index's `_params`.
     */
   def applyVectorBatch(
       batch: DataFrame,
@@ -47,19 +47,13 @@ object AnnIndexStream {
       vecCol: String,
       cents: Seq[(Long, Seq[Double])],
       m: Int,
-      indexPath: String): Unit = {
-    if (batch.isEmpty) return
-    Similarity.appendEpochToIvfPqIndex(batch, idCol, vecCol, cents, m,
-      indexPath, epoch)
-  }
+      indexPath: String): Unit =
+    Similarity.commitPqCodes(batch, idCol, vecCol, cents, m, indexPath,
+      "append", Some(epoch))
 
-  /** Stream a vector directory into the index. The index root must use
-    * the epoch-scoped layout — seed it with
-    * [[Similarity.appendEpochToIvfPqIndex]] with epoch = -1 over the
-    * initial corpus: foreachBatch epochs are checkpoint-assigned FROM 0,
-    * so the seed must live outside that space — a seed at epoch 0 would
-    * be silently overwritten by the stream's first dynamic-overwrite
-    * batch.
+  /** Stream a vector directory into the index. Seed the index with
+    * [[Similarity.writeIvfPqIndex]] over the initial corpus (an empty
+    * one for a cold start).
     */
   def start(
       spark: SparkSession,

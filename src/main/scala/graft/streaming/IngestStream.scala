@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.ext.{Dedup, HashMode}
+import graft.sources.TxTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -13,32 +14,27 @@ import org.apache.spark.sql.types.StructType
   *  1. deduped WITHIN the batch (minhash LSH, keep-first: the smallest id
   *     of every near-dup chain survives);
   *  2. probed against the persisted signature index
-  *     ([[graft.ext.Dedup.dedupAgainstIndex]] — partition-pruned, the
+  *     ([[graft.ext.Dedup.dedupAgainstIndex]] — manifest-pruned, the
   *     corpus never self-joins);
   *  3. split: near-dups of landed content are QUARANTINED to a report
   *     table (new_id, dup_of, jac — the audit a curation pipeline keeps),
   *     survivors are APPENDED to the curated corpus AND to the signature
-  *     index ([[graft.ext.Dedup.appendToSignatureIndex]]), so the next
-  *     batch probes them too.
+  *     index, so the next batch probes them too.
   *
   * ==Delivery contract==
-  * Corpus and report writes are exactly-once: each lands in an
-  * `epoch=<n>` directory overwritten whole on replay. The index append is
-  * at-least-once: a replayed epoch re-appends its survivors, landing
-  * duplicate (band, bucket, id) and (id, sh) rows — which the probe side
-  * tolerates BY DESIGN (`dedupAgainstIndex` collapses duplicate candidate
-  * pairs and duplicate shingle rows; `Dedup.scala` documents the retry
-  * rationale inline), so a crash between index append and checkpoint
-  * commit degrades storage, never correctness. This split — transactional
-  * where consumers read rows, idempotent-by-collapse where consumers read
-  * an index — is the standard shape when one micro-batch feeds stores
-  * with different atomicity guarantees.
+  * Exactly-once for all four tables: the corpus, the report and the
+  * index's `buckets/` and `shingles/` are [[TxTable]]s, and each gets
+  * one [[TxTable.commitStreaming]] version stamped with the epoch, so a
+  * replayed epoch skips every table that already holds it. The corpus
+  * and report commit first and the index last: a replay after a crash
+  * between commits probes the index the skipped tables were computed
+  * against, and recomputes the same answer.
   *
   * At 100 TB: per-trigger work is O(batch² within LSH buckets + probed
-  * partitions), independent of the landed corpus size — the property the
-  * whole index machinery buys. The corpus directory grows one epoch dir
-  * per trigger; compact or retire old epoch dirs offline (they are
-  * append-only and never rewritten after their epoch commits).
+  * files), independent of the landed corpus size — the property the
+  * whole index machinery buys. Each trigger appends one version per
+  * table; [[TxTable.compact]] and [[TxTable.vacuum]] are the
+  * maintenance (for the index, [[graft.ext.Dedup.compactSignatureIndex]]).
   */
 object IngestStream {
 
@@ -68,32 +64,27 @@ object IngestStream {
       .select(col("id_b").as("__drop"))
     val intraKept = b.join(intraDrops, col(idCol) === col("__drop"), "left_anti")
 
-    // 2. probe the landed index (partition-pruned; no corpus self-join)
+    // 2. probe the landed index (manifest-pruned; no corpus self-join)
     val crossDups = Dedup.dedupAgainstIndex(intraKept, textCol, idCol,
       indexPath, n, bands, rowsPerBand, threshold)
 
-    // 3a. quarantine report — exactly-once via whole-epoch-dir overwrite
-    crossDups.write.mode("overwrite").parquet(s"$reportDir/epoch=$epoch")
-
-    // 3b. survivors → curated corpus (exactly-once, same epoch-dir rule)
+    // 3. survivors → curated corpus, near-dups → report, then survivors
+    // → the index (last: see the delivery contract)
     val survivors = intraKept.join(
         crossDups.select(col("new_id")).distinct(),
         intraKept(idCol) === col("new_id"), "left_anti")
-      .localCheckpoint(true) // read twice: corpus write + index append
-    survivors.write.mode("overwrite").parquet(s"$corpusDir/epoch=$epoch")
-
-    // 3c. survivors → signature index (at-least-once; see class doc)
-    if (!survivors.isEmpty)
-      Dedup.appendToSignatureIndex(survivors, textCol, idCol, indexPath,
-        n, bands, rowsPerBand)
+      .localCheckpoint(true) // read twice: corpus commit + index commit
+    TxTable.commitStreaming(survivors, corpusDir, epoch)
+    TxTable.commitStreaming(crossDups, reportDir, epoch)
+    Dedup.commitSignatureRows(survivors, textCol, idCol, indexPath,
+      n, bands, rowsPerBand, bucketParts = 64, "append", Some(epoch))
   }
 
   /** Stream a document directory through the ingest loop. The index at
-    * `indexPath` must exist and be non-empty — seed it with
-    * [[graft.ext.Dedup.writeSignatureIndex]] over the landed corpus (for
-    * a cold start, index the first batch directly and begin streaming
-    * from the second; a zero-file parquet index cannot be schema-
-    * inferred by the probe).
+    * `indexPath` must exist — seed it with
+    * [[graft.ext.Dedup.writeSignatureIndex]] over the landed corpus (an
+    * empty one for a cold start). Read the corpus and report with
+    * [[TxTable.read]].
     */
   def start(
       spark: SparkSession,
@@ -132,11 +123,4 @@ object IngestStream {
       checkpointDir, textCol, idCol, threshold,
       trigger = Some(Trigger.AvailableNow()),
       maxFilesPerTrigger = maxFilesPerTrigger).awaitTermination()
-
-  /** Read the curated corpus (all epochs; the epoch dirs are physical
-    * layout, not a data column — recursive lookup + explicit schema).
-    */
-  def readCorpus(spark: SparkSession, corpusDir: String, schema: StructType): DataFrame =
-    spark.read.schema(schema)
-      .option("recursiveFileLookup", "true").parquet(corpusDir)
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.ext.Sketches
+import graft.sources.TxTable
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -11,28 +12,27 @@ import org.apache.spark.sql.types.StructType
   * folds its rows into a persisted d×w counter table whose estimates are
   * always available without revisiting any history.
   *
-  * State layout: one parquet dir per epoch holding that batch's SPARSE
-  * (cell, count) frame ([[Sketches.countMinCells]]), overwritten whole on
-  * replay — so a crashed epoch lands exactly-once: the dirs are
-  * append-only, with no pointer file and nothing carried forward between
-  * epochs. Because count-min cells are
+  * State layout: one [[TxTable]] of SPARSE (cell, count) rows; each
+  * micro-batch appends its batch's cells ([[Sketches.countMinCells]])
+  * in one [[TxTable.commitStreaming]] version stamped with its epoch, so
+  * a crash-replayed epoch is a ledger skip. Because count-min cells are
   * ADDITIVE and the hash family is fixed literal constants, summing the
-  * per-epoch frames cell-wise reproduces the batch sketch over the total
+  * appended frames cell-wise reproduces the batch sketch over the total
   * stream bit-for-bit: streamed ≡ batch by construction, and the merge
-  * is commutative, so epoch dirs can be compacted offline in any
-  * grouping.
+  * is commutative, so [[TxTable.compact]] may regroup the rows freely
+  * and [[TxTable.vacuum]] retires what it replaced.
   *
   * Scale shape: per batch, the only data-sized work is the map-side-
   * combined cell aggregate (shuffle bounded by d×w occupied cells, never
-  * key cardinality); each epoch dir is at most d×w rows; the read-side
+  * key cardinality); each epoch adds at most d×w rows; the read-side
   * merge aggregates #epochs × d×w sparse rows — independent of stream
   * volume, the whole point versus an exact per-key count whose state
   * grows with distinct keys.
   */
 object SketchStream {
 
-  /** Fold one micro-batch into the sketch dir (exactly-once per epoch:
-    * whole-epoch-dir overwrite).
+  /** Fold one micro-batch into the sketch table (exactly-once per epoch
+    * through the table's ledger).
     */
   def applySketchBatch(
       batch: DataFrame,
@@ -40,19 +40,17 @@ object SketchStream {
       sketchDir: String,
       keyStr: Column,
       d: Int,
-      w: Int): Unit =
-    Sketches.countMinCells(batch, keyStr, d, w)
-      .write.mode("overwrite").parquet(s"$sketchDir/epoch=$epoch")
+      w: Int): Unit = {
+    TxTable.commitStreaming(Sketches.countMinCells(batch, keyStr, d, w), sketchDir, epoch)
+    ()
+  }
 
   /** The merged dense d×w table over every landed epoch (cell-wise sum —
     * the count-min merge). Driver-side array, same structurally-small
     * class as [[Sketches.countMinTable]]'s result.
     */
   def readTable(spark: SparkSession, sketchDir: String, d: Int, w: Int): Array[Long] = {
-    val cells = spark.read
-      .schema("__cell LONG, __n LONG")
-      .option("recursiveFileLookup", "true")
-      .parquet(sketchDir)
+    val cells = TxTable.read(spark, sketchDir)
       .groupBy(col("__cell")).agg(sum(col("__n")).as("__n"))
       .collect()
     val arr = new Array[Long](d * w)

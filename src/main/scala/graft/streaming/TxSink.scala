@@ -10,9 +10,10 @@ import org.apache.spark.sql.types.StructType
   * so a crash-replayed epoch finds its stamp and re-commits nothing
   * ([[TxTable.commitStreaming]]): exactly-once end to end, with readers
   * getting snapshot isolation and time travel ACROSS micro-batches for
-  * free (version history = batch history). The append-only `epoch=<n>`
-  * directories of the file streams give idempotence per directory; this
-  * gives one queryable, vacuumable table.
+  * free (version history = batch history). The replayable file source
+  * plus this idempotent, versioned sink is the shape every graft stream
+  * shares: [[IngestStream]], [[SketchStream]] and [[AnnIndexStream]]
+  * end their batch bodies in the same call.
   *
   * `statsColumns` flow through to the manifest, so manifest-level file
   * skipping ([[TxTable.readPruned]]) works on streamed tables too.

@@ -24,7 +24,8 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * version: the stream's FIRST version is served as the full snapshot
   * with `change_type = insert` (the bootstrap a replica needs), every
   * later version as [[TxTable.changeFeed]]`(v-1, v)` — O(changed data)
-  * for append commits via the manifest diff, one keyed join otherwise.
+  * for append commits via the manifest diff; after a merge or any other
+  * rewrite, one full-outer key join of the two whole snapshots.
   * Each row carries `_commit_version`, so a multi-version batch can be
   * applied strictly in version order downstream.
   *
@@ -47,10 +48,11 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   *    Delta does); columns REMOVED by an overwrite read as null.
   *
   * ==At 100 TB==
-  * Offsets are manifest version numbers — O(1) driver state; each batch
-  * moves O(changed data) for appends and one co-partitioned join for
-  * rewrites, never O(table). The sink side applies per-version merges,
-  * so replication cost is the primary's churn ([[TxTable.merge]]'s
+  * Offsets are manifest version numbers — O(1) driver state. A batch
+  * over append versions moves O(changed data); a batch over a merge or
+  * another rewrite is O(table): [[TxTable.changeFeed]] full-outer-joins
+  * both snapshots on the keys (one co-partitioned shuffle, but of every
+  * row). The sink side applies per-version merges ([[TxTable.merge]]'s
   * copy-on-write argument).
   */
 class TxTableChangeFeedSource(

@@ -1,6 +1,7 @@
 package graft
 
 import graft.ext.Similarity
+import graft.sources.TxTable
 import graft.streaming.AnnIndexStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructType}
@@ -9,9 +10,8 @@ import java.nio.file.Files
 /** Streaming IVF+PQ index maintenance: vectors streamed through
   * [[AnnIndexStream]] must serve identically to a one-shot index over
   * the same total corpus (streamed ≡ rebuild), a crashed epoch must
-  * replay WITHOUT duplicating code rows (the exactly-once contract that
-  * tier needs and the signature index doesn't), and the epoch-scoped
-  * layout must keep centroid_id partition pruning intact.
+  * replay as a ledger skip WITHOUT duplicating code rows, and the
+  * streamed commits must keep centroid_id manifest pruning intact.
   */
 class AnnIndexStreamSpec extends SparkSpecBase {
 
@@ -36,12 +36,10 @@ class AnnIndexStreamSpec extends SparkSpecBase {
     val tmp = Files.createTempDirectory("annstream").toString
     val (srcDir, idx, chk) = (s"$tmp/src", s"$tmp/idx", s"$tmp/chk")
 
-    // day 0 corpus seeds the epoch-scoped index at epoch -1 (stream
-    // epochs are checkpoint-assigned from 0 — a seed at 0 would be
-    // overwritten by the first batch's dynamic overwrite)
+    // day 0 corpus seeds the index: an unstamped version (ledger mark
+    // -1), so the stream's epochs from 0 all apply
     val day0 = emb.filter(col("vec_id") % 3 === 0)
-    Similarity.appendEpochToIvfPqIndex(day0, "vec_id", "embedding",
-      cents, m = 4, idx, epoch = -1L)
+    Similarity.writeIvfPqIndex(day0, "vec_id", "embedding", cents, m = 4, idx)
 
     // stream the remaining vectors as two file-batches
     val batch1 = emb.filter(col("vec_id") % 3 === 1)
@@ -58,33 +56,36 @@ class AnnIndexStreamSpec extends SparkSpecBase {
     Similarity.writeIvfPqIndex(emb, "vec_id", "embedding", cents, m = 4, rebuilt)
     assertSameRows(serve(idx), serve(rebuilt), "streamed index vs rebuild")
 
-    // the epoch level must not break centroid_id partition pruning
+    // seed + one version per epoch, and the ledger holds the last epoch
+    assert(TxTable.versions(idx) === Seq(0L, 1L, 2L))
+    assert(TxTable.appliedEpoch(idx, None) === 1L)
+
+    // the streamed commits must keep centroid_id manifest pruning
     val probed = Similarity.readIvfIndex(s, idx)
       .filter(col("centroid_id").isin(cents.take(2).map(_._1): _*))
-    val scan = probed.queryExecution.executedPlan.collectFirst {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }
-    assert(scan.isDefined && scan.get.partitionFilters.exists(
-      _.references.exists(_.name == "centroid_id")),
-      "epoch-scoped layout must keep the centroid_id partition filter")
+    assert(assertManifestPruned(probed, idx, "centroid_id") ===
+      cents.take(2).map(_._1).toSet)
   }
 
   test("replaying a crashed epoch rewrites its directories instead of duplicating codes") {
     val tmp = Files.createTempDirectory("annreplay").toString
     val idx = s"$tmp/idx"
     val day0 = emb.filter(col("vec_id") % 3 === 0)
-    Similarity.appendEpochToIvfPqIndex(day0, "vec_id", "embedding",
-      cents, m = 4, idx, epoch = -1L)
+    Similarity.writeIvfPqIndex(day0, "vec_id", "embedding", cents, m = 4, idx)
     val batch = emb.filter(col("vec_id") % 3 === 1)
 
     AnnIndexStream.applyVectorBatch(batch, 1L, "vec_id", "embedding",
       cents, m = 4, idx)
     val rows1 = Similarity.readIvfIndex(s, idx).count()
     val serve1 = serve(idx).collect().map(_.toSeq).toSeq
+    val versions = TxTable.versions(idx)
+    val skipped = TxTable.skippedCommitCount.get()
 
     // crash window: checkpoint never committed, epoch 1 re-runs
     AnnIndexStream.applyVectorBatch(batch, 1L, "vec_id", "embedding",
       cents, m = 4, idx)
+    assert(TxTable.versions(idx) === versions, "a replay adds no version")
+    assert(TxTable.skippedCommitCount.get() === skipped + 1, "the replay is a counted skip")
     assert(Similarity.readIvfIndex(s, idx).count() === rows1,
       "replayed epoch must not append duplicate code rows")
     assert(serve(idx).collect().map(_.toSeq).toSeq === serve1,
@@ -94,12 +95,12 @@ class AnnIndexStreamSpec extends SparkSpecBase {
   test("epoch append fails fast on a codebook mismatch") {
     val tmp = Files.createTempDirectory("annmismatch").toString
     val idx = s"$tmp/idx"
-    Similarity.appendEpochToIvfPqIndex(emb.filter(col("vec_id") % 3 === 0),
-      "vec_id", "embedding", cents, m = 4, idx, epoch = -1L)
+    Similarity.writeIvfPqIndex(emb.filter(col("vec_id") % 3 === 0),
+      "vec_id", "embedding", cents, m = 4, idx)
     val wrongCents = cents.map { case (id, v) => (id, v.map(_ + 0.25)) }
     val e = intercept[IllegalArgumentException] {
-      Similarity.appendEpochToIvfPqIndex(emb.filter(col("vec_id") % 3 === 1),
-        "vec_id", "embedding", wrongCents, m = 4, idx, epoch = 1L)
+      AnnIndexStream.applyVectorBatch(emb.filter(col("vec_id") % 3 === 1), 0L,
+        "vec_id", "embedding", wrongCents, m = 4, idx)
     }
     assert(e.getMessage.contains("codebook"))
   }

@@ -281,6 +281,7 @@ class CorpusSpec extends SparkSpecBase {
       (4L, "yet another unrelated document about vector databases"))
       .toDF("doc_id", "text")
     val dupsSeen = scala.collection.mutable.Buffer[(Long, Long)]()
+    val buckets = s"$idxDir/buckets"
 
     def drain(): Unit = {
       val q = s.readStream.schema(batch1.schema).parquet(srcDir)
@@ -292,11 +293,20 @@ class CorpusSpec extends SparkSpecBase {
             else {
               val dups = Dedup.dedupAgainstIndex(b, "text", "doc_id", idxDir,
                 threshold = 0.5)
+              // the probe opens only the files holding the batch's buckets
+              assertManifestPruned(dups, buckets, "pb")
               dupsSeen ++= dups.collect().map(r => (r.getLong(0), r.getLong(1)))
               b.join(dups.select(col("new_id").as("doc_id")).distinct(),
                 Seq("doc_id"), "left_anti")
             }
+          val before = graft.sources.TxTable.latest(buckets).fold(Set.empty[String])(_.files.toSet)
           Dedup.appendToSignatureIndex(clean, "text", "doc_id", idxDir)
+          // the append keeps every earlier file and adds only clean's buckets
+          val solo = java.nio.file.Files.createTempDirectory("solo").toString
+          Dedup.writeSignatureIndex(clean, "text", "doc_id", solo)
+          assertAppendConfined(buckets, before, "pb",
+            graft.sources.TxTable.read(s, s"$solo/buckets").select("pb")
+              .collect().map(_.getLong(0)).toSet)
           ()
         }
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -310,7 +320,7 @@ class CorpusSpec extends SparkSpecBase {
     drain()
 
     assert(dupsSeen.toSeq === Seq((3L, 1L)), "batch-2 near-dup detected against batch-1 index")
-    val landed = s.read.parquet(s"$idxDir/shingles")
+    val landed = graft.sources.TxTable.read(s, s"$idxDir/shingles")
       .select("id").distinct().collect().map(_.getLong(0)).toSet
     assert(landed === Set(1L, 2L, 4L), "only clean docs appended to the index")
   }
@@ -335,17 +345,24 @@ class CorpusSpec extends SparkSpecBase {
         walk.iterator().asScala.count(_.toString.endsWith(".parquet"))
       } finally walk.close()
     }
+    val buckets = s"$idx/buckets"
+    def liveFiles: Int = graft.sources.TxTable.latest(buckets).get.files.size
     val probe = Seq(doc(9, "one")).toDF("doc_id", "text") // near-dup of 1
-    val before = Dedup.dedupAgainstIndex(probe, "text", "doc_id", idx, threshold = 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val filesBefore = parquetFiles(s"$idx/buckets")
+    def probed = Dedup.dedupAgainstIndex(probe, "text", "doc_id", idx, threshold = 0.5)
+    val before = probed.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    assertManifestPruned(probed, buckets, "pb")
+    val filesBefore = liveFiles
     Dedup.compactSignatureIndex(spark, idx)
-    val filesAfter = parquetFiles(s"$idx/buckets")
+    val filesAfter = liveFiles
     assert(filesAfter < filesBefore,
       s"expected compaction to shrink file count: $filesBefore -> $filesAfter")
-    val after = Dedup.dedupAgainstIndex(probe, "text", "doc_id", idx, threshold = 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val after = probed.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(after == before && before.nonEmpty, s"probe changed: $before -> $after")
+    // the compacted files are clustered on pb: the probe still prunes
+    assertManifestPruned(probed, buckets, "pb")
+    // retention is vacuum: only the compacted files stay on disk
+    graft.sources.TxTable.vacuum(buckets, 1, 0L)
+    assert(parquetFiles(buckets) === filesAfter)
   }
 
   test("dedupClusters labels transitive duplicate chains with the component min id") {

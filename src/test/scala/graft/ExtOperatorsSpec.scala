@@ -142,13 +142,13 @@ class ExtOperatorsSpec extends SparkSpecBase {
     Dedup.writeSignatureIndex(corpus, "text", "doc_id", tmp)
     val got = Dedup.dedupAgainstIndex(batch, "text", "doc_id", tmp, threshold = 0.5)
 
-    // the probe scan over buckets/ must carry a pb partition filter —
-    // only the batch's folded-bucket directories are listed and read
-    val scans = fileScans(got.queryExecution.executedPlan)
-      .filter(_.relation.location.rootPaths.exists(_.toString.contains("buckets")))
-    assert(scans.nonEmpty, "expected a FileSourceScanExec over the bucket index")
-    assert(scans.forall(_.partitionFilters.nonEmpty),
-      "bucket-index probe must be partition-pruned on pb")
+    // the probe scan over buckets/ lists only the files holding the
+    // batch's folded buckets; a one-doc batch folds into few of them
+    val buckets = s"$tmp/buckets"
+    assert(assertManifestPruned(got, buckets, "pb", strict = false) === pbsOf(batch))
+    val one = all.filter(col("doc_id") === 5L)
+    assert(assertManifestPruned(Dedup.dedupAgainstIndex(one, "text", "doc_id", tmp,
+      threshold = 0.5), buckets, "pb") === pbsOf(one))
 
     // results equal the direct (no-index) batch-vs-corpus formulation:
     // minhashLshDedup over the union, restricted to cross pairs
@@ -163,7 +163,9 @@ class ExtOperatorsSpec extends SparkSpecBase {
 
     // append: day-2 batch lands in the index; a doc probing day-2's
     // content now finds it
+    val before = liveFiles(buckets)
     Dedup.appendToSignatureIndex(batch, "text", "doc_id", tmp)
+    assertAppendConfined(buckets, before, "pb", pbsOf(batch))
     val reprobe = Dedup.dedupAgainstIndex(batch, "text", "doc_id", tmp, threshold = 0.5)
     // every batch doc now collides with its own indexed copy at jaccard 1
     assert(reprobe.filter(col("new_id") === col("dup_of")).count() === 0,
@@ -842,13 +844,9 @@ class ExtOperatorsSpec extends SparkSpecBase {
       Similarity.ivfAssign(emb, cents, "embedding"), s"$tmp/idx")
     val idx = Similarity.readIvfIndex(s, s"$tmp/idx")
     val probed = idx.filter(col("centroid_id").isin(cents.take(2).map(_._1): _*))
-    // partition pruning: the scan plans with a centroid_id partition
-    // filter, and only the probed lists' files are selected
-    val scan = probed.queryExecution.executedPlan.collectFirst {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }
-    assert(scan.isDefined, "expected a FileSourceScanExec")
-    assert(scan.get.partitionFilters.nonEmpty, "probe must prune partitions")
+    // manifest pruning: only the files holding the probed lists are listed
+    assert(assertManifestPruned(probed, s"$tmp/idx", "centroid_id") ===
+      cents.take(2).map(_._1).toSet)
     val expected = Similarity.ivfAssign(emb, cents, "embedding")
       .filter(col("centroid_id").isin(cents.take(2).map(_._1): _*)).count()
     assert(probed.count() === expected)
@@ -861,6 +859,19 @@ class ExtOperatorsSpec extends SparkSpecBase {
         cents, q, "vec_id", "embedding", "vec_id", "embedding", k = 5, nprobe = 3)
       .orderBy("query_id", "rnk").collect().map(_.toString).toSeq
     assert(viaIdx === direct)
+  }
+
+  test("an index written before the TxTable layout fails with its rebuild call") {
+    val tmp = java.nio.file.Files.createTempDirectory("legacyidx").toString
+    Seq((1L, 2L)).toDF("id", "centroid_id")
+      .write.partitionBy("centroid_id").parquet(s"$tmp/ivf")
+    val ivf = intercept[IllegalArgumentException](Similarity.readIvfIndex(s, s"$tmp/ivf"))
+    assert(ivf.getMessage.contains("rebuild it with Similarity.writeIvfIndex"))
+    Seq((1L, 0, 7L, 7L)).toDF("id", "band", "bucket", "pb")
+      .write.partitionBy("pb").parquet(s"$tmp/sig/buckets")
+    val sig = intercept[IllegalArgumentException](
+      Dedup.dedupAgainstIndex(docs, "text", "doc_id", s"$tmp/sig"))
+    assert(sig.getMessage.contains("rebuild it with Dedup.writeSignatureIndex"))
   }
 
   test("IVF+PQ serving: pruned code-only scan, results match restricted direct scoring") {
@@ -876,10 +887,12 @@ class ExtOperatorsSpec extends SparkSpecBase {
     val idxScans = fileScans(got.queryExecution.executedPlan)
       .filter(_.relation.location.rootPaths.exists(_.toString.contains("idx")))
     assert(idxScans.nonEmpty, "expected a scan over the IVF+PQ index")
-    // partition-pruned to the probed inverted lists
-    assert(idxScans.forall(_.partitionFilters.exists(
-      _.references.exists(_.name == "centroid_id"))),
-      "candidate scan must carry a centroid_id partition filter")
+    // manifest-pruned to the files holding the probed inverted lists;
+    // these 10 queries probe lists in every file, one query in fewer
+    assertManifestPruned(got, s"$tmp/idx", "centroid_id", strict = false)
+    assertManifestPruned(Similarity.ivfPqTopK(Similarity.readIvfIndex(s, s"$tmp/idx"),
+      q.filter(col("vec_id") === 50L), "vec_id", "embedding", cents, m = 4, k = 5,
+      nprobe = 2), s"$tmp/idx", "centroid_id")
     // code-only: the scan reads no float/double (vector) column
     idxScans.foreach { f =>
       val leafTypes = f.schema.fields.flatMap { fld =>
@@ -1002,21 +1015,17 @@ class ExtOperatorsSpec extends SparkSpecBase {
       s"expected the fingerprint guard, got: $ex")
   }
 
-  /** Per-partition-dir part-file inventory of a partitioned parquet root. */
-  private def partFiles(root: String): Map[String, Set[String]] = {
-    val it = java.nio.file.Files.list(java.nio.file.Paths.get(root))
-    try {
-      import scala.jdk.CollectionConverters._
-      it.iterator().asScala
-        .filter(p => java.nio.file.Files.isDirectory(p) &&
-          p.getFileName.toString.contains("="))
-        .map { d =>
-          val fs = java.nio.file.Files.list(d)
-          try d.getFileName.toString -> fs.iterator().asScala
-            .map(_.getFileName.toString).filter(_.startsWith("part-")).toSet
-          finally fs.close()
-        }.toMap
-    } finally it.close()
+  private def liveFiles(dir: String): Set[String] =
+    graft.sources.TxTable.latest(dir).get.files.toSet
+
+  /** The folded buckets (`pb`) a batch's signature rows land in: its own
+    * one-shot index's.
+    */
+  private def pbsOf(batch: org.apache.spark.sql.DataFrame): Set[Long] = {
+    val solo = java.nio.file.Files.createTempDirectory("solo").toString
+    Dedup.writeSignatureIndex(batch, "text", "doc_id", solo)
+    graft.sources.TxTable.read(s, s"$solo/buckets").select("pb").distinct()
+      .collect().map(_.getLong(0)).toSet
   }
 
   test("signature-index append writes only the batch's folded-bucket partitions") {
@@ -1028,24 +1037,11 @@ class ExtOperatorsSpec extends SparkSpecBase {
     val tmp = java.nio.file.Files.createTempDirectory("sigapp").toString
 
     Dedup.writeSignatureIndex(day1, "text", "doc_id", s"$tmp/idx")
-    val before = partFiles(s"$tmp/idx/buckets")
+    val before = liveFiles(s"$tmp/idx/buckets")
     Dedup.appendToSignatureIndex(day2, "text", "doc_id", s"$tmp/idx")
-    val after = partFiles(s"$tmp/idx/buckets")
-
-    // append never rewrites: every pre-existing file survives in place
-    before.foreach { case (d, files) =>
-      assert(files.subsetOf(after.getOrElse(d, Set.empty)),
-        s"append must not remove/rewrite files in $d")
-    }
-    // growth confined to day-2's folded buckets (its solo index's pb dirs)
-    Dedup.writeSignatureIndex(day2, "text", "doc_id", s"$tmp/solo")
-    val day2Pbs = partFiles(s"$tmp/solo/buckets").keySet
-    val grown = after.collect {
-      case (d, files) if !before.get(d).contains(files) => d
-    }.toSet
-    assert(grown.nonEmpty, "append must add files somewhere")
-    assert(grown.subsetOf(day2Pbs),
-      s"append touched $grown outside day-2's buckets $day2Pbs")
+    // append never rewrites: every earlier file stays listed, and the new
+    // files hold only day-2's folded buckets
+    assertAppendConfined(s"$tmp/idx/buckets", before, "pb", pbsOf(day2))
 
     // probe over the appended index ≡ probe over a one-shot rebuild
     Dedup.writeSignatureIndex(all.filter(col("doc_id") % 5 =!= 0),
@@ -1055,6 +1051,10 @@ class ExtOperatorsSpec extends SparkSpecBase {
     val viaFull = Dedup.dedupAgainstIndex(probe, "text", "doc_id",
       s"$tmp/full", threshold = 0.5)
     assertSameRows(viaAppend, viaFull, "appended index vs one-shot rebuild")
+    assertManifestPruned(viaAppend, s"$tmp/idx/buckets", "pb", strict = false)
+    val one = probe.filter(col("doc_id") === 5L)
+    assertManifestPruned(Dedup.dedupAgainstIndex(one, "text", "doc_id",
+      s"$tmp/idx", threshold = 0.5), s"$tmp/idx/buckets", "pb")
   }
 
   test("IVF+PQ append: only its coarse lists grow, probe ≡ rebuild, params guarded") {
@@ -1066,22 +1066,12 @@ class ExtOperatorsSpec extends SparkSpecBase {
     val tmp = java.nio.file.Files.createTempDirectory("ivfpqapp").toString
 
     Similarity.writeIvfPqIndex(day1, "vec_id", "embedding", cents, m = 4, s"$tmp/idx")
-    val before = partFiles(s"$tmp/idx")
+    val before = liveFiles(s"$tmp/idx")
     Similarity.appendToIvfPqIndex(day2, "vec_id", "embedding", cents, m = 4, s"$tmp/idx")
-    val after = partFiles(s"$tmp/idx")
-
-    before.foreach { case (d, files) =>
-      assert(files.subsetOf(after.getOrElse(d, Set.empty)),
-        s"append must not remove/rewrite files in $d")
-    }
     val day2Lists = Similarity.ivfAssign(day2, cents, "embedding")
       .select(col("centroid_id")).distinct()
-      .collect().map(r => s"centroid_id=${r.getLong(0)}").toSet
-    val grown = after.collect {
-      case (d, files) if !before.get(d).contains(files) => d
-    }.toSet
-    assert(grown.nonEmpty && grown.subsetOf(day2Lists),
-      s"append touched $grown outside day-2's lists $day2Lists")
+      .collect().map(_.getLong(0)).toSet
+    assertAppendConfined(s"$tmp/idx", before, "centroid_id", day2Lists)
 
     // probe equivalence vs a one-shot rebuild over the same total corpus
     Similarity.writeIvfPqIndex(emb, "vec_id", "embedding", cents, m = 4, s"$tmp/full")
@@ -1091,6 +1081,10 @@ class ExtOperatorsSpec extends SparkSpecBase {
     val viaFull = Similarity.ivfPqTopK(Similarity.readIvfIndex(s, s"$tmp/full"),
       q, "vec_id", "embedding", cents, m = 4, k = 5, nprobe = 2)
     assertSameRows(viaAppend, viaFull, "appended IVF+PQ index vs rebuild")
+    assertManifestPruned(viaAppend, s"$tmp/idx", "centroid_id", strict = false)
+    assertManifestPruned(Similarity.ivfPqTopK(Similarity.readIvfIndex(s, s"$tmp/idx"),
+      q.filter(col("vec_id") === 50L), "vec_id", "embedding", cents, m = 4, k = 5,
+      nprobe = 2), s"$tmp/idx", "centroid_id")
 
     // a mismatched codebook/m must fail fast, not silently mix codes
     val e = intercept[IllegalArgumentException] {

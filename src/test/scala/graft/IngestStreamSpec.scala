@@ -1,6 +1,7 @@
 package graft
 
 import graft.ext.Dedup
+import graft.sources.TxTable
 import graft.streaming.IngestStream
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -11,7 +12,8 @@ import java.nio.file.Files
   * dups of landed content, and fresh docs flow through
   * [[IngestStream]]; the curated corpus, quarantine report, and grown
   * signature index must come out exactly as the batch operators predict,
-  * and a crashed epoch must replay without changing any answer.
+  * and a crashed epoch must replay as ledger skips without changing any
+  * answer.
   */
 class IngestStreamSpec extends SparkSpecBase {
 
@@ -68,15 +70,25 @@ class IngestStreamSpec extends SparkSpecBase {
       "text", "doc_id", threshold = 0.8, maxFilesPerTrigger = 1)
 
     // curated corpus = the survivors, exactly
-    val corpus = IngestStream.readCorpus(s, corpusDir, schema)
+    val corpus = TxTable.read(s, corpusDir)
       .select(col("doc_id")).collect().map(_.getLong(0)).toSet
     assert(corpus === Set(11L, 13L, 21L))
 
     // quarantine report names each drop and what it duplicated
-    val report = s.read.parquet(s"$reportDir/epoch=*")
+    val report = TxTable.read(s, reportDir)
       .select(col("new_id"), col("dup_of"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(report === Set((10L, 1L), (20L, 11L)))
+
+    // one version per epoch on every table; the index on top of its seed
+    Seq(corpusDir, reportDir).foreach { d =>
+      assert(TxTable.versions(d) === Seq(0L, 1L), d)
+      assert(TxTable.appliedEpoch(d, None) === 1L, d)
+    }
+    Seq("buckets", "shingles").foreach { t =>
+      assert(TxTable.versions(s"$idx/$t") === Seq(0L, 1L, 2L), t)
+      assert(TxTable.appliedEpoch(s"$idx/$t", None) === 1L, t)
+    }
 
     // grown index ≡ one-shot rebuild over landed + survivors: a probe
     // batch duplicating every landed doc answers identically through both
@@ -101,27 +113,37 @@ class IngestStreamSpec extends SparkSpecBase {
     val batch = docs(10L -> filler(1), 11L -> filler(11))
     def run(): Unit = IngestStream.applyIngestBatch(batch, 0L, idx,
       corpusDir, reportDir, "text", "doc_id", threshold = 0.8)
+    def rows(dir: String) = TxTable.read(s, dir).collect().map(_.toSeq).toSet
+    val tables = Seq(corpusDir, reportDir, s"$idx/buckets", s"$idx/shingles")
     run()
-    val corpus1 = IngestStream.readCorpus(s, corpusDir, schema)
-      .collect().map(_.toSeq).toSet
-    val report1 = s.read.parquet(s"$reportDir/epoch=0")
-      .select(col("new_id"), col("dup_of"), col("jac"))
-      .collect().map(_.toSeq).toSet
+    val clean = tables.map(rows)
+    val versions = tables.map(TxTable.versions)
+    val (corpus1, report1) = (clean(0), clean(1))
 
-    run() // crash window: checkpoint never committed, epoch 0 re-runs
-
-    val corpus2 = IngestStream.readCorpus(s, corpusDir, schema)
-      .collect().map(_.toSeq).toSet
-    val report2 = s.read.parquet(s"$reportDir/epoch=0")
-      .select(col("new_id"), col("dup_of"), col("jac"))
-      .collect().map(_.toSeq).toSet
+    // crash window: checkpoint never committed, epoch 0 re-runs — every
+    // table's ledger already holds it, so every commit is a counted skip
+    val skipped = TxTable.skippedCommitCount.get()
+    run()
+    assert(tables.map(TxTable.versions) === versions, "a replay adds no version")
+    assert(TxTable.skippedCommitCount.get() === skipped + tables.size)
+    val corpus2 = rows(corpusDir)
+    val report2 = rows(reportDir)
     assert(corpus2 === corpus1, "corpus is exactly-once per epoch")
     assert(report2 === report1, "report is exactly-once per epoch")
     assert(report1.map(r => (r(0), r(1))) === Set((10L, 1L)))
 
-    // the double-appended index still answers every probe identically
-    // (duplicate rows collapse on the probe side — the documented
-    // at-least-once contract)
+    // crash before the corpus and report CAS: their epoch-0 manifests
+    // never published, the index's did. The replay probes an index that
+    // already holds the epoch's survivors and must still land the clean
+    // answer, without touching the index
+    Seq(corpusDir, reportDir).foreach(d =>
+      Files.delete(java.nio.file.Paths.get(d, "_txlog", "v0.manifest")))
+    run()
+    assert(tables.map(rows) === clean, "a partial-commit replay changes no table")
+    assert(tables.drop(2).map(TxTable.versions) === versions.drop(2),
+      "the index gains no version")
+
+    // the replayed index answers every probe as the clean run's
     val probe = docs(100L -> filler(1), 101L -> filler(11), 102L -> filler(5))
     val got = Dedup.dedupAgainstIndex(probe, "text", "doc_id", idx, threshold = 0.8)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet

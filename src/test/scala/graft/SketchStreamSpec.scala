@@ -1,6 +1,7 @@
 package graft
 
 import graft.ext.Sketches
+import graft.sources.TxTable
 import graft.streaming.SketchStream
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -9,9 +10,9 @@ import java.nio.file.Files
 
 /** Streaming count-min maintenance: the merged per-epoch sketch must
   * equal the one-shot batch sketch over the total stream bit-for-bit
-  * (additive cells + fixed hash family), a crashed epoch must replay
-  * without double counting, state must stay d×w-bounded, and estimates
-  * must never undercount.
+  * (additive cells + fixed hash family), a crashed epoch must replay as
+  * a ledger skip without double counting, state must stay d×w-bounded,
+  * and estimates must never undercount.
   */
 class SketchStreamSpec extends SparkSpecBase {
 
@@ -60,16 +61,15 @@ class SketchStreamSpec extends SparkSpecBase {
     assert(streamed.length === D * W)
 
     // crashed-epoch replay: re-apply an epoch's batch under its ORIGINAL
-    // epoch id — the whole-dir overwrite must leave the table unchanged
-    val epochs = Files.list(java.nio.file.Paths.get(sketchDir))
-    val epochIds = try {
-      import scala.jdk.CollectionConverters._
-      epochs.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.startsWith("epoch="))
-        .map(_.stripPrefix("epoch=").toLong).toList.sorted
-    } finally epochs.close()
-    assert(epochIds.size === 3, s"expected 3 epoch dirs, got $epochIds")
+    // epoch id — the table's ledger must skip it, leaving the table and
+    // its versions unchanged
+    val versions = TxTable.versions(sketchDir)
+    val epochIds = versions.map(TxTable.snapshot(sketchDir, _).epoch.get)
+    assert(epochIds === Seq(0L, 1L, 2L), s"expected one version per epoch, got $epochIds")
+    val skipped = TxTable.skippedCommitCount.get()
     SketchStream.applySketchBatch(batches(1), epochIds(1), sketchDir, col("k"), D, W)
+    assert(TxTable.versions(sketchDir) === versions, "a replay must add no version")
+    assert(TxTable.skippedCommitCount.get() === skipped + 1, "the replay is a counted skip")
     assert(SketchStream.readTable(s, sketchDir, D, W).toSeq === oneShot.toSeq,
       "replayed epoch changed the merged table")
 
@@ -91,8 +91,7 @@ class SketchStreamSpec extends SparkSpecBase {
     val tmp = Files.createTempDirectory("sketchb").toString
     val wide = (0 until 5000).map(i => (s"u$i", i.toLong)).toDF("k", "seq")
     SketchStream.applySketchBatch(wide, 0L, s"$tmp/cms", col("k"), D, W)
-    val rows = s.read.schema("__cell LONG, __n LONG")
-      .option("recursiveFileLookup", "true").parquet(s"$tmp/cms").count()
+    val rows = TxTable.read(s, s"$tmp/cms").count()
     assert(rows <= D * W, s"epoch state $rows rows exceeds d*w = ${D * W}")
     assert(SketchStream.readTable(s, s"$tmp/cms", D, W).sum === 5000L * D)
   }

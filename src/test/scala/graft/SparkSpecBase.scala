@@ -61,6 +61,74 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
     }) ++ kids.flatMap(fileScans)
   }
 
+  /** Manifest-relative path (`data/<commit>/<file>`) of a data file URI. */
+  private def manifestRel(path: String): String =
+    path.split('/').takeRight(3).mkString("/")
+
+  /** The files the `txtable` scans of `df` over table `dir` list after
+    * manifest pruning, and the long values their `IN` filters on
+    * `column` probe.
+    */
+  def probedListing(df: DataFrame, dir: String, column: String): (Set[String], Set[Long]) = {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, In, InSet, Literal}
+    val scans = fileScans(df.queryExecution.executedPlan).filter(_.relation.location match {
+      case t: graft.sources.TxFileIndex => t.tableDir == dir
+      case _ => false
+    })
+    assert(scans.nonEmpty, s"no txtable scan over $dir")
+    val listed = scans.flatMap(f => f.relation.location.listFiles(f.partitionFilters, f.dataFilters))
+      .flatMap(_.files.map(st => manifestRel(st.getPath.toString))).toSet
+    val probed = scans.flatMap(_.dataFilters.flatMap(_.collect {
+      case In(a: AttributeReference, vs) if a.name == column =>
+        vs.collect { case Literal(v: Long, _) => v }
+      case InSet(a: AttributeReference, vs) if a.name == column =>
+        vs.toSeq.collect { case v: Long => v }
+    }).flatten).toSet
+    (listed, probed)
+  }
+
+  /** Files of table `dir`'s latest version holding a row whose long
+    * `column` is one of `values`.
+    */
+  def filesHolding(dir: String, column: String, values: Set[Long]): Set[String] =
+    graft.sources.TxTable.read(spark, dir)
+      .filter(org.apache.spark.sql.functions.col(column).isin(values.toSeq: _*))
+      .select(org.apache.spark.sql.functions.col("_metadata.file_path")).distinct()
+      .collect().map(r => manifestRel(r.getString(0))).toSet
+
+  /** An index probe opens exactly the files holding a probed value of
+    * `column` — the files whose manifest stats and Bloom admit one — and
+    * fewer than the table holds (`strict`). Returns the probed values.
+    */
+  def assertManifestPruned(df: DataFrame, dir: String, column: String,
+      strict: Boolean = true): Set[Long] = {
+    val (listed, probed) = probedListing(df, dir, column)
+    assert(probed.nonEmpty, s"the scan over $dir carries no IN filter on $column")
+    val holding = filesHolding(dir, column, probed)
+    assert(listed === holding, s"probe over $dir listed $listed, files holding " +
+      s"$column in $probed are $holding")
+    val all = graft.sources.TxTable.latest(dir).get.files.toSet
+    if (strict) assert(listed.size < all.size,
+      s"probe over $dir listed all ${all.size} files")
+    probed
+  }
+
+  /** An append to table `dir` keeps every file of `before` listed, and
+    * the long `column` stats of each new file fall inside `values`.
+    */
+  def assertAppendConfined(dir: String, before: Set[String], column: String,
+      values: Set[Long]): Unit = {
+    val snap = graft.sources.TxTable.latest(dir).get
+    val added = snap.files.toSet -- before
+    assert(before.subsetOf(snap.files.toSet), s"append unlisted ${before -- snap.files}")
+    assert(added.nonEmpty, "append listed no new file")
+    added.foreach { f =>
+      val r = snap.stats(f)(column)
+      assert(values(r.min.toLong) && values(r.max.toLong),
+        s"new file $f has $column in [${r.min}, ${r.max}], outside the batch's $values")
+    }
+  }
+
   /** Spark jobs started while `body` runs, as (stage name, call-site
     * details), plus the file-scan locations of the SQL executions it
     * started — bracketed by marker jobs so the asynchronous listener bus

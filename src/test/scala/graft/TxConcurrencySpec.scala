@@ -200,4 +200,32 @@ class TxConcurrencySpec extends SparkSpecBase {
     assert(TxTable.appliedEpoch(dir, Some("a")) === 40L)
     assert(TxTable.appliedEpoch(dir, Some("b")) === 41L)
   }
+
+  test("two appliers of one streaming epoch commit it once: the CAS loser skips") {
+    val dir = Files.createTempDirectory("txstreamrace").toString
+    TxTable.commit(s.range(0, 10).toDF("id"), dir, "overwrite")
+    // the first two publishes wait for each other, so both appliers pass
+    // the pre-write ledger check and compose against the same base
+    val barrier = new java.util.concurrent.CyclicBarrier(2)
+    val arrivals = new java.util.concurrent.atomic.AtomicInteger(0)
+    val arbiter = new graft.sources.CommitArbiter {
+      override def putIfAbsent(target: java.nio.file.Path, content: String,
+          tmpTag: String): Boolean = {
+        if (arrivals.getAndIncrement() < 2)
+          barrier.await(120, java.util.concurrent.TimeUnit.SECONDS)
+        graft.sources.LocalLinkArbiter.putIfAbsent(target, content, tmpTag)
+      }
+    }
+    val skipped = TxTable.skippedCommitCount.get()
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val appliers = (0 until 2).map(_ => Future(
+      TxTable.commitStreaming(s.range(100, 105).toDF("id"), dir, 0L, arbiter = arbiter)))
+    val got = appliers.map(Await.result(_, 5.minutes))
+    assert(TxTable.versions(dir) === Seq(0L, 1L), "the epoch must commit exactly one version")
+    assert(got === Seq(1L, 1L), "both appliers answer the version that stamped the epoch")
+    assert(TxTable.read(s, dir).count() === 15L, "the batch's rows land once")
+    assert(TxTable.skippedCommitCount.get() === skipped + 1, "the CAS loser counts one skip")
+  }
 }
