@@ -671,45 +671,124 @@ object TxTable {
     }.toMap
   }
 
+  /** The Bloom probes of one snapshot column: each sidecar is parsed
+    * once, and each key's bit positions once per filter geometry, however
+    * many files and keys are probed.
+    */
+  private final class BloomProbe(dir: String, snap: Snapshot, column: String) {
+    private val sidecars = scala.collection.mutable.Map
+      .empty[String, Map[(String, String), Array[Long]]]
+    private val positions = scala.collection.mutable.Map.empty[(Int, Int, String), Array[Int]]
+
+    /** File `f`'s membership test over canonical reprs, or None when `f`
+      * has no usable entry for the column: no entry, a missing sidecar,
+      * or a stored word count that disagrees with the recorded geometry.
+      */
+    def of(f: String): Option[String => Boolean] = for {
+      ref <- snap.blooms.get(f).flatMap(_.get(column))
+      words <- sidecars.getOrElseUpdate(ref.sidecar, readSidecar(dir, ref.sidecar))
+        .get((f, column))
+      if words.length == ref.mBits / 32
+    } yield (repr: String) => bloomMightContain(words, positions.getOrElseUpdate(
+      (ref.mBits, ref.k, repr), bloomPositions(ref.mBits, ref.k, repr)))
+  }
+
   /** Files of `snap` that might contain `repr` in `column` per their
-    * Bloom entries; files without an entry for the column are KEPT
-    * (skipping never drops data), as are files whose sidecar is missing
-    * or whose stored word count disagrees with the recorded geometry.
+    * Bloom entries; files without a usable entry for the column are KEPT
+    * (skipping never drops data).
     */
   private[graft] def filesForPoint(dir: String, snap: Snapshot,
       column: String, repr: String): Seq[String] = {
-    val sideCache = scala.collection.mutable.Map
-      .empty[String, Map[(String, String), Array[Long]]]
-    val posCache = scala.collection.mutable.Map.empty[(Int, Int), Array[Int]]
-    snap.files.filter { f =>
-      snap.blooms.get(f).flatMap(_.get(column)) match {
-        case None => true
-        case Some(ref) =>
-          val side = sideCache.getOrElseUpdate(ref.sidecar,
-            readSidecar(dir, ref.sidecar))
-          side.get((f, column)) match {
-            case Some(words) if words.length == ref.mBits / 32 =>
-              bloomMightContain(words, posCache.getOrElseUpdate(
-                (ref.mBits, ref.k), bloomPositions(ref.mBits, ref.k, repr)))
-            case _ => true
-          }
-      }
-    }
+    val probe = new BloomProbe(dir, snap, column)
+    snap.files.filter(f => probe.of(f).forall(_(repr)))
   }
 
-  /** Point-lookup read over an INTEGRAL column with Bloom-filter file
-    * skipping: only files whose per-file Bloom entry might contain
-    * `value` are handed to Spark (files without entries are always
-    * read), and the exact equality predicate is applied on top — so the
-    * result is EXACTLY `read(...).where(column = value)` with fewer
-    * files opened. The complement of [[readPruned]]: ranges skip on the
-    * CLUSTERED column, Blooms skip point probes on any OTHER column,
-    * where every file's range overlaps.
+  /** The ONE driver-side file pick for point keys, shared by the point
+    * lookups, the `txtable` provider's equality pruning and [[merge]]'s
+    * hit pick. `keys` are canonical values of `column` ([[canonicalKey]]:
+    * a Long for the "long" stats kind, a String for "string"); nulls
+    * match nothing in an equality and are left out by the caller.
+    *
+    * Per file, the recorded [min, max] is intersected first (a binary
+    * search over the sorted keys) and the Bloom probed second, over the
+    * keys inside the range only. Returns, each in snapshot order:
+    *  - `admitted`: files whose range holds some key that their Bloom
+    *    admits. A Bloom false positive only keeps an extra file;
+    *  - `unprobed`: files whose range holds some key (or that record no
+    *    range of the column's kind) but that carry no usable Bloom entry,
+    *    or whose column type has no Bloom kind. Only a scan can tell
+    *    whether these hold a key.
+    * Every other file holds none of `keys`: skipping never drops data.
+    */
+  private[graft] def filesForKeys(dir: String, snap: Snapshot, column: String,
+      keys: Seq[Any]): (Seq[String], Seq[String]) = {
+    val dt = snap.schema.fields.find(_.name == column).map(_.dataType)
+    val kind = dt.flatMap(statKind)
+    if (keys.isEmpty) return (Nil, Nil)
+    if (kind.isEmpty) return (Nil, snap.files)
+    val sorted: IndexedSeq[Any] = kind.get match {
+      case "long" => keys.map(_.asInstanceOf[Long]).sorted.toIndexedSeq
+      case _ => keys.map(_.asInstanceOf[String]).sortWith(utf8Cmp(_, _) < 0).toIndexedSeq
+    }
+    // compare a sorted key with a recorded bound repr of the same kind
+    val cmp: (Any, String) => Int = kind.get match {
+      case "long" => (k, b) => java.lang.Long.compare(k.asInstanceOf[Long], b.toLong)
+      case _ => (k, b) => utf8Cmp(k.asInstanceOf[String], b)
+    }
+    // the first index whose key is not below (or, `after`, above) `b`
+    def search(b: String, after: Boolean): Int = {
+      var (lo, hi) = (0, sorted.length)
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        val c = cmp(sorted(mid), b)
+        if (c < 0 || (after && c == 0)) lo = mid + 1 else hi = mid
+      }
+      lo
+    }
+    val probe = new BloomProbe(dir, snap, column)
+    val bloomable = dt.flatMap(bloomKind).isDefined
+    val admitted = Seq.newBuilder[String]
+    val unprobed = Seq.newBuilder[String]
+    snap.files.foreach { f =>
+      val inRange = snap.stats.get(f).flatMap(_.get(column)) match {
+        case Some(r) if kind.contains(r.kind) =>
+          sorted.slice(search(r.min, after = false), search(r.max, after = true))
+        case _ => sorted
+      }
+      if (inRange.nonEmpty) (if (bloomable) probe.of(f) else None) match {
+        case Some(admits) => if (inRange.exists(k => admits(k.toString))) admitted += f
+        case None => unprobed += f
+      }
+    }
+    (admitted.result(), unprobed.result())
+  }
+
+  /** A key value in the canonical domain of its column's [[statKind]]
+    * (what [[filesForKeys]] takes): integral values and dates (epoch
+    * days) and timestamps (epoch micros) as a Long, strings as a String.
+    * `v` is the Catalyst internal value of the column's type.
+    */
+  private def canonicalKey(v: Any): Any = v match {
+    case b: Byte => b.toLong
+    case s: Short => s.toLong
+    case i: Int => i.toLong
+    case s: org.apache.spark.unsafe.types.UTF8String => s.toString
+    case other => other
+  }
+
+  /** Point-lookup read over an INTEGRAL column with manifest file
+    * skipping ([[filesForKeys]]): only files whose recorded [min, max]
+    * holds `value` and whose Bloom entry might contain it are handed to
+    * Spark (files without stats or a Bloom entry are read), and the
+    * exact equality predicate is applied on top, so the result is EXACTLY
+    * `read(...).where(column = value)` with fewer files opened. Ranges
+    * skip on a CLUSTERED column; Blooms skip on any other column, where
+    * every file's range overlaps.
     */
   def readPointLookupLong(spark: SparkSession, dir: String, column: String,
       value: Long, version: Option[Long] = None): DataFrame =
-    readKeptPoint(spark, dir, version, column, value.toString,
-      functions.lit(value), probeKind = "integral")
+    readKeptPoint(spark, dir, version, column, value, functions.lit(value),
+      probeKind = "integral")
 
   /** [[readPointLookupLong]] for a STRING column. */
   def readPointLookupString(spark: SparkSession, dir: String, column: String,
@@ -734,16 +813,22 @@ object TxTable {
     case _ => None
   }
 
+  /** `key` is the lookup value in its canonical domain (a Long for an
+    * integral probe, a String for a string probe).
+    */
   private def readKeptPoint(spark: SparkSession, dir: String,
-      version: Option[Long], column: String, repr: String,
+      version: Option[Long], column: String, key: Any,
       value: org.apache.spark.sql.Column, probeKind: String): DataFrame = {
     import org.apache.spark.sql.functions.col
     val snap = pinned(dir, version)
     val colKind = snap.schema.fields.find(_.name == column)
       .flatMap(f => bloomKind(f.dataType))
     val kept =
-      if (colKind.contains(probeKind)) filesForPoint(dir, snap, column, repr)
-      else snap.files // kind mismatch: coercion could match what reprs miss
+      if (colKind.contains(probeKind)) {
+        val (admitted, unprobed) = filesForKeys(dir, snap, column, Seq(key))
+        val keep = (admitted ++ unprobed).toSet
+        snap.files.filter(keep)
+      } else snap.files // kind mismatch: coercion could match what reprs miss
     readSubset(spark, dir, snap, kept).where(col(column) === value)
   }
 
@@ -1348,13 +1433,26 @@ object TxTable {
     * cdc_system.py:327) as ONE atomic new version. Requires at most one
     * change row per key (run `ChangeApplier.dedupToLatest` first).
     *
+    * ==A small change set is merged from the driver==
+    * The change set is read once, at most [[DriverMergeCap]] + 1 rows of
+    * it in one action. When it fits under the cap, the duplicate-key
+    * check and a column stamp's epoch are loops over the collected rows,
+    * the hit files are picked on the driver, and the change set goes back
+    * to Spark as a local relation (no conversion job). The only other
+    * query is the data write. A trickle trigger's fixed cost is query
+    * planning, not task time, so two queries instead of four is what
+    * moves its freshness. A larger change set is checkpointed and takes
+    * the distributed path below; it pays one extra bounded read.
+    *
     * ==Copy-on-write file selection (the Delta MERGE shape)==
     * Only files that can contain a touched key are rewritten:
-    *  1. manifest-stats pre-prune — the touched keys' [min, max]
-    *     (computed by the same 1-row aggregate as the duplicate-key
-    *     check) intersected with each file's recorded range
-    *     (driver-side, O(files)); stat-less files stay candidates,
-    *  2. exact hit scan — candidates read with a KEY-ONLY projection +
+    *  1. driver pick ([[filesForKeys]] over the first key's touched
+    *     values): a file whose recorded [min, max] holds a touched key
+    *     that its Bloom admits is a hit. A Bloom false positive only
+    *     rewrites a file into the same rows. A large change set prunes
+    *     by the touched keys' global [min, max] instead (one aggregate);
+    *  2. exact hit scan, only for candidates the pick cannot decide (no
+    *     stats or no Bloom entry): read with a KEY-ONLY projection +
     *     `input_file_name`, semi-joined to the touched keys; each task
     *     returns its distinct file names and the driver unions them
     *     (O(tasks × files) driver rows, no shuffle).
@@ -1370,7 +1468,9 @@ object TxTable {
     * VECTORS (parquet row positions via `_metadata.row_index`, one
     * immutable sidecar per commit under `_txlog/dv/`) and lands only the
     * upsert images as new files — write cost O(changes), the
-    * Delta/Iceberg deletion-vector answer. Every read applies the DVs
+    * Delta/Iceberg deletion-vector answer. The positions come from a
+    * row-index scan of the picked files, semi-joined to the touched keys.
+    * Every read applies the DVs
     * (a broadcast anti-join on (file, position), [[dvApply]]); reads pay
     * one probe per row until [[compact]] rewrites survivors and folds
     * the DVs away, restoring the bare file-scan plan (and the maximal
@@ -1396,31 +1496,38 @@ object TxTable {
     mergeStamped(spark, dir, changes, keyCols, opCol, maxRetries,
       Left(epochId), arbiter, writeMode, streamId, (_, _) => ())
 
+  /** The most change rows [[merge]] handles on the driver. A collected
+    * row is a few hundred bytes of driver heap, and the driver hit pick
+    * is a binary search per file plus a Bloom probe per key in range, so
+    * 4,096 rows cost a few MB and milliseconds. The cap sits above the
+    * ~2,700 keys a 5,000-change Zipf backlog batch deduplicates to (the
+    * `cdc_replica` benchmark's), so backlog batches take the driver path
+    * along with every trickle trigger; a bulk load does not.
+    */
+  private val DriverMergeCap = 4096
+
   /** [[merge]] whose stamp is `Left(epochId)` or, for a streamed apply,
     * `Right(epochCol)`: the epoch is then the max of that column over the
-    * change set, computed in the merge's one key aggregate (no extra
+    * change set, computed from the rows the merge reads anyway (no extra
     * job), and the exactly-once check `epoch <= appliedEpoch(streamId)`
     * runs inside the CAS loop, against the very base the publish lands
     * on — so two appliers replaying one batch commit it once, and the
     * loser of the race re-derives into a skip. A column-stamped merge of
     * an empty change set, or of a replay, commits nothing and returns
-    * -1; a replay also calls `onReplay(epoch, mark)`.
+    * -1; a replay also calls `onReplay(epoch, mark)`. Change sets of at
+    * most `cap` rows take the driver path (tests lower it to reach the
+    * distributed one).
     */
   private[graft] def mergeStamped(spark: SparkSession, dir: String,
       changes: DataFrame, keyCols: Seq[String], opCol: String, maxRetries: Int,
       stamp: Either[Option[Long], String], arbiter: CommitArbiter,
       writeMode: String, streamId: Option[String],
-      onReplay: (Long, Long) => Unit): Long = {
+      onReplay: (Long, Long) => Unit, cap: Int = DriverMergeCap): Long = {
     import org.apache.spark.sql.functions.{col, count, input_file_name, lit, max, min}
     import org.apache.spark.sql.{Encoders, Row}
     require(keyCols.nonEmpty, "merge needs at least one key column")
     require(writeMode == "cow" || writeMode == "mor",
       s"writeMode must be cow or mor, got $writeMode")
-    // materialize the batch once: every stage below (dup check, bounds,
-    // hit scan, rewrite) and every CAS retry re-derives from it, and a
-    // nondeterministic input re-evaluated per stage could pass the dup
-    // check on one evaluation and disagree on the next
-    val chRaw = changes.localCheckpoint(true)
     // key types must match the table's exactly, or widen losslessly
     // (byte→short→int→long). Anything else — say STRING '5.0' against a
     // LONG key — is rejected LOUDLY: under ANSI the join's implicit cast
@@ -1435,47 +1542,94 @@ object TxTable {
     }
     keyCols.foreach { k =>
       val bt = keySchema(k).dataType
-      val ct = chRaw.schema(k).dataType
+      val ct = changes.schema(k).dataType
       require(bt == ct ||
           (widening.contains(ct) && widening.contains(bt) &&
             widening.indexOf(ct) <= widening.indexOf(bt)),
         s"merge key '$k' is $ct in the change batch but $bt in the table " +
           s"at $dir — cast the batch key explicitly")
     }
-    val ch = chRaw.select(chRaw.columns.map { c =>
+    def keyCast(df: DataFrame): DataFrame = df.select(df.columns.map { c =>
       if (keyCols.contains(c)) col(c).cast(keySchema(c).dataType).as(c)
       else col(c)
     }.toSeq: _*)
-    // ONE action for the dup check, the stats-prune bounds and a column
-    // stamp's epoch: per-key row counts (and max epoch), then a 1-row
-    // aggregate of the largest count, the first key's canonical (min,
-    // max, non-null count) — the bounds [[pruneByKeyRange]] would
-    // otherwise pay its own job for — and the max epoch. A streaming
-    // target pays every action here per micro-batch. groupBy (not
-    // count_distinct) keeps NULL key groups in play — count_distinct
-    // would skip them and miss a duplicate null-keyed pair.
+    val dupMessage = s"merge requires one change row per key (${keyCols.mkString(",")}); " +
+      "run ChangeApplier.dedupToLatest first"
     val k0Dt = keySchema(keyCols.head).dataType
-    val boundAggs = statKind(k0Dt).toSeq.flatMap { _ =>
-      val e = statCanonical(col(keyCols.head), k0Dt)
-      Seq(min(e), max(e), count(e))
+    // the one read of a small change set: at most cap + 1 rows, one action
+    val cast = keyCast(changes)
+    val head = cast.take(cap + 1)
+    // what every CAS attempt derives from: the change set (key-cast), its
+    // stamp, and the pick of (admitted, unprobed) candidate files per base
+    val (ch, epochId, pick) = if (head.length <= cap) {
+      // ==Driver path== a plain loop over the rows, no job: duplicate
+      // keys (nulls group together, as groupBy groups them), the stamp,
+      // and the first key's canonical touched values
+      val schema = cast.schema
+      if (stamp.isRight && head.isEmpty) return -1L
+      val keyIdx = keyCols.map(schema.fieldIndex)
+      val seen = new java.util.HashSet[Seq[Any]]()
+      require(head.forall(r => seen.add(keyIdx.map(i => groupingKey(r.get(i))))), dupMessage)
+      val epochId = stamp.fold(identity, c => {
+        val i = schema.fieldIndex(c)
+        val epochs = head.collect { case r if !r.isNullAt(i) => r.getLong(i) }
+        require(epochs.nonEmpty, s"merge stamp column '$c' is null on every change row")
+        Some(epochs.max)
+      })
+      val toCatalyst = org.apache.spark.sql.catalyst.CatalystTypeConverters
+        .createToCatalystConverter(k0Dt)
+      val keys = head.collect { case r if !r.isNullAt(keyIdx.head) =>
+        canonicalKey(toCatalyst(r.get(keyIdx.head)))
+      }.toSeq
+      // a local relation, built with no job; one partition, so the
+      // upserts land in one file as a coalesced change-set shuffle's do
+      val local = spark.createDataFrame(head.toSeq.asJava, schema).coalesce(1)
+      (local, epochId, (base: Snapshot) =>
+        // a base whose key type has since changed may match by coercion
+        // what the typed pick would miss: every file goes to the scan
+        if (base.schema.fields.find(_.name == keyCols.head).map(_.dataType)
+            .contains(k0Dt)) filesForKeys(dir, base, keyCols.head, keys)
+        else (Seq.empty[String], base.files))
+    } else {
+      // ==Distributed path== materialize the batch once: every stage
+      // below (dup check, bounds, hit scan, rewrite) and every CAS retry
+      // re-derives from it, and a nondeterministic input re-evaluated per
+      // stage could pass the dup check on one evaluation and disagree on
+      // the next
+      val ch = keyCast(changes.localCheckpoint(true))
+      // ONE action for the dup check, the stats-prune bounds and a column
+      // stamp's epoch: per-key row counts (and max epoch), then a 1-row
+      // aggregate of the largest count, the first key's canonical (min,
+      // max, non-null count) — the bounds [[pruneByKeyRange]] would
+      // otherwise pay its own job for — and the max epoch. groupBy (not
+      // count_distinct) keeps NULL key groups in play — count_distinct
+      // would skip them and miss a duplicate null-keyed pair.
+      val boundAggs = statKind(k0Dt).toSeq.flatMap { _ =>
+        val e = statCanonical(col(keyCols.head), k0Dt)
+        Seq(min(e), max(e), count(e))
+      }
+      val keyStats = ch.groupBy(keyCols.map(col): _*)
+        .agg(count(lit(1)).as("__n"), stamp.toSeq.map(c => max(col(c)).as("__e")): _*)
+        .agg(max(col("__n")), boundAggs ++ stamp.toSeq.map(_ => max(col("__e"))): _*)
+        .collect()(0)
+      // max(__n) is null exactly when the change set is empty
+      if (stamp.isRight && keyStats.isNullAt(0)) return -1L
+      require(keyStats.isNullAt(0) || keyStats.getLong(0) <= 1L, dupMessage)
+      val touchedBounds =
+        if (boundAggs.isEmpty) None
+        else Some(Row(keyStats.get(1), keyStats.get(2), keyStats.get(3)))
+      val epochId = stamp.fold(identity, c => {
+        require(!keyStats.isNullAt(keyStats.length - 1),
+          s"merge stamp column '$c' is null on every change row")
+        Some(keyStats.getLong(keyStats.length - 1))
+      })
+      // the stats pre-prune on the first key's global touched range,
+      // typed at the key column's own type ([[pruneByKeyRange]]; its
+      // type guards re-check the keys against each base's schema)
+      (ch, epochId, (base: Snapshot) => (Seq.empty[String],
+        pruneByKeyRange(base, ch.select(keyCols.map(col): _*), keyCols.head,
+          touchedBounds)))
     }
-    val keyStats = ch.groupBy(keyCols.map(col): _*)
-      .agg(count(lit(1)).as("__n"), stamp.toSeq.map(c => max(col(c)).as("__e")): _*)
-      .agg(max(col("__n")), boundAggs ++ stamp.toSeq.map(_ => max(col("__e"))): _*)
-      .collect()(0)
-    // max(__n) is null exactly when the change set is empty
-    if (stamp.isRight && keyStats.isNullAt(0)) return -1L
-    require(keyStats.isNullAt(0) || keyStats.getLong(0) <= 1L,
-      s"merge requires one change row per key (${keyCols.mkString(",")}); " +
-        "run ChangeApplier.dedupToLatest first")
-    val touchedBounds =
-      if (boundAggs.isEmpty) None
-      else Some(Row(keyStats.get(1), keyStats.get(2), keyStats.get(3)))
-    val epochId = stamp.fold(identity, c => {
-      require(!keyStats.isNullAt(keyStats.length - 1),
-        s"merge stamp column '$c' is null on every change row")
-      Some(keyStats.getLong(keyStats.length - 1))
-    })
     // no distinct(): the check above proved every key unique, so the hit
     // scans' semi joins and the rewrite's anti join see each key once
     // without paying a shuffle to re-prove it
@@ -1488,11 +1642,14 @@ object TxTable {
       // would fail against the declared schema
       val upserts = ch.filter(col(opCol).isin("INSERT", "UPDATE"))
         .select(base.schema.fields.map(f => col(f.name).cast(f.dataType)).toSeq: _*)
-      // 1. stats pre-prune on the first key's global touched range,
-      // typed at the key column's own type ([[pruneByKeyRange]]; its
-      // type guards re-check `touched` against THIS base's schema)
-      val candidates = pruneByKeyRange(base, touched, keyCols.head,
-        touchedBounds)
+      val (admitted, unprobed) = pick(base)
+      // the candidates with an exact key-only scan, semi-joined to the
+      // touched keys (Spark picks the build side; the touched keys are
+      // the small one)
+      def scanned(files: Seq[String], cols: Seq[org.apache.spark.sql.Column]) =
+        spark.read.schema(base.schema).parquet(files.map(f => s"$dir/$f"): _*)
+          .select(keyCols.map(col) ++ cols: _*)
+          .join(touched, keyCols, "left_semi")
       // rebuild stats and Bloom entries for the rewritten files with the
       // table's existing layout, so skipping survives merge churn
       val layout = layoutOf(base)
@@ -1507,14 +1664,11 @@ object TxTable {
           // exists to avoid for high-churn streaming targets).
           // already-dv-deleted rows may re-surface here; their positions
           // are already in the base dv map and dedup in the union below
+          val candidates = admitted ++ unprobed
           val hits: Array[(String, Long)] =
             if (candidates.isEmpty) Array.empty
-            else spark.read.schema(base.schema)
-              .parquet(candidates.map(f => s"$dir/$f"): _*)
-              .select(keyCols.map(col) :+
-                col("_metadata.file_path").as("__fp") :+
-                col("_metadata.row_index").as("__pos"): _*)
-              .join(touched, keyCols, "left_semi")
+            else scanned(candidates, Seq(col("_metadata.file_path").as("__fp"),
+                col("_metadata.row_index").as("__pos")))
               .select(col("__fp"), col("__pos")).collect()
               .map(r => (tableRel(r.getString(0)), r.getLong(1)))
           val written = writeData(upserts, dir, layout)
@@ -1542,23 +1696,20 @@ object TxTable {
           compose(base, Set.empty, written, "merge").copy(dvs = dvs)
         } else {
           // ==Copy-on-write== (the read-optimal default)
-          // 2. exact per-file hits: key-only projection + semi join (Spark
-          // picks the build side; the touched batch is the small one).
-          // Each task returns its own distinct file names — a scan task
+          // the admitted files are hits; the unprobed ones are scanned.
+          // Each scan task returns its own distinct file names — a task
           // reads a handful of files, so this is O(tasks × files) driver
           // strings with no shuffle — and the driver de-duplicates.
-          val hitFiles: Seq[String] =
-            if (candidates.isEmpty) Seq.empty
-            else spark.read.schema(base.schema)
-              .parquet(candidates.map(f => s"$dir/$f"): _*)
-              .select(keyCols.map(col) :+ input_file_name().as("__f"): _*)
-              .join(touched, keyCols, "left_semi")
+          val scannedHits: Seq[String] =
+            if (unprobed.isEmpty) Seq.empty
+            else scanned(unprobed, Seq(input_file_name().as("__f")))
               .select(col("__f")).as(Encoders.STRING)
               .mapPartitions((it: Iterator[String]) => it.toSet.iterator)(
                 Encoders.STRING)
-              .collect().distinct
-              .map(tableRel).toSeq.sorted
-          // 3. rewrite only the hit files; untouched files carry forward.
+              .collect().toSeq
+              .map(tableRel)
+          val hitFiles = (admitted ++ scannedHits).distinct.sorted
+          // rewrite only the hit files; untouched files carry forward.
           // The rewrite read is DV-APPLIED: carrying a dv-deleted row
           // into the rewritten file would RESURRECT it (the rewritten
           // file has no dv entry).
@@ -1581,6 +1732,16 @@ object TxTable {
       if (replayedAt.isDefined) None else Some(derive(base))
     }
     replayedAt.fold(version) { mark => onReplay(epochId.get, mark); -1L }
+  }
+
+  /** A key value as `groupBy` groups it: floating zeros and NaNs
+    * normalized, binary by content. Everything else compares by value.
+    */
+  private def groupingKey(v: Any): Any = v match {
+    case d: Double => java.lang.Double.doubleToLongBits(d + 0.0d)
+    case f: Float => java.lang.Float.floatToIntBits(f + 0.0f)
+    case b: Array[Byte] => b.toSeq
+    case other => other
   }
 
   /** A scanned file's absolute URI as its table-relative manifest entry

@@ -360,38 +360,17 @@ private[graft] object TxPrune {
       case _ => None
     }
 
-  /** Equality: range check plus Bloom probe (the Bloom covers point
-    * probes on columns where every file's range overlaps — the
-    * complement [[TxTable.readPointLookupLong]] documents).
+  /** Equality: range check plus Bloom probe, through the driver file
+    * pick the point lookups and the merge share ([[TxTable.filesForKeys]]).
     */
   private def pointKeep(dir: String, snap: Snapshot, a: AttributeReference,
       l: Literal): Option[Set[String]] = {
     if (l.value == null) return None // `c = null` never reaches a scan anyway
     val colType = snap.schema.fields.find(_.name == a.name).map(_.dataType)
       .getOrElse(return None)
-    longValue(l, colType) match {
-      case Some(v) =>
-        val ranged = rangeKeepLong(snap, a.name, Some((v, true)), Some((v, true)))
-        // Bloom reprs are written for integral columns only (date/ts
-        // canonicalize differently) — mirror bloomKind's domain
-        val bloomable = colType match {
-          case ByteType | ShortType | IntegerType | LongType => true
-          case _ => false
-        }
-        Some(if (bloomable && snap.blooms.nonEmpty)
-          ranged intersect
-            TxTable.filesForPoint(dir, snap, a.name, v.toString).toSet
-        else ranged)
-      case None =>
-        stringValue(l, colType) match {
-          case Some(s) =>
-            val ranged = rangeKeepString(snap, a.name, Some(s), Some(s))
-            Some(if (snap.blooms.nonEmpty)
-              ranged intersect
-                TxTable.filesForPoint(dir, snap, a.name, s).toSet
-            else ranged)
-          case None => None
-        }
+    longValue(l, colType).orElse(stringValue(l, colType)).map { v =>
+      val (admitted, unprobed) = TxTable.filesForKeys(dir, snap, a.name, Seq(v))
+      (admitted ++ unprobed).toSet
     }
   }
 

@@ -40,8 +40,8 @@ import org.apache.spark.sql.types.StructType
   * exactly-once ledger. Every commit carries it forward — merges, folds,
   * compactions, overwrites — so it survives vacuum, compaction and
   * checkpoint rebuilds. The latest-state target checks the ledger in
-  * the merge's CAS ([[graft.sources.TxTable.mergeStamped]]): the merge's
-  * key aggregate computes the stamp over the change set and the publish
+  * the merge's CAS ([[graft.sources.TxTable.mergeStamped]]): the merge
+  * computes the stamp over the change set it reads and the publish
   * skips a replay against the base it would land on, so the target runs
   * no gate job and needs no cached batch. The history and the aggregate
   * views, whose batch has several consumers, gate first
@@ -161,9 +161,11 @@ object CdcStream {
     * The first batch seeds the table with its surviving inserts (an
     * overwrite commit); every later batch merges the per-key-latest
     * change set under `strategy`, stamped with the max cdc_id of the
-    * rows it applies. The merge computes that stamp in its key aggregate
-    * and checks it against the ledger inside its CAS, so the batch has
-    * one consumer (the merge's checkpoint) and no gate job of its own. A
+    * rows it applies. The merge computes that stamp from the rows it
+    * reads and checks it against the ledger inside its CAS, so the batch
+    * has one consumer (the merge's one bounded read, where the dedup
+    * runs; a batch over the merge's driver cap is checkpointed instead)
+    * and no gate job of its own. A
     * later batch's rows all sit above every applied id, so it never
     * skips; a replay re-derives the same stamp and skips. A batch that
     * straddles the mark re-applies its older changes, and because replay

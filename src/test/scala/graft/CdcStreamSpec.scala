@@ -709,10 +709,10 @@ class CdcStreamSpec extends SparkSpecBase {
       CdcStream.applyTxBatch(batch, dir, DemoWorkload.UsersSpec, rowSchema,
         streamId = Some("s")))
     assert(ReplicationVerifier.fullyReplicated(table.snapshot, TxTable.read(s, dir)))
-    // 9 = the change-set checkpoint (where the dedup runs), the fused
-    // key aggregate that also carries the stamp, the hit scan and the
-    // data write, with their AQE stage jobs: no gate, stats or Bloom job
-    assert(jobs.size <= 9, s"applyTxBatch ran ${jobs.size} jobs: ${jobs.map(_._1)}")
+    // 4 = the one bounded read of the change set (where the dedup runs,
+    // with its AQE stage job), the touched keys' broadcast and the data
+    // write: no checkpoint, key aggregate, hit scan, gate, stats or Bloom job
+    assert(jobs.size <= 4, s"applyTxBatch ran ${jobs.size} jobs: ${jobs.map(_._1)}")
     val written = (TxTable.latest(dir).get.files.toSet -- before)
       .map(_.split('/').take(2).mkString("/"))
     assert(written.nonEmpty)

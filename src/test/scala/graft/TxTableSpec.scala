@@ -1213,6 +1213,27 @@ class TxTableSpec extends SparkSpecBase {
     assert(TxTable.readPointLookupString(s, dir, "v", "b").count() === 1L)
   }
 
+  test("point lookup prunes by stats before Blooms: a saturated Bloom still opens one file") {
+    val dir = Files.createTempDirectory("txlookupstats").toString
+    // 4 range-clustered files of 250 keys each under a 32-bit Bloom: every
+    // file's filter is saturated, so only the ranges can skip
+    TxTable.commit((0L until 1000L).map(i => (i, s"v$i")).toDF("id", "v")
+        .repartitionByRange(4, col("id")).sortWithinPartitions(col("id")),
+      dir, "overwrite", statsColumns = Seq("id"), bloomColumns = Seq("id"),
+      bloomBits = 32)
+    val snap = TxTable.latest(dir).get
+    assert(snap.files.size === 4)
+    assert(graft.sources.TxTable.filesForPoint(dir, snap, "id", "5000").size === 4,
+      "a 32-bit Bloom over 250 keys admits every probe")
+    def opened(v: Long) = TxTable.readPointLookupLong(s, dir, "id", v).inputFiles.toSet
+    assert(opened(5000L).isEmpty, "a key outside every range opens no file")
+    assert(TxTable.readPointLookupLong(s, dir, "id", 5000L).count() === 0L)
+    val inside = opened(600L)
+    assert(inside.size === 1, s"a key inside one range opens only that file: $inside")
+    assert(TxTable.readPointLookupLong(s, dir, "id", 600L)
+      .select("v").collect().map(_.getString(0)).toSeq === Seq("v600"))
+  }
+
   test("merge rejects a batch with two NULL-keyed change rows") {
     val dir = Files.createTempDirectory("txmergenull").toString
     TxTable.commit(Seq((1L, "a")).toDF("id", "v"), dir)
@@ -1376,13 +1397,42 @@ class TxTableSpec extends SparkSpecBase {
     val mergeJobs = jobsDuring(TxTable.merge(s, dir, ch, Seq("id")))
     assert(inferJobs(mergeJobs).isEmpty,
       s"merge ran a schema-inference job: ${mergeJobs.map(_._1)}")
-    // 8 = the batch checkpoint, the fused dup-check + key-bounds
-    // aggregate, the hit scan and the data write, with their AQE stage
-    // jobs; the writer records stats and Blooms, so no job follows it
-    assert(mergeJobs.size <= 8, s"merge ran ${mergeJobs.size} jobs: ${mergeJobs.map(_._1)}")
+    // 2 = the touched keys' broadcast and the data write: a local change
+    // set is read with no job, the stats and Blooms pick the hit files,
+    // and the writer records stats and Blooms, so no job follows it
+    assert(mergeJobs.size <= 2, s"merge ran ${mergeJobs.size} jobs: ${mergeJobs.map(_._1)}")
     assert(TxTable.read(s, dir).count() === 400L)
     // the detector is not vacuous: an inferring read IS seen
     assert(inferJobs(jobsDuring(s.read.parquet(s"$dir/${TxTable.latest(dir).get.files.head}")))
       .nonEmpty)
+  }
+
+  test("job-count guard: a small merge into a Bloom-keyed table scans no candidate before the write") {
+    val dir = Files.createTempDirectory("txjobsbloom").toString
+    TxTable.commit((0L until 2000L).map(i => (i, s"v$i")).toDF("id", "v")
+        .repartitionByRange(8, col("id")).sortWithinPartitions(col("id")),
+      dir, "overwrite", statsColumns = Seq("id"), bloomColumns = Seq("id"),
+      bloomBits = 1 << 16)
+    val base = TxTable.latest(dir).get.files
+    // a change set read from files and deduplicated, as a stream hands it
+    val logDir = Files.createTempDirectory("txjobsbloomlog").toString
+    Seq((3L, "x", "UPDATE", 1L), (3L, "y", "UPDATE", 2L), (1250L, "z", "DELETE", 3L),
+        (-5L, "n", "INSERT", 4L)).toDF("id", "v", "operation", "seq")
+      .write.mode("overwrite").parquet(logDir)
+    val ch = s.read.parquet(logDir)
+      .withColumn("rn", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy("id").orderBy(col("seq").desc)))
+      .where(col("rn") === 1).drop("rn", "seq")
+    val (jobs, scans) = jobsAndScansDuring(TxTable.merge(s, dir, ch, Seq("id")))
+    // the change set's read and dedup (2), the touched keys' broadcast and
+    // the data write: the hit files come from the stats and the Bloom
+    assert(jobs.size <= 4, s"merge ran ${jobs.size} jobs: ${jobs.map(_._1)}")
+    // the base files are scanned once, by the write's own query
+    val baseScans = scans.filter(l => base.exists(f => l.contains(f.split('/')(1))))
+    assert(baseScans.size === 1, s"a query before the write scanned the base: $baseScans")
+    assert(TxTable.read(s, dir).select("id", "v").as[(Long, String)].collect().toMap ===
+      ((0L until 2000L).map(i => i -> s"v$i").toMap - 1250L + (3L -> "y") + (-5L -> "n")))
+    val rewritten = base.toSet -- TxTable.latest(dir).get.files
+    assert(rewritten.size === 2, s"only the files holding 3 and 1250 rewrite: $rewritten")
   }
 }
