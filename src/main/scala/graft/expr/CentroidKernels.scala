@@ -55,26 +55,7 @@ case class NearestCentroid(child: Expression, cents: Seq[(Long, Seq[Double])],
     var bestC = Long.MaxValue
     var c = 0
     while (c < vecs.length) {
-      val cv = vecs(c)
-      var dot = 0.0; var na = 0.0; var nb = 0.0
-      var k = 0
-      while (k < n) {
-        val x = v(k); val y = cv(k)
-        dot += x * y; na += x * x; nb += y * y
-        k += 1
-      }
-      val d = math.sqrt(na) * math.sqrt(nb)
-      val raw = if (d == 0.0) 0.0 else dot / d
-      // rawScore: rank by the UNROUNDED cosine — bit-identical across
-      // engines (same sequential IEEE ops), so the argmax carries no
-      // round-boundary hazard (round-11 sf1 finding: a 7th-digit '5'
-      // boundary rounded differently by the two engines and flipped an
-      // assignment). Default keeps the historical 6-dp ranking.
-      val s =
-        if (rawScore) raw
-        else // Spark round(x, 6): BigDecimal.valueOf (Double.toString), HALF_UP
-          java.math.BigDecimal.valueOf(raw)
-            .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+      val s = NearestCentroid.score(v, vecs(c), rawScore)
       if (s > bestS || (s == bestS && ids(c) < bestC)) { bestS = s; bestC = ids(c) }
       c += 1
     }
@@ -93,4 +74,35 @@ case class NearestCentroid(child: Expression, cents: Seq[(Long, Seq[Double])],
 
   override protected def withNewChildInternal(newChild: Expression): NearestCentroid =
     copy(child = newChild)
+}
+
+object NearestCentroid {
+
+  /** The scoring contract every IVF centroid choice shares (assign,
+    * train, query probe): the [[CosineSim]] accumulation of `v` against
+    * centroid `cv` (dot/na/nb in ascending dims, `sqrt(na)*sqrt(nb)`,
+    * 0.0 for zero norms), then Spark `round(_, 6)` — BigDecimal.valueOf
+    * (Double.toString), HALF_UP, NaN and infinities passed through.
+    * Callers check `v.length == cv.length` (a mismatch is NULL upstream).
+    *
+    * rawScore: rank by the UNROUNDED cosine — bit-identical across
+    * engines (same sequential IEEE ops), so an argmax carries no
+    * round-boundary hazard (round-11 sf1 finding: a 7th-digit '5'
+    * boundary rounded differently by the two engines and flipped an
+    * assignment).
+    */
+  def score(v: Array[Double], cv: Array[Double], rawScore: Boolean): Double = {
+    var dot = 0.0; var na = 0.0; var nb = 0.0
+    var k = 0
+    while (k < v.length) {
+      val x = v(k); val y = cv(k)
+      dot += x * y; na += x * x; nb += y * y
+      k += 1
+    }
+    val d = math.sqrt(na) * math.sqrt(nb)
+    val raw = if (d == 0.0) 0.0 else dot / d
+    if (rawScore || raw.isNaN || raw.isInfinite) raw
+    else java.math.BigDecimal.valueOf(raw)
+      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+  }
 }

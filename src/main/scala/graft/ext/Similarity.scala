@@ -7,8 +7,13 @@ import org.apache.spark.sql.functions._
 /** Vector similarity search over embedding columns (`array<float>`) —
   * north-star surface for the `embeddings` table.
   *
-  * All math is `zip_with`/`aggregate` higher-order functions in double
-  * precision: codegen-friendly, no UDF, no driver-side loops. Three tiers:
+  * Per-row math runs inside Spark in double precision — native
+  * codegen'd kernels ([[graft.expr.CosineSim]],
+  * [[graft.expr.NearestCentroid]]) or `zip_with`/`aggregate` folds — with
+  * no UDF. The one driver-side loop is an IVF query batch's probe choice:
+  * the small query set is collected and each query's lists are ranked
+  * against the codebook by the kernels' own scoring contract
+  * ([[graft.expr.NearestCentroid.score]]). Three tiers:
   *
   *  - [[bruteForceTopK]] — exact baseline: broadcast the (small) query set
   *    against the corpus; the corpus is scanned ONCE regardless of query
@@ -21,7 +26,8 @@ import org.apache.spark.sql.functions._
   *  - [[ivfTopK]] — approximate: IVF coarse quantization; corpus vectors
   *    are assigned to their nearest centroid once ([[ivfAssign]], a
   *    zero-shuffle map using a literal centroid table), and a query
-  *    searches only its `nprobe` nearest inverted lists.
+  *    searches only its `nprobe` nearest inverted lists, picked on the
+  *    driver and handed to the one corpus scan as a plan literal.
   */
 object Similarity {
 
@@ -264,10 +270,14 @@ object Similarity {
 
   /** IVF approximate top-k: search only the `nprobe` inverted lists whose
     * centroids are nearest to the query. `assigned` is [[ivfAssign]]
-    * output (corpus + centroid_id). The probe-list choice is a per-query
-    * map over the literal centroid table ([[TopKAggregator]] over a tiny
-    * queries×nprobe frame); the candidate scan shuffles only rows in the
-    * probed lists, then reduces per query via partial top-k aggregation.
+    * output (corpus + centroid_id), in memory or an on-disk
+    * [[writeIvfIndex]] index. The query set is collected once (it must be
+    * small, as for any broadcast) and [[probeRoutes]] picks each query's
+    * lists on the driver; the candidate scan then keeps only the probed
+    * lists through a `centroid_id IN (…)` filter (manifest-pruned over an
+    * index) and meets its queries through a plan literal, with no join
+    * and no further job. Per query, the candidates reduce via partial
+    * top-k aggregation.
     */
   def ivfTopK(
       assigned: DataFrame,
@@ -295,37 +305,94 @@ object Similarity {
       queryVec: String,
       k: Int,
       nprobe: Int = 4): DataFrame = {
-    // nprobe nearest centroids per query: explode the literal centroid
-    // table against the (small) query set — queries×C rows, then top-nprobe
-    // per query via the same bounded aggregator.
-    val qc = queries.select(col(queryId).as("query_id"), col(queryVec).as("__qv"))
-      .select(col("query_id"), col("__qv"),
-        explode(typedLit(cents)).as("__ct"))
-      .select(col("query_id"), col("__qv"),
-        col("__ct._1").cast("long").as("centroid_id"),
-        round(cosine(col("__qv"), col("__ct._2")), 6).as("__cdist"))
-    val probes = TopK.perGroup(qc, Seq("query_id"), col("__cdist"), col("centroid_id"), nprobe,
-        idAlias = "centroid_id", scoreAlias = "__cdist")
-      .select(col("query_id"), col("centroid_id"))
-      .join(queries.select(col(queryId).as("query_id"), col(queryVec).as("__qv")), Seq("query_id"))
-
+    val qv = col(queryVec).cast("array<double>")
+    val (probed, routes) = probeRoutes(queries.select(col(queryId), qv,
+      struct(col(queryId).as("query_id"), qv.as("__qv"))), cents, nprobe)
     val scored = assigned
-      .select(col(corpusId).as("neighbor_id"), col(corpusVec).as("__cv"), col("centroid_id"))
-      .join(broadcast(probes), Seq("centroid_id"))
+      .filter(probedLists(probed))
+      .select(col(corpusId).as("neighbor_id"), col(corpusVec).as("__cv"),
+        explode(element_at(routes, col("centroid_id"))).as("__q"))
+      .select(col("neighbor_id"), col("__cv"), col("__q.query_id"), col("__q.__qv"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("score", round(cosine(col("__cv"), col("__qv")), 6))
     TopK.perGroup(scored, Seq("query_id"), col("score"), col("neighbor_id"), k)
       .select(col("query_id"), col("neighbor_id"), col("score"), col("rnk"))
   }
 
+  /** The `nprobe` lists a query group probes, best first: every list's
+    * centroid scored against every vector of the group by the shared
+    * contract ([[graft.expr.NearestCentroid.score]], rounded cosine),
+    * kept top-`nprobe` by score descending then id ascending — the
+    * [[TopKAggregator]] order. A null vector, a null element or a length
+    * mismatch scores NULL and is no candidate. A group of several
+    * vectors pools its candidates, so a list can appear more than once.
+    */
+  private[graft] def pickProbes(group: Seq[Array[Double]], cents: Seq[(Long, Seq[Double])],
+      nprobe: Int): Seq[Long] = {
+    require(nprobe > 0, s"nprobe must be positive, got $nprobe")
+    val cs = cents.map { case (id, cv) => (id, cv.toArray) }
+    val buf = new Array[(Double, Long)](nprobe)
+    var n = 0
+    for (v <- group if v != null; (id, cv) <- cs if cv.length == v.length) {
+      val s = graft.expr.NearestCentroid.score(v, cv, rawScore = false)
+      // bounded insertion: shift worse entries down, drop the k+1-th
+      var i = n
+      while (i > 0 && (s > buf(i - 1)._1 || (s == buf(i - 1)._1 && id < buf(i - 1)._2))) {
+        if (i < nprobe) buf(i) = buf(i - 1)
+        i -= 1
+      }
+      if (i < nprobe) { buf(i) = (s, id); if (n < nprobe) n += 1 }
+    }
+    buf.take(n).map(_._2).toSeq
+  }
+
+  /** `centroid_id IN (probed)` as an `InSet`: the `txtable` source prunes
+    * files on it, and generated code references the set rather than
+    * inlining each value, so a batch probing other lists reuses the
+    * compiled scan instead of compiling a new one.
+    */
+  private def probedLists(probed: Seq[Long]): Column = {
+    import org.apache.spark.sql.GraftSqlBridge.{column, expression}
+    column(org.apache.spark.sql.catalyst.expressions.InSet(
+      expression(col("centroid_id").cast("long")), probed.toSet))
+  }
+
+  /** Collect a small query set `q` = (query id, probe vector as
+    * `array<double>`, route entry struct) in one action, pick each query
+    * id's lists with [[pickProbes]], and return the probed list ids plus
+    * a literal `map<list id, array<entry>>` routing every list to the
+    * entries that probe it. Rows sharing a query id pool their probe
+    * candidates and every row of the group meets every probed list (once
+    * per time the list was picked), as a group-by on the query id joined
+    * back to the queries would. A null query id routes nowhere.
+    */
+  private def probeRoutes(q: DataFrame, cents: Seq[(Long, Seq[Double])],
+      nprobe: Int): (Seq[Long], Column) = {
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.{ArrayType, LongType, MapType}
+    val entryType = q.schema(2).dataType
+    val groups = q.collect().toSeq.filter(r => !r.isNullAt(0)).groupBy(_.get(0))
+    val routes = groups.values.toSeq.flatMap { rows =>
+      val vecs = rows.map(r => Option(r.getSeq[Any](1))
+        .filterNot(_.contains(null)).map(_.map(_.asInstanceOf[Double]).toArray).orNull)
+      for (c <- pickProbes(vecs, cents, nprobe); r <- rows) yield c -> r.getStruct(2)
+    }.groupMap(_._1)(_._2).toSeq.sortBy(_._1)
+    val mapType = MapType(LongType, ArrayType(entryType, containsNull = false),
+      valueContainsNull = false)
+    val lit = Literal(CatalystTypeConverters.createToCatalystConverter(mapType)(
+      scala.collection.immutable.ListMap(routes: _*)), mapType)
+    (routes.map(_._1), org.apache.spark.sql.GraftSqlBridge.column(lit))
+  }
+
   /** Persist an [[ivfAssign]]-ed corpus as an on-disk IVF index: a
     * [[graft.sources.TxTable]] hash-clustered on `centroid_id` (a few
     * lists per file) whose manifest records `centroid_id` stats and a
-    * Bloom per file, so a probe's `centroid_id IN (…)` opens ONLY the
-    * files holding its `nprobe` inverted lists. This is the
-    * materialization [[ivfTopK]]'s docs promise at scale: index build is
-    * one commit; each query's candidate scan is O(corpus / lists ×
-    * nprobe) I/O.
+    * Bloom per file. [[ivfTopK]] and [[ivfPqTopK]] over
+    * [[readIvfIndex]] filter the scan on `centroid_id IN (<probed
+    * lists>)`, so a query batch opens ONLY the files holding the lists it
+    * probes (asserted in the spec): index build is one commit; each
+    * query's candidate scan is O(corpus / lists × nprobe) I/O.
     */
   def writeIvfIndex(assigned: DataFrame, path: String, mode: String = "overwrite"): Unit = {
     // cluster by the probe column first: files that each hold every list
@@ -773,21 +840,21 @@ object Similarity {
     * ADC scoring restricted to the `nprobe` probed inverted lists of an
     * on-disk [[writeIvfPqIndex]] index.
     *
-    *  1. Probe selection: per query, the `nprobe` nearest coarse
-    *     centroids (cosine, identical recipe to [[ivfTopK]] — literal
-    *     codebook, bounded top-k aggregation).
+    *  1. Probe selection: the query set is collected once with each
+    *     query's ADC distance table, and the `nprobe` nearest coarse
+    *     centroids per query are picked on the driver (rounded cosine,
+    *     the same [[pickProbes]] as [[ivfTopK]]).
     *  2. The union of probed centroid ids — a bounded driver-side list
-    *     (≤ queries × nprobe, capped by the codebook size, same O(small)
-    *     class as the codebook collect) — becomes an `IN` filter on
-    *     the index ([[readIvfIndex]]): the candidate scan LISTS AND
-    *     OPENS ONLY the files whose manifest stats and Bloom admit a
-    *     probed list (asserted in the spec), and projects only
+    *     (≤ queries × nprobe, capped by the codebook size) — becomes an
+    *     `IN` filter on the index ([[readIvfIndex]]): the candidate scan
+    *     LISTS AND OPENS ONLY the files whose manifest stats and Bloom
+    *     admit a probed list (asserted in the spec), and projects only
     *     (id, codes) — never a float vector.
-    *  3. Each candidate row joins its probing queries on centroid_id
-    *     (broadcast — queries are small; a corpus vector meets each
-    *     query at most once since it lives in exactly one list) and is
-    *     ADC-scored by the native [[graft.expr.PqAdcScore]] kernel
-    *     against the query's broadcast distance table.
+    *  3. Each candidate row meets its probing queries' distance tables
+    *     through a plan-literal map keyed by centroid_id (no join, no
+    *     broadcast job; a corpus vector meets each query at most once
+    *     since it lives in exactly one list) and is ADC-scored by the
+    *     native [[graft.expr.PqAdcScore]] kernel.
     *  4. Per-query partial top-k ([[TopKAggregator]]) — shuffle traffic
     *     k × maps × queries, independent of corpus size.
     */
@@ -803,16 +870,6 @@ object Similarity {
     val sorted = pqSorted(cents)
     val sub = pqSubWidth(sorted, m)
     val qv = col(queryVec).cast("array<double>")
-    // 1. probe-list selection (same arithmetic as ivfTopK)
-    val qc = queries.select(col(queryId).as("query_id"), qv.as("__qv"))
-      .select(col("query_id"), col("__qv"),
-        explode(typedLit(cents)).as("__ct"))
-      .select(col("query_id"), col("__qv"),
-        col("__ct._1").cast("long").as("centroid_id"),
-        round(cosine(col("__qv"), col("__ct._2")), 6).as("__cdist"))
-    val probes = TopK.perGroup(qc, Seq("query_id"), col("__cdist"),
-        col("centroid_id"), nprobe, idAlias = "centroid_id", scoreAlias = "__cdist")
-      .select(col("query_id"), col("centroid_id"))
     // per-query ADC distance table, codebook-position order (see pqTopK)
     val dtab = array((0 until m).map { i =>
       array(sorted.map { case (_, c) =>
@@ -823,14 +880,10 @@ object Similarity {
           lit(0.0), (a, e) => a + e)
       }: _*)
     }: _*)
-    val probeTabs = probes.join(
-        queries.select(col(queryId).as("query_id"), dtab.as("__dtab")), Seq("query_id"))
-      // consumed twice (probed-id collect + broadcast join): materialize
-      // the queries×centroids probe selection and ADC tables once
-      .localCheckpoint(true)
-    // 2. bounded probed-list union → manifest-pruning IN filter
-    val probedIds = probeTabs.select(col("centroid_id")).distinct()
-      .collect().map(_.getLong(0)).sorted
+    // 1-2. one query collect: probe lists picked on the driver, tables
+    // computed by the executors, routed to their lists as a plan literal
+    val (probedIds, routes) = probeRoutes(queries.select(col(queryId), qv,
+      struct(col(queryId).as("query_id"), dtab.as("__dtab"))), cents, nprobe)
     val adc = org.apache.spark.sql.GraftSqlBridge.column(
       graft.expr.PqAdcScore(
         org.apache.spark.sql.GraftSqlBridge.expression(col("__codes")),
@@ -838,10 +891,10 @@ object Similarity {
         sorted, m))
     // 3-4. pruned code-only scan → per-query ADC score → partial top-k
     val scored = index
-      .filter(col("centroid_id").isin(probedIds: _*))
+      .filter(probedLists(probedIds))
       .select(col("id").as("neighbor_id"), col("codes").as("__codes"),
-        col("centroid_id"))
-      .join(broadcast(probeTabs), Seq("centroid_id"))
+        explode(element_at(routes, col("centroid_id"))).as("__q"))
+      .select(col("neighbor_id"), col("__codes"), col("__q.query_id"), col("__q.__dtab"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("score", round(-adc, 6))
     TopK.perGroup(scored, Seq("query_id"), col("score"), col("neighbor_id"), k)

@@ -859,6 +859,129 @@ class ExtOperatorsSpec extends SparkSpecBase {
         cents, q, "vec_id", "embedding", "vec_id", "embedding", k = 5, nprobe = 3)
       .orderBy("query_id", "rnk").collect().map(_.toString).toSeq
     assert(viaIdx === direct)
+    // the search itself prunes: its scan lists only the probed lists' files
+    assertManifestPruned(Similarity.ivfTopK(idx, cents, q, "vec_id", "embedding",
+      "vec_id", "embedding", k = 5, nprobe = 3), s"$tmp/idx", "centroid_id", strict = false)
+    assertManifestPruned(Similarity.ivfTopK(idx, cents, q.filter(col("vec_id") === 50L),
+      "vec_id", "embedding", "vec_id", "embedding", k = 5, nprobe = 2),
+      s"$tmp/idx", "centroid_id")
+  }
+
+  // The Spark-side probe selection ivfTopK used before probes were picked
+  // on the driver: explode the literal codebook per query, keep the top
+  // nprobe by TopK.perGroup. Output (query_id, centroid_id, rnk).
+  private def joinPlanProbes(queries: org.apache.spark.sql.DataFrame,
+      cents: Seq[(Long, Seq[Double])], queryId: String, queryVec: String,
+      nprobe: Int): org.apache.spark.sql.DataFrame = {
+    val qc = queries.select(col(queryId).as("query_id"), col(queryVec).as("__qv"))
+      .select(col("query_id"), col("__qv"), explode(typedLit(cents)).as("__ct"))
+      .select(col("query_id"), col("__qv"),
+        col("__ct._1").cast("long").as("centroid_id"),
+        round(Similarity.cosine(col("__qv"), col("__ct._2")), 6).as("__cdist"))
+    graft.ext.TopK.perGroup(qc, Seq("query_id"), col("__cdist"), col("centroid_id"), nprobe,
+        idAlias = "centroid_id", scoreAlias = "__cdist")
+      .select(col("query_id"), col("centroid_id"), col("rnk"))
+  }
+
+  // ivfTopK's earlier plan, kept as the parity twin: the probes join
+  // back to the queries and meet the corpus through a broadcast join.
+  private def joinPlanIvfTopK(assigned: org.apache.spark.sql.DataFrame,
+      cents: Seq[(Long, Seq[Double])], queries: org.apache.spark.sql.DataFrame,
+      corpusId: String, corpusVec: String, queryId: String, queryVec: String,
+      k: Int, nprobe: Int): org.apache.spark.sql.DataFrame = {
+    val probes = joinPlanProbes(queries, cents, queryId, queryVec, nprobe)
+      .select(col("query_id"), col("centroid_id"))
+      .join(queries.select(col(queryId).as("query_id"), col(queryVec).as("__qv")), Seq("query_id"))
+    val scored = assigned
+      .select(col(corpusId).as("neighbor_id"), col(corpusVec).as("__cv"), col("centroid_id"))
+      .join(broadcast(probes), Seq("centroid_id"))
+      .filter(col("neighbor_id") =!= col("query_id"))
+      .withColumn("score", round(Similarity.cosine(col("__cv"), col("__qv")), 6))
+    graft.ext.TopK.perGroup(scored, Seq("query_id"), col("score"), col("neighbor_id"), k)
+      .select(col("query_id"), col("neighbor_id"), col("score"), col("rnk"))
+  }
+
+  test("driver probe picker is bit-equal to the explode + TopK.perGroup selection") {
+    val rnd = new scala.util.Random(13)
+    // one-decimal components: collinear pairs and exact score ties abound
+    def vec(d: Int) = Seq.fill(d)(math.round(rnd.nextGaussian() * 10) / 10.0)
+    val base = Seq.tabulate(9)(i => (i.toLong * 3, vec(6)))
+    // a near-tie with axis 0: cosines 0.6000002 and 0.5999998 round to the same 6-dp score
+    def atCos(c: Double) = Seq(1.0, math.sqrt(1 - c * c) / c, 0.0, 0.0, 0.0, 0.0)
+    val cents = base ++ Seq(
+      (40L, base(2)._2),                    // duplicate vector: exact tie, id decides
+      (41L, base(4)._2.map(_ * 3)),         // scaled copy: same cosine up to rounding
+      (42L, Seq.fill(6)(0.0)),              // zero centroid scores 0.0
+      (43L, atCos(0.6000002)), (44L, atCos(0.5999998)))
+    val axis = Array(1.0, 0.0, 0.0, 0.0, 0.0, 0.0)
+    def sc(id: Long, raw: Boolean) = graft.expr.NearestCentroid.score(axis,
+      cents.find(_._1 == id).get._2.toArray, raw)
+    assert(sc(43L, raw = true) != sc(44L, raw = true) && sc(43L, raw = false) == sc(44L, raw = false))
+    val qs: Seq[(Long, Seq[java.lang.Double])] =
+      Seq.tabulate(40)(i => (i.toLong, vec(6).map(Double.box))) ++ Seq(
+        (100L, axis.toSeq.map(Double.box)),
+        (101L, Seq.fill(6)(Double.box(0.0))),             // zero query: every score 0.0
+        (102L, Seq[java.lang.Double](1.0, null, 0.0, 0.0, 0.0, 0.0)), // null element
+        (103L, Seq(1.0, 2.0, 3.0).map(Double.box)),        // ragged: shorter
+        (104L, vec(8).map(Double.box)),                    // ragged: longer
+        (105L, base(4)._2.map(Double.box)))                // ties 12 vs 41
+    val qdf = qs.toDF("qid", "qv")
+    for (nprobe <- Seq(1, 3, 8, cents.size + 5)) {
+      val viaPlan = joinPlanProbes(qdf, cents, "qid", "qv", nprobe).collect()
+        .groupBy(_.getLong(0))
+        .map { case (q, rs) => q -> rs.sortBy(_.getInt(2)).map(_.getLong(1)).toSeq }
+      qs.foreach { case (q, v) =>
+        val arr = if (v.contains(null)) null else v.map(_.doubleValue).toArray
+        assert(Similarity.pickProbes(Seq(arr), cents, nprobe) ===
+          viaPlan.getOrElse(q, Seq.empty), s"query $q, nprobe $nprobe")
+      }
+    }
+  }
+
+  test("ivfTopK equals the join-plan twin on edge-case query sets") {
+    val emb = Fixtures.embeddings(s, "/root/testdata/sf0.001")
+    val cents = Similarity.collectCentroids(
+      emb.filter(col("vec_id") % 61 === 0), "vec_id", "embedding")
+    val assigned = Similarity.ivfAssign(emb, cents, "embedding")
+    def rows(ids: Long*) = emb.filter(col("vec_id").isin(ids: _*))
+      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
+    val vecType = emb.schema("embedding").dataType
+    val q = rows(50L, 100L)                                  // query ids that are corpus ids
+      .unionByName(rows(150L).select(lit(null).cast("long").as("qid"), col("qv"))) // null id
+      .unionByName(Seq(900001L).toDF("qid").select(col("qid"),
+        lit(null).cast(vecType).as("qv")))                   // null vector
+      .unionByName(s.sql("SELECT 900002L AS qid, array(0.5F, 0.5F, 0.0F) AS qv")) // ragged
+      .unionByName(s.sql("SELECT 900003L AS qid, array(1.0F, CAST(NULL AS FLOAT)" +
+        (", 0.0F" * 62) + ") AS qv"))                        // null element
+      .unionByName(rows(200L)).unionByName(rows(250L).select(lit(200L).as("qid"), col("qv")))
+      .unionByName(rows(300L)).unionByName(rows(300L))      // duplicate ids
+      .unionByName(s.sql("SELECT 400L AS qid, CAST(NULL AS ARRAY<FLOAT>) AS qv"))
+      .unionByName(rows(400L))                               // a duplicate id with a null vector
+    for ((k, nprobe) <- Seq((5, 1), (5, 3), (10000, 2))) // k = 10000 exceeds every candidate set
+      assertSameRows(
+        Similarity.ivfTopK(assigned, cents, q, "vec_id", "embedding", "qid", "qv", k, nprobe),
+        joinPlanIvfTopK(assigned, cents, q, "vec_id", "embedding", "qid", "qv", k, nprobe),
+        s"k=$k nprobe=$nprobe")
+  }
+
+  test("ivfTopK over a parquet query set runs at most 3 Spark jobs") {
+    val tmp = java.nio.file.Files.createTempDirectory("ivfjobs").toString
+    val emb = Fixtures.embeddings(s, "/root/testdata/sf0.001")
+    val cents = Similarity.collectCentroids(
+      emb.filter(col("vec_id") % 61 === 0), "vec_id", "embedding")
+    val assigned = Similarity.ivfAssign(emb, cents, "embedding")
+    emb.filter(col("vec_id") % 50 === 0).limit(8)
+      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+      .write.parquet(s"$tmp/q")
+    val q = s.read.parquet(s"$tmp/q")
+    // the query collect, then the scan's shuffle stage and its result stage
+    val jobs = jobsDuring(Similarity.ivfTopK(assigned, cents, q, "vec_id", "embedding",
+      "qid", "qvec", k = 10, nprobe = 4).collect())
+    assert(jobs.size <= 3, jobs.map(_._1).mkString("\n"))
+    // the join-plan twin pays for its probe plan and broadcast in more jobs
+    val twinJobs = jobsDuring(joinPlanIvfTopK(assigned, cents, q, "vec_id", "embedding",
+      "qid", "qvec", k = 10, nprobe = 4).collect())
+    assert(twinJobs.size > 3, twinJobs.map(_._1).mkString("\n"))
   }
 
   test("an index written before the TxTable layout fails with its rebuild call") {
