@@ -165,11 +165,10 @@ object GraftTableFunctions {
     "graft_emb_dim_stats" -> tvf("(table, vecCol)", 2, 2)(
       (s: SparkSession, a: Seq[Any]) =>
         graft.ext.Similarity.dimStats(s.table(str(a(0))), str(a(1)))),
-    // routes through the REGISTERED source (round 10), not TxTable.read:
-    // the returned relation carries the manifest-consulting FileIndex, so
-    // a WHERE over the TVF prunes files exactly like a catalog table —
-    // before this, `SELECT * FROM graft_tx_read(dir) WHERE k = 5` paid a
-    // full scan while the same filter on a catalog name skipped
+    // the REGISTERED source: the relation carries the manifest-consulting
+    // FileIndex, so a WHERE over the TVF prunes files exactly like a
+    // catalog table or TxTable.read, and a MoR snapshot reads through
+    // the DV scan rule
     "graft_tx_read" -> tvf("(tableDir [, version])", 1, 2)(
       (s: SparkSession, a: Seq[Any]) => {
         val r = s.read.format("txtable")

@@ -34,6 +34,9 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
   * the rewrite swaps in the real [[ParquetFileFormat]]. A session that
   * never registered `graft.expr.GraftExtensions` therefore fails loudly
   * at execution instead of silently resurrecting deleted rows.
+  * [[TxTable]]'s own reads never carry the guard: they build the same
+  * relation over their picked files and apply [[TxTable.dvJoined]]
+  * themselves, so they need no rule.
   *
   * Insert targets never reach this rule as marked relations: by the
   * time custom post-hoc rules run (last), the built-in conversions have

@@ -89,28 +89,27 @@ object TxTable {
     * the recorded kind never skips (sound under schema history mixing).
     */
   final case class ColRange(kind: String, min: String, max: String) {
+    /** Whether a "long" range may hold a value in [lo, hi] (inclusive);
+      * a range of another kind always may.
+      */
     def overlapsLong(lo: Long, hi: Long): Boolean =
       kind != "long" || (max.toLong >= lo && min.toLong <= hi)
-    def overlapsString(lo: String, hi: String): Boolean =
-      kind != "string" || (utf8Cmp(max, lo) >= 0 && utf8Cmp(min, hi) <= 0)
+    /** [[overlapsLong]] for a "string" range. Strings have a least value,
+      * "", but no greatest, so only `hi` may be unbounded (None).
+      */
+    def overlapsString(lo: String, hi: Option[String]): Boolean =
+      kind != "string" || (utf8Cmp(max, lo) >= 0 && hi.forall(utf8Cmp(min, _) <= 0))
   }
 
   /** Unsigned lexicographic UTF-8 byte comparison — Spark's UTF8String
     * order (Java's String.compareTo diverges on supplementary planes:
     * UTF-16 surrogates sort below U+E000..U+FFFF, UTF-8 bytes above).
     */
-  private[graft] def utf8Cmp(a: String, b: String): Int = {
-    val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    var i = 0
-    val n = math.min(x.length, y.length)
-    while (i < n) {
-      val d = (x(i) & 0xff) - (y(i) & 0xff)
-      if (d != 0) return d
-      i += 1
-    }
-    x.length - y.length
-  }
+  private[graft] def utf8Cmp(a: String, b: String): Int =
+    java.util.Arrays.compareUnsigned(utf8(a), utf8(b))
+
+  private[graft] def utf8(s: String): Array[Byte] =
+    s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
 
   /** One file's Bloom-filter entry for one column: the filter geometry
     * plus the sidecar (relative to `_txlog/`) holding the bit words.
@@ -178,18 +177,23 @@ object TxTable {
         txns.updated(k, math.max(e, txns.getOrElse(k, e)))
       })
 
+    /** The one range test of every file pick: the files whose recorded
+      * range for `col` passes `keep`. A file with no recorded range for
+      * `col` is KEPT (skipping must never drop data).
+      */
+    private[sources] def filesWhere(col: String)(keep: ColRange => Boolean): Seq[String] =
+      files.filter(f => stats.get(f).flatMap(_.get(col)).forall(keep))
+
     /** Files whose [min, max] for `col` overlaps the LONG range [lo, hi]
       * — files with no recorded stats (or stats of another kind) are
       * KEPT (skipping must never drop data).
       */
     def filesOverlapping(col: String, lo: Long, hi: Long): Seq[String] =
-      files.filter(f => stats.get(f).flatMap(_.get(col))
-        .forall(_.overlapsLong(lo, hi)))
+      filesWhere(col)(_.overlapsLong(lo, hi))
 
     /** [[filesOverlapping]] for a STRING-keyed range, UTF-8 byte order. */
     def filesOverlappingString(col: String, lo: String, hi: String): Seq[String] =
-      files.filter(f => stats.get(f).flatMap(_.get(col))
-        .forall(_.overlapsString(lo, hi)))
+      filesWhere(col)(_.overlapsString(lo, Some(hi)))
   }
 
   /** The applied high-water of `streamId` at `dir` ([[Snapshot.appliedEpoch]]
@@ -322,31 +326,45 @@ object TxTable {
   /** Read the table at `version` (time travel) or at the latest version.
     * The read is pinned to one manifest: a concurrent commit cannot
     * change the file set mid-query, and each version reads under its
-    * own schema.
+    * own schema. A `WHERE` over it skips files exactly as one over
+    * `format("txtable")` does.
     */
   def read(spark: SparkSession, dir: String, version: Option[Long] = None): DataFrame = {
     val snap = pinned(dir, version)
     readSubset(spark, dir, snap, snap.files)
   }
 
-  /** Read a SUBSET of a snapshot's files (file-relative manifest paths,
-    * scanned in the given order) with the snapshot's deletion vectors
-    * applied — every pruned read (stats, Bloom, key-range) and every
-    * rewrite's input, so a DV-carrying table keeps file skipping instead
-    * of degrading to an O(table) scan between a MoR merge and the next
-    * fold, and no rewrite resurrects a deleted row. Value-identical to
-    * [[read]] when `files` covers every file (DVs for pruned-away files
-    * simply find nothing to anti-join).
+  /** `snap` listing only `files` (file-relative manifest paths, scanned
+    * in the given order) and only their deletion vectors.
+    */
+  private def subset(snap: Snapshot, files: Seq[String]): Snapshot = {
+    val keep = files.toSet
+    snap.copy(files = files, dvs = snap.dvs.filter { case (f, _) => keep(f) })
+  }
+
+  /** The raw scan of `snap`'s files, no deletion vector applied: the
+    * `txtable` provider's relation ([[TxTableProvider.relationFor]]) over
+    * a [[TxFileIndex]] — the one way a table's data files are read, so
+    * every `WHERE` over it skips files by manifest stats and Blooms.
+    */
+  private def scan(spark: SparkSession, dir: String, snap: Snapshot): DataFrame =
+    spark.baseRelationToDataFrame(
+      TxTableProvider.relationFor(spark, dir, snap, table = false))
+
+  /** Read a SUBSET of a snapshot's files ([[subset]]) with their
+    * deletion vectors applied — every pruned read (stats, Bloom,
+    * key-range) and every rewrite's input, so a DV-carrying table keeps
+    * file skipping instead of degrading to an O(table) scan between a
+    * MoR merge and the next fold, and no rewrite resurrects a deleted
+    * row. The DVs are applied here, not by [[TxDvScanRule]], so a session
+    * without `graft.expr.GraftExtensions` reads a MoR table correctly.
     */
   private def readSubset(spark: SparkSession, dir: String,
       snap: Snapshot, files: Seq[String]): DataFrame = {
-    if (files.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], snap.schema)
-    else
-      dvApply(spark, dir, snap,
-        spark.read.schema(snap.schema)
-          .parquet(files.map(f => s"$dir/$f"): _*))
+    import org.apache.spark.sql.functions.col
+    val sub = subset(snap, files)
+    val raw = scan(spark, dir, sub)
+    dvJoined(spark, dir, sub, raw).fold(raw)(_.select(raw.columns.map(col).toSeq: _*))
   }
 
   /** Parse one deletion-vector sidecar: fileRel → sorted positions. */
@@ -374,31 +392,19 @@ object TxTable {
     }
   }
 
-  /** Apply a snapshot's deletion vectors to a frame read from (a subset
-    * of) its files: broadcast anti-join on (file-relative path, parquet
-    * row position) via the `_metadata` columns. No DVs → the frame
-    * passes through untouched (zero plan overhead on the common path).
+  /** A snapshot's deletion vectors over a frame read from its files: a
+    * broadcast anti-join on (file-relative path, parquet row position)
+    * via the `_metadata` columns, WITHOUT a final projection — output =
+    * base's columns plus the `__dv_rel`/`__dv_pos` identity columns.
+    * None when the snapshot carries no DVs (zero plan overhead on the
+    * common path). [[TxDvScanRule]] projects back to the relation's own
+    * output attributes (which may include `_metadata`), [[readSubset]]
+    * to base's columns.
     *
     * Scale: the DV frame is O(deleted-since-last-compact) rows and
     * rides as a broadcast; the big side gains one codegen'd projection
     * (path suffix + row_index) and one broadcast-hash anti probe per
     * row — never a shuffle. [[compact]] restores the DV-free plan.
-    */
-  private def dvApply(spark: SparkSession, dir: String, snap: Snapshot,
-      base: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    dvJoined(spark, dir, snap, base) match {
-      case None => base
-      case Some(joined) => joined.select(base.columns.map(col).toSeq: _*)
-    }
-  }
-
-  /** The raw DV anti-join over `base` WITHOUT the final projection —
-    * output = base's columns plus the `__dv_rel`/`__dv_pos` identity
-    * columns. None when the snapshot carries no DVs. [[TxDvScanRule]]
-    * consumes this form (it projects back to the relation's own output
-    * attributes, which may include `_metadata`); [[dvApply]] wraps it
-    * for the plain read paths.
     */
   private[graft] def dvJoined(spark: SparkSession, dir: String,
       snap: Snapshot, base: DataFrame): Option[DataFrame] = {
@@ -434,8 +440,8 @@ object TxTable {
   def commit(df: DataFrame, dir: String, mode: String = "append",
       statsColumns: Seq[String] = Nil, epochId: Option[Long] = None,
       arbiter: CommitArbiter = LocalLinkArbiter,
-      bloomColumns: Seq[String] = Nil, bloomBits: Int = 1 << 13,
-      bloomK: Int = 5, streamId: Option[String] = None,
+      bloomColumns: Seq[String] = Nil, bloomBits: Int = DefaultBloomBits,
+      bloomK: Int = DefaultBloomK, streamId: Option[String] = None,
       expectVersion: Option[Long] = None): Long = {
     // knob validation BEFORE the batch write — a bad knob must not cost
     // a full data write that then rots as an orphan until vacuum
@@ -447,8 +453,15 @@ object TxTable {
   }
 
   private def layoutFor(statsColumns: Seq[String], bloomColumns: Seq[String],
-      bloomBits: Int = 1 << 13, bloomK: Int = 5): (Seq[String], Map[String, (Int, Int)]) =
+      bloomBits: Int = DefaultBloomBits, bloomK: Int = DefaultBloomK)
+      : (Seq[String], Map[String, (Int, Int)]) =
     (statsColumns, bloomColumns.map(c => c -> (bloomBits, bloomK)).toMap)
+
+  /** The Bloom geometry a commit records when none is asked for: 8,192
+    * bits (1 KiB) per file and column, probed by 5 hashes.
+    */
+  private[sources] val DefaultBloomBits = 1 << 13
+  private[sources] val DefaultBloomK = 5
 
   /** [[commit]] under a per-column layout ([[layoutOf]]'s shape), and
     * the ONE compose-against-any-base publish loop. `schema` overrides
@@ -562,7 +575,7 @@ object TxTable {
     * universal-hash scheme over the canonical value STRING (integrals in
     * decimal, strings raw; [[bloomPos]] over [[hash32Of]]), so the driver
     * re-probes it without Spark, and each 32-bit word is stored as a
-    * non-negative long. Only integral and string columns ([[bloomKind]])
+    * non-negative long. Only integral and string columns ([[bloomable]])
     * get filters — date/timestamp reprs would be ambiguous at lookup
     * time. Words land in ONE sidecar text file per commit under
     * `_txlog/bloom/` (manifests stay O(files) small lines; the sidecar is
@@ -575,7 +588,7 @@ object TxTable {
     def typeOf(c: String) = df.schema.fields.find(_.name == c).map(_.dataType)
     val statsCols = statsColumns.filter(c => typeOf(c).flatMap(statKind).isDefined)
     val bloomCols = bloomSpec.toSeq.sortBy(_._1)
-      .filter { case (c, _) => typeOf(c).flatMap(bloomKind).isDefined }
+      .filter { case (c, _) => typeOf(c).exists(bloomable) }
     Files.createDirectories(logDir(dir))
     val uuid = java.util.UUID.randomUUID().toString
     val commitRel = s"data/$uuid"
@@ -746,7 +759,7 @@ object TxTable {
       lo
     }
     val probe = new BloomProbe(dir, snap, column)
-    val bloomable = dt.flatMap(bloomKind).isDefined
+    val probed = dt.exists(bloomable)
     val admitted = Seq.newBuilder[String]
     val unprobed = Seq.newBuilder[String]
     snap.files.foreach { f =>
@@ -755,7 +768,7 @@ object TxTable {
           sorted.slice(search(r.min, after = false), search(r.max, after = true))
         case _ => sorted
       }
-      if (inRange.nonEmpty) (if (bloomable) probe.of(f) else None) match {
+      if (inRange.nonEmpty) (if (probed) probe.of(f) else None) match {
         case Some(admits) => if (inRange.exists(k => admits(k.toString))) admitted += f
         case None => unprobed += f
       }
@@ -777,59 +790,40 @@ object TxTable {
   }
 
   /** Point-lookup read over an INTEGRAL column with manifest file
-    * skipping ([[filesForKeys]]): only files whose recorded [min, max]
-    * holds `value` and whose Bloom entry might contain it are handed to
-    * Spark (files without stats or a Bloom entry are read), and the
-    * exact equality predicate is applied on top, so the result is EXACTLY
+    * skipping: only the files the `txtable` provider's equality pick
+    * admits ([[TxPrune.pointFiles]] — the recorded [min, max] holds
+    * `value` and the Bloom entry might contain it; files without stats or
+    * a Bloom entry are read) are handed to Spark, and the exact equality
+    * predicate is applied on top, so the result is EXACTLY
     * `read(...).where(column = value)` with fewer files opened. Ranges
     * skip on a CLUSTERED column; Blooms skip on any other column, where
     * every file's range overlaps.
     */
   def readPointLookupLong(spark: SparkSession, dir: String, column: String,
-      value: Long, version: Option[Long] = None): DataFrame =
-    readKeptPoint(spark, dir, version, column, value, functions.lit(value),
-      probeKind = "integral")
+      value: Long, version: Option[Long] = None): DataFrame = {
+    val snap = pinned(dir, version)
+    readSubset(spark, dir, snap, TxPrune.pointFiles(dir, snap, column, value))
+      .where(functions.col(column) === value)
+  }
 
   /** [[readPointLookupLong]] for a STRING column. */
   def readPointLookupString(spark: SparkSession, dir: String, column: String,
-      value: String, version: Option[Long] = None): DataFrame =
-    readKeptPoint(spark, dir, version, column, value, functions.lit(value),
-      probeKind = "string")
+      value: String, version: Option[Long] = None): DataFrame = {
+    val snap = pinned(dir, version)
+    readSubset(spark, dir, snap, TxPrune.pointFiles(dir, snap, column, value))
+      .where(functions.col(column) === value)
+  }
 
-  /** The bloom-probe domain of a column type: integral columns and
-    * strings only (what [[writeData]] records Blooms for). A probe
-    * whose kind differs from the column's must NOT prune — the equality
-    * predicate COERCES (e.g. `stringCol = 37` matches a stored "037",
-    * whose canonical repr "037" shares no bloom bits with "37"), so a
-    * repr-based skip would silently drop coercion matches — the same
-    * stance as [[pruneByKeyRange]]'s type guard.
+  /** Whether [[writeData]] records Blooms for a column type: integral
+    * columns and strings only.
     */
-  private def bloomKind(dt: DataType): Option[String] = dt match {
+  private def bloomable(dt: DataType): Boolean = dt match {
     case org.apache.spark.sql.types.ByteType |
          org.apache.spark.sql.types.ShortType |
          org.apache.spark.sql.types.IntegerType |
-         org.apache.spark.sql.types.LongType => Some("integral")
-    case org.apache.spark.sql.types.StringType => Some("string")
-    case _ => None
-  }
-
-  /** `key` is the lookup value in its canonical domain (a Long for an
-    * integral probe, a String for a string probe).
-    */
-  private def readKeptPoint(spark: SparkSession, dir: String,
-      version: Option[Long], column: String, key: Any,
-      value: org.apache.spark.sql.Column, probeKind: String): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val snap = pinned(dir, version)
-    val colKind = snap.schema.fields.find(_.name == column)
-      .flatMap(f => bloomKind(f.dataType))
-    val kept =
-      if (colKind.contains(probeKind)) {
-        val (admitted, unprobed) = filesForKeys(dir, snap, column, Seq(key))
-        val keep = (admitted ++ unprobed).toSet
-        snap.files.filter(keep)
-      } else snap.files // kind mismatch: coercion could match what reprs miss
-    readSubset(spark, dir, snap, kept).where(col(column) === value)
+         org.apache.spark.sql.types.LongType |
+         org.apache.spark.sql.types.StringType => true
+    case _ => false
   }
 
   /** The stats ordering domain for a column type: integral, date
@@ -1027,9 +1021,11 @@ object TxTable {
     * `read(...).where(lo <= column <= hi)` with fewer files opened.
     */
   def readPruned(spark: SparkSession, dir: String, column: String,
-      lo: Long, hi: Long, version: Option[Long] = None): DataFrame =
-    readKeptRange(spark, dir, version, column,
-      _.filesOverlapping(column, lo, hi), functions.lit(lo), functions.lit(hi))
+      lo: Long, hi: Long, version: Option[Long] = None): DataFrame = {
+    val snap = pinned(dir, version)
+    readSubset(spark, dir, snap, snap.filesOverlapping(column, lo, hi))
+      .where(functions.col(column).between(lo, hi))
+  }
 
   /** [[readPruned]] for a STRING column: manifest stats are recorded in
     * UTF-8 byte order — the same order Spark's string comparison uses —
@@ -1037,21 +1033,10 @@ object TxTable {
     * with only the overlapping files opened.
     */
   def readPrunedString(spark: SparkSession, dir: String, column: String,
-      lo: String, hi: String, version: Option[Long] = None): DataFrame =
-    readKeptRange(spark, dir, version, column,
-      _.filesOverlappingString(column, lo, hi), functions.lit(lo), functions.lit(hi))
-
-  /** Shared body of the pruned reads: resolve the snapshot, keep only
-    * the overlapping files, re-apply the exact range predicate on top.
-    */
-  private def readKeptRange(spark: SparkSession, dir: String,
-      version: Option[Long], column: String,
-      keepOf: Snapshot => Seq[String],
-      lo: org.apache.spark.sql.Column, hi: org.apache.spark.sql.Column): DataFrame = {
-    import org.apache.spark.sql.functions.col
+      lo: String, hi: String, version: Option[Long] = None): DataFrame = {
     val snap = pinned(dir, version)
-    readSubset(spark, dir, snap, keepOf(snap))
-      .where(col(column) >= lo && col(column) <= hi)
+    readSubset(spark, dir, snap, snap.filesOverlappingString(column, lo, hi))
+      .where(functions.col(column).between(lo, hi))
   }
 
   /** COUNT(*) from the MANIFEST alone when possible: Σ per-file `nrows`
@@ -1389,8 +1374,7 @@ object TxTable {
               lit(null).cast("string").as("change_type"): _*)
           return (o0, dataCols.toSeq)
         }
-        widen(spark.read.schema(toSnap.schema)
-          .parquet(added.map(f => s"$dir/$f"): _*), toSnap.schema)
+        widen(readSubset(spark, dir, toSnap, added), toSnap.schema)
       } else widen(read(spark, dir, Some(toVersion)), toSnap.schema)
     // append path: the base is consulted only for keys the delta
     // carries, so manifest stats (when recorded for the first key)
@@ -1471,7 +1455,7 @@ object TxTable {
     * Delta/Iceberg deletion-vector answer. The positions come from a
     * row-index scan of the picked files, semi-joined to the touched keys.
     * Every read applies the DVs
-    * (a broadcast anti-join on (file, position), [[dvApply]]); reads pay
+    * (a broadcast anti-join on (file, position), [[dvJoined]]); reads pay
     * one probe per row until [[compact]] rewrites survivors and folds
     * the DVs away, restoring the bare file-scan plan (and the maximal
     * [[TxTableProvider]] relation). Results are IDENTICAL to the CoW
@@ -1647,7 +1631,7 @@ object TxTable {
       // touched keys (Spark picks the build side; the touched keys are
       // the small one)
       def scanned(files: Seq[String], cols: Seq[org.apache.spark.sql.Column]) =
-        spark.read.schema(base.schema).parquet(files.map(f => s"$dir/$f"): _*)
+        scan(spark, dir, subset(base, files))
           .select(keyCols.map(col) ++ cols: _*)
           .join(touched, keyCols, "left_semi")
       // rebuild stats and Bloom entries for the rewritten files with the

@@ -12,9 +12,11 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** `spark.read.format("txtable")` / `CREATE TABLE ... USING txtable`:
   * the [[TxTable]] format as a registered Spark data source, making the
-  * manifest-stat + Bloom file skipping the DEFAULT read path instead of
-  * an opt-in API ([[TxTable.readPruned]]/[[TxTable.readPointLookupLong]]
-  * remain as the explicit forms).
+  * manifest-stat + Bloom file skipping the DEFAULT read path. Its scan
+  * relation ([[TxTableProvider.relationFor]]) is the only way a table's
+  * data files are read: [[TxTable.read]], the explicit picks
+  * ([[TxTable.readPruned]], [[TxTable.readPointLookupLong]]), the change
+  * feed and every rewrite build it over the files they picked.
   *
   * ==Why a `FileIndex`, not a bespoke DSv2 reader==
   * The relation returned for a scan is Spark's own [[HadoopFsRelation]]
@@ -86,7 +88,7 @@ class TxTableProvider extends RelationProvider with SchemaRelationProvider
     val snap = version.map(TxTable.snapshot(dir, _)).orElse(TxTable.latest(dir))
       .getOrElse(throw new IllegalArgumentException(
         s"no committed TxTable version at $dir"))
-    TxTableProvider.relationFor(sqlContext.sparkSession, dir, snap)
+    TxTableProvider.relationFor(sqlContext.sparkSession, dir, snap, table = true)
   }
 
   /** `CREATE TABLE t (cols...) USING txtable` (and every later catalog
@@ -122,8 +124,9 @@ class TxTableProvider extends RelationProvider with SchemaRelationProvider
       TxTable.commit(data, dir, m,
         statsColumns = csv("statsColumns"),
         bloomColumns = csv("bloomColumns"),
-        bloomBits = parameters.get("bloomBits").map(_.toInt).getOrElse(1 << 13),
-        bloomK = parameters.get("bloomK").map(_.toInt).getOrElse(5))
+        bloomBits = parameters.get("bloomBits").map(_.toInt)
+          .getOrElse(TxTable.DefaultBloomBits),
+        bloomK = parameters.get("bloomK").map(_.toInt).getOrElse(TxTable.DefaultBloomK))
       ()
     }
     val exists = TxTable.latest(dir).isDefined
@@ -142,14 +145,20 @@ class TxTableProvider extends RelationProvider with SchemaRelationProvider
 
 object TxTableProvider {
 
-  /** The scan relation for one pinned snapshot. A snapshot carrying
-    * deletion vectors plans with [[DvGuardParquetFileFormat]] — the
-    * format IS the DV marker: [[TxDvScanRule]] expands every
-    * guard-formatted relation into (clean file scan ⟕̸ broadcast DV
-    * anti-join) during post-hoc resolution, so a MoR table reads
-    * through the SAME vectorized, whole-stage-codegen'd,
-    * TxFileIndex-pruned parquet path as a clean one — the Delta
-    * `TahoeLogFileIndex`+DV composition. The marker must live in the
+  /** The scan relation for one pinned snapshot: every column nullable,
+    * as Spark's own file sources read (a file may hold a null the
+    * manifest schema does not declare). With `table` it is the
+    * `format("txtable")` relation, which an INSERT may target; without,
+    * a read of the snapshot's files ([[TxTable]]'s own reads, over the
+    * files they picked), which applies the deletion vectors itself.
+    *
+    * A table relation over a snapshot carrying deletion vectors plans
+    * with [[DvGuardParquetFileFormat]] — the format IS the DV marker:
+    * [[TxDvScanRule]] expands every guard-formatted relation into
+    * (clean file scan ⟕̸ broadcast DV anti-join) during post-hoc
+    * resolution, so a MoR table reads through the SAME vectorized,
+    * whole-stage-codegen'd, TxFileIndex-pruned parquet path as a clean
+    * one — the Delta `TahoeLogFileIndex`+DV composition. The marker must live in the
     * FILE FORMAT (not the options map): the catalog's relation cache
     * rebuilds resolved relations with the CatalogTable's own storage
     * options, preserving only location + format. And a session that
@@ -157,17 +166,26 @@ object TxTableProvider {
     * of silently resurrecting deleted rows.
     */
   private[graft] def relationFor(spark: SparkSession, dir: String,
-      snap: TxTable.Snapshot): BaseRelation =
+      snap: TxTable.Snapshot, table: Boolean): HadoopFsRelation =
     HadoopFsRelation(
-      location = new TxFileIndex(spark, dir, snap),
+      location = new TxFileIndex(spark, dir, snap, fileRoots = !table),
       partitionSchema = new StructType(),
-      dataSchema = snap.schema,
+      dataSchema = nullable(snap.schema).asInstanceOf[StructType],
       bucketSpec = None,
       fileFormat =
-        if (snap.dvs.nonEmpty) new DvGuardParquetFileFormat()
+        if (table && snap.dvs.nonEmpty) new DvGuardParquetFileFormat()
         else new ParquetFileFormat(),
       options = Map("graft.txtable.dir" -> dir,
         "graft.txtable.version" -> snap.version.toString))(spark)
+
+  private def nullable(dt: DataType): DataType = dt match {
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType),
+      valueContainsNull = true)
+    case other => other
+  }
 }
 
 /** Parquet format that refuses to build readers: the correctness fuse
@@ -198,9 +216,10 @@ private[graft] class DvGuardParquetFileFormat extends ParquetFileFormat {
 /** Manifest-backed [[FileIndex]] for one pinned [[TxTable.Snapshot]]:
   * `listFiles` intersects the scan's data filters with the manifest's
   * per-file ranges and Bloom sidecars ([[TxPrune]]) — Spark's planner
-  * calls it with exactly the filters that reached the scan, so the
-  * skipping a user previously had to request via `readPruned*` happens
-  * on every `WHERE`.
+  * calls it with exactly the filters that reached the scan, so every
+  * `WHERE` skips files, over `format("txtable")` and [[TxTable.read]]
+  * alike. A snapshot restricted to picked files (the explicit reads, the
+  * change feed, the rewrites) lists only those.
   *
   * File statuses come from one `getFileStatus` per manifest entry at
   * construction — O(files) driver RPCs once per DataFrame, the listing
@@ -209,8 +228,9 @@ private[graft] class DvGuardParquetFileFormat extends ParquetFileFormat {
   * refinement), a write-side change this format can adopt without
   * touching readers (unknown manifest lines are ignored).
   */
-class TxFileIndex(spark: SparkSession, private[graft] val tableDir: String,
-    private[graft] val snap: TxTable.Snapshot) extends FileIndex {
+class TxFileIndex private[sources] (spark: SparkSession,
+    private[graft] val tableDir: String, private[graft] val snap: TxTable.Snapshot,
+    fileRoots: Boolean) extends FileIndex {
 
   private def dir: String = tableDir
 
@@ -241,7 +261,12 @@ class TxFileIndex(spark: SparkSession, private[graft] val tableDir: String,
     }
   }
 
-  override def rootPaths: Seq[HadoopPath] = Seq(new HadoopPath(dir))
+  /** The table directory — the one path an INSERT into the table
+    * targets — or, with `fileRoots`, the listed files, as a scan's
+    * `Location` shows them for a parquet read of those files.
+    */
+  override def rootPaths: Seq[HadoopPath] =
+    if (fileRoots) statuses.map(_._2.getPath) else Seq(new HadoopPath(dir))
 
   override def partitionSchema: StructType = new StructType()
 
@@ -276,7 +301,7 @@ class TxFileIndex(spark: SparkSession, private[graft] val tableDir: String,
   */
 private[graft] object TxPrune {
 
-  import TxTable.{ColRange, Snapshot, utf8Cmp}
+  import TxTable.{ColRange, Snapshot, utf8, utf8Cmp}
 
   /** The manifest files admitted by the conjunction `dataFilters`. */
   def keptFiles(dir: String, snap: Snapshot,
@@ -286,15 +311,22 @@ private[graft] object TxPrune {
     else sets.reduce(_ intersect _)
   }
 
+  /** The files of `snap` that `column = value` admits, in snapshot order:
+    * [[TxTable.readPointLookupLong]]'s pick is the equality pick of a
+    * `WHERE` over the provider.
+    */
+  def pointFiles(dir: String, snap: Snapshot, column: String, value: Any): Seq[String] =
+    pointKeep(dir, snap, column, Seq(Literal(value))).fold(snap.files)(k => snap.files.filter(k))
+
   /** Files possibly matching `e`, or None when `e` cannot prune. */
   private def keepFor(dir: String, snap: Snapshot,
       e: Expression): Option[Set[String]] = e match {
-    case EqualTo(a: AttributeReference, l: Literal) => pointKeep(dir, snap, a, l)
-    case EqualTo(l: Literal, a: AttributeReference) => pointKeep(dir, snap, a, l)
+    case EqualTo(a: AttributeReference, l: Literal) => pointKeep(dir, snap, a.name, Seq(l))
+    case EqualTo(l: Literal, a: AttributeReference) => pointKeep(dir, snap, a.name, Seq(l))
     case EqualNullSafe(a: AttributeReference, l: Literal) if l.value != null =>
-      pointKeep(dir, snap, a, l)
+      pointKeep(dir, snap, a.name, Seq(l))
     case EqualNullSafe(l: Literal, a: AttributeReference) if l.value != null =>
-      pointKeep(dir, snap, a, l)
+      pointKeep(dir, snap, a.name, Seq(l))
     case GreaterThan(a: AttributeReference, l: Literal) =>
       boundKeep(snap, a, l, lower = true, inclusive = false)
     case GreaterThanOrEqual(a: AttributeReference, l: Literal) =>
@@ -313,10 +345,9 @@ private[graft] object TxPrune {
     case LessThanOrEqual(l: Literal, a: AttributeReference) =>
       boundKeep(snap, a, l, lower = true, inclusive = true)
     case In(a: AttributeReference, vs) if vs.forall(_.isInstanceOf[Literal]) =>
-      unionKeep(vs.map(v => pointKeep(dir, snap, a, v.asInstanceOf[Literal])))
+      pointKeep(dir, snap, a.name, vs.map(_.asInstanceOf[Literal]))
     case InSet(a: AttributeReference, vs) =>
-      unionKeep(vs.toSeq.map(v =>
-        pointKeep(dir, snap, a, Literal.create(v, a.dataType))))
+      pointKeep(dir, snap, a.name, vs.toSeq.map(Literal.create(_, a.dataType)))
     case StartsWith(a: AttributeReference, Literal(p: UTF8String, StringType)) =>
       prefixKeep(snap, a, p.toString)
     case Or(x, y) =>
@@ -331,25 +362,22 @@ private[graft] object TxPrune {
     case _ => None // IsNotNull, casts, UDFs, ... — no sound skip
   }
 
-  private def unionKeep(ks: Seq[Option[Set[String]]]): Option[Set[String]] =
-    if (ks.isEmpty || ks.exists(_.isEmpty)) None
-    else Some(ks.flatten.reduce(_ union _))
+  private val integral: Set[DataType] = Set(ByteType, ShortType, IntegerType, LongType)
 
-  /** The canonical long for an integral/date/timestamp literal whose
-    * type EQUALS the column's — the domain [[TxTable]] stats are
+  /** The canonical long of `l` in the domain [[TxTable]] stats are
     * recorded in (date = epoch days, timestamp = epoch micros, exactly
-    * the Catalyst internal values). A differing literal type means the
-    * comparison coerces and the stats domain does not apply.
+    * the Catalyst internal values): an integral literal against an
+    * integral column (the comparison widens both, exactly), or a date or
+    * timestamp literal of the column's own type. Any other pairing
+    * coerces — `stringCol = 37` matches a stored "037", which shares
+    * neither range nor Bloom bits with 37 — so the stats domain does not
+    * apply.
     */
   private def longValue(l: Literal, colType: DataType): Option[Long] =
-    if (l.value == null || l.dataType != colType) None
-    else (l.value, colType) match {
-      case (v: Byte, ByteType) => Some(v.toLong)
-      case (v: Short, ShortType) => Some(v.toLong)
-      case (v: Int, IntegerType) => Some(v.toLong)
-      case (v: Long, LongType) => Some(v)
-      case (v: Int, DateType) => Some(v.toLong)
-      case (v: Long, TimestampType) => Some(v)
+    (l.value, l.dataType, colType) match {
+      case (v: Number, lt, ct) if integral(lt) && integral(ct) => Some(v.longValue)
+      case (v: Int, DateType, DateType) => Some(v.toLong)
+      case (v: Long, TimestampType, TimestampType) => Some(v)
       case _ => None
     }
 
@@ -360,17 +388,21 @@ private[graft] object TxPrune {
       case _ => None
     }
 
-  /** Equality: range check plus Bloom probe, through the driver file
-    * pick the point lookups and the merge share ([[TxTable.filesForKeys]]).
+  /** Equality with any of `ls`: range check plus Bloom probe, through ONE
+    * call of the driver pick the merge's hit pick shares
+    * ([[TxTable.filesForKeys]]), so each Bloom sidecar is parsed once
+    * however many values are probed. A null or uncanonicalisable value,
+    * or no value at all, keeps every file.
     */
-  private def pointKeep(dir: String, snap: Snapshot, a: AttributeReference,
-      l: Literal): Option[Set[String]] = {
-    if (l.value == null) return None // `c = null` never reaches a scan anyway
-    val colType = snap.schema.fields.find(_.name == a.name).map(_.dataType)
+  private def pointKeep(dir: String, snap: Snapshot, column: String,
+      ls: Seq[Literal]): Option[Set[String]] = {
+    val colType = snap.schema.fields.find(_.name == column).map(_.dataType)
       .getOrElse(return None)
-    longValue(l, colType).orElse(stringValue(l, colType)).map { v =>
-      val (admitted, unprobed) = TxTable.filesForKeys(dir, snap, a.name, Seq(v))
-      (admitted ++ unprobed).toSet
+    val keys = ls.map(l => longValue(l, colType).orElse(stringValue(l, colType)))
+    if (keys.isEmpty || keys.exists(_.isEmpty)) None
+    else {
+      val (admitted, unprobed) = TxTable.filesForKeys(dir, snap, column, keys.flatten)
+      Some((admitted ++ unprobed).toSet)
     }
   }
 
@@ -391,15 +423,15 @@ private[graft] object TxPrune {
         adj match {
           case None => Some(Set.empty) // exclusive bound beyond the domain
           case Some(b) =>
-            Some(if (lower) rangeKeepLong(snap, a.name, Some((b, true)), None)
-            else rangeKeepLong(snap, a.name, None, Some((b, true))))
+            Some((if (lower) snap.filesOverlapping(a.name, b, Long.MaxValue)
+            else snap.filesOverlapping(a.name, Long.MinValue, b)).toSet)
         }
       case None =>
         stringValue(l, colType).map { s =>
           // exclusive string bounds are treated as inclusive — sound
           // (admits at most the boundary value's files)
-          if (lower) rangeKeepString(snap, a.name, Some(s), None)
-          else rangeKeepString(snap, a.name, None, Some(s))
+          (if (lower) snap.filesWhere(a.name)(_.overlapsString(s, None))
+          else snap.filesOverlappingString(a.name, "", s)).toSet
         }
     }
   }
@@ -411,55 +443,16 @@ private[graft] object TxPrune {
       prefix: String): Option[Set[String]] = {
     val colType = snap.schema.fields.find(_.name == a.name).map(_.dataType)
     if (!colType.contains(StringType)) return None
-    val pb = prefix.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    Some(snap.files.filter { f =>
-      snap.stats.get(f).flatMap(_.get(a.name)) match {
-        case Some(ColRange("string", min, max)) =>
-          val maxB = max.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          val minB = min.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          // file admits the prefix iff max >= p (byte order) and
-          // min's first |p| bytes <= p — i.e. min is not already past
-          // every string carrying the prefix
-          cmpBytes(maxB, pb) >= 0 &&
-            cmpBytes(minB.take(pb.length), pb) <= 0
-        case _ => true
-      }
+    val pb = utf8(prefix)
+    Some(snap.filesWhere(a.name) {
+      case ColRange("string", min, max) =>
+        // file admits the prefix iff max >= p (byte order) and min's
+        // first |p| bytes <= p — i.e. min is not already past every
+        // string carrying the prefix
+        val minB = utf8(min)
+        utf8Cmp(max, prefix) >= 0 && java.util.Arrays.compareUnsigned(
+          minB, 0, math.min(minB.length, pb.length), pb, 0, pb.length) <= 0
+      case _ => true
     }.toSet)
   }
-
-  private def cmpBytes(x: Array[Byte], y: Array[Byte]): Int = {
-    var i = 0
-    val n = math.min(x.length, y.length)
-    while (i < n) {
-      val d = (x(i) & 0xff) - (y(i) & 0xff)
-      if (d != 0) return d
-      i += 1
-    }
-    x.length - y.length
-  }
-
-  /** Files whose recorded long range intersects [lo, hi] (inclusive
-    * bounds; None = unbounded). No stats / other kind → kept.
-    */
-  private def rangeKeepLong(snap: Snapshot, col: String,
-      lo: Option[(Long, Boolean)], hi: Option[(Long, Boolean)]): Set[String] =
-    snap.files.filter { f =>
-      snap.stats.get(f).flatMap(_.get(col)) match {
-        case Some(ColRange("long", mn, mx)) =>
-          lo.forall { case (b, _) => mx.toLong >= b } &&
-            hi.forall { case (b, _) => mn.toLong <= b }
-        case _ => true
-      }
-    }.toSet
-
-  private def rangeKeepString(snap: Snapshot, col: String,
-      lo: Option[String], hi: Option[String]): Set[String] =
-    snap.files.filter { f =>
-      snap.stats.get(f).flatMap(_.get(col)) match {
-        case Some(ColRange("string", mn, mx)) =>
-          lo.forall(b => utf8Cmp(mx, b) >= 0) &&
-            hi.forall(b => utf8Cmp(mn, b) <= 0)
-        case _ => true
-      }
-    }.toSet
 }

@@ -62,23 +62,34 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   /** Manifest-relative path (`data/<commit>/<file>`) of a data file URI. */
-  private def manifestRel(path: String): String =
+  def manifestRel(path: String): String =
     path.split('/').takeRight(3).mkString("/")
 
-  /** The files the `txtable` scans of `df` over table `dir` list after
-    * manifest pruning, and the long values their `IN` filters on
-    * `column` probe.
-    */
-  def probedListing(df: DataFrame, dir: String, column: String): (Set[String], Set[Long]) = {
-    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, In, InSet, Literal}
+  /** The `txtable` scans of `df` over table `dir`. */
+  private def txScans(df: DataFrame, dir: String)
+      : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = {
     val scans = fileScans(df.queryExecution.executedPlan).filter(_.relation.location match {
       case t: graft.sources.TxFileIndex => t.tableDir == dir
       case _ => false
     })
     assert(scans.nonEmpty, s"no txtable scan over $dir")
-    val listed = scans.flatMap(f => f.relation.location.listFiles(f.partitionFilters, f.dataFilters))
+    scans
+  }
+
+  /** The files the `txtable` scans of `df` over table `dir` list after
+    * manifest pruning.
+    */
+  def listedFiles(df: DataFrame, dir: String): Set[String] =
+    txScans(df, dir).flatMap(f => f.relation.location.listFiles(f.partitionFilters, f.dataFilters))
       .flatMap(_.files.map(st => manifestRel(st.getPath.toString))).toSet
-    val probed = scans.flatMap(_.dataFilters.flatMap(_.collect {
+
+  /** [[listedFiles]], and the long values the scans' `IN` filters on
+    * `column` probe.
+    */
+  def probedListing(df: DataFrame, dir: String, column: String): (Set[String], Set[Long]) = {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, In, InSet, Literal}
+    val listed = listedFiles(df, dir)
+    val probed = txScans(df, dir).flatMap(_.dataFilters.flatMap(_.collect {
       case In(a: AttributeReference, vs) if a.name == column =>
         vs.collect { case Literal(v: Long, _) => v }
       case InSet(a: AttributeReference, vs) if a.name == column =>

@@ -315,4 +315,129 @@ class TxProviderSpec extends SparkSpecBase {
       s"expected the manifest-authority error, got: ${e.getMessage}")
     s.sql("DROP TABLE IF EXISTS tx_bad")
   }
+
+  /** 800 rows in 8 range-clustered files — a long key `k` with stats and
+    * a Bloom, an int key `i` and a string column `name` with stats — then
+    * one `writeMode` merge that updates, deletes (137, 450) and inserts.
+    */
+  private def buildMerged(writeMode: String): String = {
+    val dir = Files.createTempDirectory(s"txparity$writeMode").toString
+    val df = s.range(0, 800).select(col("id").as("k"),
+      (col("id") * 3).cast("int").as("i"),
+      format_string("n%04d", col("id")).as("name"))
+    TxTable.commit(df.repartitionByRange(8, col("k")).sortWithinPartitions(col("k")),
+      dir, "overwrite", statsColumns = Seq("k", "i", "name"),
+      bloomColumns = Seq("k", "name"), bloomBits = 1 << 16)
+    TxTable.merge(s, dir, Seq((5L, 15, "upd", "UPDATE"), (137L, 411, "n0137", "DELETE"),
+        (450L, 1350, "n0450", "DELETE"), (-1L, -3, "new", "INSERT"))
+      .toDF("k", "i", "name", "operation"), Seq("k"), writeMode = writeMode)
+    dir
+  }
+
+  test("explicit TxTable reads equal format(\"txtable\") and open the files its scan lists") {
+    Seq("cow", "mor").foreach { mode =>
+      val dir = buildMerged(mode)
+      val snap = TxTable.latest(dir).get
+      assert(snap.dvs.nonEmpty === (mode == "mor"), s"$mode: DVs only on the MoR table")
+      val all = snap.files.toSet
+      val at = s.read.format("txtable").option("versionAsOf", snap.version).load(dir)
+      def opened(df: DataFrame): Set[String] = df.inputFiles.map(manifestRel).toSet
+      // rows equal the provider under the same predicate, as a multiset;
+      // the explicit read opens exactly the files the provider's scan lists
+      def parity(explicit: DataFrame, where: org.apache.spark.sql.Column,
+          hint: String): Set[String] = {
+        val provider = at.where(where)
+        assertSameRows(explicit, provider, s"$mode $hint")
+        assert(opened(explicit) === listedFiles(provider, dir), s"$mode $hint: files")
+        opened(explicit)
+      }
+      assert(parity(TxTable.read(s, dir, Some(snap.version)), lit(true), "read") === all)
+      val point = parity(TxTable.readPointLookupLong(s, dir, "k", 300L),
+        col("k") === 300L, "point k")
+      assert(point.nonEmpty && point.size < all.size, s"$mode: the long pick skips")
+      assert(parity(TxTable.readPointLookupLong(s, dir, "i", 900L),
+        col("i") === 900L, "point on the int key").size < all.size,
+        s"$mode: an integral lookup picks on an int column")
+      assert(parity(TxTable.readPointLookupString(s, dir, "name", "n0300"),
+        col("name") === "n0300", "point name").size < all.size)
+      assert(parity(TxTable.readPruned(s, dir, "k", 250L, 449L),
+        col("k").between(250L, 449L), "range k").size < all.size)
+      assert(parity(TxTable.readPrunedString(s, dir, "name", "n0100", "n0199"),
+        col("name").between("n0100", "n0199"), "range name").size < all.size)
+      // a key outside every range opens no file
+      assert(parity(TxTable.readPointLookupLong(s, dir, "k", 1000000L),
+        col("k") === 1000000L, "absent key").isEmpty)
+      // a deleted row does not come back, through a DV or a rewrite
+      val gone = TxTable.readPointLookupLong(s, dir, "k", 137L)
+      assert(gone.count() === 0L, s"$mode: the deleted key 137 came back")
+      assertSameRows(gone, at.where(col("k") === 137L), s"$mode deleted key")
+      assert(TxTable.read(s, dir).where(col("k").isin(137L, 450L)).count() === 0L)
+      // a string range on the long column keeps every file
+      val strOnLong = TxTable.readPrunedString(s, dir, "k", "1", "2")
+      assert(opened(strOnLong) === all, s"$mode: a string range cannot prune a long column")
+      assertSameRows(strOnLong, at.where(col("k").between("1", "2")), s"$mode string on long")
+      // TxTable.read under a WHERE lists only the files the pick admits
+      assert(listedFiles(TxTable.read(s, dir).where(col("k") === 300L), dir) === point,
+        s"$mode: read(...).where(k = 300) lists more than the point pick")
+    }
+  }
+
+  /** The executed plans of the queries `body` runs. */
+  private def plansDuring(body: => Unit): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import scala.jdk.CollectionConverters._
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, ns: Long): Unit = {
+        seen.add(qe); ()
+      }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // listener calls arrive asynchronously: a marker query closes the window
+    val tag = java.util.UUID.randomUUID().toString
+    def isMarker(qe: QueryExecution) = qe.analyzed.toString.contains(tag)
+    s.listenerManager.register(listener)
+    try {
+      body
+      s.range(1).select(lit(tag)).collect()
+      val deadline = System.currentTimeMillis() + 30000L
+      while (!seen.asScala.exists(isMarker) && System.currentTimeMillis() < deadline)
+        Thread.sleep(10)
+      assert(seen.asScala.exists(isMarker), "the marker query was not delivered")
+      seen.asScala.toSeq.filterNot(isMarker).map(_.executedPlan)
+    } finally s.listenerManager.unregister(listener)
+  }
+
+  test("plan guard: every scan of a table directory reads through a TxFileIndex") {
+    // the indexes of the file scans over `dir`; at least one must exist
+    def indexes(plans: Seq[org.apache.spark.sql.execution.SparkPlan], dir: String,
+        hint: String): Seq[String] = {
+      val found = plans.flatMap(fileScans).map(_.relation.location)
+        .filter(_.rootPaths.map(_.toUri.getPath).exists(p => p == dir || p.startsWith(s"$dir/")))
+        .map(_.getClass.getSimpleName)
+      assert(found.nonEmpty, s"$hint: no scan over $dir")
+      assert(found.forall(_ == "TxFileIndex"), s"$hint reads $dir through $found")
+      found
+    }
+    def of(df: DataFrame) = Seq(df.queryExecution.executedPlan)
+    val dir = Files.createTempDirectory("txguard").toString
+    TxTable.commit(s.range(0, 400).select(col("id").as("k"), col("id").cast("string").as("v"))
+      .repartitionByRange(4, col("k")), dir, "overwrite", statsColumns = Seq("k"))
+    TxTable.commit(Seq((1000L, "a"), (1001L, "b")).toDF("k", "v"), dir, "append",
+      statsColumns = Seq("k"))
+    indexes(of(TxTable.read(s, dir)), dir, "read")
+    indexes(of(TxTable.readPointLookupLong(s, dir, "k", 7L)), dir, "point lookup")
+    indexes(of(TxTable.readPruned(s, dir, "k", 10L, 20L)), dir, "readPruned")
+    indexes(of(TxTable.changeFeed(s, dir, 0L, 1L, Seq("k"))), dir, "append feed")
+    // a CoW merge on a table with no Bloom scans its candidates, then rewrites
+    val cow = plansDuring(TxTable.merge(s, dir, Seq((7L, "x", "UPDATE"), (300L, null, "DELETE"))
+      .toDF("k", "v", "operation"), Seq("k")))
+    indexes(cow, dir, "CoW merge")
+    indexes(of(TxTable.changeFeed(s, dir, 1L, 2L, Seq("k"))), dir, "merge feed")
+    // a MoR merge scans its Bloom-picked candidates for row positions
+    val mor = buildMerged("cow")
+    indexes(plansDuring(TxTable.merge(s, mor, Seq((8L, 24, "y", "UPDATE")).toDF("k", "i",
+      "name", "operation"), Seq("k"), writeMode = "mor")), mor, "MoR merge")
+    indexes(of(TxTable.read(s, mor).where(col("k") === 8L)), mor, "MoR read")
+  }
 }
